@@ -1,18 +1,12 @@
 package graft
 
 import graft.pipelines.EventsPipeline
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end drive of the flagship pipeline on harness testdata. */
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv(defaultCores = "8")
     spark.sparkContext.setLogLevel("ERROR")
     val events = Tables.load(spark, sfDir, "events")
     println(s"events rows: ${events.count()}")

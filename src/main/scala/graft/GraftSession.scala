@@ -35,8 +35,7 @@ object GraftSession {
       // hot frame (r12 FitProbe: resolveClass ≈ 10% of fit thread time).
       // Serialization changes ENCODING only, never values: every oracle
       // gate and pipeline golden is bit-identical under it (re-verified).
-      .config("spark.serializer", sys.env.getOrElse("SPARK_GRAFT_SERIALIZER",
-        "org.apache.spark.serializer.KryoSerializer"))
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.kryoserializer.buffer.max", "256m")
       // Spark 4.1 ships checkpoint-file CHECKSUMS default-on: every state
       // store delta/snapshot + offset/commit log write creates a sidecar
@@ -75,7 +74,7 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     // Deployment/experiment overrides: SPARK_GRAFT_CONF="k=v;k=v" lets a
-    // run adjust engine settings (serializer, shuffle sizing, streaming
+    // run adjust engine settings (shuffle sizing, streaming
     // knobs) without a rebuild — scale-dependent values stay
     // parameterised per the optimization-round contract instead of being
     // baked in for one machine shape. Applied via conf.set, so only

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet reader rejects ([PARQUET_TYPE_ILLEGAL]); we read it as raw nanos
   * (legacy nanosAsLong conf) and surface a standard microsecond
   * TimestampType column — hour/minute/second semantics are unchanged.
+  * The conf is a session-build default ([[GraftSession]]); a load only
+  * reads session state, it never sets it.
   */
 object Tables {
 
@@ -52,7 +54,6 @@ object Tables {
     spark.read.parquet(paths: _*)
 
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Integral `div`, NOT `/`: Divide on longs casts to double, and epoch
     // nanos (~1.7e18) exceed double's 2^53 integer range — the quotient
     // can land 1us low after truncation (observed on ~1.5% of rows).

@@ -14,15 +14,19 @@ object Binning {
   def bin(value: Double, cuts: Array[Double]): Int =
     cuts.indexWhere(cut => value <= cut)
 
-  /** Pure column-expression form (codegen'd, no UDF):
-    * `array_position(transform(cuts, c -> value <= c), true) - 1`
-    * array_position is 1-based and returns 0 on miss, so the -1 miss quirk
-    * falls out of the arithmetic for free.
-    */
-  def binCol(value: Column, cuts: Seq[Double]): Column = {
-    val cutsArr = array(cuts.map(lit): _*)
-    (array_position(transform(cutsArr, c => value <= c), lit(true)) - 1).cast("int")
-  }
+  /** Column-expression form: one flat CASE WHEN chain,
+    * `CASE WHEN value <= c0 THEN 0 WHEN value <= c1 THEN 1 ... ELSE -1 END`.
+    * Branches are tried in cut order, so the first cut with `value <= cut`
+    * wins; a miss, a NULL value and a NaN value (Spark orders NaN above
+    * every double) all fall through to -1. CaseWhen is codegen'd, unlike a
+    * `transform` over a cut array, whose lambda runs interpreted per row. */
+  def binCol(value: Column, cuts: Seq[Double]): Column =
+    if (cuts.isEmpty) lit(-1)
+    else cuts.zipWithIndex.tail
+      .foldLeft(when(value <= cuts.head, 0)) { case (c, (cut, i)) =>
+        c.when(value <= cut, i)
+      }
+      .otherwise(-1)
 
   /** SQL fragment with identical semantics for DuckDB oracles:
     * DuckDB's list_position is also 1-based and NULL on miss, so

@@ -8,8 +8,11 @@ import org.apache.spark.sql.functions._
   * Semantics reproduce the reference's `adjustPort`
   * (reference: netflow/FlowWordCreation.scala:94-144) exactly — the 14
   * port-class × ip-order unit cases are the contract — but are expressed
-  * as codegen'd column expressions instead of an RDD rebuild, so the whole
-  * featurization stays inside WholeStageCodegen at scale.
+  * as column expressions (CASE WHEN, concat_ws, casts) instead of an RDD
+  * rebuild. None of them is a CodegenFallback, so they compile into the
+  * surrounding WholeStageCodegen stage; whether the featurization as a
+  * whole does depends on its bins too ([[Binning.binCol]], guarded by
+  * FunctionsSpec's codegen case).
   *
   * Port classes (evaluated in this order):
   *   2: exactly one port <= 1024 and neither is 0 → wordPort = min port,

@@ -66,14 +66,23 @@ object Scoring {
       .drop("__doc", "__word", "topic_mix", "topic_prob")
   }
 
-  /** Threshold + ascending top-k (most suspicious first). Catalyst plans
-    * orderBy+limit as TakeOrderedAndProject — no driver materialization,
-    * no global sort (reference collected top-k via RDD.takeOrdered:
-    * DNSPostLDA.scala:51-69, DataFrameUtils.scala:21-38). */
+  /** Threshold + ascending top-k (most suspicious first). A bounded k
+    * plans orderBy+limit as TakeOrderedAndProject — no driver
+    * materialization, no global sort (reference collected top-k via
+    * RDD.takeOrdered: DNSPostLDA.scala:51-69, DataFrameUtils.scala:21-38).
+    *
+    * An unbounded k (`topK < 0`) is a global sort, whose range exchange
+    * samples its input in a job of its own before the sort runs. Sampling
+    * straight off the filter would evaluate the whole upstream (scan,
+    * featurize, model joins, score) twice. The hash exchange on `score`
+    * in front of it makes the rows that pass the threshold a shuffle stage
+    * that AQE materializes once; the sample job and the sort both read
+    * that stage's output instead of re-running the upstream. */
   def suspicious(scored: DataFrame, threshold: Double, topK: Int,
                  tiebreak: Seq[Column] = Nil): DataFrame = {
     val filtered = scored.where(col("score") <= threshold)
-    val ordered = filtered.orderBy(asc("score") +: tiebreak: _*)
-    if (topK >= 0) ordered.limit(topK) else ordered
+    val order = asc("score") +: tiebreak
+    if (topK >= 0) filtered.orderBy(order: _*).limit(topK)
+    else filtered.repartition(col("score")).orderBy(order: _*)
   }
 }

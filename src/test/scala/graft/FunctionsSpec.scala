@@ -44,13 +44,61 @@ class FunctionsSpec extends SparkSpec {
 
   "binCol" should "agree with the pure bin on a value sweep" in {
     import spark.implicits._
-    val cuts = Seq(1.0, 2.0, 3.0, 4.0, 5.0)
-    val vals = (-10 to 120).map(_ / 10.0)
-    val got = vals.toDF("v")
-      .select(Binning.binCol(col("v"), cuts)).as[Int].collect()
-    got.zip(vals.map(v => Binning.bin(v, cuts.toArray))).foreach { case (g, w) =>
-      g shouldBe w
+    val cutSets = Seq(
+      Seq(1.0, 2.0, 3.0, 4.0, 5.0),
+      Seq(1.0, 2.0, 2.0, 3.0, Double.PositiveInfinity), // duplicate + infinite cuts
+      Seq.empty[Double])
+    val edges = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    cutSets.foreach { cuts =>
+      // the sweep, every cut exactly, NaN and both infinities
+      val vals = (-10 to 120).map(_ / 10.0) ++ cuts ++ edges
+      val got = vals.toDF("v")
+        .select(Binning.binCol(col("v"), cuts)).as[Int].collect()
+      withClue(s"cuts $cuts: ") {
+        got.toSeq shouldBe vals.map(v => Binning.bin(v, cuts.toArray))
+      }
+      withClue(s"NULL value, cuts $cuts: ") {
+        Seq(Option.empty[Double]).toDF("v")
+          .select(Binning.binCol(col("v"), cuts)).as[Int].head() shouldBe -1
+      }
     }
+  }
+
+  it should "compile to generated code, and so should FlowPipeline.results" in {
+    import spark.implicits._
+    import graft.pipelines.FlowPipeline
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def fallbacks(es: Seq[Expression]): Seq[String] =
+      es.flatMap(_.collect { case f: CodegenFallback => f.prettyName })
+
+    val binned = Seq(1.5).toDF("v").select(Binning.binCol(col("v"), Seq(1.0, 2.0)))
+    fallbacks(binned.queryExecution.analyzed.expressions) shouldBe empty
+
+    val flows = (0 until 200).map { i =>
+      ("t", i % 24, i % 60, i % 60, s"10.0.0.${i % 20}", s"172.16.0.${i % 15}",
+        if (i % 3 == 0) 80 else 2000 + i, 1024 + i, (i % 90 + 1).toLong,
+        (i * 37 % 9000 + 40).toLong)
+    }.toDF("treceived", "trhour", "trminute", "trsec",
+      "sip", "dip", "dport", "sport", "ipkt", "ibyt")
+    val topics = graft.ml.TopicModel.Model(
+      Seq(("10.0.0.1", Seq(0.7, 0.3))).toDF("doc", "topic_mix"),
+      Seq(("80.0_1.0_2.0_3.0", Seq(0.2, 0.1))).toDF("word", "topic_prob"),
+      topicCount = 2)
+    val model = FlowPipeline.Model(FlowPipeline.Cuts(
+      time = Array(6.0, 12.0, 18.0, Double.PositiveInfinity),
+      ibyt = Array(100.0, 1000.0), ipkt = Array(10.0, 50.0)), topics, 2)
+    val results = FlowPipeline.results(flows, model, threshold = 1.0, topK = -1)
+    results.collect().length shouldBe 200
+    // the final AQE plan, query stages and subqueries included
+    val plan = results.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val found = helper.collectWithSubqueries(plan) {
+      case p: SparkPlan => fallbacks(p.expressions)
+    }.flatten
+    withClue(s"plan:\n$plan\n") { found shouldBe empty }
   }
 
   // --- domains (reference: DomainProcessorTest.scala:12-67) ---

@@ -56,6 +56,35 @@ class OperatorsSpec extends SparkSpec {
     got shouldBe Array(("b", 0.1), ("d", 0.3))
   }
 
+  it should "evaluate its input once when unbounded, writing parts in score order" in {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val evals = s.sparkContext.longAccumulator("suspicious-input-evals")
+    // nondeterministic, so the filter is not pushed below it (which would
+    // evaluate it once in the filter and again in the projection)
+    val counted = udf { (v: Double) => evals.add(1); v }.asNondeterministic()
+    val n = 4000L
+    val scored = s.range(0, n, 1, 4).select(col("id"),
+      counted((col("id") * 7919 % 1000) / 1000.0).as("score"))
+    val out = java.nio.file.Files.createTempDirectory("susp").toString + "/out"
+    graft.sources.Sinks.writeTsv(
+      Scoring.suspicious(scored, threshold = 0.5, topK = -1), out, singleFile = false)
+    evals.value shouldBe n
+
+    val parts = new java.io.File(out).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val perPart = parts.map { f =>
+      val src = scala.io.Source.fromFile(f)
+      try src.getLines().map(_.split("\t")(1).toDouble).toVector
+      finally src.close()
+    }
+    perPart.count(_.nonEmpty) should be > 1
+    val scores = perPart.flatten.toSeq
+    scores.length shouldBe (0 until n.toInt).count(i => i * 7919 % 1000 <= 500)
+    scores shouldBe sorted
+  }
+
   // --- dedup ------------------------------------------------------------
 
   private val docs = Seq(

@@ -37,6 +37,16 @@ class PartitioningSpec extends SparkSpec {
       Array(1L, 2L, 3L)
   }
 
+  "Tables.load" should "leave the session conf unchanged" in {
+    val dir = Files.createTempDirectory("tl").toFile.getAbsolutePath
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("event_id", "ts").write.parquet(s"$dir/events.parquet")
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    Tables.load(s, dir, "events").count() shouldBe 1
+    s.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "false"
+  }
+
   "loadPaths with a partition-pruned filter" should "skip non-matching files" in {
     val dir = Files.createTempDirectory("pp").toFile.getAbsolutePath + "/t"
     (1 to 100).map(i => (i, i % 4)).toDF("v", "d")
