@@ -13,7 +13,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(NanosAsLong, "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
       // Let AQE rewrite a planned sort-merge join into a shuffled-hash
@@ -88,6 +88,20 @@ object GraftSession {
       }
     })
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Session key that makes the parquet reader surface a TIMESTAMP(NANOS)
+    * column as raw nanos, which [[Tables.events]] converts; without it the
+    * harness's `events.parquet` fails to read ([PARQUET_TYPE_ILLEGAL]). */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Gives a session built elsewhere the read settings [[local]] builds
+    * in, so [[Tables]] can load every harness table in it. For callers
+    * handed a foreign session ([[SparkEntry.entry]]); a table load itself
+    * never sets session state. */
+  def adopt(spark: SparkSession): SparkSession = {
+    spark.conf.set(NanosAsLong, "true")
     spark
   }
 

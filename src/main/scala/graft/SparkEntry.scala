@@ -14,9 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+    * The driver builds `spark`, not [[GraftSession]], so it is adopted
+    * first: its `events.parquet` needs [[GraftSession.NanosAsLong]]. */
   def entry(spark: SparkSession): DataFrame = {
-    val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
+    val events = Tables.load(GraftSession.adopt(spark),
+      "/root/testdata/sf0.001", "events")
     EventsPipeline.run(events, threshold = 1.0, topK = 100, topicCount = 5)
   }
 

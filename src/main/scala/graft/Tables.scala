@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Harness testdata loader: `<sfDir>/<name>.parquet`.
   *
@@ -9,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet reader rejects ([PARQUET_TYPE_ILLEGAL]); we read it as raw nanos
   * (legacy nanosAsLong conf) and surface a standard microsecond
   * TimestampType column — hour/minute/second semantics are unchanged.
-  * The conf is a session-build default ([[GraftSession]]); a load only
-  * reads session state, it never sets it.
+  * The conf is a session-build default ([[GraftSession]]; a session built
+  * elsewhere gets it from [[GraftSession.adopt]]); a load only reads
+  * session state, it never sets it.
   */
 object Tables {
 
@@ -57,7 +59,16 @@ object Tables {
     // Integral `div`, NOT `/`: Divide on longs casts to double, and epoch
     // nanos (~1.7e18) exceed double's 2^53 integer range — the quotient
     // can land 1us low after truncation (observed on ~1.5% of rows).
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val path = s"$sfDir/events.parquet"
+    val raw = try spark.read.parquet(path) catch {
+      // without the key a nanosecond timestamp fails as a bare parquet
+      // type error; name the missing setting (the cause stays attached)
+      case NonFatal(e) if !spark.conf.get(GraftSession.NanosAsLong, "false")
+          .toBoolean => throw new IllegalStateException(
+        s"cannot read $path in a session with ${GraftSession.NanosAsLong} " +
+          "off; if its ts is a nanosecond timestamp, build the session " +
+          "with GraftSession or pass it through GraftSession.adopt", e)
+    }
     raw.schema("ts").dataType match {
       // the harness's nanosecond representation, read as raw nanos
       case org.apache.spark.sql.types.LongType =>

@@ -77,7 +77,9 @@ object Scoring {
     * featurize, model joins, score) twice. The hash exchange on `score`
     * in front of it makes the rows that pass the threshold a shuffle stage
     * that AQE materializes once; the sample job and the sort both read
-    * that stage's output instead of re-running the upstream. */
+    * that stage's output instead of re-running the upstream. The trade
+    * (one more shuffle of the passing rows for one less upstream run)
+    * also wins when every row passes (threshold 1.0, the CLI default). */
   def suspicious(scored: DataFrame, threshold: Double, topK: Int,
                  tiebreak: Seq[Column] = Nil): DataFrame = {
     val filtered = scored.where(col("score") <= threshold)

@@ -1,6 +1,10 @@
 package graft
 
 import graft.sources.Sinks
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -42,9 +46,30 @@ class PartitioningSpec extends SparkSpec {
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("event_id", "ts").write.parquet(s"$dir/events.parquet")
     val s = spark.newSession()
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    s.conf.set(GraftSession.NanosAsLong, "false")
     Tables.load(s, dir, "events").count() shouldBe 1
-    s.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "false"
+    s.conf.get(GraftSession.NanosAsLong) shouldBe "false"
+  }
+
+  "SparkEntry.entry" should "adopt a session built without the nanosecond key" in {
+    // events.parquet as the harness writes it: ts is TIMESTAMP(NANOS),
+    // which Spark itself cannot write
+    val dir = Files.createTempDirectory("ns").toFile.getAbsolutePath
+    val schema = MessageTypeParser.parseMessageType("message events { " +
+      "required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1704067200000001999L))
+    w.close()
+    val s = spark.newSession()
+    s.conf.unset(GraftSession.NanosAsLong)
+    // a bare load names the missing setting instead of a parquet type error
+    val e = intercept[IllegalStateException](Tables.load(s, dir, "events"))
+    e.getMessage should include (GraftSession.NanosAsLong)
+    SparkEntry.entry(s).count() should be > 0L
+    Tables.load(s, dir, "events").select(unix_micros(col("ts")))
+      .as[Long].head() shouldBe 1704067200000001L
   }
 
   "loadPaths with a partition-pruned filter" should "skip non-matching files" in {
