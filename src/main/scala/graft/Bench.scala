@@ -178,7 +178,7 @@ object Bench {
         sys.exit(2)
       }
     }
-    val spark = GraftSession.fromEnv(defaultCores = "32")
+    val spark = GraftSession.fromEnv()
 
     def run(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -6,7 +6,7 @@ import graft.pipelines.EventsPipeline
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = GraftSession.fromEnv(defaultCores = "8")
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     val events = Tables.load(spark, sfDir, "events")
     println(s"events rows: ${events.count()}")

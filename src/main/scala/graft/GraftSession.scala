@@ -16,23 +16,11 @@ object GraftSession {
       .config(NanosAsLong, "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      // Let AQE rewrite a planned sort-merge join into a shuffled-hash
-      // join at runtime when every post-shuffle map output for the join
-      // is small (guide §3.1): SHJ skips both sides' sorts. Unlike the
-      // engine-wide planner flip (preferSortMergeJoin=false, which
-      // trusts pre-execution size ESTIMATES and can OOM when they are
-      // wrong), this conversion is gated on MEASURED map-output sizes —
-      // bounded build memory by construction, so it is safe at any
-      // scale and simply stops firing once partitions outgrow the
-      // threshold. 64m matches advisoryPartitionSizeInBytes (the
-      // conversion requires threshold <= advisory).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "64m")
       // Kryo for RDD shuffle/broadcast payloads (MLlib's documented
       // recommendation): the LDA fit tree-aggregates dense vocab×k
       // matrices and the dictionary/components paths shuffle object rows
       // — JavaSerializer's per-record class resolution was the measured
-      // hot frame (r12 FitProbe: resolveClass ≈ 10% of fit thread time).
+      // hot frame (resolveClass ≈ 10% of fit thread time, r12 profile).
       // Serialization changes ENCODING only, never values: every oracle
       // gate and pipeline golden is bit-identical under it (re-verified).
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
@@ -67,26 +55,18 @@ object GraftSession {
       // disabling Spark's sidecar checksums. Measured (st13,
       // stream-stream left-outer, warm, same-session interleave):
       // 19-21 s -> 12 s.
+      // A checksumming reader of a dir a raw writer overwrote trips on the
+      // stale `.crc` left behind. Every session the repo builds (CLI,
+      // tools, tests) comes from here, so none of them mixes; only a
+      // foreign session ([[adopt]], which cannot change these
+      // context-level keys) still checksums, so keep it off local dirs a
+      // raw session has written.
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         "org.apache.hadoop.fs.local.RawLocalFs")
       .config("spark.hadoop.fs.file.impl",
         "org.apache.hadoop.fs.RawLocalFileSystem")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    // Deployment/experiment overrides: SPARK_GRAFT_CONF="k=v;k=v" lets a
-    // run adjust engine settings (shuffle sizing, streaming
-    // knobs) without a rebuild — scale-dependent values stay
-    // parameterised per the optimization-round contract instead of being
-    // baked in for one machine shape. Applied via conf.set, so only
-    // runtime-settable keys are accepted (static keys would need to be
-    // set before session build and are deliberately not supported here;
-    // the builder defaults above are the engine's recommended baseline).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ =>
-      }
-    })
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -105,7 +85,9 @@ object GraftSession {
     spark
   }
 
-  /** Cores from the driver-contract env (SPARK_GRAFT_CPUS). */
-  def fromEnv(defaultCores: String = "4"): SparkSession =
-    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores))
+  /** Cores from the driver-contract env (SPARK_GRAFT_CPUS), else every
+    * core the JVM sees. */
+  def fromEnv(): SparkSession =
+    local(sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString))
 }

@@ -188,4 +188,30 @@ class PartitioningSpec extends SparkSpec {
       spark, frag, out, targetBytes = 1L << 20, maxFiles = Some(2))
     nOut should be <= 2L
   }
+
+  "the engine sources" should "read no env var outside the driver contract" in {
+    // engine choices come from CLI flags, session conf or observable
+    // input, never from an env var; these are the contract's inputs
+    val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_VERIFY_SKIP")
+    val access = """sys\.env|System\.getenv""".r
+    val named =
+      """(?:sys\.env|System\.getenv)(?:\.getOrElse|\.get)?\(\s*"(\w+)"""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    Files.isDirectory(root) shouldBe true
+    import scala.jdk.CollectionConverters._
+    val reads = Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = new String(Files.readAllBytes(f), "UTF-8")
+        access.findAllMatchIn(src).map { m =>
+          val name = named.findPrefixMatchOf(src.substring(m.start))
+            .map(_.group(1)).getOrElse("<not a literal name>")
+          (root.relativize(f).toString, name)
+        }
+      }
+    reads.map(_._2) should contain ("SPARK_GRAFT_CPUS")
+    reads.filterNot { case (_, name) =>
+      allowed(name) || name.startsWith("SPARK_GRAFT_BENCH_")
+    } shouldBe empty
+  }
 }

@@ -63,4 +63,10 @@ class PlanAuditSpec extends SparkSpec {
       }
     }
   }
+
+  "PlanCheck.finalPlan" should "dump the plan AQE finalized at run time" in {
+    val df = SparkEntry.queries("j1_equi_join")(spark, "/root/testdata/sf0.001")
+    df.queryExecution.executedPlan.toString should include ("isFinalPlan=false")
+    PlanCheck.finalPlan(df) should include ("isFinalPlan=true")
+  }
 }

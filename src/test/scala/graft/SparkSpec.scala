@@ -4,18 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local SparkSession for all suites (mirrors the reference's
-  * TestingSparkContext fixture: local master, 2 shuffle partitions —
+/** Shared local SparkSession for all suites: the engine's own session
+  * ([[GraftSession]], the one the CLI and the benchmark run under) on 2
+  * cores, so local master with 2 shuffle partitions (mirrors the
+  * reference's TestingSparkContext fixture —
   * reference: testutils/TestingSparkContext.scala:61-74). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .withExtensions(new GraftExtensions) // SQL functions under test too
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local("2")
 }
 
 abstract class SparkSpec extends AnyFlatSpec with Matchers {
