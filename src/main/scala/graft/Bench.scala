@@ -380,7 +380,7 @@ object Bench {
 
     time("pipeline_dns") {
       val dns = PipelineQueries.dnsInput(spark, sfDir)
-      val m = DnsPipeline.train(dns, popularDomains = Pop,
+      val m = DnsPipeline.train(dns, DnsPipeline.popularFrame(spark, Pop),
         topicCount = 10, maxIter = 10)
       run(graft.operators.Scoring.suspicious(
         DnsPipeline.score(dns, m), threshold = 1.0, topK = 100))
@@ -416,13 +416,14 @@ object Bench {
 
     time("pipeline_proxy") {
       val proxy = PipelineQueries.proxyInput(spark, sfDir)
-      val m = ProxyPipeline.train(proxy, topicCount = 10, maxIter = 10)
+      val m = ProxyPipeline.train(proxy, DnsPipeline.popularFrame(spark, Set.empty),
+        topicCount = 10, maxIter = 10)
       run(graft.operators.Scoring.suspicious(
         ProxyPipeline.score(proxy, m), threshold = 1.0, topK = 100))
     }
     if (wanted("pp_stage_cuts", "pp_stage_featurize", "pp_stage_lda_fit",
         "pp_stage_score")) {
-      val popular = ProxyPipeline.popularFrame(spark, Set.empty)
+      val popular = DnsPipeline.popularFrame(spark, Set.empty)
       val withFeats = ProxyPipeline.withFeatures(ProxyPipeline.validRows(
         PipelineQueries.proxyInput(spark, sfDir)).withColumn("__w", lit(1L)))
       timeStage("pp_stage_cuts") { ProxyPipeline.computeCuts(withFeats) }

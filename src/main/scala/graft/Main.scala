@@ -44,7 +44,7 @@ object Main {
       |  [--dupfactor <n>]      corpus weight for sev=3 feedback rows (default 1000)
       |  [--threshold <x>]      max probability to report (default 1.0 = everything)
       |  [--maxresults <k>]     top-k most suspicious rows (-1 = all below threshold)
-      |  [--topiccount <k>]     LDA topics (default 20)
+      |  [--topiccount <k>]     LDA topics, at least 2 (default 20)
       |  [--topdomains <csv>]   rank,domain popularity list (reference top-1m.csv)
       |  [--model <dir>]        model store: load if present, else train + save here
       |  [--delimiter <c>]      output field separator (default tab)
@@ -74,6 +74,10 @@ object Main {
         Left("--analysis must be one of: flow, dns, proxy")
       else if (c.input.isEmpty) Left("--input is required")
       else if (c.scored.isEmpty) Left("--scored is required")
+      // MLlib's LDA requires k > 1, and a negative weight would subtract
+      // feedback rows from the corpus counts
+      else if (c.topicCount < 2) Left("--topiccount must be at least 2")
+      else if (c.dupFactor < 0) Left("--dupfactor must not be negative")
       else Right(c)
     } catch {
       case e: NumberFormatException => Left(s"bad numeric argument: ${e.getMessage}")
@@ -142,13 +146,13 @@ object Main {
         FlowPipeline.results(input, model, c.threshold, c.maxResults)
       case "dns" =>
         val model = stored(DnsPipeline.load(spark, _),
-          () => DnsPipeline.trainWithLookup(input, popular,
+          () => DnsPipeline.train(input, popular,
             topicCount = c.topicCount, seed = c.seed, feedback = fb),
           DnsPipeline.save)
         DnsPipeline.results(input, model, c.threshold, c.maxResults)
       case "proxy" =>
         val model = stored(ProxyPipeline.load(spark, _),
-          () => ProxyPipeline.trainWithLookup(input, popular,
+          () => ProxyPipeline.train(input, popular,
             topicCount = c.topicCount, seed = c.seed, feedback = fb),
           ProxyPipeline.save)
         ProxyPipeline.results(input, model, c.threshold, c.maxResults)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Domain / subdomain extraction with the reference engine's semantics.
@@ -77,10 +77,26 @@ object Domains extends Serializable {
     (domain, subdomain, subLen, n.toDouble)
   }
 
-  /** Top-domain class: 2 = configured safe list, 1 = in the popular-domain
-    * set, 0 = neither. The reference hard-codes "intel" as the safe list. */
-  def topDomainClass(domain: String, popular: Set[String], safe: Set[String] = Set("intel")): Int =
-    if (safe.contains(domain)) 2 else if (popular.contains(domain)) 1 else 0
+  /** The safe list behind class 2; the reference hard-codes "intel". */
+  val SafeDomains: Set[String] = Set("intel")
+
+  /** Top-domain class: 2 = [[SafeDomains]], 1 = in the popular-domain set,
+    * 0 = neither. */
+  def topDomainClass(domain: String, popular: Set[String]): Int =
+    if (SafeDomains.contains(domain)) 2 else if (popular.contains(domain)) 1 else 0
+
+  /** [[topDomainClass]] of `domain` as a `top_domain` string column, with
+    * the popular list a (domain) frame broadcast to a left join instead of
+    * a driver Set in a closure (the reference collects top-1m.csv into
+    * every task: TopDomains.scala:9-13 + DNSWordCreation.scala:41-44). */
+  def withTopDomainClass(df: DataFrame, domain: Column, popular: DataFrame): DataFrame =
+    df.join(broadcast(popular.select(col("domain").cast("string").as("__pop")).distinct()),
+        domain === col("__pop"), "left")
+      .withColumn("top_domain",
+        when(domain.isin(SafeDomains.toSeq: _*), lit(2))
+          .when(col("__pop").isNotNull, lit(1))
+          .otherwise(lit(0)).cast("string"))
+      .drop("__pop")
 
   /** UDF forms (the parse is genuinely iterative; a UDF beats an expression
     * forest here; both are one-pass over short strings). */

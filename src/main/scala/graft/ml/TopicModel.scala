@@ -24,9 +24,6 @@ object TopicModel {
       wordTopicProb: DataFrame, // (word: string, topic_prob: array<double>)
       topicCount: Int)
 
-  /** Train from a (doc, word, count) corpus. `optimizer`: "online"
-    * (variational minibatch, default) or "em" (expectation-maximization,
-    * closer to the reference's variational EM C binary). */
   /** Largest vocabulary the wordProb build may materialize on the driver:
     * vocabSize × k doubles (2^20 × 20 ≈ 168 MB). Discretized-feature
     * vocabularies are orders of magnitude below this; an open TEXT
@@ -53,31 +50,10 @@ object TopicModel {
     * it is only tied to the VALUE chosen, not to 64. */
   val TrainLayoutPartitions: Int = 64
 
-  /** The top-`cap` words of a (word, cnt) corpus by TOTAL corpus count
-    * (ties broken lexicographically), as a dense dictionary in the same
-    * lexicographic id order [[ModelIO.denseWordIds]] assigns. Fully
-    * distributed: the frequency cut is a map-side-combined aggregate plus
-    * a TakeOrdered top-k — an OPEN text vocabulary of any size reduces to
-    * a bounded dictionary without the driver ever seeing the long tail. */
-  def cappedWordIds(corpus: DataFrame, cap: Int): DataFrame = {
-    val kept = corpus
-      .groupBy(col("word")).agg(sum(col("cnt")).as("__total"))
-      .orderBy(desc("__total"), asc("word"))
-      .limit(cap)
-      .select("word")
-    ModelIO.denseWordIds(kept)
-  }
-
-  /** Train from a (doc, word, count) corpus.
-    *
-    * `vocabCap`: when set, the vocabulary is frequency-capped to the top-N
-    * words first (see [[cappedWordIds]]) and out-of-vocabulary words DROP
-    * from the corpus — the standard open-vocabulary LDA preprocessing, and
-    * the path that lets raw text corpora (unbounded distinct words) train
-    * with bounded driver memory. Scoring then sees unseen words through
-    * the uniform-default path, exactly like unseen docs. When unset, the
-    * vocabulary must already be bounded (discretized feature words) and
-    * the `maxDriverVocab` guard fails loudly otherwise.
+  /** Train from a (doc, word, count) corpus with MLlib's online
+    * (variational minibatch) optimizer. The vocabulary must be bounded
+    * (discretized feature words); the `maxDriverVocab` guard fails loudly
+    * otherwise.
     *
     * `layoutPartitions`: the pinned training-input layout (see
     * [[TrainLayoutPartitions]] for the reproducibility + fixture
@@ -86,9 +62,7 @@ object TopicModel {
     * is not capped at 64 tasks. */
   def train(wordCounts: DataFrame, topicCount: Int = 20, alpha: Double = 2.5,
             seed: Long = 42L, maxIter: Int = 20,
-            optimizer: String = "online",
             maxDriverVocab: Int = MaxDriverVocab,
-            vocabCap: Option[Int] = None,
             layoutPartitions: Int = TrainLayoutPartitions): Model = {
     require(layoutPartitions > 0,
       s"layoutPartitions must be positive, got $layoutPartitions")
@@ -103,21 +77,16 @@ object TopicModel {
 
     // Dictionary = dense sorted word ids, assigned distributedly
     // (range-sort + zipWithIndex — no single-partition window); replaces
-    // the reference's driver-side collect into a Map. With vocabCap the
-    // dictionary is the frequency-capped top-N instead of the full vocab.
-    val dict = vocabCap.fold(ModelIO.denseWordIds(corpus.select("word")))(
-        cap => cappedWordIds(corpus, cap))
-      .cache()
+    // the reference's driver-side collect into a Map.
+    val dict = ModelIO.denseWordIds(corpus.select("word")).cache()
     val vocabSize = dict.count().toInt
     require(vocabSize <= maxDriverVocab,
       s"vocabulary has $vocabSize distinct words, above the $maxDriverVocab " +
         "driver cap for the topicsMatrix materialization. This model is " +
         "designed for DISCRETIZED feature vocabularies (bounded by the " +
-        "product of bin counts); for open text vocabularies pass " +
-        "vocabCap (frequency-capped top-N dictionary), or raise " +
-        "maxDriverVocab knowingly.")
+        "product of bin counts); cap an open text vocabulary before " +
+        "training, or raise maxDriverVocab knowingly.")
 
-    // inner join: out-of-vocabulary words (capped mode only) drop here
     val docVectors = corpus.join(dict, "word")
       .groupBy("doc")
       .agg(collect_list(struct(col("word_id"), col("cnt"))).as("pairs"))
@@ -137,13 +106,12 @@ object TopicModel {
       .sortWithinPartitions("doc")
       .cache()
 
-    // EM's docConcentration must be > 1; online accepts any positive.
     val lda = new LDA()
       .setK(topicCount)
       .setDocConcentration(alpha)
       .setSeed(seed)
       .setMaxIter(maxIter)
-      .setOptimizer(optimizer)
+      .setOptimizer("online")
       .setFeaturesCol("features")
     val ldaModel = lda.fit(docVectors)
 

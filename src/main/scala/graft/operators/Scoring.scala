@@ -46,17 +46,16 @@ object Scoring {
   def dotProduct(a: Column, b: Column): Column =
     graft.functions.VectorOps.dot_product(a, b)
 
-  /** Join the model and add a `score` column. `mixBroadcastBytes` gates
-    * the doc-mix broadcast hint (see object doc); an unknown/huge estimate
-    * (Catalyst defaults derived frames to Long.Max) means no hint. */
+  /** Join the model and add a `score` column. [[DefaultMixBroadcastBytes]]
+    * gates the doc-mix broadcast hint (see object doc); an unknown/huge
+    * estimate (Catalyst defaults derived frames to Long.Max) means no hint. */
   def score(events: DataFrame, doc: Column, word: Column,
-            model: TopicModel.Model,
-            mixBroadcastBytes: Long = DefaultMixBroadcastBytes): DataFrame = {
+            model: TopicModel.Model): DataFrame = {
     val k = model.topicCount
     val uniform = array((0 until k).map(_ => lit(1.0 / k)): _*)
     val mixes = model.docTopicMix.withColumnRenamed("doc", "__doc")
     val probs = model.wordTopicProb.withColumnRenamed("word", "__word")
-    val mixSide = sizeGatedBroadcast(mixes, mixBroadcastBytes)
+    val mixSide = sizeGatedBroadcast(mixes)
     events
       .join(mixSide, doc.cast("string") === col("__doc"), "left")
       .join(broadcast(probs), word.cast("string") === col("__word"), "left")

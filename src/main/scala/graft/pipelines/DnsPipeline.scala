@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.functions.{Binning, Domains, Entropy}
 import graft.ml.TopicModel
 import graft.operators.{Corpus, Quantiles, Scoring}
+import graft.sources.Feedback
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,57 +24,28 @@ object DnsPipeline {
 
   /** The popularity list is carried as a DISTRIBUTED (domain) frame — a
     * top-1m list never funnels through the driver (train, score, and
-    * persistence all stay distributed; classing is a broadcast join).
-    * [[Model.popularDomains]] collects it for bounded lists/tests only. */
+    * persistence all stay distributed; classing is a broadcast join). */
   final case class Model(cuts: Cuts, popular: DataFrame,
-                         topics: TopicModel.Model, topicCount: Int) {
-    def popularDomains: Set[String] =
-      popular.collect().map(_.getString(0)).toSet
-  }
+                         topics: TopicModel.Model, topicCount: Int)
 
-  /** A driver Set as a popularity frame (the small-list convenience). */
+  /** A literal list as a popularity frame (DNS and proxy). */
   def popularFrame(spark: SparkSession, domains: Set[String]): DataFrame = {
     import spark.implicits._
     domains.toSeq.sorted.toDF("domain")
   }
 
-  /** Persist a trained model: topics via [[TopicModel.save]], cuts as
-    * parquet (cuts can hold +Infinity — not JSON-representable), and the
-    * popularity list as its own parquet — a distributed write, so a
-    * million-domain list never collects. */
-  def save(model: Model, path: String): Unit = {
-    TopicModel.save(model.topics, s"$path/topics")
-    val spark = model.topics.docTopicMix.sparkSession
-    import spark.implicits._
-    // popular may be the lazily-read frame loaded from this very path
-    // (load-then-save-to-same-path) — swap via temp dir, never overwrite
-    // a directory mid-read
-    graft.sources.Sinks.overwriteParquetSafely(
-      model.popular.select(col("domain").cast("string").as("domain")),
-      s"$path/popular")
-    Seq((model.cuts.time.toSeq, model.cuts.frameLen.toSeq,
-      model.cuts.subLen.toSeq, model.cuts.entropy.toSeq,
-      model.cuts.numPeriods.toSeq, model.topicCount))
-      .toDF("time_cuts", "frame_len_cuts", "sub_len_cuts", "entropy_cuts",
-        "num_periods_cuts", "topic_count")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Persist a trained model (train-once-score-later; [[ModelStore]]). */
+  def save(model: Model, path: String): Unit =
+    ModelStore.save(path, model.topics, model.topicCount, Seq(
+      "time_cuts" -> model.cuts.time, "frame_len_cuts" -> model.cuts.frameLen,
+      "sub_len_cuts" -> model.cuts.subLen, "entropy_cuts" -> model.cuts.entropy,
+      "num_periods_cuts" -> model.cuts.numPeriods), Some(model.popular))
 
   def load(spark: SparkSession, path: String): Model = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val m = meta.head()
-    def arr(n: String) = m.getAs[Seq[Double]](n).toArray
-    // models saved before the popularity list moved to its own parquet
-    // carried it as a meta column — migrate on read instead of crashing
-    // the train-once-score-later path on a stored model
-    val popular =
-      if (meta.columns.contains("popular_domains"))
-        popularFrame(spark, m.getAs[Seq[String]]("popular_domains").toSet)
-      else spark.read.parquet(s"$path/popular")
-    Model(Cuts(arr("time_cuts"), arr("frame_len_cuts"), arr("sub_len_cuts"),
-      arr("entropy_cuts"), arr("num_periods_cuts")),
-      popular,
-      TopicModel.load(spark, s"$path/topics"), m.getAs[Int]("topic_count"))
+    val m = ModelStore.load(spark, path, withPopular = true)
+    Model(Cuts(m.cuts("time_cuts"), m.cuts("frame_len_cuts"), m.cuts("sub_len_cuts"),
+      m.cuts("entropy_cuts"), m.cuts("num_periods_cuts")),
+      m.popular.get, m.topics, m.topicCount)
   }
 
   def validRows(dns: DataFrame): DataFrame =
@@ -107,80 +79,44 @@ object DnsPipeline {
       entropy = cuts("entropy"), numPeriods = cuts("periods"))
   }
 
-  /** The non-domain word components, shared by both classing variants. */
-  private def wordFrom(topDomain: org.apache.spark.sql.Column, cuts: Cuts) =
-    concat_ws("_",
-      topDomain,
-      Binning.binCol(col("frame_len").cast("double"), cuts.frameLen.toSeq),
-      Binning.binCol(col("unix_tstamp").cast("double"), cuts.time.toSeq),
-      Binning.binCol(col("subdomain_length"), cuts.subLen.toSeq),
-      Binning.binCol(col("subdomain_entropy"), cuts.entropy.toSeq),
-      Binning.binCol(col("num_periods"), cuts.numPeriods.toSeq),
-      col("dns_qry_type"), col("dns_qry_rcode"))
-
-  /** 8-component word (reference: DNSWordCreation.scala:215-236). */
-  def featurize(withSub: DataFrame, cuts: Cuts, popularDomains: Set[String]): DataFrame =
-    withSub
-      .withColumn("top_domain",
-        Domains.top_domain_class(col("domain"), popularDomains).cast("string"))
-      .withColumn("word", wordFrom(col("top_domain"), cuts))
-
-  /** Broadcast-JOIN popularity classing — same words as [[featurize]], but
-    * the popular-domain list stays a distributed frame broadcast to the
-    * join (the reference collects top-1m.csv into every task closure:
-    * TopDomains.scala:9-13 + DNSWordCreation.scala:41-44). Use with
+  /** 8-component word (reference: DNSWordCreation.scala:215-236); the
+    * top-domain class comes from a broadcast join against `popular`
+    * ([[Domains.withTopDomainClass]]). Use with
     * [[graft.sources.Lookups.topDomainsDF]] for very large lists. */
-  def featurizeWithLookup(withSub: DataFrame, cuts: Cuts, popular: DataFrame,
-                          safe: Set[String] = Set("intel")): DataFrame =
-    withSub
-      .join(broadcast(popular.select(col("domain").cast("string").as("__pop")).distinct()),
-        col("domain") === col("__pop"), "left")
-      .withColumn("top_domain",
-        when(col("domain").isin(safe.toSeq: _*), lit(2))
-          .when(col("__pop").isNotNull, lit(1))
-          .otherwise(lit(0)).cast("string"))
-      .drop("__pop")
-      .withColumn("word", wordFrom(col("top_domain"), cuts))
+  def featurizeWithLookup(withSub: DataFrame, cuts: Cuts, popular: DataFrame): DataFrame =
+    Domains.withTopDomainClass(withSub, col("domain"), popular)
+      .withColumn("word", concat_ws("_",
+        col("top_domain"),
+        Binning.binCol(col("frame_len").cast("double"), cuts.frameLen.toSeq),
+        Binning.binCol(col("unix_tstamp").cast("double"), cuts.time.toSeq),
+        Binning.binCol(col("subdomain_length"), cuts.subLen.toSeq),
+        Binning.binCol(col("subdomain_entropy"), cuts.entropy.toSeq),
+        Binning.binCol(col("num_periods"), cuts.numPeriods.toSeq),
+        col("dns_qry_type"), col("dns_qry_rcode")))
 
-  /** Train, optionally folding in analyst feedback (flow columns + a
+  /** Train, optionally folding in analyst feedback (DNS columns + a
     * `weight` column from [[graft.sources.Feedback]]): weights multiply
     * corpus counts instead of physically duplicating rows
-    * (reference: DNSPreLDA.scala:70-86 flatMap ×N). */
-  def train(dns: DataFrame, popularDomains: Set[String] = Set.empty,
-            topicCount: Int = 20, alpha: Double = 2.5,
-            seed: Long = 42L, maxIter: Int = 20,
-            feedback: Option[DataFrame] = None,
-            layoutPartitions: Int = TopicModel.TrainLayoutPartitions): Model =
-    trainWithLookup(dns, popularFrame(dns.sparkSession, popularDomains),
-      topicCount, alpha, seed, maxIter, feedback, layoutPartitions)
-
-  /** Train with a DISTRIBUTED popularity frame (the 100 TB-clean form —
-    * the CLI default; [[train]] is the small-Set convenience). */
-  def trainWithLookup(dns: DataFrame, popular: DataFrame,
-                      topicCount: Int = 20, alpha: Double = 2.5,
-                      seed: Long = 42L, maxIter: Int = 20,
-                      feedback: Option[DataFrame] = None,
-                      layoutPartitions: Int = TopicModel.TrainLayoutPartitions): Model = {
-    val base = validRows(dns).withColumn("__w", lit(1L))
-    val combined = feedback match {
-      case Some(fb) => base.unionByName(
-        validRows(fb).withColumn("__w", col("weight")).drop("weight"),
-        allowMissingColumns = true)
-      case None => base
-    }
-    val withSub = withSubdomains(combined)
+    * (reference: DNSPreLDA.scala:70-86 flatMap ×N). `popular` is the
+    * distributed popularity list ([[popularFrame]] for a literal one). */
+  def train(dns: DataFrame, popular: DataFrame,
+            topicCount: Int = 20, seed: Long = 42L, maxIter: Int = 20,
+            feedback: Option[DataFrame] = None): Model = {
+    val withSub = withSubdomains(Feedback.weighted(dns, feedback, validRows))
     val cuts = computeCuts(withSub)
     val feats = featurizeWithLookup(withSub, cuts, popular)
     val wc = Corpus.wordCounts(feats, col("ip_dst"), col("word"), col("__w"))
-    Model(cuts, popular, TopicModel.train(wc, topicCount, alpha, seed,
-      maxIter, layoutPartitions = layoutPartitions), topicCount)
+    Model(cuts, popular, TopicModel.train(wc, topicCount, seed = seed,
+      maxIter = maxIter), topicCount)
   }
 
-  def score(dns: DataFrame, model: Model): DataFrame = {
-    val feats = featurizeWithLookup(withSubdomains(validRows(dns)),
-      model.cuts, model.popular)
-    Scoring.score(feats, col("ip_dst"), col("word"), model.topics)
-  }
+  /** The words a model scores: [[featurizeWithLookup]] of the valid rows
+    * under the model's cuts and popularity list. */
+  private def features(dns: DataFrame, model: Model): DataFrame =
+    featurizeWithLookup(withSubdomains(validRows(dns)), model.cuts, model.popular)
+
+  def score(dns: DataFrame, model: Model): DataFrame =
+    Scoring.score(features(dns, model), col("ip_dst"), col("word"), model.topics)
 
   /** Reference-shaped results (DNSPostLDA.scala:48-70): the worded row —
     * input columns + derived subdomain features + word — plus `score`,
@@ -189,14 +125,11 @@ object DnsPipeline {
               threshold: Double, topK: Int): DataFrame =
     Scoring.suspicious(score(dns, model), threshold, topK)
 
-  def run(dns: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-          popularDomains: Set[String] = Set.empty,
-          topicCount: Int = 20, seed: Long = 42L,
-          feedback: Option[DataFrame] = None): DataFrame = {
-    val model = train(dns, popularDomains, topicCount, seed = seed,
-      feedback = feedback)
-    Scoring.suspicious(score(dns, model), threshold, topK)
-  }
+  def run(dns: DataFrame, popular: DataFrame,
+          threshold: Double = 1.0, topK: Int = -1,
+          topicCount: Int = 20, seed: Long = 42L): DataFrame =
+    Scoring.suspicious(score(dns, train(dns, popular, topicCount, seed)),
+      threshold, topK)
 
   /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
     * bound): seeded healthy ratio measured 0.9971 on the sf0.01 gate
@@ -212,20 +145,14 @@ object DnsPipeline {
     * twin, so the driver's check on this pipeline is rows-only — the
     * perplexity bound turns a silent training regression into a non-null
     * gate err. */
-  def runChecked(dns: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-                 popularDomains: Set[String] = Set.empty,
+  def runChecked(dns: DataFrame, popular: DataFrame,
+                 threshold: Double = 1.0, topK: Int = -1,
                  topicCount: Int = 20, seed: Long = 42L,
-                 feedback: Option[DataFrame] = None,
-                 maxRatio: Double = PerplexityBand,
                  tiebreak: Seq[Column] = Nil): DataFrame = {
-    val model = train(dns, popularDomains, topicCount, seed = seed,
-      feedback = feedback)
+    val model = train(dns, popular, topicCount, seed)
     TopicModel.assertQuality(model.topics,
-      Corpus.wordCounts(
-        featurizeWithLookup(withSubdomains(validRows(dns)),
-          model.cuts, model.popular),
-        col("ip_dst"), col("word")),
-      maxRatio, label = "dns LDA")
+      Corpus.wordCounts(features(dns, model), col("ip_dst"), col("word")),
+      PerplexityBand, label = "dns LDA")
     Scoring.suspicious(score(dns, model), threshold, topK, tiebreak)
   }
 }

@@ -44,15 +44,14 @@ object EventsPipeline {
         Binning.binCol(col("ev_hour"), cuts.hour.toSeq),
         Binning.binCol(col("value"), cuts.value.toSeq)))
 
-  def train(events: DataFrame, topicCount: Int = 10, alpha: Double = 2.5,
+  def train(events: DataFrame, topicCount: Int = 10,
             seed: Long = 42L, maxIter: Int = 10,
-            exactCuts: Boolean = true,
-            layoutPartitions: Int = TopicModel.TrainLayoutPartitions): Model = {
+            exactCuts: Boolean = true): Model = {
     val cuts = if (exactCuts) computeCuts(events) else computeCutsApprox(events)
     val feats = featurize(events, cuts)
     val wc = Corpus.wordCounts(feats, col("user_id"), col("word"))
-    Model(cuts, TopicModel.train(wc, topicCount, alpha, seed, maxIter,
-      layoutPartitions = layoutPartitions), topicCount)
+    Model(cuts, TopicModel.train(wc, topicCount, seed = seed, maxIter = maxIter),
+      topicCount)
   }
 
   def score(events: DataFrame, model: Model): DataFrame =
@@ -69,15 +68,6 @@ object EventsPipeline {
       threshold, topK, tiebreak = Seq(col("event_id")))
   }
 
-  /** Training-quality assertion: the trained model's perplexity on its own
-    * corpus must not exceed `maxRatio` × the uniform baseline (= vocabulary
-    * size — see [[TopicModel.perplexity]]: a uniform model scores exactly
-    * |vocab|). The events corpus is deliberately FLAT (decile/quintile bins
-    * are equal-mass by construction), so a trained model only beats uniform
-    * by the corpus's residual structure — the ratio bound catches a model
-    * that is WORSE than knowing nothing (zeroed gammas, shuffled joins,
-    * degenerate topics), not optimizer noise. Throws IllegalStateException
-    * → the driver's rows-only gate records a non-null err. */
   /** Pinned training-quality band: trained perplexity must stay below
     * this fraction of the uniform baseline. Derivation: the seeded,
     * deterministic trainer measures ratio 0.9818 on the sf0.01 gate
@@ -90,12 +80,20 @@ object EventsPipeline {
     * structure pin far tighter (flow 0.71, proxy 0.92). */
   val PerplexityBand: Double = 0.991
 
-  def assertQuality(model: Model, events: DataFrame,
-                    maxRatio: Double = PerplexityBand): Unit =
+  /** Training-quality assertion: the trained model's perplexity on its own
+    * corpus must not exceed [[PerplexityBand]] × the uniform baseline
+    * (= vocabulary size — see [[TopicModel.perplexity]]: a uniform model
+    * scores exactly |vocab|). The events corpus is deliberately FLAT (decile/quintile bins
+    * are equal-mass by construction), so a trained model only beats uniform
+    * by the corpus's residual structure — the ratio bound catches a model
+    * that is WORSE than knowing nothing (zeroed gammas, shuffled joins,
+    * degenerate topics), not optimizer noise. Throws IllegalStateException
+    * → the driver's rows-only gate records a non-null err. */
+  def assertQuality(model: Model, events: DataFrame): Unit =
     TopicModel.assertQuality(model.topics,
       Corpus.wordCounts(featurize(events, model.cuts),
         col("user_id"), col("word")),
-      maxRatio, label = "events LDA")
+      PerplexityBand, label = "events LDA")
 
   /** The measured perplexity/uniform ratio [[assertQuality]] bounds —
     * exposed so the driver gate can emit the value as evidence columns
@@ -112,11 +110,10 @@ object EventsPipeline {
     * failure. */
   def runChecked(events: DataFrame, threshold: Double = 1.0, topK: Int = 100,
                  topicCount: Int = 10, seed: Long = 42L,
-                 exactCuts: Boolean = true,
-                 maxRatio: Double = PerplexityBand): DataFrame = {
+                 exactCuts: Boolean = true): DataFrame = {
     val model = train(events, topicCount = topicCount, seed = seed,
       exactCuts = exactCuts)
-    assertQuality(model, events, maxRatio)
+    assertQuality(model, events)
     Scoring.suspicious(
       score(events, model).select("event_id", "user_id", "event_type", "word", "score"),
       threshold, topK, tiebreak = Seq(col("event_id")))

@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.functions.{Binning, FlowWords, TimeFunctions}
 import graft.ml.TopicModel
 import graft.operators.{Corpus, Quantiles, Scoring}
+import graft.sources.Feedback
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,24 +21,16 @@ object FlowPipeline {
   final case class Cuts(time: Array[Double], ibyt: Array[Double], ipkt: Array[Double])
   final case class Model(cuts: Cuts, topics: TopicModel.Model, topicCount: Int)
 
-  /** Persist a trained model (train-once-score-later): topics via
-    * [[TopicModel.save]], cuts as parquet (cuts can hold +Infinity, which
-    * JSON cannot carry — parquet keeps the exact doubles). */
-  def save(model: Model, path: String): Unit = {
-    TopicModel.save(model.topics, s"$path/topics")
-    val spark = model.topics.docTopicMix.sparkSession
-    import spark.implicits._
-    Seq((model.cuts.time.toSeq, model.cuts.ibyt.toSeq, model.cuts.ipkt.toSeq,
-      model.topicCount))
-      .toDF("time_cuts", "ibyt_cuts", "ipkt_cuts", "topic_count")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Persist a trained model (train-once-score-later; [[ModelStore]]). */
+  def save(model: Model, path: String): Unit =
+    ModelStore.save(path, model.topics, model.topicCount, Seq(
+      "time_cuts" -> model.cuts.time, "ibyt_cuts" -> model.cuts.ibyt,
+      "ipkt_cuts" -> model.cuts.ipkt))
 
   def load(spark: SparkSession, path: String): Model = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    def arr(n: String) = m.getAs[Seq[Double]](n).toArray
-    Model(Cuts(arr("time_cuts"), arr("ibyt_cuts"), arr("ipkt_cuts")),
-      TopicModel.load(spark, s"$path/topics"), m.getAs[Int]("topic_count"))
+    val m = ModelStore.load(spark, path, withPopular = false)
+    Model(Cuts(m.cuts("time_cuts"), m.cuts("ibyt_cuts"), m.cuts("ipkt_cuts")),
+      m.topics, m.topicCount)
   }
 
   /** Sanity filter: hour/minute/second in valid ranges
@@ -90,21 +83,14 @@ object FlowPipeline {
     * physically duplicated (reference: FlowPreLDA.scala:83-98 flatMap ×N —
     * same corpus counts, none of the shuffle volume). Feedback influences
     * the quantile cuts once per row, not ×N. */
-  def train(flows: DataFrame, topicCount: Int = 20, alpha: Double = 2.5,
+  def train(flows: DataFrame, topicCount: Int = 20,
             seed: Long = 42L, maxIter: Int = 20,
-            feedback: Option[DataFrame] = None,
-            layoutPartitions: Int = TopicModel.TrainLayoutPartitions): Model = {
-    val base = validTimes(flows).withColumn("__w", lit(1L))
-    val combined = feedback match {
-      case Some(fb) => base.unionByName(
-        validTimes(fb).withColumn("__w", col("weight")).drop("weight"),
-        allowMissingColumns = true)
-      case None => base
-    }
+            feedback: Option[DataFrame] = None): Model = {
+    val combined = Feedback.weighted(flows, feedback, validTimes)
     val cuts = computeCuts(combined)
     val feats = featurize(combined, cuts)
     val topics = TopicModel.train(corpus(feats, col("__w")),
-      topicCount, alpha, seed, maxIter, layoutPartitions = layoutPartitions)
+      topicCount, seed = seed, maxIter = maxIter)
     Model(cuts, topics, topicCount)
   }
 
@@ -139,12 +125,9 @@ object FlowPipeline {
   }
 
   def run(flows: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-          topicCount: Int = 20, seed: Long = 42L,
-          feedback: Option[DataFrame] = None): DataFrame = {
-    val model = train(flows, topicCount = topicCount, seed = seed,
-      feedback = feedback)
-    Scoring.suspicious(score(flows, model), threshold, topK)
-  }
+          topicCount: Int = 20, seed: Long = 42L): DataFrame =
+    Scoring.suspicious(score(flows, train(flows, topicCount, seed)),
+      threshold, topK)
 
   /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
     * bound): seeded healthy ratio measured 0.4158 on the sf0.01 gate
@@ -161,14 +144,11 @@ object FlowPipeline {
     * gate err. */
   def runChecked(flows: DataFrame, threshold: Double = 1.0, topK: Int = -1,
                  topicCount: Int = 20, seed: Long = 42L,
-                 feedback: Option[DataFrame] = None,
-                 maxRatio: Double = PerplexityBand,
                  tiebreak: Seq[Column] = Nil): DataFrame = {
-    val model = train(flows, topicCount = topicCount, seed = seed,
-      feedback = feedback)
+    val model = train(flows, topicCount, seed)
     TopicModel.assertQuality(model.topics,
       corpus(featurize(validTimes(flows), model.cuts)),
-      maxRatio, label = "flow LDA")
+      PerplexityBand, label = "flow LDA")
     Scoring.suspicious(score(flows, model), threshold, topK, tiebreak)
   }
 }

@@ -3,6 +3,7 @@ package graft.pipelines
 import graft.functions.{Binning, Domains, Entropy, TimeFunctions}
 import graft.ml.TopicModel
 import graft.operators.{Corpus, Quantiles, Scoring}
+import graft.sources.Feedback
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,46 +23,20 @@ object ProxyPipeline {
 
   /** The popularity list is carried as a DISTRIBUTED (domain) frame (see
     * [[DnsPipeline.Model]] — same rationale: no driver funnel at any list
-    * size). [[Model.popularDomains]] collects for bounded lists/tests. */
+    * size). */
   final case class Model(cuts: Cuts, popular: DataFrame,
-                         topics: TopicModel.Model, topicCount: Int) {
-    def popularDomains: Set[String] =
-      popular.collect().map(_.getString(0)).toSet
-  }
+                         topics: TopicModel.Model, topicCount: Int)
 
-  /** A driver Set as a popularity frame (the small-list convenience). */
-  def popularFrame(spark: SparkSession, domains: Set[String]): DataFrame =
-    DnsPipeline.popularFrame(spark, domains)
-
-  /** Persist a trained model: topics via [[TopicModel.save]], cuts as
-    * parquet (cuts can hold +Infinity — not JSON-representable), the
-    * popularity list as its own distributed parquet. */
-  def save(model: Model, path: String): Unit = {
-    TopicModel.save(model.topics, s"$path/topics")
-    val spark = model.topics.docTopicMix.sparkSession
-    import spark.implicits._
-    // same load-then-save guard as DnsPipeline.save
-    graft.sources.Sinks.overwriteParquetSafely(
-      model.popular.select(col("domain").cast("string").as("domain")),
-      s"$path/popular")
-    Seq((model.cuts.time.toSeq, model.cuts.entropy.toSeq,
-      model.cuts.agent.toSeq, model.topicCount))
-      .toDF("time_cuts", "entropy_cuts", "agent_cuts", "topic_count")
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
+  /** Persist a trained model (train-once-score-later; [[ModelStore]]). */
+  def save(model: Model, path: String): Unit =
+    ModelStore.save(path, model.topics, model.topicCount, Seq(
+      "time_cuts" -> model.cuts.time, "entropy_cuts" -> model.cuts.entropy,
+      "agent_cuts" -> model.cuts.agent), Some(model.popular))
 
   def load(spark: SparkSession, path: String): Model = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val m = meta.head()
-    def arr(n: String) = m.getAs[Seq[Double]](n).toArray
-    // pre-move models carried the list as a meta column — migrate on read
-    val popular =
-      if (meta.columns.contains("popular_domains"))
-        popularFrame(spark, m.getAs[Seq[String]]("popular_domains").toSet)
-      else spark.read.parquet(s"$path/popular")
-    Model(Cuts(arr("time_cuts"), arr("entropy_cuts"), arr("agent_cuts")),
-      popular,
-      TopicModel.load(spark, s"$path/topics"), m.getAs[Int]("topic_count"))
+    val m = ModelStore.load(spark, path, withPopular = true)
+    Model(Cuts(m.cuts("time_cuts"), m.cuts("entropy_cuts"), m.cuts("agent_cuts")),
+      m.popular.get, m.topics, m.topicCount)
   }
 
   def validRows(proxy: DataFrame): DataFrame =
@@ -94,80 +69,47 @@ object ProxyPipeline {
     Cuts(time = cuts("time"), entropy = cuts("entropy"), agent = cuts("agent"))
   }
 
-  /** The non-domain word components, shared by both classing variants. */
-  private def wordFrom(topDomain: org.apache.spark.sql.Column, cuts: Cuts) =
-    concat_ws("_",
-      topDomain,
-      Binning.binCol(col("time_of_day"), cuts.time.toSeq),
-      col("reqmethod"),
-      Binning.binCol(col("uri_entropy"), cuts.entropy.toSeq),
-      split(col("resconttype"), "/").getItem(0),
-      Binning.binCol(col("agent_count").cast("double"), cuts.agent.toSeq),
-      substring(col("respcode"), 1, 1))
-
-  /** 7-component word (reference: ProxyWordCreation.scala:30-51). */
-  def featurize(withFeats: DataFrame, cuts: Cuts, popularDomains: Set[String]): DataFrame =
-    withFeats
-      .withColumn("top_domain",
-        Domains.top_domain_class(Domains.extract_domain(col("host")), popularDomains)
-          .cast("string"))
-      .withColumn("word", wordFrom(col("top_domain"), cuts))
-
-  /** Broadcast-JOIN popularity classing — same words as [[featurize]], the
-    * popular list as a broadcast frame instead of a driver-collected Set
-    * (see [[DnsPipeline.featurizeWithLookup]]). */
-  def featurizeWithLookup(withFeats: DataFrame, cuts: Cuts, popular: DataFrame,
-                          safe: Set[String] = Set("intel")): DataFrame =
-    withFeats
-      .withColumn("__dom", Domains.extract_domain(col("host")))
-      .join(broadcast(popular.select(col("domain").cast("string").as("__pop")).distinct()),
-        col("__dom") === col("__pop"), "left")
-      .withColumn("top_domain",
-        when(col("__dom").isin(safe.toSeq: _*), lit(2))
-          .when(col("__pop").isNotNull, lit(1))
-          .otherwise(lit(0)).cast("string"))
-      .drop("__pop", "__dom")
-      .withColumn("word", wordFrom(col("top_domain"), cuts))
+  /** 7-component word (reference: ProxyWordCreation.scala:30-51); the
+    * top-domain class of the host's domain comes from a broadcast join
+    * against `popular` ([[Domains.withTopDomainClass]]). */
+  def featurizeWithLookup(withFeats: DataFrame, cuts: Cuts, popular: DataFrame): DataFrame =
+    Domains.withTopDomainClass(
+        withFeats.withColumn("__dom", Domains.extract_domain(col("host"))),
+        col("__dom"), popular)
+      .drop("__dom")
+      .withColumn("word", concat_ws("_",
+        col("top_domain"),
+        Binning.binCol(col("time_of_day"), cuts.time.toSeq),
+        col("reqmethod"),
+        Binning.binCol(col("uri_entropy"), cuts.entropy.toSeq),
+        split(col("resconttype"), "/").getItem(0),
+        Binning.binCol(col("agent_count").cast("double"), cuts.agent.toSeq),
+        substring(col("respcode"), 1, 1)))
 
   /** Train, optionally folding in analyst feedback (proxy columns + a
     * `weight` column from [[graft.sources.Feedback]]): weights multiply
     * corpus counts instead of physically duplicating rows
-    * (reference: ProxyFeedback.scala:53-68 flatMap ×N). */
-  def train(proxy: DataFrame, popularDomains: Set[String] = Set.empty,
-            topicCount: Int = 20, alpha: Double = 2.5,
-            seed: Long = 42L, maxIter: Int = 20,
-            feedback: Option[DataFrame] = None,
-            layoutPartitions: Int = TopicModel.TrainLayoutPartitions): Model =
-    trainWithLookup(proxy, popularFrame(proxy.sparkSession, popularDomains),
-      topicCount, alpha, seed, maxIter, feedback, layoutPartitions)
-
-  /** Train with a DISTRIBUTED popularity frame (the 100 TB-clean form —
-    * the CLI default; [[train]] is the small-Set convenience). */
-  def trainWithLookup(proxy: DataFrame, popular: DataFrame,
-                      topicCount: Int = 20, alpha: Double = 2.5,
-                      seed: Long = 42L, maxIter: Int = 20,
-                      feedback: Option[DataFrame] = None,
-                      layoutPartitions: Int = TopicModel.TrainLayoutPartitions): Model = {
-    val base = validRows(proxy).withColumn("__w", lit(1L))
-    val combined = feedback match {
-      case Some(fb) => base.unionByName(
-        validRows(fb).withColumn("__w", col("weight")).drop("weight"),
-        allowMissingColumns = true)
-      case None => base
-    }
-    val feats0 = withFeatures(combined)
+    * (reference: ProxyFeedback.scala:53-68 flatMap ×N). `popular` is the
+    * distributed popularity list ([[DnsPipeline.popularFrame]] for a
+    * literal one). */
+  def train(proxy: DataFrame, popular: DataFrame,
+            topicCount: Int = 20, seed: Long = 42L, maxIter: Int = 20,
+            feedback: Option[DataFrame] = None): Model = {
+    val feats0 = withFeatures(Feedback.weighted(proxy, feedback, validRows))
     val cuts = computeCuts(feats0)
     val feats = featurizeWithLookup(feats0, cuts, popular)
     val wc = Corpus.wordCounts(feats, col("clientip"), col("word"), col("__w"))
-    Model(cuts, popular, TopicModel.train(wc, topicCount, alpha, seed,
-      maxIter, layoutPartitions = layoutPartitions), topicCount)
+    Model(cuts, popular, TopicModel.train(wc, topicCount, seed = seed,
+      maxIter = maxIter), topicCount)
   }
 
-  def score(proxy: DataFrame, model: Model): DataFrame = {
-    val feats = featurizeWithLookup(withFeatures(validRows(proxy)),
-      model.cuts, model.popular)
-    Scoring.score(feats, col("clientip"), col("word"), model.topics)
-  }
+  /** The words a model scores: [[featurizeWithLookup]] of the valid rows
+    * under the model's cuts and popularity list. */
+  private def features(proxy: DataFrame, model: Model): DataFrame =
+    featurizeWithLookup(withFeatures(validRows(proxy)), model.cuts, model.popular)
+
+  def score(proxy: DataFrame, model: Model): DataFrame =
+    Scoring.score(features(proxy, model), col("clientip"), col("word"), model.topics)
 
   /** Reference-shaped results (ProxySuspiciousConnectsAnalysis.scala:45-52):
     * the ORIGINAL input columns + word + score, ascending, top-K. */
@@ -176,14 +118,11 @@ object ProxyPipeline {
     Scoring.suspicious(score(proxy, model), threshold, topK)
       .select(proxy.columns.map(col) :+ col("word") :+ col("score"): _*)
 
-  def run(proxy: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-          popularDomains: Set[String] = Set.empty,
-          topicCount: Int = 20, seed: Long = 42L,
-          feedback: Option[DataFrame] = None): DataFrame = {
-    val model = train(proxy, popularDomains, topicCount, seed = seed,
-      feedback = feedback)
-    Scoring.suspicious(score(proxy, model), threshold, topK)
-  }
+  def run(proxy: DataFrame, popular: DataFrame,
+          threshold: Double = 1.0, topK: Int = -1,
+          topicCount: Int = 20, seed: Long = 42L): DataFrame =
+    Scoring.suspicious(score(proxy, train(proxy, popular, topicCount, seed)),
+      threshold, topK)
 
   /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
     * bound): seeded healthy ratio measured 0.8470 on the sf0.01 gate
@@ -198,20 +137,14 @@ object ProxyPipeline {
     * twin, so the driver's check on this pipeline is rows-only — the
     * perplexity bound turns a silent training regression into a non-null
     * gate err. */
-  def runChecked(proxy: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-                 popularDomains: Set[String] = Set.empty,
+  def runChecked(proxy: DataFrame, popular: DataFrame,
+                 threshold: Double = 1.0, topK: Int = -1,
                  topicCount: Int = 20, seed: Long = 42L,
-                 feedback: Option[DataFrame] = None,
-                 maxRatio: Double = PerplexityBand,
                  tiebreak: Seq[Column] = Nil): DataFrame = {
-    val model = train(proxy, popularDomains, topicCount, seed = seed,
-      feedback = feedback)
+    val model = train(proxy, popular, topicCount, seed)
     TopicModel.assertQuality(model.topics,
-      Corpus.wordCounts(
-        featurizeWithLookup(withFeatures(validRows(proxy)),
-          model.cuts, model.popular),
-        col("clientip"), col("word")),
-      maxRatio, label = "proxy LDA")
+      Corpus.wordCounts(features(proxy, model), col("clientip"), col("word")),
+      PerplexityBand, label = "proxy LDA")
     Scoring.suspicious(score(proxy, model), threshold, topK, tiebreak)
   }
 }

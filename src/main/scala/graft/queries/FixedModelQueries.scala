@@ -157,7 +157,7 @@ object FixedModelQueries {
       val m = ProxyPipeline.Model(
         ProxyPipeline.Cuts(ProxyTimeCuts.toArray, ProxyEntCuts.toArray,
           ProxyAgentCuts.toArray),
-        ProxyPipeline.popularFrame(s, Set.empty), fixtureModel(s), topicCount)
+        DnsPipeline.popularFrame(s, Set.empty), fixtureModel(s), topicCount)
       ProxyPipeline.results(proxy, m, threshold = 1.0, topK = -1)
         .select(col("event_id"), col("clientip"), col("word"),
           score9(col("score")).as("score"))}),

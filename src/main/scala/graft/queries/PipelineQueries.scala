@@ -38,13 +38,14 @@ object PipelineQueries {
 
     "pipe_dns_sf001" -> ((s, dir) =>
       graft.pipelines.DnsPipeline.runChecked(dnsInput(s, dir),
-          threshold = 1.0, topK = 100,
-          popularDomains = Set("src1", "src3", "src5"), topicCount = 5,
+          graft.pipelines.DnsPipeline.popularFrame(s, Set("src1", "src3", "src5")),
+          threshold = 1.0, topK = 100, topicCount = 5,
           seed = 42L, tiebreak = Seq(col("doc_id")))
         .select("doc_id", "ip_dst", "word", "score")),
 
     "pipe_proxy_sf001" -> ((s, dir) =>
       graft.pipelines.ProxyPipeline.runChecked(proxyInput(s, dir),
+          graft.pipelines.DnsPipeline.popularFrame(s, Set.empty),
           threshold = 1.0, topK = 100, topicCount = 5, seed = 42L,
           tiebreak = Seq(col("event_id")))
         .select("event_id", "clientip", "word", "score"))

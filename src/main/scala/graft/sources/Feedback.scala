@@ -40,4 +40,19 @@ object Feedback {
     base.where(col(sevCol) === sev)
       .withColumn("weight", lit(duplicationFactor.toLong))
   }
+
+  /** A pipeline's training rows with a `__w` corpus-weight column: 1 for
+    * each row of `rows`, `weight` for each row of `feedback` (from
+    * [[load]]), both passed through the pipeline's row filter `valid`.
+    * A column only one side has is null on the other. */
+  def weighted(rows: DataFrame, feedback: Option[DataFrame],
+               valid: DataFrame => DataFrame): DataFrame = {
+    val base = valid(rows).withColumn("__w", lit(1L))
+    feedback match {
+      case Some(fb) => base.unionByName(
+        valid(fb).withColumn("__w", col("weight")).drop("weight"),
+        allowMissingColumns = true)
+      case None => base
+    }
+  }
 }

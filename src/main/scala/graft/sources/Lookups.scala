@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Small lookup-file sources (reference: TopDomains.scala:9-13 — the
   * Alexa `rank,domain` CSV read on the driver into a broadcast Set). The
-  * read is a distributed CSV scan; use [[topDomainsDF]] + the pipelines'
-  * `featurizeWithLookup` for broadcast-JOIN classing (the 100 TB-clean
-  * form — no driver collect of a million strings), or [[topDomains]] when
-  * a closure Set is genuinely wanted. */
+  * read is a distributed CSV scan, and the list stays a distributed frame:
+  * the DNS and proxy pipelines' `featurizeWithLookup` classes domains by a
+  * broadcast join against it, so a million-string list is never collected
+  * on the driver. */
 object Lookups {
 
   /** `rank,domain` CSV as a distributed (domain) frame — first label of
@@ -18,8 +18,4 @@ object Lookups {
       .select(split(col("_c1"), "\\.").getItem(0).as("domain"))
       .where(col("domain").isNotNull && col("domain") =!= "")
       .distinct()
-
-  /** The same list collected into a driver Set (bounded top-N lists). */
-  def topDomains(spark: SparkSession, path: String): Set[String] =
-    topDomainsDF(spark, path).collect().map(_.getString(0)).toSet
 }

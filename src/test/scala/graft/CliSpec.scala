@@ -48,6 +48,16 @@ class CliSpec extends SparkSpec {
     Main.parse(Seq("--bogus", "v")).left.toOption.get should include("bogus")
     Main.parse(Seq("--analysis", "flow", "--input", "/x", "--scored", "/o",
       "--maxresults", "ten")).left.toOption.get should include("bad numeric")
+    // MLlib's LDA needs k > 1; caught here, before any Spark job runs
+    Seq("1", "0", "-3").foreach { k =>
+      Main.parse(Seq("--analysis", "flow", "--input", "/x", "--scored", "/o",
+        "--topiccount", k)).left.toOption.get should include("--topiccount")
+    }
+    // a negative feedback weight would subtract from the corpus counts
+    Main.parse(Seq("--analysis", "dns", "--input", "/x", "--scored", "/o",
+      "-d", "-1")).left.toOption.get should include("--dupfactor")
+    Main.parse(Seq("--analysis", "flow", "--input", "/x", "--scored", "/o",
+      "--topiccount", "2", "--dupfactor", "0")).isRight shouldBe true
   }
 
   private val rng = new scala.util.Random(7)

@@ -49,12 +49,13 @@ class ExtensionsSpec extends AnyFlatSpec with Matchers {
       spark.sql("SELECT shingle_hashes('a b', id + 1) FROM range(1)").collect()
   }
 
-  "Lookups.topDomains" should "load rank,domain CSVs as a first-label set" in {
+  "Lookups.topDomainsDF" should "load rank,domain CSVs as a first-label set" in {
     val spark = SparkSpec.spark
     val f = Files.createTempDirectory("top").resolve("top-1m.csv").toFile
     val w = new java.io.PrintWriter(f)
     w.println("1,google.com"); w.println("2,youtube.co.uk"); w.println("3,google.de")
     w.close()
-    Lookups.topDomains(spark, f.getAbsolutePath) shouldBe Set("google", "youtube")
+    Lookups.topDomainsDF(spark, f.getAbsolutePath).collect().map(_.getString(0))
+      .sorted.toSeq shouldBe Seq("google", "youtube")
   }
 }

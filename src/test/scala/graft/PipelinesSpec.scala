@@ -49,8 +49,8 @@ class PipelinesSpec extends SparkSpec {
         s"10.0.0.${i % 25}", hosts(i % hosts.length), i % 4, i % 3)
     }.toDF("frame_time", "unix_tstamp", "frame_len", "ip_dst",
       "dns_qry_name", "dns_qry_type", "dns_qry_rcode")
-    val out = DnsPipeline.run(dns, threshold = 1.0, topK = 20,
-      popularDomains = Set("amazon"), topicCount = 4)
+    val out = DnsPipeline.run(dns, DnsPipeline.popularFrame(spark, Set("amazon")),
+      threshold = 1.0, topK = 20, topicCount = 4)
     val scores = out.select("score").as[Double].collect()
     scores.length shouldBe 20
     scores.toSeq shouldBe scores.sorted.toSeq
@@ -63,29 +63,41 @@ class PipelinesSpec extends SparkSpec {
         s"agent${i % 3}", "text/plain", s"/p/${rng.nextString(0)}uri$i", s"${200 + (i % 3) * 100}")
     }.toDF("p_date", "p_time", "clientip", "host", "reqmethod",
       "useragent", "resconttype", "fulluri", "respcode")
-    val out = ProxyPipeline.run(proxy, threshold = 1.0, topK = 20, topicCount = 4)
+    val out = ProxyPipeline.run(proxy, DnsPipeline.popularFrame(spark, Set.empty),
+      threshold = 1.0, topK = 20, topicCount = 4)
     val scores = out.select("score").as[Double].collect()
     scores.length shouldBe 20
     scores.toSeq shouldBe scores.sorted.toSeq
   }
 
-  "DnsPipeline.featurizeWithLookup" should "class domains identically to the Set variant via broadcast join" in {
-    val hosts = Seq("a.amazon.com", "x.evil.net", "www.intel.com", "plain.com")
+  "featurizeWithLookup" should "class intel as 2, popular domains as 1 and the rest as 0 (DNS and proxy)" in {
+    // intel is also in the popular list: the safe list wins
+    val popular = DnsPipeline.popularFrame(spark, Set("amazon", "evil", "intel"))
+    val hosts = Seq("a.amazon.com", "x.evil.net", "www.intel.com", "plain.com",
+      "x.other.org")
+    val want = Seq("1", "1", "2", "0", "0")
+    // the class is the word's first component, and kept as top_domain
+    def classes(feats: org.apache.spark.sql.DataFrame, id: String) =
+      feats.select(col(id), col("top_domain"), split(col("word"), "_").getItem(0))
+        .as[(String, String, String)].collect().sortBy(_._1).toSeq
+    val expected = want.zipWithIndex.map { case (c, i) => (s"10.0.0.$i", c, c) }
+
     val dns = hosts.zipWithIndex.map { case (h, i) =>
       (s"t$i", 100L + i, 40 + i, s"10.0.0.$i", h, i % 4, i % 3)
     }.toDF("frame_time", "unix_tstamp", "frame_len", "ip_dst",
       "dns_qry_name", "dns_qry_type", "dns_qry_rcode")
     val withSub = DnsPipeline.withSubdomains(dns)
-    val cuts = DnsPipeline.computeCuts(withSub)
-    val popularSet = Set("amazon", "evil")
-    val popularDF = popularSet.toSeq.toDF("domain")
-    val a = DnsPipeline.featurize(withSub, cuts, popularSet)
-      .select("ip_dst", "word").as[(String, String)].collect().sorted.toSeq
-    val b = DnsPipeline.featurizeWithLookup(withSub, cuts, popularDF)
-      .select("ip_dst", "word").as[(String, String)].collect().sorted.toSeq
-    b shouldBe a
-    // all three classes fire: intel safe list (2), popular (1), other (0)
-    a.map(_._2.split("_")(0)).toSet shouldBe Set("0", "1", "2")
+    classes(DnsPipeline.featurizeWithLookup(withSub,
+      DnsPipeline.computeCuts(withSub), popular), "ip_dst") shouldBe expected
+
+    val proxy = hosts.zipWithIndex.map { case (h, i) =>
+      ("2016-05-05", f"$i%02d:00:00", s"10.0.0.$i", h, "GET", s"agent$i",
+        "text/plain", s"/p/uri$i", "200")
+    }.toDF("p_date", "p_time", "clientip", "host", "reqmethod",
+      "useragent", "resconttype", "fulluri", "respcode")
+    val withFeats = ProxyPipeline.withFeatures(proxy)
+    classes(ProxyPipeline.featurizeWithLookup(withFeats,
+      ProxyPipeline.computeCuts(withFeats), popular), "clientip") shouldBe expected
   }
 
   "Feedback.load" should "read severity-filtered TSV with weight" in {

@@ -28,22 +28,6 @@ class TopicModelSpec extends SparkSpec {
     e.getMessage should include("distinct words")
   }
 
-  it should "train an open >2^20-word vocabulary under a frequency cap" in {
-    // 2^20 + 1024 distinct words — far past the driver cap; the top-100
-    // "head" words carry weight 50 so the frequency cut must keep them
-    val n = (1L << 20) + 1024L
-    val big = spark.range(n).select(
-      (col("id") % 16).cast("string").as("doc"),
-      concat(lit("w"), col("id")).as("word"),
-      when(col("id") < 100, lit(50L)).otherwise(lit(1L)).as("count"))
-    val m = TopicModel.train(big, topicCount = 2, maxIter = 2,
-      vocabCap = Some(128))
-    m.wordTopicProb.count() shouldBe 128L
-    m.docTopicMix.count() shouldBe 16L
-    val kept = m.wordTopicProb.select("word").as[String].collect().toSet
-    (0 until 100).foreach(i => kept should contain(s"w$i"))
-  }
-
   it should "produce normalized doc mixes for every doc" in {
     val m = TopicModel.train(corpus, topicCount = 3, maxIter = 5)
     val mixes = m.docTopicMix.as[(String, Seq[Double])].collect()
