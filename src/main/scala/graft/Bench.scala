@@ -96,7 +96,7 @@ object Bench {
       "st15_stream_url_frontier"),
     "pipeline" -> Seq(
       "pipeline_events_first", "pipe_events_fixedmodel", "pipeline_events",
-      "pipeline_events_approx", "pe_stage_cuts", "pe_stage_featurize",
+      "pe_stage_cuts", "pe_stage_featurize",
       "pe_stage_lda_fit", "pe_stage_lda_fit_w256", "pe_stage_score"),
     // Flow/dns/proxy full train+score pipelines with the same stage-split
     // pattern (r10 verdict: the events-only stage bench is blind to
@@ -279,14 +279,8 @@ object Bench {
         time(name) { run(fn(spark, sfDir)) }
       }
     }
-    // Full suspicious-connects pipeline (featurize → LDA → score → top-k),
-    // with exact reference-semantics cuts and with the sketch-based cuts
-    // (the high-cardinality scale path).
+    // Full suspicious-connects pipeline (featurize → LDA → score → top-k).
     time("pipeline_events") { pipelineEvents() }
-    time("pipeline_events_approx") {
-      run(EventsPipeline.run(Tables.load(spark, sfDir, "events"),
-        threshold = 1.0, topK = 100, topicCount = 10, exactCuts = false))
-    }
 
     // Stage split, median-of-3 each, on the same inputs the pipeline uses.
     // Guard the prerequisite work behind the same only/skip filter so a

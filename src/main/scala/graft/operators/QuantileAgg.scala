@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * cutoffs are derived from the sorted ECDF at finish. One hash-aggregate
   * pass — no window, no join — the right shape when the value domain is
   * bounded (discretized features); complements `Quantiles.computeCutSets`
-  * (windowed, many columns at once) and `approxQuantiles` (sketch).
+  * (windowed, many columns at once, any domain size).
   *
   * Semantics identical to the reference's ECDF quantiles: cutoff(t) = min
   * value with cdf >= t; empty input → +Infinity everywhere.
@@ -24,8 +24,8 @@ class ExactQuantileAggregator(thresholds: Array[Double],
       throw new IllegalStateException(
         s"ExactQuantileAggregator buffer exceeded $maxDistinct distinct " +
           "values: this aggregate is for BOUNDED (discretized) domains; " +
-          "use Quantiles.computeCutSets (bucketed windows) or " +
-          "approxQuantiles (sketch) for continuous columns.")
+          "use Quantiles.computeCutSets (bucketed windows) for " +
+          "continuous columns.")
     m
   }
 

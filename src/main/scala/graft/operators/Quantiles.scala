@@ -11,31 +11,33 @@ import org.apache.spark.sql.{Column, DataFrame}
   * MINIMUM data value x with ECDF(x) >= t, and an empty input yields
   * +Infinity for every threshold.
   *
-  * Scale shape — range-bucketed two-pass prefix sum, no global window:
-  *   1. `groupBy(value).count()` — map-side partial aggregation; one row
-  *      per DISTINCT value from here on.
-  *   2. a cheap bounds pass (`percentile_approx` over the distinct values,
-  *      collected: <= `buckets` doubles) fixes range-bucket boundaries as
-  *      plan literals, so bucket assignment is deterministic under
-  *      recomputation — no cache required for correctness.
-  *   3. running sums are windowed PER BUCKET (parallel, bounded frames)
-  *      and shifted by per-bucket offsets computed in-plan from the tiny
-  *      (<= buckets rows) bucket-total frame, broadcast back.
+  * One ECDF implementation serves [[ecdf]], [[computeQuantiles]] and
+  * [[computeCutSets]] — a range-bucketed two-pass prefix sum, no global
+  * window:
+  *   1. `groupBy(feature, value).count()` — map-side partial aggregation;
+  *      one row per DISTINCT value from here on.
+  *   2. a cheap bounds pass (one `percentile_approx` aggregate over the
+  *      distinct values, collected: < 32 doubles per feature) fixes
+  *      range-bucket boundaries as plan literals, so bucket assignment is
+  *      deterministic under recomputation — no cache required for
+  *      correctness.
+  *   3. running sums are windowed PER (feature, bucket) (parallel, bounded
+  *      frames) and shifted by per-bucket offsets computed in-plan from the
+  *      tiny bucket-total frame, broadcast back.
   * Every value lands in exactly one bucket and buckets are range-ordered,
-  * so local-cumsum + offset-of-lower-buckets is the exact global ECDF.
-  * The distinct-value aggregate feeds several consumers; it is
-  * materialized ONCE (lazy localCheckpoint in [[ecdf]], scoped cache in
-  * [[computeCutSets]]) — AQE does not reuse the exchange across them.
-  * For 100 TB continuous columns prefer [[approxQuantiles]] (single pass,
-  * mergeable sketch) — the exact path is for reference-semantics parity.
+  * so local-cumsum + offset-of-lower-buckets is the exact global ECDF: the
+  * same integer prefix sums over the same total whatever the bounds are.
+  * [[computeCutSets]] caches the distinct-value counts across its two
+  * actions (bounds and cutoffs); AQE does not reuse an exchange across
+  * actions.
   */
 object Quantiles {
 
   val Deciles: Array[Double] = Array(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9, 1.0)
   val Quintiles: Array[Double] = Array(0.2, 0.4, 0.6, 0.8, 1.0)
 
-  /** Default range-bucket count for the exact-ECDF window stage. */
-  val DefaultBuckets = 32
+  /** Range buckets per feature in the ECDF window stage. */
+  private val Buckets = 32
 
   /** Range-bucket id from fixed boundary literals: bucket i holds values in
     * (bounds(i-1), bounds(i)]; the last bucket is open above. Equal values
@@ -49,70 +51,74 @@ object Quantiles {
       }.otherwise(lit(bounds.length))
     }
 
-  /** Per-bucket exclusive prefix offsets + grand total, computed in-plan
-    * from the tiny per-bucket totals frame (cross join over <= buckets²
-    * rows, broadcast to the window stage). Input must have (groupCols...,
-    * bucket, t); output has (groupCols..., bucket, offset, total). */
-  private def bucketOffsets(btot: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val other = btot.select(
-      (groupCols.map(c => col(c).as(s"__g_$c")) ++
-        Seq(col("bucket").as("__bb"), col("t").as("__bt"))): _*)
-    val joinCond = groupCols.map(c => col(c) === col(s"__g_$c"))
-      .foldLeft(lit(true))(_ && _)
-    btot.join(other, joinCond)
-      .groupBy((groupCols :+ "bucket").map(col): _*)
+  /** Per-bucket exclusive prefix offsets + the feature's total, computed
+    * in-plan from the tiny per-bucket totals frame (a join over <= Buckets²
+    * rows per feature, broadcast to the window stage). Input has (feature,
+    * bucket, t); output has (feature, bucket, offset, total). */
+  private def bucketOffsets(btot: DataFrame): DataFrame = {
+    val other = btot.select(col("feature").as("__g_feature"),
+      col("bucket").as("__bb"), col("t").as("__bt"))
+    btot.join(other, col("feature") === col("__g_feature"))
+      .groupBy("feature", "bucket")
       .agg(sum(when(col("__bb") < col("bucket"), col("__bt")).otherwise(0L)).as("offset"),
         sum(col("__bt")).as("total"))
   }
 
-  /** (value, ecdf) per distinct value, ecdf = fraction of rows <= value.
-    * The distinct-value counts are lazily localCheckpoint'ed: the bounds
-    * action, the offsets subtree, and the window stage all read the blocks
-    * of one aggregation pass instead of re-scanning the input (GC-scoped —
-    * no CacheManager pin). */
-  def ecdf(df: DataFrame, value: Column, buckets: Int = DefaultBuckets): DataFrame = {
-    val counts = df.select(value.cast("double").as("value"))
+  /** (feature, value, cnt): how often each spec's non-null value occurs,
+    * all specs in ONE scan + shuffle. Per-spec filters become null-outs so
+    * excluded rows never shuffle. */
+  private def distinctCounts(df: DataFrame, specs: Seq[CutSpec]): DataFrame =
+    df.select(explode(array(specs.map { s =>
+        val v = s.filter match {
+          case Some(p) => when(p, s.value.cast("double"))
+          case None => s.value.cast("double")
+        }
+        struct(lit(s.name).as("feature"), v.as("value"))
+      }: _*)).as("fv"))
+      .select(col("fv.feature").as("feature"), col("fv.value").as("value"))
       .where(col("value").isNotNull)
-      .groupBy("value").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .groupBy("feature", "value").agg(count(lit(1)).as("cnt"))
+
+  /** The exact ECDF of each feature in `counts` (from [[distinctCounts]]):
+    * adds `ecdf` = the feature's fraction of rows <= value. Runs the bounds
+    * job now; the returned frame reads `counts` again. */
+  private def ecdfByFeature(counts: DataFrame, features: Seq[String]): DataFrame = {
     // Bounds pass: balance by DISTINCT values (the window stage sees one
     // row per distinct value, so that is the load to spread).
-    val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-    val bounds =
-      if (probs.isEmpty) Array.empty[Double]
-      else counts.stat.approxQuantile("value", probs, 0.01).distinct.sorted
-    val withBucket = counts.withColumn("bucket", bucketCol(col("value"), bounds))
-    val btot = withBucket.groupBy("bucket").agg(sum("cnt").as("t"))
-    val off = bucketOffsets(btot, Seq.empty)
-    val w = Window.partitionBy("bucket").orderBy("value")
+    val probs = (1 until Buckets).map(_.toDouble / Buckets)
+    val boundsByFeature: Map[String, Array[Double]] = counts.groupBy("feature")
+      .agg(percentile_approx(col("value"), typedlit(probs), lit(10000)).as("bs"))
+      .collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1).toArray.distinct.sorted)
+      .toMap
+    val bucket = features.foldRight(lit(0)) { (f, acc) =>
+      when(col("feature") === f,
+        bucketCol(col("value"), boundsByFeature.getOrElse(f, Array.empty)))
+        .otherwise(acc)
+    }
+    val withBucket = counts.withColumn("bucket", bucket)
+    val btot = withBucket.groupBy("feature", "bucket").agg(sum("cnt").as("t"))
+    val wCum = Window.partitionBy("feature", "bucket").orderBy("value")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     withBucket
-      .withColumn("local", sum("cnt").over(w))
-      .join(broadcast(off), Seq("bucket"))
-      .select(col("value"),
-        ((col("local") + col("offset")) / col("total")).as("ecdf"))
+      .withColumn("local", sum("cnt").over(wCum))
+      .join(broadcast(bucketOffsets(btot)), Seq("feature", "bucket"))
+      .withColumn("ecdf", (col("local") + col("offset")) / col("total"))
   }
 
-  /** Exact quantile cutoffs for sorted thresholds in (0, 1].
-    * Returns one cutoff per threshold; +Infinity for all on empty input. */
-  def computeQuantiles(df: DataFrame, value: Column, thresholds: Array[Double]): Array[Double] = {
-    val e = ecdf(df, value).where(col("ecdf") >= thresholds.min)
-    // min value per threshold, evaluated in one aggregate pass over the
-    // (small) distinct-value ECDF frame.
-    val aggs = thresholds.zipWithIndex.map { case (t, i) =>
-      min(when(col("ecdf") >= t, col("value"))).as(s"q$i")
-    }
-    val row = e.agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-    thresholds.indices.map { i =>
-      if (row.isNullAt(i)) Double.PositiveInfinity else row.getDouble(i)
-    }.toArray
+  /** (value, ecdf) per distinct non-null value, ecdf = fraction of rows
+    * <= value. The bounds are literals and the counts an exact groupBy, so
+    * the frame recomputes to the same rows on every action. */
+  def ecdf(df: DataFrame, value: Column): DataFrame = {
+    val spec = CutSpec("value", value, Array.empty)
+    ecdfByFeature(distinctCounts(df, Seq(spec)), Seq(spec.name))
+      .select("value", "ecdf")
   }
 
-  def computeDeciles(df: DataFrame, value: Column): Array[Double] =
-    computeQuantiles(df, value, Deciles)
-
-  def computeQuintiles(df: DataFrame, value: Column): Array[Double] =
-    computeQuantiles(df, value, Quintiles)
+  /** Exact quantile cutoffs for thresholds in (0, 1]: one cutoff per
+    * threshold; +Infinity for all on empty input. */
+  def computeQuantiles(df: DataFrame, value: Column, thresholds: Array[Double]): Array[Double] =
+    computeCutSets(df, Seq(CutSpec("value", value, thresholds)))("value")
 
   /** One cut-set to compute in a fused pass: (feature name, value column,
     * thresholds, optional row predicate — e.g. "only positive lengths"). */
@@ -122,52 +128,14 @@ object Quantiles {
   /** Fused multi-column exact quantiles: ONE wide scan + shuffle for any
     * number of cut-sets (the reference ran a full pass per cut-set — 3 for
     * flow, 5 for dns: Quantiles.scala:85-94 callers), plus the cheap bounds
-    * pass over the distinct-value counts. Values are tagged with their
-    * feature name, counted once, range-bucketed per feature (bounds from a
-    * single `percentile_approx` aggregate, collected as literals), and the
-    * running sum is windowed per (feature, bucket) — parallel bounded
-    * frames, never a single-partition window. Per-spec filters become
-    * null-outs so excluded rows never shuffle. */
-  def computeCutSets(df: DataFrame, specs: Seq[CutSpec],
-                     buckets: Int = DefaultBuckets): Map[String, Array[Double]] = {
-    val tagged = df.select(explode(array(specs.map { s =>
-        val v = s.filter match {
-          case Some(p) => when(p, s.value.cast("double"))
-          case None => s.value.cast("double")
-        }
-        struct(lit(s.name).as("feature"), v.as("value"))
-      }: _*)).as("fv"))
-      .select(col("fv.feature").as("feature"), col("fv.value").as("value"))
-      .where(col("value").isNotNull)
+    * pass over the distinct-value counts. */
+  def computeCutSets(df: DataFrame, specs: Seq[CutSpec]): Map[String, Array[Double]] = {
     // Cache ONLY the bounded distinct-value counts across the bounds action
     // and the final cutoff action; unpersisted before return (recomputation
     // would be deterministic anyway — exact groupBy + literal buckets).
-    val counts = tagged.groupBy("feature", "value").agg(count(lit(1)).as("cnt"))
-      .cache()
+    val counts = distinctCounts(df, specs).cache()
     try {
-      val probs = (1 until buckets).map(_.toDouble / buckets)
-      val boundsByFeature: Map[String, Array[Double]] =
-        if (probs.isEmpty) Map.empty
-        else counts.groupBy("feature")
-          .agg(percentile_approx(col("value"), typedlit(probs), lit(10000)).as("bs"))
-          .collect()
-          .map(r => r.getString(0) ->
-            r.getSeq[Double](1).toArray.distinct.sorted)
-          .toMap
-      val bucket = specs.map(_.name).foldRight(lit(0)) { (f, acc) =>
-        when(col("feature") === f,
-          bucketCol(col("value"), boundsByFeature.getOrElse(f, Array.empty)))
-          .otherwise(acc)
-      }
-      val withBucket = counts.withColumn("bucket", bucket)
-      val btot = withBucket.groupBy("feature", "bucket").agg(sum("cnt").as("t"))
-      val off = bucketOffsets(btot, Seq("feature"))
-      val wCum = Window.partitionBy("feature", "bucket").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val ecdfDF = withBucket
-        .withColumn("local", sum("cnt").over(wCum))
-        .join(broadcast(off), Seq("feature", "bucket"))
-        .withColumn("ecdf", (col("local") + col("offset")) / col("total"))
+      val ecdfDF = ecdfByFeature(counts, specs.map(_.name))
       val spark = df.sparkSession
       import spark.implicits._
       val th = specs.flatMap(s => s.thresholds.map(t => (s.name, t)))
@@ -185,14 +153,5 @@ object Quantiles {
         s.name -> s.thresholds.map(t => m.getOrElse(t, Double.PositiveInfinity))
       }.toMap
     } finally counts.unpersist(blocking = false)
-  }
-
-  /** Scale path: single-pass mergeable sketch (no global sort, no window).
-    * relativeError=0 forces exact computation in Spark but costs memory;
-    * the default 1e-4 is the 100 TB setting. */
-  def approxQuantiles(df: DataFrame, colName: String, thresholds: Array[Double],
-                      relativeError: Double = 1e-4): Array[Double] = {
-    val res = df.na.drop(Seq(colName)).stat.approxQuantile(colName, thresholds, relativeError)
-    if (res.isEmpty) Array.fill(thresholds.length)(Double.PositiveInfinity) else res
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.VectorOps
 import graft.ml.TopicModel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -18,8 +19,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * size estimate fits under a bound, else the plan is left to AQE, which
   * still picks a broadcast at runtime when the actual size allows (the
   * reference deliberately shuffle-joined this side, FlowPostLDA.scala:94).
-  * The dot product is a codegen'd zip_with/aggregate — no UDF, no driver
-  * collect.
+  * The dot product is `VectorOps.dot_product`, a codegen'd native fold —
+  * no UDF, no driver collect.
   */
 object Scoring {
 
@@ -40,12 +41,6 @@ object Scoring {
     if (estimate <= BigInt(maxBytes)) broadcast(df) else df
   }
 
-  /** Elementwise dot product of two array<double> columns — the codegen'd
-    * native fold ([[graft.functions.VectorOps]]); bit-identical to the
-    * interpreted aggregate/zip_with composition it replaces. */
-  def dotProduct(a: Column, b: Column): Column =
-    graft.functions.VectorOps.dot_product(a, b)
-
   /** Join the model and add a `score` column. [[DefaultMixBroadcastBytes]]
     * gates the doc-mix broadcast hint (see object doc); an unknown/huge
     * estimate (Catalyst defaults derived frames to Long.Max) means no hint. */
@@ -60,8 +55,8 @@ object Scoring {
       .join(mixSide, doc.cast("string") === col("__doc"), "left")
       .join(broadcast(probs), word.cast("string") === col("__word"), "left")
       .withColumn("score",
-        dotProduct(coalesce(col("topic_mix"), uniform),
-                   coalesce(col("topic_prob"), uniform)))
+        VectorOps.dot_product(coalesce(col("topic_mix"), uniform),
+                              coalesce(col("topic_prob"), uniform)))
       .drop("__doc", "__word", "topic_mix", "topic_prob")
   }
 

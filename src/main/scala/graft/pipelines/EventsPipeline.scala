@@ -25,17 +25,6 @@ object EventsPipeline {
     Cuts(hour = cuts("hour"), value = cuts("value"))
   }
 
-  /** Sketch-based cuts — the high-cardinality/100 TB path: `value` is
-    * continuous, so the exact ECDF windows over every distinct value;
-    * the mergeable sketch takes one pass with bounded memory. */
-  def computeCutsApprox(events: DataFrame): Cuts = {
-    val withCols = events.select(hour(col("ts")).cast("double").as("h"),
-      col("value").cast("double").as("v"))
-    Cuts(
-      hour = Quantiles.approxQuantiles(withCols, "h", Quantiles.Deciles),
-      value = Quantiles.approxQuantiles(withCols, "v", Quantiles.Quintiles))
-  }
-
   def featurize(events: DataFrame, cuts: Cuts): DataFrame =
     events
       .withColumn("ev_hour", hour(col("ts")).cast("double"))
@@ -45,9 +34,8 @@ object EventsPipeline {
         Binning.binCol(col("value"), cuts.value.toSeq)))
 
   def train(events: DataFrame, topicCount: Int = 10,
-            seed: Long = 42L, maxIter: Int = 10,
-            exactCuts: Boolean = true): Model = {
-    val cuts = if (exactCuts) computeCuts(events) else computeCutsApprox(events)
+            seed: Long = 42L, maxIter: Int = 10): Model = {
+    val cuts = computeCuts(events)
     val feats = featurize(events, cuts)
     val wc = Corpus.wordCounts(feats, col("user_id"), col("word"))
     Model(cuts, TopicModel.train(wc, topicCount, seed = seed, maxIter = maxIter),
@@ -59,10 +47,8 @@ object EventsPipeline {
 
   /** Train + score + ascending top-k with deterministic tiebreak. */
   def run(events: DataFrame, threshold: Double = 1.0, topK: Int = 100,
-          topicCount: Int = 10, seed: Long = 42L,
-          exactCuts: Boolean = true): DataFrame = {
-    val model = train(events, topicCount = topicCount, seed = seed,
-      exactCuts = exactCuts)
+          topicCount: Int = 10, seed: Long = 42L): DataFrame = {
+    val model = train(events, topicCount = topicCount, seed = seed)
     Scoring.suspicious(
       score(events, model).select("event_id", "user_id", "event_type", "word", "score"),
       threshold, topK, tiebreak = Seq(col("event_id")))
@@ -109,10 +95,8 @@ object EventsPipeline {
     * perplexity bound turns a silent training regression into a gate
     * failure. */
   def runChecked(events: DataFrame, threshold: Double = 1.0, topK: Int = 100,
-                 topicCount: Int = 10, seed: Long = 42L,
-                 exactCuts: Boolean = true): DataFrame = {
-    val model = train(events, topicCount = topicCount, seed = seed,
-      exactCuts = exactCuts)
+                 topicCount: Int = 10, seed: Long = 42L): DataFrame = {
+    val model = train(events, topicCount = topicCount, seed = seed)
     assertQuality(model, events)
     Scoring.suspicious(
       score(events, model).select("event_id", "user_id", "event_type", "word", "score"),

@@ -40,8 +40,8 @@ object FeatureQueries {
 
     // A7: exact decile cutoffs, surfaced as a (threshold, cutoff) table.
     "a7_quantiles" -> ((s, dir) => {
-      val cuts = Quantiles.computeDeciles(t(s, dir, "lineitem"),
-        col("l_extendedprice"))
+      val cuts = Quantiles.computeQuantiles(t(s, dir, "lineitem"),
+        col("l_extendedprice"), Quantiles.Deciles)
       val rows = Quantiles.Deciles.zip(cuts).toSeq
       s.createDataFrame(rows).toDF("threshold", "cutoff")
         .select((floor((col("threshold").cast("double")) * 100 + 0.5) / 100.0).as("threshold"),

@@ -870,8 +870,6 @@ object RelationalQueries {
     // time at drain) are emitted, and the DuckDB twin replays exactly
     // that rule. Cent sums keep the aggregation integer-exact.
     "st3_stream_window" -> ((s, dir) => {
-      // stream the raw file with the batch loader's nanos handling
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val raw = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -905,7 +903,6 @@ object RelationalQueries {
     // with the half-count smoothing, not vanish). The twin replays the
     // reference build, st3's closed-window rule, and the term math.
     "st9_stream_psi" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       def withTs(df: org.apache.spark.sql.DataFrame) =
         rawSchema("ts").dataType match {
@@ -966,7 +963,6 @@ object RelationalQueries {
     // sums; closed-window emission as in st3. The twin doubles every
     // event into its two covering window starts.
     "st10_stream_sliding" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val raw = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -998,7 +994,6 @@ object RelationalQueries {
     // as the batch w3 gate, so stream == batch sessionization is also
     // implicitly cross-checked.
     "st4_stream_sessions" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val raw = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1081,7 +1076,6 @@ object RelationalQueries {
     }),
 
     "st11_stream_static" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val ev = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1102,7 +1096,6 @@ object RelationalQueries {
       s.read.parquet(out)}),
 
     "st5_stream_join" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       def src() = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -1135,7 +1128,6 @@ object RelationalQueries {
     // PolyHash chain per (hour, type) with the same cutoff — the
     // drained stream must be byte-identical to the batch build.
     "st6_stream_hll" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
       val raw = s.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)

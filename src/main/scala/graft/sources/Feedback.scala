@@ -29,6 +29,10 @@ object Feedback {
       try {
         val df = spark.read
           .option("sep", "\t").option("header", "true")
+          // a malformed, short or long row, or a header naming the
+          // columns in another order, fails the read instead of being
+          // nulled, truncated or read by position
+          .option("mode", "FAILFAST").option("enforceSchema", "false")
           .schema(schema)
           .csv(path)
         df.queryExecution.assertAnalyzed()

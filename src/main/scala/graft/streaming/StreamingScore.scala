@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.ml.TopicModel
-import graft.operators.Scoring
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -9,19 +7,12 @@ import org.apache.spark.sql.functions._
   * reference is batch-only; these are the §7 extensions expressed with
   * Structured Streaming).
   *
-  * The model is batch-trained (TopicModel.train) and applied to a stream:
-  * scoring is stateless per-row work plus broadcast joins, so it runs
-  * unchanged under the streaming planner. Windowed aggregation uses event
+  * The model is batch-trained (TopicModel.train) and applied to a stream
+  * by the batch `Scoring.score`: stateless per-row work plus broadcast
+  * joins, so it runs unchanged under the streaming planner. Windowed aggregation uses event
   * time + watermark; sessionization uses the built-in session_window.
   */
 object StreamingScore {
-
-  /** Score a stream of events against a batch-trained model. Identical
-    * semantics to the batch Scoring.score — broadcast joins + dot product
-    * are stream-safe (no state). */
-  def scoreStream(stream: DataFrame, doc: Column, word: Column,
-                  model: TopicModel.Model): DataFrame =
-    Scoring.score(stream, doc, word, model)
 
   /** Tumbling-window suspicious-event counts per doc with a watermark for
     * state cleanup: emits (window, doc, n_events, n_suspicious, min_score).

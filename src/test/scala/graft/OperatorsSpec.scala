@@ -28,9 +28,10 @@ class OperatorsSpec extends SparkSpec {
 
   // --- scoring ----------------------------------------------------------
 
-  "Scoring.dotProduct" should "compute the topic-mix dot product" in {
+  "VectorOps.dot_product" should "compute the topic-mix dot product" in {
     val df = Seq((Seq(0.1, 0.2, 0.7), Seq(0.3, 0.3, 0.4))).toDF("a", "b")
-    val got = df.select(Scoring.dotProduct(col("a"), col("b"))).as[Double].head()
+    val got = df.select(graft.functions.VectorOps.dot_product(col("a"), col("b")))
+      .as[Double].head()
     got shouldBe (0.03 + 0.06 + 0.28) +- 1e-12
   }
 

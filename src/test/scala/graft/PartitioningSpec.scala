@@ -43,11 +43,25 @@ class PartitioningSpec extends SparkSpec {
 
   "Tables.load" should "leave the session conf unchanged" in {
     val dir = Files.createTempDirectory("tl").toFile.getAbsolutePath
-    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-      .toDF("event_id", "ts").write.parquet(s"$dir/events.parquet")
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "a", 1.5),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), "a", 2.0))
+      .toDF("event_id", "ts", "event_type", "value")
+      .coalesce(1).write.parquet(s"$dir/part")
+    // one parquet FILE named events.parquet, as the fixtures ship it (the
+    // streaming gates glob for that file name)
+    val part = new java.io.File(s"$dir/part").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, java.nio.file.Paths.get(dir, "events.parquet"))
     val s = spark.newSession()
     s.conf.set(GraftSession.NanosAsLong, "false")
-    Tables.load(s, dir, "events").count() shouldBe 1
+    Tables.load(s, dir, "events").count() shouldBe 2
+    s.conf.get(GraftSession.NanosAsLong) shouldBe "false"
+    // a streaming gate reads the same TIMESTAMP(MICROS) file under the
+    // session's setting, never by writing its own
+    SparkEntry.queries("st3_stream_window")(s, dir)
+      .as[(Long, String, Long, Long)].collect() shouldBe
+      Array((java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime / 1000,
+        "a", 1L, 150L))
     s.conf.get(GraftSession.NanosAsLong) shouldBe "false"
   }
 
@@ -213,5 +227,22 @@ class PartitioningSpec extends SparkSpec {
     reads.filterNot { case (_, name) =>
       allowed(name) || name.startsWith("SPARK_GRAFT_BENCH_")
     } shouldBe empty
+  }
+
+  it should "set session conf only in GraftSession" in {
+    // session state is GraftSession's to set (the builder and `adopt`);
+    // an operator or gate that writes it changes the caller's session
+    val root = java.nio.file.Paths.get("src/main/scala")
+    Files.isDirectory(root) shouldBe true
+    import scala.jdk.CollectionConverters._
+    val writes = Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val lines = Files.readAllLines(f).asScala.toSeq
+        lines.zipWithIndex.collect { case (l, i) if l.contains("conf.set(") =>
+          s"${root.relativize(f)}:${i + 1}"
+        }
+      }
+    writes should not be empty
+    writes.filterNot(_.startsWith("graft/GraftSession.scala:")) shouldBe empty
   }
 }

@@ -115,6 +115,21 @@ class PipelinesSpec extends SparkSpec {
       duplicationFactor = 500)
     got.count() shouldBe 2
     got.select("weight").distinct().as[Long].collect() shouldBe Array(500L)
+    // a non-numeric field and a header in another order fail the read
+    // instead of nulling the field (and dropping the row) or reading the
+    // columns by position
+    def write(name: String, lines: String*): String = {
+      val p = new java.io.File(dir, name)
+      Files.write(p.toPath, lines.mkString("\n").getBytes("UTF-8"))
+      p.getAbsolutePath
+    }
+    val malformed = write("malformed.tsv", "sev\tip\tscore", "3\t10.0.0.1\t0.001",
+      "x3\t10.0.0.2\t0.5")
+    val swapped = write("swapped.tsv", "ip\tsev\tscore", "10.0.0.1\t3\t0.001")
+    for (path <- Seq(malformed, swapped)) withClue(path) {
+      an [Exception] should be thrownBy
+        Feedback.load(spark, path, schema, "sev", duplicationFactor = 500).collect()
+    }
   }
 
   it should "return an empty frame for a missing file" in {

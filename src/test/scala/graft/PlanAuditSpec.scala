@@ -11,12 +11,8 @@ package graft
 class PlanAuditSpec extends SparkSpec {
 
   /** Deliberate bounded cross shapes: brute-force/centroid scoring where
-    * one side is a broadcast handful of vectors; the broadcast inequality
-    * range join (j8 — j8b is its bucketed equi twin); and the exact-ECDF
-    * family, whose in-plan prefix-offset subtree crosses the per-bucket
-    * totals frame with itself — bounded by Quantiles.DefaultBuckets (32)
-    * rows on the build side, chosen over a global window (which would
-    * funnel through one partition) and a driver collect. */
+    * one side is a broadcast handful of vectors, and the broadcast
+    * inequality range join (j8 — j8b is its bucketed equi twin). */
   private val allowCross = Set(
     "v2_cosine_topk", "v3_ivf_assign", "v4_near_dup", "v4b_cell_near_dup",
     "v4c_scaled_cells", "v5_ivf_search", "v7_kmeans", "v10_semantic_dedup",
@@ -43,7 +39,7 @@ class PlanAuditSpec extends SparkSpec {
     // data-sized — the benign model-object cross like a15
     "a16_kmv_setops",
                      // applied to aggregation (map-side heavy-key prune)
-    "j8_range_join", "a6_ecdf", "a7_quantiles", "a7b_quantile_agg")
+    "j8_range_join")
 
   /** Full-LDA pipelines train during query construction — minutes of work
     * for no plan information beyond what the fixedmodel gates already

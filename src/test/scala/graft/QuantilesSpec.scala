@@ -33,32 +33,33 @@ class QuantilesSpec extends SparkSpec {
       Array((3.0, 1.0))
   }
 
-  "computeDeciles" should "be 1..10 on the list 1..10" in {
+  "computeQuantiles" should "give the deciles 1..10 on the list 1..10" in {
     val df = (1 to 10).map(_.toDouble).toDF("v")
-    Quantiles.computeDeciles(df, col("v")) shouldBe
+    Quantiles.computeQuantiles(df, col("v"), Quantiles.Deciles) shouldBe
       (1 to 10).map(_.toDouble).toArray
   }
 
-  "computeQuintiles" should "be 2,4,6,8,10 on the list 1..10" in {
+  it should "give the quintiles 2,4,6,8,10 on the list 1..10" in {
     val df = (1 to 10).map(_.toDouble).toDF("v")
-    Quantiles.computeQuintiles(df, col("v")) shouldBe
+    Quantiles.computeQuantiles(df, col("v"), Quantiles.Quintiles) shouldBe
       Array(2.0, 4.0, 6.0, 8.0, 10.0)
   }
 
-  "computeQuantiles" should "return +Infinity for every cutoff on empty input" in {
+  it should "return +Infinity for every cutoff on empty input" in {
     val df = Seq.empty[Double].toDF("v")
-    Quantiles.computeDeciles(df, col("v")) shouldBe
+    Quantiles.computeQuantiles(df, col("v"), Quantiles.Deciles) shouldBe
       Array.fill(10)(Double.PositiveInfinity)
   }
 
   it should "put every cutoff at the constant for constant input" in {
     val df = Seq.fill(5)(42.0).toDF("v")
-    Quantiles.computeQuintiles(df, col("v")) shouldBe Array.fill(5)(42.0)
+    Quantiles.computeQuantiles(df, col("v"), Quantiles.Quintiles) shouldBe
+      Array.fill(5)(42.0)
   }
 
   it should "split a 50-50 distribution at the median threshold" in {
     val df = (Seq.fill(5)(1.0) ++ Seq.fill(5)(2.0)).toDF("v")
-    Quantiles.computeDeciles(df, col("v")) shouldBe
+    Quantiles.computeQuantiles(df, col("v"), Quantiles.Deciles) shouldBe
       Array(1.0, 1.0, 1.0, 1.0, 1.0, 2.0, 2.0, 2.0, 2.0, 2.0)
   }
 
@@ -69,9 +70,35 @@ class QuantilesSpec extends SparkSpec {
       Quantiles.CutSpec("a", col("a"), Quantiles.Deciles),
       Quantiles.CutSpec("b", col("b"), Quantiles.Quintiles),
       Quantiles.CutSpec("pos_c", col("c"), Quantiles.Quintiles, Some(col("c") > 0))))
-    cuts("a") shouldBe Quantiles.computeDeciles(df, col("a"))
-    cuts("b") shouldBe Quantiles.computeQuintiles(df, col("b"))
+    cuts("a") shouldBe Quantiles.computeQuantiles(df, col("a"), Quantiles.Deciles)
+    cuts("b") shouldBe Quantiles.computeQuantiles(df, col("b"), Quantiles.Quintiles)
     cuts("pos_c") shouldBe Array.fill(5)(Double.PositiveInfinity) // filter excludes all
+  }
+
+  "the one ECDF path" should "be exact on ties, negatives, nulls and a one-value feature" in {
+    // v: -2.0 twice, 0.0, 3.5 seven times, 9.9 twice, 42.0, two nulls
+    // (13 non-null rows); w: the constant 5.0 on every row
+    val vs = Seq(Some(3.5), Some(-2.0), None, Some(9.9)) ++ Seq.fill(6)(Some(3.5)) ++
+      Seq(Some(42.0), Some(0.0), None, Some(-2.0), Some(9.9))
+    val df = vs.map(v => (v, 5.0)).toDF("v", "w")
+    val e = Quantiles.ecdf(df, col("v"))
+    // the frame keeps its lineage: no checkpointed RDD stands in for the input
+    e.queryExecution.logical.collectLeaves()
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) shouldBe false
+    e.orderBy("value").as[(Double, Double)].collect() shouldBe Array(
+      (-2.0, 2.0 / 13), (0.0, 3.0 / 13), (3.5, 10.0 / 13), (9.9, 12.0 / 13), (42.0, 1.0))
+    Quantiles.ecdf(df, col("w")).as[(Double, Double)].collect() shouldBe Array((5.0, 1.0))
+
+    val cuts = Quantiles.computeCutSets(df, Seq(
+      Quantiles.CutSpec("v", col("v"), Quantiles.Deciles),
+      Quantiles.CutSpec("w", col("w"), Quantiles.Quintiles),
+      Quantiles.CutSpec("neg_v", col("v"), Quantiles.Quintiles, Some(col("v") < 0))))
+    val v = Quantiles.computeQuantiles(df, col("v"), Quantiles.Deciles)
+    v shouldBe Array(-2.0, 0.0, 3.5, 3.5, 3.5, 3.5, 3.5, 9.9, 9.9, 42.0)
+    cuts("v") shouldBe v
+    cuts("w") shouldBe Quantiles.computeQuantiles(df, col("w"), Quantiles.Quintiles)
+    cuts("w") shouldBe Array.fill(5)(5.0)
+    cuts("neg_v") shouldBe Array.fill(5)(-2.0)
   }
 
   "QuantileAgg.exactQuantiles" should "match the windowed exact path" in {
@@ -87,7 +114,7 @@ class QuantilesSpec extends SparkSpec {
     // agreement on a messy distribution with ties
     val messy = (Seq.fill(7)(3.5) ++ Seq(-2.0, 0.0, 9.9, 9.9, 42.0)).toDF("v")
     QuantileAgg.exactQuantiles(messy, col("v"), Quantiles.Deciles) shouldBe
-      Quantiles.computeDeciles(messy, col("v"))
+      Quantiles.computeQuantiles(messy, col("v"), Quantiles.Deciles)
   }
 
   "ExactQuantileAggregator" should "fail loudly past the distinct-value bound" in {
@@ -100,11 +127,5 @@ class QuantilesSpec extends SparkSpec {
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else t.getMessage +: chain(t.getCause)
     chain(e).mkString("\n") should include("BOUNDED")
-  }
-
-  "approxQuantiles" should "agree with exact on 1..10" in {
-    val df = (1 to 10).map(_.toDouble).toDF("v")
-    Quantiles.approxQuantiles(df, "v", Quantiles.Deciles, relativeError = 0.0) shouldBe
-      (1 to 10).map(_.toDouble).toArray
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ml.TopicModel
+import graft.operators.Scoring
 import graft.streaming.StreamingScore
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -14,7 +15,7 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(minute: Int) = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
-  "scoreStream" should "score streaming events with a batch-trained model" in {
+  "Scoring.score" should "score a MemoryStream with a batch-trained model" in {
     implicit val sqlCtx = spark.sqlContext
     val mixes = Seq(("u1", Seq(1.0, 0.0))).toDF("doc", "topic_mix")
     val probs = Seq(("w1", Seq(0.5, 0.25))).toDF("word", "topic_prob")
@@ -22,7 +23,7 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[(String, String, Timestamp)]
     input.addData(("u1", "w1", ts(0)), ("u1", "wX", ts(1)), ("uX", "w1", ts(2)))
-    val scored = StreamingScore.scoreStream(
+    val scored = Scoring.score(
       input.toDF().toDF("doc", "word", "ts"), col("doc"), col("word"), model)
 
     val q = scored.writeStream.format("memory").queryName("scored_out")
