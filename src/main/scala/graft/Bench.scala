@@ -97,7 +97,7 @@ object Bench {
     "pipeline" -> Seq(
       "pipeline_events_first", "pipe_events_fixedmodel", "pipeline_events",
       "pe_stage_cuts", "pe_stage_featurize",
-      "pe_stage_lda_fit", "pe_stage_lda_fit_w256", "pe_stage_score"),
+      "pe_stage_lda_fit", "pe_stage_score"),
     // Flow/dns/proxy full train+score pipelines with the same stage-split
     // pattern (r10 verdict: the events-only stage bench is blind to
     // shape-specific LDA/cuts regressions — flow's dual-perspective
@@ -106,7 +106,7 @@ object Bench {
     // own JVM like the rest of the suite.
     "pipeline_flow" -> Seq(
       "pipeline_flow", "pf_stage_cuts", "pf_stage_featurize",
-      "pf_stage_lda_fit", "pf_stage_lda_fit_w256", "pf_stage_score"),
+      "pf_stage_lda_fit", "pf_stage_score"),
     "pipeline_dns" -> Seq(
       "pipeline_dns", "pd_stage_cuts", "pd_stage_featurize",
       "pd_stage_lda_fit", "pd_stage_score"),
@@ -116,10 +116,8 @@ object Bench {
 
   /** Names timed by timeStage (reported under "stages", not "queries"). */
   private val stageNames = Set("pipeline_events_first", "pe_stage_cuts",
-    "pe_stage_featurize", "pe_stage_lda_fit", "pe_stage_lda_fit_w256",
-    "pe_stage_score",
+    "pe_stage_featurize", "pe_stage_lda_fit", "pe_stage_score",
     "pf_stage_cuts", "pf_stage_featurize", "pf_stage_lda_fit",
-    "pf_stage_lda_fit_w256",
     "pf_stage_score", "pd_stage_cuts", "pd_stage_featurize",
     "pd_stage_lda_fit", "pd_stage_score", "pp_stage_cuts",
     "pp_stage_featurize", "pp_stage_lda_fit", "pp_stage_score")
@@ -287,7 +285,7 @@ object Bench {
     // child whose family has no pe_* entries never pays the cuts/corpus
     // jobs (they cost real time at large replicas).
     val anyStage = Seq("pe_stage_cuts", "pe_stage_featurize",
-      "pe_stage_lda_fit", "pe_stage_lda_fit_w256", "pe_stage_score")
+      "pe_stage_lda_fit", "pe_stage_score")
       .exists(n => !skip(n) && !only.exists(!_.contains(n)))
     if (anyStage) {
       val events = Tables.load(spark, sfDir, "events")
@@ -306,13 +304,6 @@ object Bench {
       var model: graft.ml.TopicModel.Model = null
       timeStage("pe_stage_lda_fit") {
         model = graft.ml.TopicModel.train(wc, topicCount = 10, maxIter = 10)
-      }
-      // the crawl-scale knob, measured: same fit at layoutPartitions=256
-      // (vs the pinned 64) — the delta is the parallelism the widened
-      // layout buys/costs at this scale point (r11 item 5)
-      timeStage("pe_stage_lda_fit_w256") {
-        graft.ml.TopicModel.train(wc, topicCount = 10, maxIter = 10,
-          layoutPartitions = 256)
       }
       if (model != null) {
         val emodel = EventsPipeline.Model(cuts, model, 10)
@@ -342,7 +333,7 @@ object Bench {
         FlowPipeline.score(flows, m), threshold = 1.0, topK = 100))
     }
     if (wanted("pf_stage_cuts", "pf_stage_featurize", "pf_stage_lda_fit",
-        "pf_stage_lda_fit_w256", "pf_stage_score")) {
+        "pf_stage_score")) {
       val flows = FlowPipeline.validTimes(
         PipelineQueries.flowInput(spark, sfDir)).withColumn("__w", lit(1L))
       timeStage("pf_stage_cuts") { FlowPipeline.computeCuts(flows) }
@@ -354,13 +345,6 @@ object Bench {
       var fTopics: graft.ml.TopicModel.Model = null
       timeStage("pf_stage_lda_fit") {
         fTopics = graft.ml.TopicModel.train(fwc, topicCount = 10, maxIter = 10)
-      }
-      // layoutPartitions=256 twin of the fit — flow is the widest corpus
-      // (dual-perspective doubles the doc side), so this is where the
-      // layout lever matters most (r11 item 5)
-      timeStage("pf_stage_lda_fit_w256") {
-        graft.ml.TopicModel.train(fwc, topicCount = 10, maxIter = 10,
-          layoutPartitions = 256)
       }
       if (fTopics != null) {
         val fm = FlowPipeline.Model(fcuts, fTopics, 10)

@@ -80,14 +80,10 @@ object Domains extends Serializable {
   /** The safe list behind class 2; the reference hard-codes "intel". */
   val SafeDomains: Set[String] = Set("intel")
 
-  /** Top-domain class: 2 = [[SafeDomains]], 1 = in the popular-domain set,
-    * 0 = neither. */
-  def topDomainClass(domain: String, popular: Set[String]): Int =
-    if (SafeDomains.contains(domain)) 2 else if (popular.contains(domain)) 1 else 0
-
-  /** [[topDomainClass]] of `domain` as a `top_domain` string column, with
-    * the popular list a (domain) frame broadcast to a left join instead of
-    * a driver Set in a closure (the reference collects top-1m.csv into
+  /** Top-domain class of `domain` as a `top_domain` string column:
+    * "2" = [[SafeDomains]], "1" = in the `popular` (domain) frame, "0" =
+    * neither. The popular list is broadcast to a left join instead of a
+    * driver Set in a closure (the reference collects top-1m.csv into
     * every task: TopDomains.scala:9-13 + DNSWordCreation.scala:41-44). */
   def withTopDomainClass(df: DataFrame, domain: Column, popular: DataFrame): DataFrame =
     df.join(broadcast(popular.select(col("domain").cast("string").as("__pop")).distinct()),
@@ -109,11 +105,5 @@ object Domains extends Serializable {
     val f = udf((s: String) =>
       if (s == null) (NoDomain, NoDomain, 0.0, 0.0) else extractSubdomain(s))
     f(c).cast("struct<domain:string,subdomain:string,subdomain_length:double,num_periods:double>")
-  }
-
-  def top_domain_class(domain: Column, popular: Set[String]): Column = {
-    val pop = popular // serialized into the closure, broadcast by Spark task serializer
-    val f = udf((d: String) => topDomainClass(if (d == null) "" else d, pop))
-    f(domain)
   }
 }

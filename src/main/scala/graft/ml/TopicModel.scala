@@ -9,11 +9,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 /** In-JVM topic model replacing the reference's external MPI LDA process
   * (reference: OniLDACWrapper.scala:25-113 — driver dictionaries, model.dat
   * file exchange, ssh/scp corpus distribution, final.beta/final.gamma text
-  * parsing). Here the corpus never leaves Spark: word indexing is a
-  * DataFrame dictionary join, training is MLlib's LDA, and the model
-  * surfaces as two DataFrames ready for broadcast joins.
+  * parsing). Here the corpus never leaves Spark: word indexing is a join
+  * against a bounded driver-built dictionary, training is MLlib's LDA, and
+  * the model surfaces as two DataFrames ready for broadcast joins.
   *
-  * docConcentration defaults to 2.5 and k to 20, mirroring the reference's
+  * docConcentration is 2.5 and k defaults to 20, mirroring the reference's
   * operating point (reference: ml_ops.sh:67, OniLDACWrapper.scala:83).
   */
 object TopicModel {
@@ -31,41 +31,36 @@ object TopicModel {
     * driver mid-train. */
   val MaxDriverVocab: Int = 1 << 20
 
-  /** Default partition count for the corpus handed to the LDA optimizer.
+  /** Partition count of the corpus handed to the LDA optimizer.
     * The online optimizer's minibatch sampling (and the doc-id assignment
     * MLlib derives via zipWithIndex) depend on the RDD's partition layout,
     * so a layout inherited from the session (core count → shuffle
     * partitions) makes "same seed" reproducible only within one session
     * config. Training therefore pins its input to a CONSTANT hash layout —
-    * `repartition(layoutPartitions, col("doc"))` +
+    * `repartition(TrainLayoutPartitions, col("doc"))` +
     * `sortWithinPartitions("doc")` — a pure function of the data, so the
     * same corpus + seed trains the identical model under local[4],
     * local[32], or a 1000-executor cluster.
     *
     * FIXTURE CONTRACT: the committed pipeline goldens
-    * (src/test/resources/golden/pipe_*) were trained at THIS default; a
-    * different `layoutPartitions` trains a numerically different (equally
-    * valid) model. Crawl-scale corpora should widen `layoutPartitions` to
-    * match cluster parallelism — reproducibility holds at any fixed value,
-    * it is only tied to the VALUE chosen, not to 64. */
+    * (src/test/resources/golden/pipe_*) were trained at this width; any
+    * other width trains a numerically different (equally valid) model.
+    * 64 was also the fastest fit width measured on 32 cores
+    * (BENCH_SCALING.md, r11). */
   val TrainLayoutPartitions: Int = 64
 
+  /** LDA doc concentration, the reference's operating point. */
+  private val Alpha: Double = 2.5
+
   /** Train from a (doc, word, count) corpus with MLlib's online
-    * (variational minibatch) optimizer. The vocabulary must be bounded
-    * (discretized feature words); the `maxDriverVocab` guard fails loudly
-    * otherwise.
-    *
-    * `layoutPartitions`: the pinned training-input layout (see
-    * [[TrainLayoutPartitions]] for the reproducibility + fixture
-    * contract). Any fixed value is layout-invariant across session
-    * configs; widen it on large clusters so LDA-fit input parallelism
-    * is not capped at 64 tasks. */
-  def train(wordCounts: DataFrame, topicCount: Int = 20, alpha: Double = 2.5,
+    * (variational minibatch) optimizer on the pinned
+    * [[TrainLayoutPartitions]] layout. Rows with a null word are dropped.
+    * The vocabulary must be bounded (discretized feature words): more
+    * than `maxDriverVocab` distinct words fails with an
+    * IllegalArgumentException before any of them reach the driver. */
+  def train(wordCounts: DataFrame, topicCount: Int = 20,
             seed: Long = 42L, maxIter: Int = 20,
-            maxDriverVocab: Int = MaxDriverVocab,
-            layoutPartitions: Int = TrainLayoutPartitions): Model = {
-    require(layoutPartitions > 0,
-      s"layoutPartitions must be positive, got $layoutPartitions")
+            maxDriverVocab: Int = MaxDriverVocab): Model = {
     val spark = wordCounts.sparkSession
     import spark.implicits._
 
@@ -75,17 +70,23 @@ object TopicModel {
       col("count").cast("double").as("cnt"))
       .cache()
 
-    // Dictionary = dense sorted word ids, assigned distributedly
-    // (range-sort + zipWithIndex — no single-partition window); replaces
-    // the reference's driver-side collect into a Map.
-    val dict = ModelIO.denseWordIds(corpus.select("word")).cache()
-    val vocabSize = dict.count().toInt
-    require(vocabSize <= maxDriverVocab,
-      s"vocabulary has $vocabSize distinct words, above the $maxDriverVocab " +
+    // Dictionary = dense sorted word ids, built on the driver as the
+    // reference did (OniLDACWrapper.scala:40-49): the vocabulary × k
+    // topicsMatrix below is materialized on the driver anyway, so a
+    // vocabulary within that cap costs the driver less than the matrix.
+    // The collect is bounded (limit(cap + 1), the Lineage.cutSmall guard),
+    // so an oversized vocabulary fails before it reaches the driver. A
+    // word's id is its index in String order.
+    val vocab = corpus.select("word").where(col("word").isNotNull).distinct()
+      .limit(maxDriverVocab + 1).as[String].collect().sorted
+    require(vocab.length <= maxDriverVocab,
+      s"vocabulary has more than $maxDriverVocab distinct words, the " +
         "driver cap for the topicsMatrix materialization. This model is " +
         "designed for DISCRETIZED feature vocabularies (bounded by the " +
         "product of bin counts); cap an open text vocabulary before " +
         "training, or raise maxDriverVocab knowingly.")
+    val vocabSize = vocab.length
+    val dict = vocab.toSeq.zipWithIndex.toDF("word", "word_id")
 
     val docVectors = corpus.join(dict, "word")
       .groupBy("doc")
@@ -102,13 +103,13 @@ object TopicModel {
       // totally ordered within each partition (docs are unique after the
       // groupBy). Explicit numPartitions also keeps AQE from re-coalescing
       // the layout at runtime.
-      .repartition(layoutPartitions, col("doc"))
+      .repartition(TrainLayoutPartitions, col("doc"))
       .sortWithinPartitions("doc")
       .cache()
 
     val lda = new LDA()
       .setK(topicCount)
-      .setDocConcentration(alpha)
+      .setDocConcentration(Alpha)
       .setSeed(seed)
       .setMaxIter(maxIter)
       .setOptimizer("online")
@@ -117,8 +118,8 @@ object TopicModel {
 
     // Materialize the (bounded) model frames, then release the training
     // intermediates — scoring only ever touches docMix/wordProb, so the
-    // corpus/dictionary/vector caches would otherwise pin storage for the
-    // session lifetime.
+    // corpus/vector caches would otherwise pin storage for the session
+    // lifetime.
     val docMix = ldaModel.transform(docVectors)
       .select(col("doc"), vector_to_array(col("topicDistribution")).cast("array<double>").as("topic_mix"))
       .cache()
@@ -126,25 +127,20 @@ object TopicModel {
 
     // topicsMatrix is vocabSize x k; for the online optimizer it is the
     // unnormalized variational topic-term matrix, so normalize each topic
-    // column to a proper P(word|topic) distribution. The discretized
-    // vocabulary is inherently small, so materializing it on the driver
-    // and re-joining through the dictionary is bounded work.
+    // column to a proper P(word|topic) distribution. Row w belongs to
+    // vocab(w).
     val tm = ldaModel.topicsMatrix
     val colSums = (0 until topicCount).map { t =>
       val s = (0 until vocabSize).map(w => tm(w, t)).sum
       if (s == 0.0) 1.0 else s
     }
     val rows = (0 until vocabSize).map { w =>
-      (w, (0 until topicCount).map(t => tm(w, t) / colSums(t)).toArray)
+      (vocab(w), (0 until topicCount).map(t => tm(w, t) / colSums(t)).toArray)
     }
-    val wordProb = spark.createDataFrame(rows).toDF("word_id", "topic_prob")
-      .join(dict, "word_id")
-      .select("word", "topic_prob")
-      .cache()
+    val wordProb = rows.toDF("word", "topic_prob").cache()
     wordProb.count()
 
     docVectors.unpersist()
-    dict.unpersist()
     corpus.unpersist()
     Model(docMix, wordProb, topicCount)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 /** Proxy suspicious-connects pipeline.
   *
   * Reference dataflow: proxy/ProxySuspiciousConnectsModel.scala +
-  * ProxyWordCreation.scala. Word = topDomainClass_timeBin_method_
+  * ProxyWordCreation.scala. Word = topDomain_timeBin_method_
   * uriEntropyBin_topLevelContentType_agentCountBin_respCodeFirstChar;
   * document = client IP. The reference collects user-agent counts to a
   * driver Map and looks them up in a UDF

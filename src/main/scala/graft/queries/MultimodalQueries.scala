@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{ScratchDirs, Tables}
 import graft.multimodal.{Jpeg, Media}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -196,7 +196,7 @@ object MultimodalQueries {
     // archive's own fields; target_uri is the key).
     "x37_warc_datasource" -> ((s, dir) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("x37").toString
+      val tmp = ScratchDirs.create("x37").toString
       mediaWarc(s, dir).foreachPartition {
         (it: Iterator[MediaRecord]) => it.foreach { rec =>
           java.nio.file.Files.write(

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Binning, Domains, Entropy, FlowWords, TimeFunctions}
+import graft.functions.{Binning, Entropy, FlowWords, TimeFunctions}
 import graft.operators.Corpus
-import graft.pipelines.EventsPipeline
+import graft.pipelines.{DnsPipeline, EventsPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -133,24 +133,12 @@ object PipelineQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // F9: the 8-component DNS word (reference: DNSWordCreation.scala:215-236).
     "pipe_dns_words" -> ((s, dir) => {
-      val withSub = dnsEvents(s, dir)
-        .withColumn("sd", Domains.extract_subdomain(col("qname")))
-        .select(col("doc_id"), col("qname"), col("frame_len"),
-          col("unix_tstamp"), col("qry_type"), col("rcode"),
-          col("sd.domain").as("domain"), col("sd.subdomain").as("subdomain"),
-          col("sd.subdomain_length").as("subdomain_length"),
-          col("sd.num_periods").as("num_periods"))
-        .withColumn("subdomain_entropy",
-          when(col("subdomain") === Domains.NoDomain, lit(0.0))
-            .otherwise(Entropy.string_entropy(col("subdomain"))))
-      withSub.select(col("doc_id"), concat_ws("_",
-        Domains.top_domain_class(col("domain"), Popular).cast("string"),
-        Binning.binCol(col("frame_len").cast("double"), LenCuts),
-        Binning.binCol(col("unix_tstamp").cast("double"), TimeCuts),
-        Binning.binCol(col("subdomain_length"), SubLenCuts),
-        Binning.binCol(col("subdomain_entropy"), EntCuts),
-        Binning.binCol(col("num_periods"), PerCuts),
-        col("qry_type"), col("rcode")).as("word"))}),
+      val cuts = DnsPipeline.Cuts(time = TimeCuts.toArray,
+        frameLen = LenCuts.toArray, subLen = SubLenCuts.toArray,
+        entropy = EntCuts.toArray, numPeriods = PerCuts.toArray)
+      DnsPipeline.featurizeWithLookup(DnsPipeline.withSubdomains(dnsInput(s, dir)),
+          cuts, DnsPipeline.popularFrame(s, Popular))
+        .select("doc_id", "word")}),
 
     // F10: the 7-component proxy word (reference: ProxyWordCreation.scala:
     // 30-51) with the agent-count broadcast-join aggregate (J3/A2).
@@ -267,8 +255,8 @@ object PipelineQueries {
 
   // NOTE: these oracles assume the harness generator's ASCII-only synthetic
   // text (the char-hash/entropy twins iterate code points identically only
-  // for ASCII) and mirror topDomainClass's full 2/1/0 ladder, including the
-  // reference's hard-coded "intel" safe class.
+  // for ASCII) and mirror Domains.withTopDomainClass's full 2/1/0 ladder,
+  // including the reference's hard-coded "intel" safe class.
   val oracles: Map[String, String] = Map(
     "pipe_dns_words" ->
       s"""WITH base AS (

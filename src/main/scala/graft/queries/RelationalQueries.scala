@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{ScratchDirs, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -388,7 +388,7 @@ object RelationalQueries {
           datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
             .cast("long"), lit(65536L)))
         .select("o_orderkey", "x", "y")
-      val path = java.nio.file.Files.createTempDirectory("z2_layout").toString
+      val path = ScratchDirs.create("z2_layout").toString
       graft.operators.Layout.zOrderWrite(o, path, col("x"), col("y"))
       val z = s.read.parquet(path)
       val box = z.where(col("x").between(100L, 300L) &&
@@ -411,7 +411,7 @@ object RelationalQueries {
           datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
             .cast("long"), lit(65536L)))
         .select("o_orderkey", "x", "y")
-      val path = java.nio.file.Files.createTempDirectory("z3_layout").toString
+      val path = ScratchDirs.create("z3_layout").toString
       graft.operators.Layout.zOrderWrite(o, path, col("x"), col("y"))
       val manifest = graft.operators.Layout.fileStats(s, path, Seq("x", "y"))
       val (scan, nSel, nTot) = graft.operators.Layout.prunedRead(s, path,
@@ -430,7 +430,7 @@ object RelationalQueries {
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      val path = java.nio.file.Files.createTempDirectory("z5_part").toString
+      val path = ScratchDirs.create("z5_part").toString
       o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
       val r = s.read.parquet(path)
       val nTot = r.select(input_file_name()).distinct.count()
@@ -447,7 +447,7 @@ object RelationalQueries {
     "o1_orc_roundtrip" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
-      val path = java.nio.file.Files.createTempDirectory("o1_orc").toString
+      val path = ScratchDirs.create("o1_orc").toString
       li.write.mode("overwrite").orc(path)
       s.read.orc(path)
         .where(col("l_quantity") > 25)
@@ -468,7 +468,7 @@ object RelationalQueries {
         .select(col("l_returnflag"),
           col("l_quantity").cast("long").as("qty"),
           floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))
-      val path = java.nio.file.Files.createTempDirectory("o2_jsonl").toString
+      val path = ScratchDirs.create("o2_jsonl").toString
       li.write.mode("overwrite").option("compression", "gzip").json(path)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("l_returnflag",
@@ -601,9 +601,9 @@ object RelationalQueries {
     // the column and hash-reds the gate.
     "z4_compact" -> ((s, dir) => {
       val o = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
-      val frag = java.nio.file.Files.createTempDirectory("z4_frag").toString
+      val frag = ScratchDirs.create("z4_frag").toString
       o.repartition(64).write.mode("overwrite").parquet(frag)
-      val out = java.nio.file.Files.createTempDirectory("z4_out").toString
+      val out = ScratchDirs.create("z4_out").toString
       val (nIn, nOut, _) = graft.operators.Layout.compact(s, frag, out,
         targetBytes = 1L << 20, maxFiles = Some(8))
       s.read.parquet(out)
@@ -882,8 +882,8 @@ object RelationalQueries {
       }).withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
       val agg = graft.streaming.StreamingScore.windowedEventStats(
         ev, col("ts"), col("event_type"), col("cents"))
-      val out = java.nio.file.Files.createTempDirectory("st3_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st3_ckpt").toString
+      val out = ScratchDirs.create("st3_out").toString
+      val ckpt = ScratchDirs.create("st3_ckpt").toString
       agg.select(col("window.start").cast("long").as("w_start"),
           col("key").as("event_type"), col("n_events"),
           col("agg_sum").as("cents"))
@@ -929,8 +929,8 @@ object RelationalQueries {
       val ev = withTs(raw).where(col("value").isNotNull)
       val agg = graft.streaming.StreamingScore.windowedEventStats(
         ev, col("ts"), binOf(col("value")), lit(0L))
-      val out = java.nio.file.Files.createTempDirectory("st9_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st9_ckpt").toString
+      val out = ScratchDirs.create("st9_out").toString
+      val ckpt = ScratchDirs.create("st9_ckpt").toString
       agg.select(col("window.start").cast("long").as("w_start"),
           col("key").cast("int").as("bin"), col("n_events"))
         .writeStream.format("parquet").option("path", out)
@@ -974,8 +974,8 @@ object RelationalQueries {
       val agg = graft.streaming.StreamingScore.windowedEventStats(
         ev, col("ts"), col("event_type"), col("cents"),
         windowLen = "2 hours", slide = Some("1 hour"))
-      val out = java.nio.file.Files.createTempDirectory("st10_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st10_ckpt").toString
+      val out = ScratchDirs.create("st10_out").toString
+      val ckpt = ScratchDirs.create("st10_ckpt").toString
       agg.select(col("window.start").cast("long").as("w_start"),
           col("key").as("event_type"), col("n_events"),
           col("agg_sum").as("cents"))
@@ -1005,8 +1005,8 @@ object RelationalQueries {
       val sess = graft.streaming.StreamingScore.sessionize(
         ev, col("ts"), col("user_id"), gap = "6 hours",
         watermark = "0 seconds")
-      val out = java.nio.file.Files.createTempDirectory("st4_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st4_ckpt").toString
+      val out = ScratchDirs.create("st4_out").toString
+      val ckpt = ScratchDirs.create("st4_ckpt").toString
       sess.select(col("doc").cast("long").as("key"), col("n_events"),
           unix_micros(col("first_event")).as("first_us"),
           unix_micros(col("last_event")).as("last_us"))
@@ -1040,7 +1040,7 @@ object RelationalQueries {
     // are read, never what they contain.
     "st14_stream_warc" -> ((s, dir) => {
       import org.apache.spark.sql.functions.{col => c}
-      val tmp = java.nio.file.Files.createTempDirectory("st14").toString
+      val tmp = ScratchDirs.create("st14").toString
       val recs = graft.queries.MultimodalQueries.warcFixture(s, dir)
         .collect() // bounded: one small archive per fixture doc
       // The stream runs CONCURRENTLY with each drop, so a micro-batch can
@@ -1087,8 +1087,8 @@ object RelationalQueries {
       val joined = ev.join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("n_name"),
           col("event_type"))
-      val out = java.nio.file.Files.createTempDirectory("st11_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st11_ckpt").toString
+      val out = ScratchDirs.create("st11_out").toString
+      val ckpt = ScratchDirs.create("st11_ckpt").toString
       joined.writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1111,8 +1111,8 @@ object RelationalQueries {
           col("ts").as("mts"))
       val joined = graft.streaming.StreamingScore.streamIntervalJoin(
         ev, mk, key = "user_id", leftTs = "ts", rightTs = "mts")
-      val out = java.nio.file.Files.createTempDirectory("st5_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st5_ckpt").toString
+      val out = ScratchDirs.create("st5_out").toString
+      val ckpt = ScratchDirs.create("st5_ckpt").toString
       joined.select(col("event_id"), col("user_id"), col("marker_id"))
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
@@ -1140,8 +1140,8 @@ object RelationalQueries {
           concat(lit("u:"), col("user_id").cast("string")), 31L))
       val agg = graft.streaming.StreamingScore.windowedDistinctSketch(
         ev, col("ts"), col("event_type"), col("uh"))
-      val out = java.nio.file.Files.createTempDirectory("st6_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st6_ckpt").toString
+      val out = ScratchDirs.create("st6_out").toString
+      val ckpt = ScratchDirs.create("st6_ckpt").toString
       agg.select(col("window.start").cast("long").as("w_start"),
           col("key").as("event_type"), col("hll.nonzero").as("nonzero"),
           col("hll.sum_scaled").as("sum_scaled"),
@@ -1166,7 +1166,7 @@ object RelationalQueries {
         case org.apache.spark.sql.types.LongType => col("ts")
         case _ => unix_micros(col("ts").cast("timestamp")) * 1000
       }
-      val staged = java.nio.file.Files.createTempDirectory("st7_in").toString
+      val staged = ScratchDirs.create("st7_in").toString
       ev0.where(col("user_id").isNotNull)
         .select(col("user_id"), tsn.as("tsn"), col("event_id"),
           col("event_type"))
@@ -1175,7 +1175,7 @@ object RelationalQueries {
       val schema = s.read.parquet(staged).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
-      val root = java.nio.file.Files.createTempDirectory("st7").toString
+      val root = ScratchDirs.create("st7").toString
       graft.streaming.MergeSink.upsertStream(stream, Seq("user_id"),
           Seq("tsn", "event_id"), s"$root/state", s"$root/ckpt")
         .awaitTermination()
@@ -1209,10 +1209,10 @@ object RelationalQueries {
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       val split = lit("2024-01-20 00:00:00").cast("timestamp")
       val straggler = col("event_id") % 5 === 0
-      val staged = java.nio.file.Files.createTempDirectory("st8_in")
+      val staged = ScratchDirs.create("st8_in")
       def stage(df: org.apache.spark.sql.DataFrame, name: String,
                 modMs: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("st8_tmp").toString
+        val tmp = ScratchDirs.create("st8_tmp").toString
         df.repartition(1).write.mode("overwrite").parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .find(_.getName.endsWith(".parquet")).get
@@ -1234,8 +1234,8 @@ object RelationalQueries {
       val agg = graft.streaming.StreamingScore.windowedEventStats(
         stream, col("ts"), col("event_type"), col("cents"),
         watermark = "3 days")
-      val out = java.nio.file.Files.createTempDirectory("st8_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st8_ckpt").toString
+      val out = ScratchDirs.create("st8_out").toString
+      val ckpt = ScratchDirs.create("st8_ckpt").toString
       agg.select(col("window.start").cast("long").as("w_start"),
           col("key").as("event_type"), col("n_events"),
           col("agg_sum").as("cents"))
@@ -1267,10 +1267,10 @@ object RelationalQueries {
         .where(col("user_id").isNotNull)
       val s1 = lit("2024-01-11 00:00:00").cast("timestamp")
       val s2 = lit("2024-01-21 00:00:00").cast("timestamp")
-      val staged = java.nio.file.Files.createTempDirectory("st13_in")
+      val staged = ScratchDirs.create("st13_in")
       def stage(df: org.apache.spark.sql.DataFrame, name: String,
                 modMs: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("st13_tmp").toString
+        val tmp = ScratchDirs.create("st13_tmp").toString
         df.repartition(1).write.mode("overwrite").parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .find(_.getName.endsWith(".parquet")).get
@@ -1295,8 +1295,8 @@ object RelationalQueries {
       val joined = graft.streaming.StreamingScore.streamIntervalJoin(
         purchases, clicks, key = "user_id", leftTs = "p_ts",
         rightTs = "c_ts", joinType = "leftOuter")
-      val out = java.nio.file.Files.createTempDirectory("st13_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st13_ckpt").toString
+      val out = ScratchDirs.create("st13_out").toString
+      val ckpt = ScratchDirs.create("st13_ckpt").toString
       joined.select(col("p_id"), col("user_id"), col("c_id"))
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt)
@@ -1327,10 +1327,10 @@ object RelationalQueries {
       val mid = lit("2024-01-15 00:00:00").cast("timestamp")
       val dupA = col("event_id") % 3 === 0 // batch-1 rows re-sent in batch 2
       val dupB = col("event_id") % 4 === 0 // batch-2 rows re-sent in batch 3
-      val staged = java.nio.file.Files.createTempDirectory("st12_in")
+      val staged = ScratchDirs.create("st12_in")
       def stage(df: org.apache.spark.sql.DataFrame, name: String,
                 modMs: Long): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("st12_tmp").toString
+        val tmp = ScratchDirs.create("st12_tmp").toString
         df.repartition(1).write.mode("overwrite").parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .find(_.getName.endsWith(".parquet")).get
@@ -1350,8 +1350,8 @@ object RelationalQueries {
       val schema = s.read.parquet(staged.toString).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-      val out = java.nio.file.Files.createTempDirectory("st12_out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("st12_ckpt").toString
+      val out = ScratchDirs.create("st12_out").toString
+      val ckpt = ScratchDirs.create("st12_ckpt").toString
       stream.withWatermark("ts", "90 days")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("user_id"), col("event_type"))

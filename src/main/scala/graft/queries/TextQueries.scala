@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{ScratchDirs, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -358,10 +358,8 @@ object TextQueries {
               .otherwise(lit(""))))
       val cleaned = graft.operators.Corpus.c4LineFilter(
         streamed, col("doc_id"), col("txt"))
-      val out = java.nio.file.Files
-        .createTempDirectory("st1_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("st1_ckpt").toString
+      val out = ScratchDirs.create("st1_out").toString
+      val ckpt = ScratchDirs.create("st1_ckpt").toString
       cleaned.writeStream
         .format("parquet")
         .option("path", out)
@@ -403,10 +401,8 @@ object TextQueries {
         .as[graft.streaming.StreamingScore.StreamDoc]
       val first = graft.streaming.StreamingScore.dedupStream(docs)
         .select(col("doc_id"), md5(col("text")).as("content_key"))
-      val out = java.nio.file.Files
-        .createTempDirectory("st2_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("st2_ckpt").toString
+      val out = ScratchDirs.create("st2_out").toString
+      val ckpt = ScratchDirs.create("st2_ckpt").toString
       first.writeStream
         .format("parquet")
         .option("path", out)
@@ -846,10 +842,8 @@ object TextQueries {
         .as[graft.streaming.StreamingScore.StreamDoc]
       val first = graft.streaming.StreamingScore.dedupStream(docs)
         .select(col("doc_id"), col("text").as("canon_url"))
-      val out = java.nio.file.Files
-        .createTempDirectory("st15_out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("st15_ckpt").toString
+      val out = ScratchDirs.create("st15_out").toString
+      val ckpt = ScratchDirs.create("st15_ckpt").toString
       first.writeStream
         .format("parquet")
         .option("path", out)

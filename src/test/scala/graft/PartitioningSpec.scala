@@ -245,4 +245,38 @@ class PartitioningSpec extends SparkSpec {
     writes should not be empty
     writes.filterNot(_.startsWith("graft/GraftSession.scala:")) shouldBe empty
   }
+
+  it should "create temp dirs only through the helper" in {
+    // a gate's scratch dir outlives the builder (its frame reads it
+    // lazily), so only ScratchDirs may make one: it roots them all under
+    // one per-JVM dir that goes at JVM exit
+    val root = java.nio.file.Paths.get("src/main/scala")
+    Files.isDirectory(root) shouldBe true
+    import scala.jdk.CollectionConverters._
+    val sites = Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val lines = Files.readAllLines(f).asScala.toSeq
+        lines.zipWithIndex.collect {
+          case (l, i) if l.contains("createTempDirectory") =>
+            s"${root.relativize(f)}:${i + 1}"
+        }
+      }
+    sites should not be empty
+    sites.filterNot(_.startsWith("graft/ScratchDirs.scala:")) shouldBe empty
+  }
+
+  "ScratchDirs" should "delete every dir it made when cleanup runs" in {
+    val dirs = new ScratchDirs("scratch-spec")
+    val a = dirs.create("a")
+    val b = dirs.create("b")
+    Files.write(a.resolve("part-0.txt"), "x".getBytes("UTF-8"))
+    Files.createDirectories(b.resolve("ckpt/offsets"))
+    Files.write(b.resolve("ckpt/offsets/0"), "y".getBytes("UTF-8"))
+    a.getParent shouldBe b.getParent
+    Seq(a, b).foreach(d => Files.isDirectory(d) shouldBe true)
+    dirs.cleanup()
+    Seq(a, b, a.getParent).foreach(d => Files.exists(d) shouldBe false)
+    // the shared helper roots every dir under one per-JVM dir
+    ScratchDirs.create("p").getParent shouldBe ScratchDirs.create("q").getParent
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ml.{ModelIO, SuspiciousConnectsEstimator, SuspiciousConnectsModel, TopicModel}
+import graft.ml.{ModelIO, TopicModel}
 import graft.operators.Scoring
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -29,21 +29,6 @@ class PersistenceSpec extends SparkSpec {
     val loaded = TopicModel.load(spark, s"$dir/model")
     loaded.topicCount shouldBe 4
     scores(loaded) shouldBe scores(m) // exact equality, not approximate
-  }
-
-  "SuspiciousConnectsModel" should "persist via MLWritable and reload via MLReadable" in {
-    val dir = Files.createTempDirectory("scm").toFile.getAbsolutePath
-    val fitted = new SuspiciousConnectsEstimator()
-      .setTopicCount(3).setMaxIter(5)
-      .setDocCol("d").setWordCol("w")
-      .fit(corpus().withColumnRenamed("doc", "d").withColumnRenamed("word", "w"))
-    fitted.write.overwrite().save(s"$dir/m")
-    val loaded = SuspiciousConnectsModel.load(s"$dir/m")
-    loaded.uid shouldBe fitted.uid
-    val in = Seq(("d1", "w1"), ("dX", "w2")).toDF("d", "w")
-    val a = fitted.transform(in).select("score").as[Double].collect().toSeq
-    val b = loaded.transform(in).select("score").as[Double].collect().toSeq
-    b shouldBe a
   }
 
   "FlowPipeline.save/load" should "reload cuts (incl. +Infinity) and score identically" in {

@@ -81,7 +81,9 @@ class TopicModelSpec extends SparkSpec {
     // layout. train() now pins a constant hash layout before lda.fit, so
     // the same corpus + seed must yield BIT-identical frames under any
     // upstream layout. Exact ==, not a tolerance: layout sensitivity
-    // shows up as wholesale float divergence.
+    // shows up as wholesale float divergence. 12 docs over the 64 layout
+    // partitions leave most of them empty. The end product, the SCORES,
+    // must reproduce too, not just the model frames.
     def trained(shufflePartitions: Int, inputPartitions: Int) = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -89,65 +91,42 @@ class TopicModelSpec extends SparkSpec {
         val m = TopicModel.train(corpus.repartition(inputPartitions),
           topicCount = 3, maxIter = 8, seed = 7L)
         (m.docTopicMix.orderBy("doc").as[(String, Seq[Double])].collect(),
-          m.wordTopicProb.orderBy("word").as[(String, Seq[Double])].collect())
+          m.wordTopicProb.orderBy("word").as[(String, Seq[Double])].collect(),
+          graft.operators.Scoring.score(corpus.select("doc", "word"),
+              col("doc"), col("word"), m)
+            .select("doc", "word", "score")
+            .orderBy("doc", "word").as[(String, String, Double)].collect())
       } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
-    val (aMix, aProb) = trained(shufflePartitions = 4, inputPartitions = 1)
-    val (bMix, bProb) = trained(shufflePartitions = 32, inputPartitions = 13)
+    val (aMix, aProb, aScores) = trained(shufflePartitions = 4, inputPartitions = 1)
+    val (bMix, bProb, bScores) = trained(shufflePartitions = 32, inputPartitions = 13)
     aMix.map(_._1) shouldBe bMix.map(_._1)
     aMix.zip(bMix).foreach { case ((_, m1), (_, m2)) => m1 shouldBe m2 }
     aProb.map(_._1) shouldBe bProb.map(_._1)
     aProb.zip(bProb).foreach { case ((_, p1), (_, p2)) => p1 shouldBe p2 }
+    aScores.length should be > 0
+    aScores shouldBe bScores // exact double equality — bit-identical scores
   }
 
-  it should "stay layout-invariant at a non-default layoutPartitions" in {
-    // layoutPartitions widens LDA-fit input parallelism on big clusters;
-    // reproducibility must hold at ANY fixed value, not just the pinned
-    // 64 the goldens were trained at. Same two-config proof as above but
-    // with layoutPartitions = 7.
-    def trained(shufflePartitions: Int, inputPartitions: Int) = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      try {
-        val m = TopicModel.train(corpus.repartition(inputPartitions),
-          topicCount = 3, maxIter = 8, seed = 7L, layoutPartitions = 7)
-        (m.docTopicMix.orderBy("doc").as[(String, Seq[Double])].collect(),
-          m.wordTopicProb.orderBy("word").as[(String, Seq[Double])].collect())
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  it should "train on null-word rows as if they were filtered out" in {
+    // a null word has no dictionary id: its rows drop out of the corpus,
+    // a doc with only null words drops out with them, and no model row
+    // is keyed by null
+    val nulls = Seq(("doc1", null: String, 3L), ("doc5", null: String, 1L),
+      ("doc12", null: String, 2L)).toDF("doc", "word", "count")
+    def trained(wc: org.apache.spark.sql.DataFrame) = {
+      val m = TopicModel.train(wc, topicCount = 3, maxIter = 8, seed = 7L)
+      (m.docTopicMix.orderBy("doc").as[(String, Seq[Double])].collect().toSeq,
+        m.wordTopicProb.orderBy("word").as[(String, Seq[Double])].collect().toSeq)
     }
-    val (aMix, aProb) = trained(shufflePartitions = 3, inputPartitions = 2)
-    val (bMix, bProb) = trained(shufflePartitions = 32, inputPartitions = 11)
-    aMix.map(_._1) shouldBe bMix.map(_._1)
-    aMix.zip(bMix).foreach { case ((_, m1), (_, m2)) => m1 shouldBe m2 }
-    aProb.map(_._1) shouldBe bProb.map(_._1)
-    aProb.zip(bProb).foreach { case ((_, p1), (_, p2)) => p1 shouldBe p2 }
-  }
-
-  it should "reproduce bit-identical SCORES at the 256-wide crawl layout across session configs" in {
-    // layoutPartitions = 256 is the crawl-scale lever (every pipeline is
-    // LDA-fit-bound; widening the layout buys fit parallelism). The
-    // end-product contract: SCORES — not just the model frames — must be
-    // a pure function of (corpus, seed, layout), independent of session
-    // shuffle width and incoming partitioning, at the widened value too
-    // (256 > corpus rows, so most layout partitions are empty — the
-    // degenerate-layout edge a cluster-width setting hits on a small
-    // dev corpus).
-    def run(shufflePartitions: Int, inputPartitions: Int): Array[(String, String, Double)] = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      try {
-        val m = TopicModel.train(corpus.repartition(inputPartitions),
-          topicCount = 3, maxIter = 8, seed = 7L, layoutPartitions = 256)
-        graft.operators.Scoring.score(corpus.select("doc", "word"),
-            col("doc"), col("word"), m)
-          .select("doc", "word", "score")
-          .orderBy("doc", "word").as[(String, String, Double)].collect()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-    val a = run(shufflePartitions = 3, inputPartitions = 2)
-    val b = run(shufflePartitions = 32, inputPartitions = 11)
-    a.length should be > 0
-    a shouldBe b // exact double equality — bit-identical scores
+    val withNulls = corpus.unionByName(nulls)
+    val (aMix, aProb) = trained(withNulls)
+    val (bMix, bProb) = trained(withNulls.where(col("word").isNotNull))
+    aMix shouldBe bMix
+    aProb shouldBe bProb
+    aMix.map(_._1) should not contain ("doc12")
+    aProb.map(_._1) should not contain (null: String)
+    aProb.length shouldBe 6
   }
 
   // ---- training-quality regression gates (VERDICT r3 #3): LDA training
@@ -199,21 +178,6 @@ class TopicModelSpec extends SparkSpec {
     // train(): bad normalization, broken dictionary join, degenerate
     // topics — lands far outside this)
     ppTrained should be <= ppLegacy * 1.10
-  }
-
-  "SuspiciousConnectsEstimator" should "compose as a spark.ml pipeline stage" in {
-    import graft.ml.SuspiciousConnectsEstimator
-    import org.apache.spark.ml.Pipeline
-    val events = (0 until 200).map(i => (s"u${i % 8}", s"w${(i * 7) % 5}"))
-      .toDF("doc", "word")
-    val pipeline = new Pipeline().setStages(Array(
-      new SuspiciousConnectsEstimator().setTopicCount(3).setMaxIter(5)))
-    val model = pipeline.fit(events)
-    val scored = model.transform(events)
-    scored.columns should contain ("score")
-    val scores = scored.select("score").as[Double].collect()
-    scores.length shouldBe 200
-    scores.foreach { s => s should (be >= 0.0 and be <= 1.0) }
   }
 
   "EventsPipeline" should "run train+score end-to-end with valid scores" in {
