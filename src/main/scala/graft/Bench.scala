@@ -1,23 +1,27 @@
 package graft
 
-import graft.pipelines.EventsPipeline
+import graft.operators.Scoring
+import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline}
+import graft.queries.Fabrications
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Results are materialized through the noop sink so
-  * every expression is fully evaluated (a bare count() would let Catalyst
-  * prune the projected expressions away and time only the scan).
+  * prints one JSON line. Every entry is a named frame builder
+  * ([[SparkEntry.queries]] or [[pipelines]]), timed by one loop and
+  * materialized through the noop sink so every expression is fully
+  * evaluated (a bare count() would let Catalyst prune the projected
+  * expressions away and time only the scan). Per-layer attribution of a
+  * pipeline's time is `python3 perfbench/run.py --workload <w> --trace 1`.
   *
-  * ISOLATION (round 7): by default the suite FORKS A FRESH JVM PER QUERY
-  * FAMILY. The r6 artifact proved a 60+-query single-JVM run
-  * self-contaminates at JVM level — pipeline_events measured 26.6 s at
-  * sf0.1 vs 8.7 s on 30× the data, d10 quadrupled with zero code change —
-  * through heap fragmentation / shuffle-file / codegen-cache accretion
-  * that no per-rep checkpoint sweep clears and the contender stamp cannot
-  * see. Each family child pays its own Spark startup (untimed) and dies
-  * before the next starts, so no query inherits another family's JVM
-  * state. SPARK_GRAFT_BENCH_FORK=0 restores the single-JVM path (the
-  * children themselves run with it set).
+  * ISOLATION (round 7): the suite FORKS A FRESH JVM PER QUERY FAMILY.
+  * The r6 artifact proved a 60+-query single-JVM run self-contaminates at
+  * JVM level — pipeline_events measured 26.6 s at sf0.1 vs 8.7 s on 30×
+  * the data, d10 quadrupled with zero code change — through heap
+  * fragmentation / shuffle-file / codegen-cache accretion that no per-rep
+  * checkpoint sweep clears and the contender stamp cannot see. Each
+  * family child pays its own Spark startup (untimed) and dies before the
+  * next starts, so no query inherits another family's JVM state. A child
+  * is this main with SPARK_GRAFT_BENCH_OUT set.
   *
   * CONTAMINATION STAMP: any query whose median exceeds 2× its own min-rep
   * by more than a second is listed under "suspect" in the JSON — the r6
@@ -29,8 +33,7 @@ object Bench {
     * per family, members ordered as they run. Families group operators
     * that share warm state (same tables, same code paths) so the per-child
     * JIT warmup is amortized where it helps and discarded where it
-    * poisons. pe_* stage splits live in the pipeline family with their
-    * pipeline. */
+    * poisons. */
   private[graft] val families: Seq[(String, Seq[String])] = Seq(
     "relational" -> Seq(
       "s1_scan_project", "p2_range_predicate", "j1_equi_join", "j4_semi_join",
@@ -94,37 +97,49 @@ object Bench {
       "st10_stream_sliding", "st11_stream_static", "st12_stream_dedup_wm",
       "st13_stream_left_outer", "st14_stream_warc",
       "st15_stream_url_frontier"),
-    "pipeline" -> Seq(
-      "pipeline_events_first", "pipe_events_fixedmodel", "pipeline_events",
-      "pe_stage_cuts", "pe_stage_featurize",
-      "pe_stage_lda_fit", "pe_stage_score"),
-    // Flow/dns/proxy full train+score pipelines with the same stage-split
-    // pattern (r10 verdict: the events-only stage bench is blind to
-    // shape-specific LDA/cuts regressions — flow's dual-perspective
-    // corpus is ~2× events' doc count, dns/proxy carry the
-    // subdomain/agent featurize shapes). Each pipeline family forks its
-    // own JVM like the rest of the suite.
-    "pipeline_flow" -> Seq(
-      "pipeline_flow", "pf_stage_cuts", "pf_stage_featurize",
-      "pf_stage_lda_fit", "pf_stage_score"),
-    "pipeline_dns" -> Seq(
-      "pipeline_dns", "pd_stage_cuts", "pd_stage_featurize",
-      "pd_stage_lda_fit", "pd_stage_score"),
-    "pipeline_proxy" -> Seq(
-      "pipeline_proxy", "pp_stage_cuts", "pp_stage_featurize",
-      "pp_stage_lda_fit", "pp_stage_score"))
+    "pipeline" -> Seq("pipe_events_fixedmodel", "pipeline_events"),
+    // Flow/dns/proxy full train+score pipelines (r10 verdict: the
+    // events-only bench is blind to shape-specific LDA/cuts regressions —
+    // flow's dual-perspective corpus is ~2× events' doc count, dns/proxy
+    // carry the subdomain/agent featurize shapes). Each pipeline family
+    // forks its own JVM like the rest of the suite.
+    "pipeline_flow" -> Seq("pipeline_flow"),
+    "pipeline_dns" -> Seq("pipeline_dns"),
+    "pipeline_proxy" -> Seq("pipeline_proxy"))
 
-  /** Names timed by timeStage (reported under "stages", not "queries"). */
-  private val stageNames = Set("pipeline_events_first", "pe_stage_cuts",
-    "pe_stage_featurize", "pe_stage_lda_fit", "pe_stage_score",
-    "pf_stage_cuts", "pf_stage_featurize", "pf_stage_lda_fit",
-    "pf_stage_score", "pd_stage_cuts", "pd_stage_featurize",
-    "pd_stage_lda_fit", "pd_stage_score", "pp_stage_cuts",
-    "pp_stage_featurize", "pp_stage_lda_fit", "pp_stage_score")
+  /** The four suspicious-connects pipelines, train + score + top-k
+    * (featurize → LDA → score → top-k). All train at topicCount = 10 /
+    * maxIter = 10 so cross-pipeline numbers compare like for like; the
+    * flow/dns/proxy inputs are the fabrications the golden gates run on.
+    * Training runs when the builder is called, inside the timed body. */
+  private[graft] val pipelines: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "pipeline_events" -> ((s, dir) =>
+      EventsPipeline.run(Tables.load(s, dir, "events"),
+        threshold = 1.0, topK = 100, topicCount = 10)),
+    "pipeline_flow" -> ((s, dir) => {
+      val flows = Fabrications.flowInput(Tables.loadSpread(s, dir, "events"))
+      val m = FlowPipeline.train(flows, topicCount = 10, maxIter = 10)
+      Scoring.suspicious(FlowPipeline.score(flows, m), threshold = 1.0, topK = 100)
+    }),
+    "pipeline_dns" -> ((s, dir) => {
+      val dns = Fabrications.dnsInput(Tables.loadSpread(s, dir, "documents"))
+      val m = DnsPipeline.train(dns,
+        DnsPipeline.popularFrame(s, Fabrications.DnsPopular),
+        topicCount = 10, maxIter = 10)
+      Scoring.suspicious(DnsPipeline.score(dns, m), threshold = 1.0, topK = 100)
+    }),
+    "pipeline_proxy" -> ((s, dir) => {
+      val proxy = Fabrications.proxyInput(Tables.loadSpread(s, dir, "events"))
+      val m = ProxyPipeline.train(proxy, DnsPipeline.popularFrame(s, Set.empty),
+        topicCount = 10, maxIter = 10)
+      Scoring.suspicious(ProxyPipeline.score(proxy, m), threshold = 1.0, topK = 100)
+    }))
 
-  private def headline: Seq[String] =
-    families.flatMap(_._2).filterNot(n =>
-      stageNames(n) || n.startsWith("pipeline_events"))
+  /** One discarded warm-up rep per query absorbs the fork-per-family
+    * cold-JVM cost (r7's fix traded contamination for 0.1-0.3 s JIT
+    * upticks on every sub-second query: s1 0.22→0.33, j1 0.43→0.66), so
+    * medians measure the plan, not classloading. */
+  private val WarmupReps = 1
 
   /** Concurrent heavyweight processes (other JVMs, DuckDB oracles) — the
     * round-4 bench artifact was measured alongside still-streaming oracle
@@ -159,14 +174,14 @@ object Bench {
     out.toSeq
   }
 
-  /** One suite pass inside THIS JVM (the child body; also the
-    * single-JVM path). Returns (queries, stages, spread, contenders). */
-  private def runSuite(sfDir: String, skip: Set[String],
-                       only: Option[Set[String]], reps: Int):
-      (collection.mutable.LinkedHashMap[String, Double],
-       collection.mutable.LinkedHashMap[String, Double],
-       collection.mutable.LinkedHashMap[String, (Double, Double)],
-       Seq[String]) = {
+
+  /** Per entry: its median over `reps` timed runs, and its (min, max). */
+  private type Timings = collection.mutable.LinkedHashMap[String, (Double, Double, Double)]
+
+  /** One family's suite pass inside THIS JVM (the child body): times
+    * `names` in order. Returns (timings, contenders). */
+  private def runSuite(sfDir: String, names: Seq[String], reps: Int):
+      (Timings, Seq[String]) = {
     val contendersAtStart = contenders()
     if (contendersAtStart.nonEmpty) {
       System.err.println(s"[bench] WARNING: concurrent heavyweight processes:")
@@ -178,9 +193,6 @@ object Bench {
     }
     val spark = GraftSession.fromEnv()
 
-    def run(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
     // Untimed warmup: touch every table once and run one tiny shuffle so
     // JIT/classloading/scan setup don't land on the first timed query.
     Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
@@ -190,12 +202,6 @@ object Bench {
     spark.range(1000).groupBy((org.apache.spark.sql.functions.col("id") % 7)
       .as("k")).count().write.format("noop").mode("overwrite").save()
 
-    // EVERY query is timed `reps`× and reports its MEDIAN — single-run
-    // numbers proved unusable round-over-round (shared-JVM/GC noise
-    // produced 1.4-4.9× phantom swings on 1-6 s queries); the min/max
-    // spread is emitted alongside so a regression can be told from noise.
-    val timed = collection.mutable.LinkedHashMap[String, Double]()
-    val spread = collection.mutable.LinkedHashMap[String, (Double, Double)]()
     def timeOnce(name: String)(body: => Unit): Double = {
       val t0 = System.nanoTime()
       try { body; (System.nanoTime() - t0) / 1e9 }
@@ -204,266 +210,70 @@ object Bench {
         -1.0 // explicit failure marker, not a fast success
       }
     }
+
+    // EVERY query is timed `reps`× and reports its MEDIAN — single-run
+    // numbers proved unusable round-over-round (shared-JVM/GC noise
+    // produced 1.4-4.9× phantom swings on 1-6 s queries); the min/max
+    // spread is emitted alongside so a regression can be told from noise.
     // Each rep runs in a checkpoint scope: operators localCheckpoint their
     // intermediates, and without the scope those blocks outlive the query
     // and poison later entries' GC (the r4 suite-position effect). The
-    // unpersist itself is untimed (after the rep's clock stops).
-    // One discarded warm-up rep per query absorbs the fork-per-family
-    // cold-JVM cost (r7's fix traded contamination for 0.1-0.3 s JIT
-    // upticks on every sub-second query: s1 0.22→0.33, j1 0.43→0.66) so
-    // medians measure the plan, not classloading. A warm-up failure
-    // still marks the query failed — a crash must never read as a skip.
-    val warmups =
-      sys.env.get("SPARK_GRAFT_BENCH_WARMUP").map(_.toInt).getOrElse(1)
-    def time(name: String)(body: => Unit): Unit = {
-      if (skip(name) || only.exists(!_.contains(name))) {
-        System.err.println(s"[bench] $name skipped"); return
+    // unpersist itself is untimed (after the rep's clock stops). A warm-up
+    // failure still marks the query failed — a crash must never read as a
+    // skip, and neither may a name no builder answers to.
+    val entries = SparkEntry.queries ++ pipelines
+    val timed: Timings = collection.mutable.LinkedHashMap()
+    names.foreach { name =>
+      timed(name) = entries.get(name) match {
+        case None =>
+          System.err.println(s"[bench] $name unknown entry")
+          (-1.0, -1.0, -1.0)
+        case Some(build) =>
+          val ts = Seq.fill(WarmupReps + reps) {
+            var t = -1.0
+            CheckpointScope.withScope(spark) {
+              t = timeOnce(name) {
+                build(spark, sfDir).write.format("noop").mode("overwrite").save()
+              }
+            }
+            t
+          }
+          if (ts.contains(-1.0)) (-1.0, -1.0, -1.0)
+          else {
+            val sorted = ts.drop(WarmupReps).sorted
+            (sorted(reps / 2), sorted.head, sorted.last)
+          }
       }
-      val ts = Seq.fill(warmups + reps) {
-        var t = -1.0
-        CheckpointScope.withScope(spark) { t = timeOnce(name)(body) }
-        t
-      }
-      val measured = ts.drop(warmups)
-      if (ts.contains(-1.0)) {
-        timed(name) = -1.0
-        spread(name) = (-1.0, -1.0)
-      } else {
-        val sorted = measured.sorted
-        timed(name) = sorted(reps / 2)
-        spread(name) = (sorted.head, sorted.last)
-      }
-    }
-
-    // pipeline_events diagnostics (r3 showed a 12.3 s vs 5.8 s same-round
-    // swing on this one entry): the pipeline runs at the suite's FIRST
-    // position (pipeline_events_first, in `stages`) and at its usual LAST
-    // position (pipeline_events, in `queries`, keys unchanged vs r3), so a
-    // suite-position/JVM-state effect is measured instead of guessed; the
-    // stage map then splits the time into cuts / featurize+corpus /
-    // lda.fit / score+topk.
-    def pipelineEvents(): Unit =
-      run(EventsPipeline.run(Tables.load(spark, sfDir, "events"),
-        threshold = 1.0, topK = 100, topicCount = 10))
-
-    val stages = collection.mutable.LinkedHashMap[String, Double]()
-    def timeStage(name: String)(body: => Unit): Unit = {
-      if (skip(name) || only.exists(!_.contains(name))) {
-        System.err.println(s"[bench] $name skipped"); return
-      }
-      val ts = Seq.fill(warmups + reps)(timeOnce(name)(body))
-      val measured = ts.drop(warmups)
-      stages(name) =
-        if (ts.contains(-1.0)) -1.0 else measured.sorted.apply(reps / 2)
-      spread(name) = if (ts.contains(-1.0)) (-1.0, -1.0)
-        else (measured.min, measured.max)
-    }
-
-    // a requested stage whose prerequisite (the lda_fit model) was
-    // filtered out or failed must surface as an EXPLICIT failure marker,
-    // never vanish from the output as if it was never requested
-    def wanted(names: String*): Boolean =
-      names.exists(n => !skip(n) && !only.exists(!_.contains(n)))
-    def markUnreachable(name: String): Unit = if (wanted(name)) {
-      System.err.println(s"[bench] $name unreachable (lda_fit model missing)")
-      stages(name) = -1.0
-      spread(name) = (-1.0, -1.0)
-    }
-
-    timeStage("pipeline_events_first") { pipelineEvents() }
-
-    headline.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        time(name) { run(fn(spark, sfDir)) }
-      }
-    }
-    // Full suspicious-connects pipeline (featurize → LDA → score → top-k).
-    time("pipeline_events") { pipelineEvents() }
-
-    // Stage split, median-of-3 each, on the same inputs the pipeline uses.
-    // Guard the prerequisite work behind the same only/skip filter so a
-    // child whose family has no pe_* entries never pays the cuts/corpus
-    // jobs (they cost real time at large replicas).
-    val anyStage = Seq("pe_stage_cuts", "pe_stage_featurize",
-      "pe_stage_lda_fit", "pe_stage_score")
-      .exists(n => !skip(n) && !only.exists(!_.contains(n)))
-    if (anyStage) {
-      val events = Tables.load(spark, sfDir, "events")
-      timeStage("pe_stage_cuts") { EventsPipeline.computeCuts(events) }
-      val cuts = EventsPipeline.computeCuts(events)
-      timeStage("pe_stage_featurize") {
-        run(graft.operators.Corpus.wordCounts(
-          EventsPipeline.featurize(events, cuts),
-          org.apache.spark.sql.functions.col("user_id"),
-          org.apache.spark.sql.functions.col("word")))
-      }
-      val wc = graft.operators.Corpus.wordCounts(
-        EventsPipeline.featurize(events, cuts),
-        org.apache.spark.sql.functions.col("user_id"),
-        org.apache.spark.sql.functions.col("word"))
-      var model: graft.ml.TopicModel.Model = null
-      timeStage("pe_stage_lda_fit") {
-        model = graft.ml.TopicModel.train(wc, topicCount = 10, maxIter = 10)
-      }
-      if (model != null) {
-        val emodel = EventsPipeline.Model(cuts, model, 10)
-        timeStage("pe_stage_score") {
-          run(graft.operators.Scoring.suspicious(
-            EventsPipeline.score(events, emodel)
-              .select("event_id", "user_id", "event_type", "word", "score"),
-            threshold = 1.0, topK = 100,
-            tiebreak = Seq(org.apache.spark.sql.functions.col("event_id"))))
-        }
-      } else markUnreachable("pe_stage_score")
-    }
-    // Flow/dns/proxy full pipelines + stage splits (the pe_* pattern; r10
-    // verdict item 2): all three train at topicCount=10 / maxIter=10 —
-    // the events bench shape — so stage sums track their pipeline entry
-    // and cross-pipeline numbers compare like for like. Inputs are the
-    // same fabrications the golden gates run on.
-    import graft.pipelines.{DnsPipeline, FlowPipeline, ProxyPipeline}
-    import graft.queries.PipelineQueries
-    import org.apache.spark.sql.functions.{col, lit}
-    val Pop = Set("src1", "src3", "src5")
-
-    time("pipeline_flow") {
-      val flows = PipelineQueries.flowInput(spark, sfDir)
-      val m = FlowPipeline.train(flows, topicCount = 10, maxIter = 10)
-      run(graft.operators.Scoring.suspicious(
-        FlowPipeline.score(flows, m), threshold = 1.0, topK = 100))
-    }
-    if (wanted("pf_stage_cuts", "pf_stage_featurize", "pf_stage_lda_fit",
-        "pf_stage_score")) {
-      val flows = FlowPipeline.validTimes(
-        PipelineQueries.flowInput(spark, sfDir)).withColumn("__w", lit(1L))
-      timeStage("pf_stage_cuts") { FlowPipeline.computeCuts(flows) }
-      val fcuts = FlowPipeline.computeCuts(flows)
-      timeStage("pf_stage_featurize") {
-        run(FlowPipeline.corpus(FlowPipeline.featurize(flows, fcuts), col("__w")))
-      }
-      val fwc = FlowPipeline.corpus(FlowPipeline.featurize(flows, fcuts), col("__w"))
-      var fTopics: graft.ml.TopicModel.Model = null
-      timeStage("pf_stage_lda_fit") {
-        fTopics = graft.ml.TopicModel.train(fwc, topicCount = 10, maxIter = 10)
-      }
-      if (fTopics != null) {
-        val fm = FlowPipeline.Model(fcuts, fTopics, 10)
-        timeStage("pf_stage_score") {
-          run(graft.operators.Scoring.suspicious(
-            FlowPipeline.score(PipelineQueries.flowInput(spark, sfDir), fm),
-            threshold = 1.0, topK = 100))
-        }
-      } else markUnreachable("pf_stage_score")
-    }
-
-    time("pipeline_dns") {
-      val dns = PipelineQueries.dnsInput(spark, sfDir)
-      val m = DnsPipeline.train(dns, DnsPipeline.popularFrame(spark, Pop),
-        topicCount = 10, maxIter = 10)
-      run(graft.operators.Scoring.suspicious(
-        DnsPipeline.score(dns, m), threshold = 1.0, topK = 100))
-    }
-    if (wanted("pd_stage_cuts", "pd_stage_featurize", "pd_stage_lda_fit",
-        "pd_stage_score")) {
-      val popular = DnsPipeline.popularFrame(spark, Pop)
-      val withSub = DnsPipeline.withSubdomains(DnsPipeline.validRows(
-        PipelineQueries.dnsInput(spark, sfDir)).withColumn("__w", lit(1L)))
-      timeStage("pd_stage_cuts") { DnsPipeline.computeCuts(withSub) }
-      val dcuts = DnsPipeline.computeCuts(withSub)
-      timeStage("pd_stage_featurize") {
-        run(graft.operators.Corpus.wordCounts(
-          DnsPipeline.featurizeWithLookup(withSub, dcuts, popular),
-          col("ip_dst"), col("word"), col("__w")))
-      }
-      val dwc = graft.operators.Corpus.wordCounts(
-        DnsPipeline.featurizeWithLookup(withSub, dcuts, popular),
-        col("ip_dst"), col("word"), col("__w"))
-      var dTopics: graft.ml.TopicModel.Model = null
-      timeStage("pd_stage_lda_fit") {
-        dTopics = graft.ml.TopicModel.train(dwc, topicCount = 10, maxIter = 10)
-      }
-      if (dTopics != null) {
-        val dm = DnsPipeline.Model(dcuts, popular, dTopics, 10)
-        timeStage("pd_stage_score") {
-          run(graft.operators.Scoring.suspicious(
-            DnsPipeline.score(PipelineQueries.dnsInput(spark, sfDir), dm),
-            threshold = 1.0, topK = 100))
-        }
-      } else markUnreachable("pd_stage_score")
-    }
-
-    time("pipeline_proxy") {
-      val proxy = PipelineQueries.proxyInput(spark, sfDir)
-      val m = ProxyPipeline.train(proxy, DnsPipeline.popularFrame(spark, Set.empty),
-        topicCount = 10, maxIter = 10)
-      run(graft.operators.Scoring.suspicious(
-        ProxyPipeline.score(proxy, m), threshold = 1.0, topK = 100))
-    }
-    if (wanted("pp_stage_cuts", "pp_stage_featurize", "pp_stage_lda_fit",
-        "pp_stage_score")) {
-      val popular = DnsPipeline.popularFrame(spark, Set.empty)
-      val withFeats = ProxyPipeline.withFeatures(ProxyPipeline.validRows(
-        PipelineQueries.proxyInput(spark, sfDir)).withColumn("__w", lit(1L)))
-      timeStage("pp_stage_cuts") { ProxyPipeline.computeCuts(withFeats) }
-      val pcuts = ProxyPipeline.computeCuts(withFeats)
-      timeStage("pp_stage_featurize") {
-        run(graft.operators.Corpus.wordCounts(
-          ProxyPipeline.featurizeWithLookup(withFeats, pcuts, popular),
-          col("clientip"), col("word"), col("__w")))
-      }
-      val pwc = graft.operators.Corpus.wordCounts(
-        ProxyPipeline.featurizeWithLookup(withFeats, pcuts, popular),
-        col("clientip"), col("word"), col("__w"))
-      var pTopics: graft.ml.TopicModel.Model = null
-      timeStage("pp_stage_lda_fit") {
-        pTopics = graft.ml.TopicModel.train(pwc, topicCount = 10, maxIter = 10)
-      }
-      if (pTopics != null) {
-        val pm = ProxyPipeline.Model(pcuts, popular, pTopics, 10)
-        timeStage("pp_stage_score") {
-          run(graft.operators.Scoring.suspicious(
-            ProxyPipeline.score(PipelineQueries.proxyInput(spark, sfDir), pm),
-            threshold = 1.0, topK = 100))
-        }
-      } else markUnreachable("pp_stage_score")
     }
 
     val allContenders = (contendersAtStart ++ contenders()).distinct
     spark.stop()
-    (timed, stages, spread, allContenders)
+    (timed, allContenders)
   }
 
   /** Fork one child JVM per family and merge their results. The child is
-    * THIS main with SPARK_GRAFT_BENCH_FORK=0, ONLY=<family members> and
-    * OUT=<tsv path>; it inherits the parent's full JVM flags (add-opens,
-    * -Xmx, -D props) and classpath, so child Spark == parent Spark. */
-  private def runForked(skip: Set[String], only: Option[Set[String]],
-                        sfDir: String):
-      (collection.mutable.LinkedHashMap[String, Double],
-       collection.mutable.LinkedHashMap[String, Double],
-       collection.mutable.LinkedHashMap[String, (Double, Double)],
-       Seq[String]) = {
+    * THIS main with ONLY=<family members> and OUT=<tsv path>; it inherits
+    * the parent's full JVM flags (add-opens, -Xmx, -D props) and
+    * classpath, so child Spark == parent Spark. */
+  private def runForked(selected: String => Boolean): (Timings, Seq[String]) = {
     import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java")
       .toString
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
     val cp = sys.props("java.class.path")
-    val timed = collection.mutable.LinkedHashMap[String, Double]()
-    val stages = collection.mutable.LinkedHashMap[String, Double]()
-    val spread = collection.mutable.LinkedHashMap[String, (Double, Double)]()
+    val outDir = ScratchDirs.create("bench")
+    val timed: Timings = collection.mutable.LinkedHashMap()
     val contNames = collection.mutable.LinkedHashSet[String]()
     families.foreach { case (fam, members) =>
-      val effective = members.filter(n =>
-        !skip(n) && only.forall(_.contains(n)))
+      val effective = members.filter(selected)
       if (effective.nonEmpty) {
-        val out = java.nio.file.Files.createTempFile(s"bench_$fam", ".tsv")
+        val out = outDir.resolve(s"$fam.tsv")
         val cmd = (Seq(javaBin) ++ jvmArgs ++
           Seq("-cp", cp, "graft.Bench")).asJava
         val pb = new ProcessBuilder(cmd)
         pb.directory(new java.io.File(sys.props("user.dir")))
         val env = pb.environment()
-        env.put("SPARK_GRAFT_BENCH_FORK", "0")
         env.put("SPARK_GRAFT_BENCH_ONLY", effective.mkString(","))
         env.put("SPARK_GRAFT_BENCH_OUT", out.toString)
         env.remove("SPARK_GRAFT_BENCH_SKIP") // already applied above
@@ -484,32 +294,23 @@ object Bench {
         drain.join(2000)
         System.err.println(f"[bench] family $fam exited $code " +
           f"(${(System.nanoTime() - t0) / 1e9}%.1f s wall)")
-        val got = collection.mutable.Map[String, (String, Double, Double, Double)]()
+        val got = collection.mutable.Map[String, (Double, Double, Double)]()
         if (java.nio.file.Files.exists(out)) {
           scala.io.Source.fromFile(out.toFile).getLines().foreach { line =>
             line.split("\t") match {
-              case Array(kind@("Q" | "S"), name, med, lo, hi) =>
-                got(name) = (kind, med.toDouble, lo.toDouble, hi.toDouble)
+              case Array("Q", name, med, lo, hi) =>
+                got(name) = (med.toDouble, lo.toDouble, hi.toDouble)
               case Array("C", c) => contNames += c
               case _ =>
             }
           }
           java.nio.file.Files.deleteIfExists(out)
         }
-        effective.foreach { name =>
-          got.get(name) match {
-            case Some((kind, med, lo, hi)) =>
-              if (kind == "S") stages(name) = med else timed(name) = med
-              spread(name) = (lo, hi)
-            case None => // child died before reaching it: explicit failure
-              if (stageNames(name)) stages(name) = -1.0
-              else timed(name) = -1.0
-              spread(name) = (-1.0, -1.0)
-          }
-        }
+        // a member the child never reported (it died first): explicit failure
+        effective.foreach(n => timed(n) = got.getOrElse(n, (-1.0, -1.0, -1.0)))
       }
     }
-    (timed, stages, spread, contNames.toSeq)
+    (timed, contNames.toSeq)
   }
 
   def main(args: Array[String]): Unit = {
@@ -527,49 +328,44 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
-    val fork = sys.env.get("SPARK_GRAFT_BENCH_FORK").forall(_ != "0")
-    val childOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    def selected(name: String): Boolean =
+      !skip(name) && only.forall(_.contains(name))
 
-    val (timed, stages, spread, conts) =
-      if (fork) runForked(skip, only, sfDir)
-      else runSuite(sfDir, skip, only, reps)
-
-    childOut match {
+    sys.env.get("SPARK_GRAFT_BENCH_OUT") match {
       case Some(path) => // child mode: machine lines for the parent, no JSON
+        val (timed, conts) =
+          runSuite(sfDir, families.flatMap(_._2).filter(selected), reps)
         val sb = new StringBuilder
-        timed.foreach { case (n, v) =>
-          val (lo, hi) = spread.getOrElse(n, (-1.0, -1.0))
-          sb.append(f"Q\t$n\t$v%.4f\t$lo%.4f\t$hi%.4f\n")
-        }
-        stages.foreach { case (n, v) =>
-          val (lo, hi) = spread.getOrElse(n, (-1.0, -1.0))
-          sb.append(f"S\t$n\t$v%.4f\t$lo%.4f\t$hi%.4f\n")
+        timed.foreach { case (n, (med, lo, hi)) =>
+          sb.append(f"Q\t$n\t$med%.4f\t$lo%.4f\t$hi%.4f\n")
         }
         conts.foreach(c => sb.append(s"C\t$c\n"))
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
           sb.toString)
-        return
-      case None =>
+      case None => report(runForked(selected), reps, sfDir)
     }
+  }
 
+  /** Print the compact JSON line and write the full one to
+    * BENCH_LOCAL.json. */
+  private def report(result: (Timings, Seq[String]), reps: Int,
+                     sfDir: String): Unit = {
+    val (timed, conts) = result
     // Contamination stamp: a median more than 2× its own min-rep (and more
     // than a second over it — sub-second queries bounce on scheduler
     // noise) is NOT a trustworthy median; r6's poisoned entries (26.6 s
     // vs 8.6 min-rep) would all have carried this stamp. Failed entries
     // (-1) are already explicit.
-    val suspect = (timed ++ stages).collect {
-      case (n, med) if med > 0 &&
-        spread.get(n).exists { case (lo, _) =>
-          lo > 0 && med > 2 * lo && med - lo > 1.0 } => n
+    val suspect = timed.collect {
+      case (n, (med, lo, _)) if med > 0 && lo > 0 && med > 2 * lo &&
+        med - lo > 1.0 => n
     }.toSeq
 
-    val qs = timed.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val qs = timed.map { case (k, (v, _, _)) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    val st = stages.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val sp = timed.map { case (k, (_, lo, hi)) => "\"" + k + f"\":[$lo%.3f,$hi%.3f]" }
       .mkString("{", ",", "}")
-    val sp = spread.map { case (k, (lo, hi)) => "\"" + k + f"\":[$lo%.3f,$hi%.3f]" }
-      .mkString("{", ",", "}")
-    val total = timed.values.filter(_ > 0).sum
+    val total = timed.values.map(_._1).filter(_ > 0).sum
     val contended = if (conts.isEmpty) "" else {
       val list = conts.map(c => "\"" + c.replace("\\", "\\\\")
         .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
@@ -577,18 +373,17 @@ object Bench {
     }
     val sus = if (suspect.isEmpty) ""
       else suspect.map("\"" + _ + "\"").mkString(""","suspect":[""", ",", "]")
-    val forked = s""","forked":$fork"""
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_reps":$reps$forked,"queries":$qs,"stages":$st,"spread":$sp$sus$contended,"sf":"$sfDir"}"""
+    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_reps":$reps,"forked":true,"queries":$qs,"spread":$sp$sus$contended,"sf":"$sfDir"}"""
     // The driver's per-round artifact keeps only the LAST 2000 chars of
     // stdout (r5's tail cut the line's head off → "parsed": null in r3,
     // r4 AND r5). stdout therefore gets a COMPACT line — 2-decimal
-    // medians and the contention/suspect stamps, no stages/spread —
-    // sized to survive the window (~1.7 KB at 67 queries) with sbt's
-    // trailing "[success]" line after it; the FULL record (stages,
-    // spreads) is the BENCH_LOCAL.json file.
-    val qsc = timed.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
+    // medians and the contention/suspect stamps, no spread — sized to
+    // survive the window (~1.7 KB at 67 queries) with sbt's trailing
+    // "[success]" line after it; the FULL record (spreads) is the
+    // BENCH_LOCAL.json file.
+    val qsc = timed.map { case (k, (v, _, _)) => "\"" + k + f"\":$v%.2f" }
       .mkString("{", ",", "}")
-    val compact = f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_reps":$reps$forked,"queries":$qsc$sus$contended,"sf":"$sfDir"}"""
+    val compact = f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_reps":$reps,"forked":true,"queries":$qsc$sus$contended,"sf":"$sfDir"}"""
     println(compact)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), json + "\n")

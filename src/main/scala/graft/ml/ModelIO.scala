@@ -42,32 +42,19 @@ object ModelIO {
   def corpusLine(pairs: Seq[(Int, Long)]): String =
     s"${pairs.length} " + pairs.map { case (i, c) => s"$i:$c" }.mkString(" ")
 
-  /** Dense sorted word ids (word → 0..V-1 in lexicographic order) as a
-    * DISTRIBUTED assignment: range-partitioned sort + zipWithIndex
-    * (per-partition counts, broadcast offsets) — same ids as a global
-    * `row_number() over (order by word)` window without funneling the
-    * vocabulary through one partition. */
-  def denseWordIds(words: DataFrame): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    // null words are dropped, not sorted: a dictionary entry for null is
-    // meaningless (no corpus line can reference it) and RDD.sortBy would
-    // NPE on one — the one divergence from a NULLS FIRST row_number window.
-    words.select(col("word").cast("string")).where(col("word").isNotNull)
-      .distinct().as[String].rdd
-      .sortBy(identity)
-      .zipWithIndex()
-      .map { case (w, i) => (w, i.toInt) }
-      .toDF("word", "word_id")
-  }
-
-  /** Distributed export of a (doc, word, count) corpus to model.dat lines
-    * plus the word dictionary used — the reference built both on the
-    * driver (OniLDACWrapper.scala:40-68); here the dictionary is the
-    * distributed [[denseWordIds]] and the lines one group-concat pass.
+  /** Export of a (doc, word, count) corpus to model.dat lines plus the
+    * word dictionary used — the reference built both on the driver
+    * (OniLDACWrapper.scala:40-68); here the dictionary is the one
+    * [[TopicModel.train]] builds (bounded by [[TopicModel.MaxDriverVocab]],
+    * dense ids in String order, null words dropped) and the lines one
+    * distributed group-concat pass.
     * Returns (lines: (doc, line), dict: (word, word_id)). */
   def exportCorpus(wordCounts: DataFrame): (DataFrame, DataFrame) = {
-    val dict = denseWordIds(wordCounts.select("word"))
+    val spark = wordCounts.sparkSession
+    import spark.implicits._
+    val dict = TopicModel.vocabulary(
+        wordCounts.select(col("word").cast("string").as("word")))
+      .toSeq.zipWithIndex.toDF("word", "word_id")
     val lines = wordCounts.join(dict, "word")
       .groupBy("doc")
       .agg(sort_array(collect_list(struct(col("word_id"), col("count")))).as("pairs"))

@@ -52,6 +52,27 @@ object TopicModel {
   /** LDA doc concentration, the reference's operating point. */
   private val Alpha: Double = 2.5
 
+  /** The word dictionary, built on the driver as the reference did
+    * (OniLDACWrapper.scala:40-49): the distinct non-null `word`s of
+    * `words` (a string column) in String order, a word's id being its
+    * index. The collect is bounded (limit(cap + 1), the Lineage.cutSmall
+    * guard), so a vocabulary over `maxDriverVocab` words fails with an
+    * IllegalArgumentException before it reaches the driver. */
+  private[ml] def vocabulary(words: DataFrame,
+                             maxDriverVocab: Int = MaxDriverVocab): Array[String] = {
+    val spark = words.sparkSession
+    import spark.implicits._
+    val vocab = words.select("word").where(col("word").isNotNull).distinct()
+      .limit(maxDriverVocab + 1).as[String].collect().sorted
+    require(vocab.length <= maxDriverVocab,
+      s"vocabulary has more than $maxDriverVocab distinct words, the " +
+        "driver cap for a word dictionary (and the topicsMatrix training " +
+        "materializes). This model is designed for DISCRETIZED feature " +
+        "vocabularies (bounded by the product of bin counts); cap an open " +
+        "text vocabulary first, or raise maxDriverVocab knowingly.")
+    vocab
+  }
+
   /** Train from a (doc, word, count) corpus with MLlib's online
     * (variational minibatch) optimizer on the pinned
     * [[TrainLayoutPartitions]] layout. Rows with a null word are dropped.
@@ -70,21 +91,10 @@ object TopicModel {
       col("count").cast("double").as("cnt"))
       .cache()
 
-    // Dictionary = dense sorted word ids, built on the driver as the
-    // reference did (OniLDACWrapper.scala:40-49): the vocabulary × k
-    // topicsMatrix below is materialized on the driver anyway, so a
-    // vocabulary within that cap costs the driver less than the matrix.
-    // The collect is bounded (limit(cap + 1), the Lineage.cutSmall guard),
-    // so an oversized vocabulary fails before it reaches the driver. A
-    // word's id is its index in String order.
-    val vocab = corpus.select("word").where(col("word").isNotNull).distinct()
-      .limit(maxDriverVocab + 1).as[String].collect().sorted
-    require(vocab.length <= maxDriverVocab,
-      s"vocabulary has more than $maxDriverVocab distinct words, the " +
-        "driver cap for the topicsMatrix materialization. This model is " +
-        "designed for DISCRETIZED feature vocabularies (bounded by the " +
-        "product of bin counts); cap an open text vocabulary before " +
-        "training, or raise maxDriverVocab knowingly.")
+    // the vocabulary × k topicsMatrix below is materialized on the driver
+    // anyway, so a vocabulary within that cap costs the driver less than
+    // the matrix
+    val vocab = vocabulary(corpus, maxDriverVocab)
     val vocabSize = vocab.length
     val dict = vocab.toSeq.zipWithIndex.toDF("word", "word_id")
 

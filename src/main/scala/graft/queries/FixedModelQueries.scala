@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.Binning
 import graft.ml.{ModelIO, TopicModel}
 import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline}
+import graft.queries.Fabrications.DnsCuts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,14 +60,6 @@ object FixedModelQueries {
   private val FlowIbytCuts = Seq(1000.0, 10000.0, 100000.0)
   private val FlowIpktCuts = Seq(50.0, 500.0)
 
-  // dns: same constants as PipelineQueries' word gate (keep in sync)
-  private val DnsLenCuts = Seq(100.0, 200.0, 300.0, 400.0)
-  private val DnsTimeCuts = Seq(100.0, 250.0, 400.0)
-  private val DnsSubLenCuts = Seq(3.0, 5.0, 8.0)
-  private val DnsEntCuts = Seq(1.5, 2.0, 2.5)
-  private val DnsPerCuts = Seq(2.0, 3.0, 4.0)
-  private val DnsPopular = Set("src1", "src3", "src5")
-
   private val ProxyTimeCuts = Seq(21600.0, 43200.0, 64800.0)
   private val ProxyEntCuts = Seq(3.85, 3.95, 4.02)
   private val ProxyAgentCuts = Seq(1990.0, 2010.0)
@@ -80,12 +73,7 @@ object FixedModelQueries {
   // ---- gates --------------------------------------------------------------
 
   private def flowInput(s: SparkSession, dir: String): DataFrame =
-    Fabrications.flowPorts(t(s, dir, "events"))
-      .withColumn("trhour", hour(col("ts")))
-      .withColumn("trminute", minute(col("ts")))
-      .withColumn("trsec", second(col("ts")))
-      .withColumn("ipkt", (col("value") * 10).cast("long") + 1)
-      .withColumn("ibyt", (col("value") * 1000).cast("long") + 40)
+    Fabrications.flowInput(t(s, dir, "events"))
       .select("event_id", "sip", "dip", "sport", "dport",
         "trhour", "trminute", "trsec", "ipkt", "ibyt")
 
@@ -117,41 +105,18 @@ object FixedModelQueries {
           score9(least(col("src_score"), col("dst_score"))).as("min_score"))),
 
     "pipe_dns_fixedmodel" -> ((s, dir) => {
-      val dns = t(s, dir, "documents")
-        .withColumn("dns_qry_name",
-          Fabrications.dnsQname(col("doc_id"), col("source")))
-        .withColumn("frame_len", col("n_chars"))
-        .withColumn("unix_tstamp", col("doc_id") % 500)
-        .withColumn("dns_qry_type", (col("doc_id") % 4).cast("int"))
-        .withColumn("dns_qry_rcode", (col("doc_id") % 3).cast("int"))
-        .withColumn("frame_time", concat(lit("t"), col("doc_id")))
-        .withColumn("ip_dst",
-          concat(lit("10.1."), (col("doc_id") % 50).cast("string"), lit(".9")))
+      val dns = Fabrications.dnsInput(t(s, dir, "documents"))
         .select("doc_id", "dns_qry_name", "frame_len", "unix_tstamp",
           "dns_qry_type", "dns_qry_rcode", "frame_time", "ip_dst")
-      val m = DnsPipeline.Model(
-        DnsPipeline.Cuts(DnsTimeCuts.toArray, DnsLenCuts.toArray,
-          DnsSubLenCuts.toArray, DnsEntCuts.toArray, DnsPerCuts.toArray),
-        DnsPipeline.popularFrame(s, DnsPopular), fixtureModel(s), topicCount)
+      val m = DnsPipeline.Model(DnsCuts,
+        DnsPipeline.popularFrame(s, Fabrications.DnsPopular), fixtureModel(s),
+        topicCount)
       DnsPipeline.results(dns, m, threshold = 1.0, topK = -1)
         .select(col("doc_id"), col("ip_dst"), col("word"),
           score9(col("score")).as("score"))}),
 
     "pipe_proxy_fixedmodel" -> ((s, dir) => {
-      val proxy = t(s, dir, "events")
-        .withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-        .withColumn("p_time", date_format(col("ts"), "HH:mm:ss"))
-        .withColumn("clientip",
-          concat(lit("10.2."), (col("user_id") % 50).cast("string"), lit(".7")))
-        .withColumn("host", concat(col("event_type"), lit(".example.com")))
-        .withColumn("reqmethod",
-          when(col("event_id") % 2 === 0, "GET").otherwise("POST"))
-        .withColumn("useragent", col("event_type"))
-        .withColumn("resconttype",
-          when(col("event_id") % 2 === 0, lit("text/plain")).otherwise(lit("image/png")))
-        .withColumn("fulluri",
-          concat(lit("http://h/"), col("event_type"), lit("?"), col("props")))
-        .withColumn("respcode", (lit(200) + col("event_id") % 3 * 100).cast("string"))
+      val proxy = Fabrications.proxyInput(t(s, dir, "events"))
         .select("event_id", "p_date", "p_time", "clientip", "host",
           "reqmethod", "useragent", "resconttype", "fulluri", "respcode")
       val m = ProxyPipeline.Model(
@@ -332,11 +297,11 @@ object FixedModelQueries {
          |    (CASE WHEN domain = 'intel' THEN 2
          |          WHEN domain IN ('src1', 'src3', 'src5') THEN 1
          |          ELSE 0 END)::VARCHAR
-         |    || '_' || ${binSql("n_chars::DOUBLE", DnsLenCuts)}::VARCHAR
-         |    || '_' || ${binSql("unix_tstamp::DOUBLE", DnsTimeCuts)}::VARCHAR
-         |    || '_' || ${binSql("sublen", DnsSubLenCuts)}::VARCHAR
-         |    || '_' || ${binSql("sent", DnsEntCuts)}::VARCHAR
-         |    || '_' || ${binSql("nper", DnsPerCuts)}::VARCHAR
+         |    || '_' || ${binSql("n_chars::DOUBLE", DnsCuts.frameLen.toSeq)}::VARCHAR
+         |    || '_' || ${binSql("unix_tstamp::DOUBLE", DnsCuts.time.toSeq)}::VARCHAR
+         |    || '_' || ${binSql("sublen", DnsCuts.subLen.toSeq)}::VARCHAR
+         |    || '_' || ${binSql("sent", DnsCuts.entropy.toSeq)}::VARCHAR
+         |    || '_' || ${binSql("nper", DnsCuts.numPeriods.toSeq)}::VARCHAR
          |    || '_' || qry_type::VARCHAR || '_' || rcode::VARCHAR AS word
          |  FROM sub),
          |$modelCtes

@@ -31,20 +31,23 @@ object PipelineQueries {
         threshold = 1.0, topK = 100, topicCount = 10)),
 
     "pipe_flow_sf001" -> ((s, dir) =>
-      graft.pipelines.FlowPipeline.runChecked(flowInput(s, dir),
+      graft.pipelines.FlowPipeline.runChecked(
+          Fabrications.flowInput(t(s, dir, "events")),
           threshold = 1.0, topK = 100, topicCount = 5, seed = 42L,
           tiebreak = Seq(col("event_id")))
         .select("event_id", "sip", "dip", "src_word", "dst_word", "score")),
 
     "pipe_dns_sf001" -> ((s, dir) =>
-      graft.pipelines.DnsPipeline.runChecked(dnsInput(s, dir),
-          graft.pipelines.DnsPipeline.popularFrame(s, Set("src1", "src3", "src5")),
+      graft.pipelines.DnsPipeline.runChecked(
+          Fabrications.dnsInput(t(s, dir, "documents")),
+          graft.pipelines.DnsPipeline.popularFrame(s, Fabrications.DnsPopular),
           threshold = 1.0, topK = 100, topicCount = 5,
           seed = 42L, tiebreak = Seq(col("doc_id")))
         .select("doc_id", "ip_dst", "word", "score")),
 
     "pipe_proxy_sf001" -> ((s, dir) =>
-      graft.pipelines.ProxyPipeline.runChecked(proxyInput(s, dir),
+      graft.pipelines.ProxyPipeline.runChecked(
+          Fabrications.proxyInput(t(s, dir, "events")),
           graft.pipelines.DnsPipeline.popularFrame(s, Set.empty),
           threshold = 1.0, topK = 100, topicCount = 5, seed = 42L,
           tiebreak = Seq(col("event_id")))
@@ -82,63 +85,19 @@ object PipelineQueries {
     """SELECT 100::BIGINT AS n_fresh, 100::BIGINT AS n_golden,
       |       100::BIGINT AS n_matching, TRUE AS matches_golden""".stripMargin
 
-  /** The netflow fabrication behind pipe_flow_golden. */
-  private[graft] def flowInput(s: SparkSession, dir: String): DataFrame =
-    Fabrications.flowPorts(t(s, dir, "events"))
-      .withColumn("trhour", hour(col("ts")))
-      .withColumn("trminute", minute(col("ts")))
-      .withColumn("trsec", second(col("ts")))
-      .withColumn("ipkt", (col("value") * 10).cast("long") + 1)
-      .withColumn("ibyt", (col("value") * 1000).cast("long") + 40)
-
-  /** The dns fabrication behind pipe_dns_golden. */
-  private[graft] def dnsInput(s: SparkSession, dir: String): DataFrame =
-    dnsEvents(s, dir)
-      .withColumn("frame_time", concat(lit("t"), col("doc_id")))
-      .withColumn("ip_dst", concat(lit("10.1."), (col("doc_id") % 50).cast("string"), lit(".9")))
-      .withColumnRenamed("qname", "dns_qry_name")
-      .withColumnRenamed("qry_type", "dns_qry_type")
-      .withColumnRenamed("rcode", "dns_qry_rcode")
-
-  /** The proxy fabrication behind pipe_proxy_golden. */
-  private[graft] def proxyInput(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-      .withColumn("p_time", date_format(col("ts"), "HH:mm:ss"))
-      .withColumn("clientip", concat(lit("10.2."), (col("user_id") % 50).cast("string"), lit(".7")))
-      .withColumn("host", concat(col("event_type"), lit(".example.com")))
-      .withColumn("reqmethod", when(col("event_id") % 2 === 0, "GET").otherwise("POST"))
-      .withColumn("useragent", col("event_type"))
-      .withColumn("resconttype",
-        when(col("event_id") % 2 === 0, lit("text/plain")).otherwise(lit("image/png")))
-      .withColumn("fulluri", concat(lit("http://h/"), col("event_type"), lit("?"), col("props")))
-      .withColumn("respcode", (lit(200) + col("event_id") % 3 * 100).cast("string"))
-
-  private val LenCuts = Seq(100.0, 200.0, 300.0, 400.0)
-  private val TimeCuts = Seq(100.0, 250.0, 400.0)
-  private val SubLenCuts = Seq(3.0, 5.0, 8.0)
-  private val EntCuts = Seq(1.5, 2.0, 2.5)
-  private val PerCuts = Seq(2.0, 3.0, 4.0)
-  private val Popular = Set("src1", "src3", "src5")
-
-  /** The f5 fabrication (shared — see [[Fabrications.dnsQname]]). */
-  private def dnsEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("qname", Fabrications.dnsQname(col("doc_id"), col("source")))
-      .withColumn("frame_len", col("n_chars"))
-      .withColumn("unix_tstamp", col("doc_id") % 500)
-      .withColumn("qry_type", (col("doc_id") % 4).cast("int"))
-      .withColumn("rcode", (col("doc_id") % 3).cast("int"))
+  private val LenCuts = Fabrications.DnsCuts.frameLen.toSeq
+  private val TimeCuts = Fabrications.DnsCuts.time.toSeq
+  private val SubLenCuts = Fabrications.DnsCuts.subLen.toSeq
+  private val EntCuts = Fabrications.DnsCuts.entropy.toSeq
+  private val PerCuts = Fabrications.DnsCuts.numPeriods.toSeq
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // F9: the 8-component DNS word (reference: DNSWordCreation.scala:215-236).
-    "pipe_dns_words" -> ((s, dir) => {
-      val cuts = DnsPipeline.Cuts(time = TimeCuts.toArray,
-        frameLen = LenCuts.toArray, subLen = SubLenCuts.toArray,
-        entropy = EntCuts.toArray, numPeriods = PerCuts.toArray)
-      DnsPipeline.featurizeWithLookup(DnsPipeline.withSubdomains(dnsInput(s, dir)),
-          cuts, DnsPipeline.popularFrame(s, Popular))
-        .select("doc_id", "word")}),
+    "pipe_dns_words" -> ((s, dir) =>
+      DnsPipeline.featurizeWithLookup(DnsPipeline.withSubdomains(
+          Fabrications.dnsInput(t(s, dir, "documents"))),
+          Fabrications.DnsCuts, DnsPipeline.popularFrame(s, Fabrications.DnsPopular))
+        .select("doc_id", "word")),
 
     // F10: the 7-component proxy word (reference: ProxyWordCreation.scala:
     // 30-51) with the agent-count broadcast-join aggregate (J3/A2).
@@ -176,7 +135,7 @@ object PipelineQueries {
         col("user_id"), col("event_type"), col("w"))}),
 
     // A4: legacy model.dat corpus export — group-concat of sorted sparse
-    // (word_id:count) pairs per doc, dictionary built distributedly.
+    // (word_id:count) pairs per doc over TopicModel's driver dictionary.
     "a4_corpus_export" -> ((s, dir) => {
       val wc = Corpus.wordCounts(t(s, dir, "events"),
         col("user_id"), col("event_type"))

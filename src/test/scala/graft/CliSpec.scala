@@ -63,7 +63,7 @@ class CliSpec extends SparkSpec {
   private val rng = new scala.util.Random(7)
 
   "Main.runAnalysis(flow)" should "produce reference-shaped TSV rows from parquet + feedback" in {
-    val dir = Files.createTempDirectory("cli").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("cli").toFile.getAbsolutePath
     val flows = (0 until 300).map { i =>
       ("2016-05-05 12:00:00", 12, i % 60, i % 60,
         s"10.0.0.${i % 20}", s"172.16.0.${i % 15}",
@@ -100,7 +100,7 @@ class CliSpec extends SparkSpec {
   }
 
   "Main.runAnalysis(proxy)" should "emit original columns + word + score" in {
-    val dir = Files.createTempDirectory("clip").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("clip").toFile.getAbsolutePath
     val proxy = (0 until 200).map { i =>
       ("2016-05-05", f"${i % 24}%02d:${i % 60}%02d:00", s"10.0.0.${i % 25}",
         s"host${i % 9}.com", if (i % 2 == 0) "GET" else "POST",
@@ -119,7 +119,7 @@ class CliSpec extends SparkSpec {
   }
 
   "Main.runAnalysis(dns)" should "emit the worded row + score with a top-domains list" in {
-    val dir = Files.createTempDirectory("clid").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("clid").toFile.getAbsolutePath
     val hosts = Seq("services.amazon.com", "a.b.evil.net", "x.y.z.bad.com.mx",
       "9.8.7.6.in-addr.arpa", "short.com")
     val dns = (0 until 200).map { i =>

@@ -51,7 +51,7 @@ class ExtensionsSpec extends AnyFlatSpec with Matchers {
 
   "Lookups.topDomainsDF" should "load rank,domain CSVs as a first-label set" in {
     val spark = SparkSpec.spark
-    val f = Files.createTempDirectory("top").resolve("top-1m.csv").toFile
+    val f = ScratchDirs.create("top").resolve("top-1m.csv").toFile
     val w = new java.io.PrintWriter(f)
     w.println("1,google.com"); w.println("2,youtube.co.uk"); w.println("3,google.de")
     w.close()

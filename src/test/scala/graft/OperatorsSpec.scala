@@ -68,7 +68,7 @@ class OperatorsSpec extends SparkSpec {
     val n = 4000L
     val scored = s.range(0, n, 1, 4).select(col("id"),
       counted((col("id") * 7919 % 1000) / 1000.0).as("score"))
-    val out = java.nio.file.Files.createTempDirectory("susp").toString + "/out"
+    val out = ScratchDirs.create("susp").toString + "/out"
     graft.sources.Sinks.writeTsv(
       Scoring.suspicious(scored, threshold = 0.5, topK = -1), out, singleFile = false)
     evals.value shouldBe n

@@ -16,7 +16,7 @@ class PartitioningSpec extends SparkSpec {
   import spark.implicits._
 
   "writeParquet with partition columns" should "produce a prunable dated layout" in {
-    val dir = Files.createTempDirectory("part").toFile.getAbsolutePath + "/t"
+    val dir = ScratchDirs.create("part").toFile.getAbsolutePath + "/t"
     val df = (1 to 200).map { i =>
       (i.toLong, 2024, 1 + i % 3, s"payload$i")
     }.toDF("id", "y", "m", "payload")
@@ -33,8 +33,8 @@ class PartitioningSpec extends SparkSpec {
   }
 
   "Tables.loadPaths" should "read every path, not just the first" in {
-    val a = Files.createTempDirectory("pa").toFile.getAbsolutePath + "/a"
-    val b = Files.createTempDirectory("pb").toFile.getAbsolutePath + "/b"
+    val a = ScratchDirs.create("pa").toFile.getAbsolutePath + "/a"
+    val b = ScratchDirs.create("pb").toFile.getAbsolutePath + "/b"
     Seq(1L, 2L).toDF("v").write.parquet(a)
     Seq(3L).toDF("v").write.parquet(b)
     Tables.loadPaths(spark, Seq(a, b)).as[Long].collect().sorted shouldBe
@@ -42,7 +42,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   "Tables.load" should "leave the session conf unchanged" in {
-    val dir = Files.createTempDirectory("tl").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("tl").toFile.getAbsolutePath
     Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "a", 1.5),
       (2L, java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), "a", 2.0))
       .toDF("event_id", "ts", "event_type", "value")
@@ -68,7 +68,7 @@ class PartitioningSpec extends SparkSpec {
   "SparkEntry.entry" should "adopt a session built without the nanosecond key" in {
     // events.parquet as the harness writes it: ts is TIMESTAMP(NANOS),
     // which Spark itself cannot write
-    val dir = Files.createTempDirectory("ns").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("ns").toFile.getAbsolutePath
     val schema = MessageTypeParser.parseMessageType("message events { " +
       "required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
     val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
@@ -87,7 +87,7 @@ class PartitioningSpec extends SparkSpec {
   }
 
   "loadPaths with a partition-pruned filter" should "skip non-matching files" in {
-    val dir = Files.createTempDirectory("pp").toFile.getAbsolutePath + "/t"
+    val dir = ScratchDirs.create("pp").toFile.getAbsolutePath + "/t"
     (1 to 100).map(i => (i, i % 4)).toDF("v", "d")
       .write.partitionBy("d").parquet(dir)
     val pruned = spark.read.parquet(dir).where(col("d") === 1)
@@ -122,8 +122,8 @@ class PartitioningSpec extends SparkSpec {
     val grid = for { x <- 0 until 100; y <- 0 until 100 }
       yield (x.toLong, y.toLong, x * 100L + y)
     val df = grid.toDF("x", "y", "payload")
-    val zDir = Files.createTempDirectory("zord").toFile.getAbsolutePath + "/t"
-    val linDir = Files.createTempDirectory("lin").toFile.getAbsolutePath + "/t"
+    val zDir = ScratchDirs.create("zord").toFile.getAbsolutePath + "/t"
+    val linDir = ScratchDirs.create("lin").toFile.getAbsolutePath + "/t"
     Layout.zOrderWrite(df, zDir, col("x"), col("y"), bits = 7, numFiles = 16)
     df.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.parquet(linDir)
@@ -154,7 +154,7 @@ class PartitioningSpec extends SparkSpec {
     val grid = for { x <- 0 until 100; y <- 0 until 100 }
       yield (x.toLong, y.toLong, x * 100L + y)
     val df = grid.toDF("x", "y", "payload")
-    val dir = Files.createTempDirectory("mani").toFile.getAbsolutePath + "/t"
+    val dir = ScratchDirs.create("mani").toFile.getAbsolutePath + "/t"
     Layout.zOrderWrite(df, dir, col("x"), col("y"), bits = 7, numFiles = 16)
     val manifest = Layout.fileStats(spark, dir, Seq("x", "y"))
     manifest.count() shouldBe 16
@@ -179,8 +179,8 @@ class PartitioningSpec extends SparkSpec {
   }
 
   "Layout.compact" should "collapse a fragmented directory without touching a row" in {
-    val frag = Files.createTempDirectory("frag").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("compacted").toFile.getAbsolutePath
+    val frag = ScratchDirs.create("frag").toFile.getAbsolutePath
+    val out = ScratchDirs.create("compacted").toFile.getAbsolutePath
     val df = (1 to 5000).map(i => (i.toLong, s"p$i")).toDF("id", "payload")
     df.repartition(40).write.mode("overwrite").parquet(frag)
     val (nIn, nOut, bytes) = graft.operators.Layout.compact(
@@ -193,8 +193,8 @@ class PartitioningSpec extends SparkSpec {
   }
 
   it should "honor the maxFiles cap" in {
-    val frag = Files.createTempDirectory("frag2").toFile.getAbsolutePath
-    val out = Files.createTempDirectory("compacted2").toFile.getAbsolutePath
+    val frag = ScratchDirs.create("frag2").toFile.getAbsolutePath
+    val out = ScratchDirs.create("compacted2").toFile.getAbsolutePath
     (1 to 1000).map(i => (i.toLong, "x" * 2000)).toDF("id", "payload")
       .repartition(30).write.mode("overwrite").parquet(frag)
     // tiny target would want many output files; the cap wins
@@ -205,9 +205,11 @@ class PartitioningSpec extends SparkSpec {
 
   "the engine sources" should "read no env var outside the driver contract" in {
     // engine choices come from CLI flags, session conf or observable
-    // input, never from an env var; these are the contract's inputs
+    // input, never from an env var; these are the contract's inputs and
+    // graft.Bench's selection, rep count, child output and strict mode
     val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
-      "SPARK_GRAFT_VERIFY_SKIP")
+      "SPARK_GRAFT_VERIFY_SKIP") ++
+      Seq("SKIP", "ONLY", "REPS", "OUT", "STRICT").map("SPARK_GRAFT_BENCH_" + _)
     val access = """sys\.env|System\.getenv""".r
     val named =
       """(?:sys\.env|System\.getenv)(?:\.getOrElse|\.get)?\(\s*"(\w+)"""".r
@@ -224,9 +226,7 @@ class PartitioningSpec extends SparkSpec {
         }
       }
     reads.map(_._2) should contain ("SPARK_GRAFT_CPUS")
-    reads.filterNot { case (_, name) =>
-      allowed(name) || name.startsWith("SPARK_GRAFT_BENCH_")
-    } shouldBe empty
+    reads.filterNot { case (_, name) => allowed(name) } shouldBe empty
   }
 
   it should "set session conf only in GraftSession" in {
@@ -249,20 +249,25 @@ class PartitioningSpec extends SparkSpec {
   it should "create temp dirs only through the helper" in {
     // a gate's scratch dir outlives the builder (its frame reads it
     // lazily), so only ScratchDirs may make one: it roots them all under
-    // one per-JVM dir that goes at JVM exit
-    val root = java.nio.file.Paths.get("src/main/scala")
-    Files.isDirectory(root) shouldBe true
+    // one per-JVM dir that goes at JVM exit. Tests take theirs from it
+    // too, so a test run leaves nothing behind in java.io.tmpdir.
+    val call = """\bcreateTemp(?:Directory|File)\(""".r
     import scala.jdk.CollectionConverters._
-    val sites = Files.walk(root).iterator.asScala.toSeq
-      .filter(_.toString.endsWith(".scala")).flatMap { f =>
-        val lines = Files.readAllLines(f).asScala.toSeq
-        lines.zipWithIndex.collect {
-          case (l, i) if l.contains("createTempDirectory") =>
-            s"${root.relativize(f)}:${i + 1}"
+    val sites = Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      val root = java.nio.file.Paths.get(dir)
+      Files.isDirectory(root) shouldBe true
+      Files.walk(root).iterator.asScala.toSeq
+        .filter(_.toString.endsWith(".scala")).flatMap { f =>
+          // ISO-8859-1: every byte decodes (WarcSpec holds raw bytes)
+          val lines = new String(Files.readAllBytes(f), "ISO-8859-1")
+            .split("\n").toSeq
+          lines.zipWithIndex.collect {
+            case (l, i) if call.findFirstIn(l).isDefined => s"$f:${i + 1}"
+          }
         }
-      }
+    }
     sites should not be empty
-    sites.filterNot(_.startsWith("graft/ScratchDirs.scala:")) shouldBe empty
+    sites.filterNot(_.startsWith("src/main/scala/graft/ScratchDirs.scala:")) shouldBe empty
   }
 
   "ScratchDirs" should "delete every dir it made when cleanup runs" in {

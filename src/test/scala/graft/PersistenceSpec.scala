@@ -23,7 +23,7 @@ class PersistenceSpec extends SparkSpec {
   }
 
   "TopicModel.save/load" should "round-trip to bit-identical scores" in {
-    val dir = Files.createTempDirectory("tm").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("tm").toFile.getAbsolutePath
     val m = TopicModel.train(corpus(), topicCount = 4, maxIter = 5)
     TopicModel.save(m, s"$dir/model")
     val loaded = TopicModel.load(spark, s"$dir/model")
@@ -33,7 +33,7 @@ class PersistenceSpec extends SparkSpec {
 
   "FlowPipeline.save/load" should "reload cuts (incl. +Infinity) and score identically" in {
     import graft.pipelines.FlowPipeline
-    val dir = Files.createTempDirectory("fpm").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("fpm").toFile.getAbsolutePath
     val rng = new scala.util.Random(1)
     val flows = (0 until 300).map { i =>
       ("t", 12, i % 60, i % 60, s"10.0.0.${i % 20}", s"172.16.0.${i % 15}",
@@ -82,7 +82,7 @@ class PersistenceSpec extends SparkSpec {
   "The flow/DNS/proxy model stores" should
     "keep the topics/meta/popular layout, reload to identical scores, and migrate legacy meta" in {
     import graft.pipelines.{DnsPipeline, FlowPipeline, ProxyPipeline}
-    val dir = Files.createTempDirectory("stores").toFile.getAbsolutePath
+    val dir = ScratchDirs.create("stores").toFile.getAbsolutePath
     val rng = new scala.util.Random(3)
     val popular = DnsPipeline.popularFrame(spark, Set("amazon", "evil"))
     // meta as the Seq-of-tuples `toDF` of earlier versions wrote it:

@@ -101,7 +101,7 @@ class PipelinesSpec extends SparkSpec {
   }
 
   "Feedback.load" should "read severity-filtered TSV with weight" in {
-    val dir = Files.createTempDirectory("fb").toFile
+    val dir = ScratchDirs.create("fb").toFile
     val f = new java.io.File(dir, "scores.tsv")
     val w = new java.io.PrintWriter(f)
     w.println("sev\tip\tscore")
@@ -138,7 +138,7 @@ class PipelinesSpec extends SparkSpec {
   }
 
   "Sinks.writeTsv" should "write tab-separated results" in {
-    val dir = Files.createTempDirectory("sink").toFile.getAbsolutePath + "/out"
+    val dir = ScratchDirs.create("sink").toFile.getAbsolutePath + "/out"
     Sinks.writeTsv(Seq(("a", 1), ("b", 2)).toDF("k", "v"), dir)
     val lines = spark.read.option("sep", "\t").csv(dir)
       .as[(String, String)].collect().toSet
@@ -148,7 +148,7 @@ class PipelinesSpec extends SparkSpec {
   "Sinks.writeJsonl/readJsonl" should
     "round-trip a corpus under an explicit schema and surface corrupt lines" in {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("jsonl").toFile.getAbsolutePath + "/docs"
+    val dir = ScratchDirs.create("jsonl").toFile.getAbsolutePath + "/docs"
     val docs = Seq((1L, "alpha text", "en"), (2L, "beta text", "fr"))
       .toDF("doc_id", "text", "lang")
     Sinks.writeJsonl(docs, dir)
@@ -177,7 +177,7 @@ class PipelinesSpec extends SparkSpec {
 
   "Sinks.writeOrc/readOrc" should
     "round-trip typed columns and prune partitions on read" in {
-    val dir = Files.createTempDirectory("orc").toFile.getAbsolutePath + "/docs"
+    val dir = ScratchDirs.create("orc").toFile.getAbsolutePath + "/docs"
     val docs = Seq((1L, "alpha", "en", Seq(0.5, 1.5)),
       (2L, "beta", "fr", Seq(2.0, 3.0)))
       .toDF("doc_id", "text", "lang", "embedding")

@@ -221,7 +221,7 @@ class StreamingSpec extends SparkSpec {
   "dedupStream" should "recover its seen-set from a checkpoint across a restart" in {
     import StreamingScore.StreamDoc
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_ckpt").toString
+    val ckpt = ScratchDirs.create("dedup_ckpt").toString
     val input = MemoryStream[StreamDoc]
     def start(buf: collection.mutable.ArrayBuffer[StreamDoc]) =
       StreamingScore.dedupStream(input.toDS())
@@ -255,7 +255,7 @@ class StreamingSpec extends SparkSpec {
   "lshCandidateStream" should "recover bucket history from a checkpoint across a restart" in {
     import StreamingScore.{CandidatePair, StreamDoc}
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("lsh_ckpt").toString
+    val ckpt = ScratchDirs.create("lsh_ckpt").toString
     val text = "the quick brown fox jumps over the lazy dog"
     val input = MemoryStream[StreamDoc]
     def start(buf: collection.mutable.ArrayBuffer[CandidatePair]) =
@@ -411,7 +411,7 @@ class StreamingSpec extends SparkSpec {
 
   "MergeSink.mergeBatch" should "fold batches into latest-per-key regardless of split" in {
     import graft.streaming.MergeSink
-    val root = java.nio.file.Files.createTempDirectory("merge").toString
+    val root = ScratchDirs.create("merge").toString
     def row(k: String, t: Long, id: Long, v: String) = (k, t, id, v)
     val all = Seq(row("a", 10, 1, "a@10"), row("a", 30, 3, "a@30"),
       row("b", 20, 2, "b@20"), row("a", 20, 5, "a@20"),
@@ -451,7 +451,7 @@ class StreamingSpec extends SparkSpec {
     // r12 layout fix: without the pre-write repartition(kb), every task
     // holding rows of a bucket opened its own writer (≤ tasks × buckets
     // fragments per batch); the state table must stay one-file-per-bucket
-    val root = java.nio.file.Files.createTempDirectory("mergef").toString
+    val root = ScratchDirs.create("mergef").toString
     val p = s"$root/state"
     // 200 keys spread over every bucket, one batch
     val rows = (1 to 200).map(i => (s"k$i", i.toLong, i.toLong, s"v$i"))
@@ -469,7 +469,7 @@ class StreamingSpec extends SparkSpec {
   "MergeSink.upsertStream" should "drain a MemoryStream into the state table" in {
     import graft.streaming.MergeSink
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("mergeq").toString
+    val root = ScratchDirs.create("mergeq").toString
     val input = MemoryStream[(String, Long, Long, String)]
     input.addData(("a", 10L, 1L, "a@10"), ("b", 20L, 2L, "b@20"))
     val q = MergeSink.upsertStream(

@@ -79,7 +79,7 @@ class WarcSpec extends SparkSpec {
   }
 
   private def writeArchiveDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("warcds").toString
+    val dir = ScratchDirs.create("warcds").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.warc"),
       archive())
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "b.warc.gz"),
@@ -123,7 +123,7 @@ class WarcSpec extends SparkSpec {
   }
 
   it should "stream file arrivals as incremental micro-batches" in {
-    val dir = java.nio.file.Files.createTempDirectory("warcstream").toString
+    val dir = ScratchDirs.create("warcstream").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.warc"),
       archive())
     val q = spark.readStream.format("warc").load(dir)
@@ -154,7 +154,7 @@ class WarcSpec extends SparkSpec {
     // The sidecar written during stream planning is the observable proof
     // that the cut-index path engaged (and rec_idx exactness proves the
     // range union).
-    val dir = java.nio.file.Files.createTempDirectory("warcstreamsplit")
+    val dir = ScratchDirs.create("warcstreamsplit")
     def rec(i: Int) = Warc.record("response", s"http://ss.example/$i",
       Warc.httpResponse(200, "text/plain",
         (s"payload $i :: " + "y" * (60 + i * 5)).getBytes("UTF-8")))
@@ -198,7 +198,7 @@ class WarcSpec extends SparkSpec {
   }
 
   it should "fail loudly when a late file sorts into the committed prefix" in {
-    val dir = java.nio.file.Files.createTempDirectory("warcooo").toString
+    val dir = ScratchDirs.create("warcooo").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "b.warc"),
       archive())
     val q = spark.readStream.format("warc").load(dir)
@@ -225,7 +225,7 @@ class WarcSpec extends SparkSpec {
     // small enough to force multi-way splits: the union must be
     // bit-identical to the unsplit read — every rec_idx exactly once,
     // bodies intact across every split point
-    val dir = java.nio.file.Files.createTempDirectory("warcsplit").toString
+    val dir = ScratchDirs.create("warcsplit").toString
     def rec(i: Int) = Warc.record("response", s"http://s.example/$i",
       Warc.httpResponse(200 + 100 * (i % 2), "text/plain",
         (s"payload $i :: " + "x" * (50 + i * 7)).getBytes("UTF-8")))
@@ -255,7 +255,7 @@ class WarcSpec extends SparkSpec {
     // object-store URIs (s3a://, abfs://) work like local dirs; prove the
     // scheme'd path round-trip locally: listing, batch read, and the
     // emitted path column keep the user's scheme form
-    val dir = java.nio.file.Files.createTempDirectory("warcuri")
+    val dir = ScratchDirs.create("warcuri")
     java.nio.file.Files.write(dir.resolve("a.warc"), archive())
     val uri = "file:" + dir.toString
     val rows = spark.read.format("warc").load(uri)
@@ -320,7 +320,7 @@ class WarcSpec extends SparkSpec {
     // indexes and that bodies never materialize for a uri-only projection.
     val members = 72
     val bodyLen = 32 * 1024 * 1024
-    val dir = java.nio.file.Files.createTempDirectory("warcbig")
+    val dir = ScratchDirs.create("warcbig")
     val f = dir.resolve("big.warc.gz")
     val out = new java.io.BufferedOutputStream(
       java.nio.file.Files.newOutputStream(f), 1 << 20)
@@ -624,7 +624,7 @@ class WarcSpec extends SparkSpec {
 
   it should "persist, reuse, and staleness-check a sidecar cut index" in {
     import graft.sources.WarcDataSource
-    val dir = java.nio.file.Files.createTempDirectory("warcsidecar")
+    val dir = ScratchDirs.create("warcsidecar")
     def rec(i: Int) = Warc.record("response", s"http://sc.example/$i",
       Warc.httpResponse(200, "text/plain",
         (s"payload $i :: " + "x" * (50 + i * 7)).getBytes("UTF-8")))
@@ -701,7 +701,7 @@ class WarcSpec extends SparkSpec {
   }
 
   it should "fail the task loudly on a malformed archive file" in {
-    val dir = java.nio.file.Files.createTempDirectory("warcbad").toString
+    val dir = ScratchDirs.create("warcbad").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "bad.warc"),
       "WARC/9.9\r\nnope".getBytes("US-ASCII"))
     val e = intercept[org.apache.spark.SparkException] {
@@ -737,7 +737,7 @@ class WarcSpec extends SparkSpec {
     val viaOp = Warc.extractResponses(
       Seq(Media.MediaRecord(1L, "application/warc", arch)).toDS())
       .select($"body_text").head().getString(0)
-    val dir = java.nio.file.Files.createTempDirectory("warccs").toString
+    val dir = ScratchDirs.create("warccs").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "l.warc"), arch)
     val viaDs = spark.read.format("warc").load(dir)
       .where($"warc_type" === "response")
@@ -865,8 +865,8 @@ class WarcSpec extends SparkSpec {
 
   it should "rematerialize through the path helper so the next scan range-splits" in {
     import graft.sources.WarcDataSource
-    val srcDir = java.nio.file.Files.createTempDirectory("warcmonosrc")
-    val dstDir = java.nio.file.Files.createTempDirectory("warcmonodst")
+    val srcDir = ScratchDirs.create("warcmonosrc")
+    val dstDir = ScratchDirs.create("warcmonodst")
     def rec(i: Int) = Warc.record("response", s"http://rm.example/$i",
       Warc.httpResponse(200, "text/plain",
         (s"payload $i :: " + "z" * (50 + i * 7)).getBytes("UTF-8")))
@@ -912,8 +912,8 @@ class WarcSpec extends SparkSpec {
 
   it should "rematerialize a whole directory distributed, preserving names and content" in {
     import graft.sources.WarcDataSource
-    val srcDir = java.nio.file.Files.createTempDirectory("warcdirsrc")
-    val dstDir = java.nio.file.Files.createTempDirectory("warcdirdst")
+    val srcDir = ScratchDirs.create("warcdirsrc")
+    val dstDir = ScratchDirs.create("warcdirdst")
     def rec(tag: String, i: Int) = Warc.record("response",
       s"http://dm.example/$tag/$i",
       Warc.httpResponse(200, "text/plain",
@@ -951,7 +951,7 @@ class WarcSpec extends SparkSpec {
 
   "roundrobin + index_sidecar=write" should "piggyback sidecar emission on the fallback read" in {
     import graft.sources.WarcDataSource
-    val dir = java.nio.file.Files.createTempDirectory("warcpiggy")
+    val dir = ScratchDirs.create("warcpiggy")
     def rec(i: Int) = Warc.record("response", s"http://pg.example/$i",
       Warc.httpResponse(200, "text/plain",
         (s"payload $i :: " + "w" * (50 + i * 7)).getBytes("UTF-8")))
@@ -998,7 +998,7 @@ class WarcSpec extends SparkSpec {
     // must still plan ALL of them with their fresh indexes (building
     // then re-reading through the cache would lose early entries to
     // eviction and silently degrade to round-robin walks)
-    val dir = java.nio.file.Files.createTempDirectory("warclru")
+    val dir = ScratchDirs.create("warclru")
     val nFiles = 5
     (0 until nFiles).foreach { k =>
       java.nio.file.Files.write(dir.resolve(f"f$k%02d.warc.gz"),
