@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory: the engine's recommended configuration in one place
   * (AQE on, shuffle partitions sized to cores — not the 200 default,
-  * UTC, nanosecond-parquet compatibility, SQL functions registered). */
+  * UTC, nanosecond-parquet compatibility, SQL functions registered, a
+  * checkpoint dir). */
 object GraftSession {
 
   def local(cores: String): SparkSession = {
@@ -65,10 +66,14 @@ object GraftSession {
         "org.apache.hadoop.fs.local.RawLocalFs")
       .config("spark.hadoop.fs.file.impl",
         "org.apache.hadoop.fs.RawLocalFileSystem")
+      // The topic model's training corpus is a reliable checkpoint that
+      // its model frames read from (see [[withCheckpointDir]]); the
+      // cleaner deletes its files once nothing references them.
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
+    withCheckpointDir(spark)
   }
 
   /** Session key that makes the parquet reader surface a TIMESTAMP(NANOS)
@@ -77,11 +82,24 @@ object GraftSession {
   val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Gives a session built elsewhere the read settings [[local]] builds
-    * in, so [[Tables]] can load every harness table in it. For callers
-    * handed a foreign session ([[SparkEntry.entry]]); a table load itself
-    * never sets session state. */
+    * in, so [[Tables]] can load every harness table in it, and the
+    * checkpoint dir the topic model trains from. For callers handed a
+    * foreign session ([[SparkEntry.entry]]); a table load itself never
+    * sets session state. */
   def adopt(spark: SparkSession): SparkSession = {
     spark.conf.set(NanosAsLong, "true")
+    withCheckpointDir(spark)
+  }
+
+  /** Gives the session's context a checkpoint dir when it has none
+    * ([[graft.ml.TopicModel.train]] checkpoints its corpus there). A
+    * deployment's `spark.checkpoint.dir` (on a cluster, a shared FS), which
+    * Spark applies when it starts the context, is kept; otherwise the dir
+    * is a [[ScratchDirs]] dir, deleted at JVM exit. */
+  private def withCheckpointDir(spark: SparkSession): SparkSession = synchronized {
+    val sc = spark.sparkContext
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(ScratchDirs.create("checkpoint").toString)
     spark
   }
 

@@ -14,7 +14,12 @@ import org.apache.spark.sql.types._
   *   graft.Main --analysis flow --input /data/flow.parquet \
   *     --scored /out/flow_results [--feedback scores.tsv] [--dupfactor 1000]
   *     [--threshold 1e-4] [--maxresults 200] [--topiccount 20]
-  *     [--topdomains top-1m.csv] [--delimiter \t] [--seed 42]
+  *     [--topdomains top-1m.csv] [--model /models/flow] [--delimiter \t]
+  *     [--seed 42]
+  *
+  * `--model` is a model store: an existing dir is loaded (a partial one
+  * fails, naming the missing part) and its stored `topic_count` wins over
+  * `--topiccount`; a missing dir is trained into.
   *
   * Output: delimited text in the reference's per-analysis row shape
   * (flow: input + src_score + dst_score; dns: worded row + score;
@@ -46,7 +51,8 @@ object Main {
       |  [--maxresults <k>]     top-k most suspicious rows (-1 = all below threshold)
       |  [--topiccount <k>]     LDA topics, at least 2 (default 20)
       |  [--topdomains <csv>]   rank,domain popularity list (reference top-1m.csv)
-      |  [--model <dir>]        model store: load if present, else train + save here
+      |  [--model <dir>]        model store: load if the dir exists (its topic count
+      |                         wins over --topiccount), else train + save here
       |  [--delimiter <c>]      output field separator (default tab)
       |  [--seed <n>]           LDA seed (default 42)""".stripMargin
 
@@ -127,15 +133,17 @@ object Main {
       .orElse(Some("top-1m.csv").filter(p => new java.io.File(p).exists))
       .map(p => Lookups.topDomainsDF(spark, p))
       .getOrElse(DnsPipeline.popularFrame(spark, Set.empty))
-    // --model: score with a stored model when one exists at the path,
-    // otherwise train and persist there (train-once-score-later).
+    // --model: score with the model stored at the path when the path
+    // exists, otherwise train and persist there (train-once-score-later).
+    // A path that exists but does not load (a partial or interrupted
+    // save) fails with the load's error, which names the missing part:
+    // retraining over it would silently replace what is there.
     def stored[M](load: String => M, train: () => M, save: (M, String) => Unit): M =
       c.model match {
         case Some(p) =>
-          try load(p)
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            val m = train(); save(m, p); m
-          }
+          val path = new org.apache.hadoop.fs.Path(p)
+          if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) load(p)
+          else { val m = train(); save(m, p); m }
         case None => train()
       }
     c.analysis match {

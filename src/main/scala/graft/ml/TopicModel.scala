@@ -78,7 +78,30 @@ object TopicModel {
     * [[TrainLayoutPartitions]] layout. Rows with a null word are dropped.
     * The vocabulary must be bounded (discretized feature words): more
     * than `maxDriverVocab` distinct words fails with an
-    * IllegalArgumentException before any of them reach the driver. */
+    * IllegalArgumentException before any of them reach the driver.
+    *
+    * The optimizer's input (one sparse count vector per doc) is a
+    * RELIABLE checkpoint, not a cached frame. `ml.LDA.fit` persists its
+    * own deserialized `RDD[(Long, Vector)]` only when its dataset's
+    * storage level is NONE; handed a cached frame it persists nothing,
+    * and each of its iterations rebuilds that RDD from the SQL cache in
+    * every E-step task, which also deserializes the frame's whole plan
+    * (join, `collect_list` aggregate, vector map, exchange, sort) per
+    * task. The checkpoint gives `fit` a one-step lineage it can persist,
+    * and a checkpoint keeps partitions and row order, so the pinned
+    * layout, doc ids, minibatch sampling and every model bit are those of
+    * the uncut frame. It is reliable (files, recoverable), not local, and
+    * taken on the calling thread before any fit job (the deadlock note in
+    * [[graft.Lineage]]).
+    *
+    * Checkpoint-dir contract: the session's context must have one.
+    * [[graft.GraftSession]] sets it for every session it builds or
+    * adopts (a deployment's `spark.checkpoint.dir`, on a cluster a shared
+    * FS, else a scratch dir deleted at JVM exit). The returned `docMix`
+    * recomputes from the checkpoint files, so they outlive this call: the
+    * context cleaner removes them once the model is gone
+    * (`spark.cleaner.referenceTracking.cleanCheckpoints`). Nothing else
+    * this call persists stays persisted. */
   def train(wordCounts: DataFrame, topicCount: Int = 20,
             seed: Long = 42L, maxIter: Int = 20,
             maxDriverVocab: Int = MaxDriverVocab): Model = {
@@ -115,7 +138,9 @@ object TopicModel {
       // the layout at runtime.
       .repartition(TrainLayoutPartitions, col("doc"))
       .sortWithinPartitions("doc")
-      .cache()
+      .checkpoint(eager = true)
+    // the checkpoint files hold everything the fit and docMix read
+    corpus.unpersist()
 
     val lda = new LDA()
       .setK(topicCount)
@@ -126,10 +151,8 @@ object TopicModel {
       .setFeaturesCol("features")
     val ldaModel = lda.fit(docVectors)
 
-    // Materialize the (bounded) model frames, then release the training
-    // intermediates — scoring only ever touches docMix/wordProb, so the
-    // corpus/vector caches would otherwise pin storage for the session
-    // lifetime.
+    // Materialize the (bounded) model frames: scoring only ever touches
+    // docMix/wordProb.
     val docMix = ldaModel.transform(docVectors)
       .select(col("doc"), vector_to_array(col("topicDistribution")).cast("array<double>").as("topic_mix"))
       .cache()
@@ -149,9 +172,6 @@ object TopicModel {
     }
     val wordProb = rows.toDF("word", "topic_prob").cache()
     wordProb.count()
-
-    docVectors.unpersist()
-    corpus.unpersist()
     Model(docMix, wordProb, topicCount)
   }
 

@@ -234,7 +234,9 @@ object FixedModelQueries {
          |    CASE WHEN (case2 AND dport < sport) OR case4b THEN '-1_' || word ELSE word END AS dst_word
          |  FROM words)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  // lazy: the SQL renders the fixture, which only these gates may need
+  // (a build without resources still builds every other entry)
+  lazy val oracles: Map[String, String] = Map(
     "pipe_flow_fixedmodel" ->
       s"""WITH $flowSidedCtes,
          |$modelCtes

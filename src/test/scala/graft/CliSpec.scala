@@ -99,6 +99,43 @@ class CliSpec extends SparkSpec {
     written.columns.length shouldBe flows.columns.length + 2
   }
 
+  /** Path, size and modification time of every file under `f`. */
+  private def tree(f: java.io.File): Seq[(String, Long, Long)] =
+    if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(tree)
+    else Seq((f.getPath, f.length(), f.lastModified()))
+
+  "Main.runAnalysis(flow) with --model" should "train into a missing dir, load an existing one and fail on a partial one" in {
+    val dir = ScratchDirs.create("clim").toFile.getAbsolutePath
+    (0 until 200).map { i =>
+      ("2016-05-05 12:00:00", 12, i % 60, i % 60,
+        s"10.0.0.${i % 20}", s"172.16.0.${i % 15}",
+        if (i % 3 == 0) 80 else 1024 + i * 7, i * 13,
+        (i % 100 + 1).toLong, (i * 97 % 100000 + 40).toLong)
+    }.toDF("treceived", "trhour", "trminute", "trsec",
+      "sip", "dip", "dport", "sport", "ipkt", "ibyt")
+      .write.parquet(s"$dir/flow.parquet")
+    val model = s"$dir/model"
+    def run(topics: Int) = Main.runAnalysis(spark, Main.parse(Seq(
+      "--analysis", "flow", "--input", s"$dir/flow.parquet",
+      "--scored", s"$dir/out", "--maxresults", "10", "--topiccount", topics.toString,
+      "--model", model)).toOption.get).count()
+    run(3) shouldBe 10
+    val saved = tree(new java.io.File(model))
+    saved.map(_._1).exists(_.contains("/topics/")) shouldBe true
+    // an existing model is loaded, never retrained: its topic count wins
+    run(5) shouldBe 10
+    tree(new java.io.File(model)) shouldBe saved
+    graft.pipelines.FlowPipeline.load(spark, model).topicCount shouldBe 3
+    // meta/ without topics/ (an interrupted save) fails and names the part
+    Files.walk(java.nio.file.Paths.get(s"$model/topics"))
+      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
+    val partial = tree(new java.io.File(model))
+    val e = intercept[org.apache.spark.sql.AnalysisException](run(3))
+    e.getMessage should include("topics")
+    tree(new java.io.File(model)) shouldBe partial
+  }
+
   "Main.runAnalysis(proxy)" should "emit original columns + word + score" in {
     val dir = ScratchDirs.create("clip").toFile.getAbsolutePath
     val proxy = (0 until 200).map { i =>

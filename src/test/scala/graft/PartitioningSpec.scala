@@ -86,6 +86,48 @@ class PartitioningSpec extends SparkSpec {
       .as[Long].head() shouldBe 1704067200000001L
   }
 
+  /** Runs `body` with the shared context's checkpoint dir unset, as in a
+    * session the engine did not build; the dir is restored after. Spark
+    * exposes no unset, so its `private[spark]` setter is called. */
+  private def withoutCheckpointDir[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val set = sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]])
+    val prev = sc.getCheckpointDir
+    set.invoke(sc, None)
+    try body finally set.invoke(sc, prev)
+  }
+
+  private def underScratchRoot(dir: String): Boolean =
+    java.nio.file.Paths.get(new java.net.URI(dir))
+      .startsWith(ScratchDirs.create("root").getParent)
+
+  it should "train on a context that has no checkpoint dir" in {
+    withoutCheckpointDir {
+      SparkEntry.entry(spark.newSession()).count() should be > 0L
+    }
+  }
+
+  "GraftSession" should "give the context a checkpoint dir under the scratch root" in {
+    val dir = spark.sparkContext.getCheckpointDir
+    dir should not be empty
+    underScratchRoot(dir.get) shouldBe true
+  }
+
+  "GraftSession.adopt" should "set a checkpoint dir on a context without one and keep an existing one" in {
+    val existing = spark.sparkContext.getCheckpointDir
+    GraftSession.adopt(spark.newSession())
+    spark.sparkContext.getCheckpointDir shouldBe existing
+    withoutCheckpointDir {
+      spark.sparkContext.getCheckpointDir shouldBe empty
+      GraftSession.adopt(spark.newSession())
+      val dir = spark.sparkContext.getCheckpointDir
+      dir should not be empty
+      dir should not be existing
+      underScratchRoot(dir.get) shouldBe true
+    }
+    spark.sparkContext.getCheckpointDir shouldBe existing
+  }
+
   "loadPaths with a partition-pruned filter" should "skip non-matching files" in {
     val dir = ScratchDirs.create("pp").toFile.getAbsolutePath + "/t"
     (1 to 100).map(i => (i, i % 4)).toDF("v", "d")

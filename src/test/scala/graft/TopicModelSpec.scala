@@ -108,6 +108,22 @@ class TopicModelSpec extends SparkSpec {
     aScores shouldBe bScores // exact double equality — bit-identical scores
   }
 
+  it should "leave nothing persisted beyond the model's two frames" in {
+    // the corpus cache, MLlib's own persisted vectors and any other
+    // training intermediate are released; only docMix and wordProb stay
+    // (a frame whose plan an earlier cache already holds reuses it, so
+    // the call may add fewer than two)
+    val sc = spark.sparkContext
+    def added(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val m = TopicModel.train(corpus, topicCount = 3, maxIter = 5, seed = 7L)
+    added(before) should not be empty
+    added(before).size should be <= 2
+    m.docTopicMix.unpersist(blocking = true)
+    m.wordTopicProb.unpersist(blocking = true)
+    added(before) shouldBe empty
+  }
+
   it should "train on null-word rows as if they were filtered out" in {
     // a null word has no dictionary id: its rows drop out of the corpus,
     // a doc with only null words drops out with them, and no model row
