@@ -14,8 +14,8 @@
 # $AB_WORK/logs. The report gives, for each end-to-end metric of
 # BENCHMARK.json: each side's median and q1/q3, change/parent, the pairs
 # the change won, and the verdict against the metric's bound; then, per
-# seed, whether the output hashes are equal. Nothing under perfbench/ is
-# changed.
+# seed, whether the output hashes and the perplexity ratios are equal.
+# Nothing under perfbench/ is changed.
 set -euo pipefail
 if [[ $# -lt 4 ]]; then
   sed -n '2,9p' "$0" >&2
@@ -127,10 +127,13 @@ for m in e2e:
         verdict = f"within the {m['bound']} bound"
     print(f"| `{name}` | {ma:.6g} ({qa[0]:.6g}-{qa[1]:.6g}) | {mb:.6g} "
           f"({qb[0]:.6g}-{qb[1]:.6g}) | {ratio:.3f} | {won}/{len(both)} | {verdict} |")
-print("| seed | parent output_hash | change output_hash | equal |")
-print("|---|---|---|---|")
+print("| seed | parent output_hash | change output_hash | hash equal | perplexity_ratio equal |")
+print("|---|---|---|---|---|")
 for seed in sorted({r["seed"] for r in runs.values()}, key=int):
-    hp = sorted({r["hash"] or "-" for (p, rev), r in runs.items() if rev == parent and r["seed"] == seed})
-    hc = sorted({r["hash"] or "-" for (p, rev), r in runs.items() if rev == change and r["seed"] == seed})
-    print(f"| {seed} | {','.join(hp)} | {','.join(hc)} | {'yes' if hp == hc and '-' not in hp else 'NO'} |")
+    def side(rev, get):
+        return sorted({str(get(r)) for (_, v), r in runs.items() if v == rev and r["seed"] == seed})
+    hp, hc = (side(v, lambda r: r["hash"] or "-") for v in (parent, change))
+    pp, pc = (side(v, lambda r: r["metrics"].get("perplexity_ratio", "-")) for v in (parent, change))
+    eq = lambda a, b: "yes" if a == b and "-" not in a else "NO"
+    print(f"| {seed} | {','.join(hp)} | {','.join(hc)} | {eq(hp, hc)} | {eq(pp, pc)} |")
 EOF
