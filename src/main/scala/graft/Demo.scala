@@ -10,7 +10,8 @@ object Demo {
     spark.sparkContext.setLogLevel("ERROR")
     val events = Tables.load(spark, sfDir, "events")
     println(s"events rows: ${events.count()}")
-    val out = EventsPipeline.run(events, threshold = 1.0, topK = 20, topicCount = 5)
+    val out = EventsPipeline.results(events,
+      EventsPipeline.train(events, topicCount = 5), threshold = 1.0, topK = 20)
     out.show(20, false)
     spark.stop()
   }

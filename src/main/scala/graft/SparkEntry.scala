@@ -20,7 +20,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val events = Tables.load(GraftSession.adopt(spark),
       "/root/testdata/sf0.001", "events")
-    EventsPipeline.run(events, threshold = 1.0, topK = 100, topicCount = 5)
+    EventsPipeline.results(events, EventsPipeline.train(events, topicCount = 5),
+      threshold = 1.0, topK = 100)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

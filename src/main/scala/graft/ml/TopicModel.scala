@@ -216,21 +216,20 @@ object TopicModel {
     * shuffled joins, degenerate topics), so the bound catches silent
     * training regressions without pinning optimizer noise. Throws
     * IllegalStateException → a driver rows-only gate records a non-null
-    * err instead of passing on row count alone. */
+    * err instead of passing on row count alone. Returns the measured
+    * [[qualityRatio]], so a gate can also emit it as evidence. */
   def assertQuality(model: Model, wordCounts: DataFrame,
-                    maxRatio: Double = 1.0, label: String = "LDA"): Unit = {
+                    maxRatio: Double = 1.0, label: String = "LDA"): Double = {
     val ratio = qualityRatio(model, wordCounts, label)
     if (ratio > maxRatio) throw new IllegalStateException(
       f"$label training-quality regression: perplexity ratio $ratio%.4f " +
         f"exceeds the $maxRatio%.3f x uniform-baseline bound")
+    ratio
   }
 
   /** The measured quality ratio behind [[assertQuality]]: trained
     * [[perplexity]] / uniform baseline (= vocabulary size). < 1.0 means
-    * the model beats knowing nothing; exposed separately so the
-    * no-SQL-twin pipeline gates can EMIT the measured value as evidence
-    * (a column in the gate's dumped result) instead of only
-    * asserting against the band. */
+    * the model beats knowing nothing. */
   def qualityRatio(model: Model, wordCounts: DataFrame,
                    label: String = "LDA"): Double = {
     val vocab = wordCounts.select("word").distinct().count().toDouble
@@ -243,14 +242,15 @@ object TopicModel {
   /** Persist a trained model: both frames as parquet + a tiny JSON meta.
     * The reference persisted implicitly via final.beta/final.gamma text
     * files (OniLDACWrapper.scala:88-104); parquet keeps the exact doubles
-    * (no decimal text round-trip) and scales with the doc count. */
+    * (no decimal text round-trip) and scales with the doc count. A model
+    * loaded from `path` reads it lazily, so it cannot be saved back there
+    * directly; [[graft.pipelines.ModelStore.save]] writes into a fresh dir
+    * and swaps it in. */
   def save(model: Model, path: String): Unit = {
     val spark = model.docTopicMix.sparkSession
     import spark.implicits._
-    // both frames may be lazily reading from this same path (a loaded
-    // model re-saved in place) — swap via temp dir
-    graft.sources.Sinks.overwriteParquetSafely(model.docTopicMix, s"$path/doc_topic_mix")
-    graft.sources.Sinks.overwriteParquetSafely(model.wordTopicProb, s"$path/word_topic_prob")
+    model.docTopicMix.write.mode("overwrite").parquet(s"$path/doc_topic_mix")
+    model.wordTopicProb.write.mode("overwrite").parquet(s"$path/word_topic_prob")
     Seq(model.topicCount).toDF("topic_count")
       .write.mode("overwrite").json(s"$path/meta")
   }

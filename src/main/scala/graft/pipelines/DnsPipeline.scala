@@ -118,18 +118,18 @@ object DnsPipeline {
   def score(dns: DataFrame, model: Model): DataFrame =
     Scoring.score(features(dns, model), col("ip_dst"), col("word"), model.topics)
 
+  /** The corpus a model scores, the one its training-quality tripwire
+    * measures ([[TopicModel.assertQuality]]). */
+  def scoringCorpus(dns: DataFrame, model: Model): DataFrame =
+    Corpus.wordCounts(features(dns, model), col("ip_dst"), col("word"))
+
   /** Reference-shaped results (DNSPostLDA.scala:48-70): the worded row —
     * input columns + derived subdomain features + word — plus `score`,
-    * ascending, top-K. */
+    * ascending, top-K; `tiebreak` columns order equal scores. */
   def results(dns: DataFrame, model: Model,
-              threshold: Double, topK: Int): DataFrame =
-    Scoring.suspicious(score(dns, model), threshold, topK)
-
-  def run(dns: DataFrame, popular: DataFrame,
-          threshold: Double = 1.0, topK: Int = -1,
-          topicCount: Int = 20, seed: Long = 42L): DataFrame =
-    Scoring.suspicious(score(dns, train(dns, popular, topicCount, seed)),
-      threshold, topK)
+              threshold: Double, topK: Int,
+              tiebreak: Seq[Column] = Nil): DataFrame =
+    Scoring.suspicious(score(dns, model), threshold, topK, tiebreak)
 
   /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
     * bound): seeded healthy ratio measured 0.9971 on the sf0.01 gate
@@ -139,20 +139,4 @@ object DnsPipeline {
     * ~0.2% over healthy). It still strictly tightens the old ≤-uniform
     * bound: any model that learns NOTHING (ratio ≥ 0.999) now errs. */
   val PerplexityBand: Double = 0.999
-
-  /** [[run]] with the training-quality tripwire inline
-    * ([[TopicModel.assertQuality]] on the scoring corpus): LDA has no SQL
-    * twin, so the driver's check on this pipeline is rows-only — the
-    * perplexity bound turns a silent training regression into a non-null
-    * gate err. */
-  def runChecked(dns: DataFrame, popular: DataFrame,
-                 threshold: Double = 1.0, topK: Int = -1,
-                 topicCount: Int = 20, seed: Long = 42L,
-                 tiebreak: Seq[Column] = Nil): DataFrame = {
-    val model = train(dns, popular, topicCount, seed)
-    TopicModel.assertQuality(model.topics,
-      Corpus.wordCounts(features(dns, model), col("ip_dst"), col("word")),
-      PerplexityBand, label = "dns LDA")
-    Scoring.suspicious(score(dns, model), threshold, topK, tiebreak)
-  }
 }

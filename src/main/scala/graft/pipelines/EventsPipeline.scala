@@ -45,14 +45,18 @@ object EventsPipeline {
   def score(events: DataFrame, model: Model): DataFrame =
     Scoring.score(featurize(events, model.cuts), col("user_id"), col("word"), model.topics)
 
-  /** Train + score + ascending top-k with deterministic tiebreak. */
-  def run(events: DataFrame, threshold: Double = 1.0, topK: Int = 100,
-          topicCount: Int = 10, seed: Long = 42L): DataFrame = {
-    val model = train(events, topicCount = topicCount, seed = seed)
+  /** The corpus a model scores, the one its training-quality tripwire
+    * measures ([[TopicModel.assertQuality]]). */
+  def scoringCorpus(events: DataFrame, model: Model): DataFrame =
+    Corpus.wordCounts(featurize(events, model.cuts), col("user_id"), col("word"))
+
+  /** The scored events (event_id, user_id, event_type, word, score),
+    * ascending, top-K, with `event_id` ordering equal scores. */
+  def results(events: DataFrame, model: Model,
+              threshold: Double, topK: Int): DataFrame =
     Scoring.suspicious(
       score(events, model).select("event_id", "user_id", "event_type", "word", "score"),
       threshold, topK, tiebreak = Seq(col("event_id")))
-  }
 
   /** Pinned training-quality band: trained perplexity must stay below
     * this fraction of the uniform baseline. Derivation: the seeded,
@@ -65,41 +69,4 @@ object EventsPipeline {
     * healthy sits so close to 1.0 here; pipelines with more corpus
     * structure pin far tighter (flow 0.71, proxy 0.92). */
   val PerplexityBand: Double = 0.991
-
-  /** Training-quality assertion: the trained model's perplexity on its own
-    * corpus must not exceed [[PerplexityBand]] × the uniform baseline
-    * (= vocabulary size — see [[TopicModel.perplexity]]: a uniform model
-    * scores exactly |vocab|). The events corpus is deliberately FLAT (decile/quintile bins
-    * are equal-mass by construction), so a trained model only beats uniform
-    * by the corpus's residual structure — the ratio bound catches a model
-    * that is WORSE than knowing nothing (zeroed gammas, shuffled joins,
-    * degenerate topics), not optimizer noise. Throws IllegalStateException
-    * → the driver's rows-only gate records a non-null err. */
-  def assertQuality(model: Model, events: DataFrame): Unit =
-    TopicModel.assertQuality(model.topics,
-      Corpus.wordCounts(featurize(events, model.cuts),
-        col("user_id"), col("word")),
-      PerplexityBand, label = "events LDA")
-
-  /** The measured perplexity/uniform ratio [[assertQuality]] bounds —
-    * exposed so the driver gate can emit the value as evidence columns
-    * next to its rows-only check (see pipe_events_suspicious). */
-  def qualityRatio(model: Model, events: DataFrame): Double =
-    TopicModel.qualityRatio(model.topics,
-      Corpus.wordCounts(featurize(events, model.cuts),
-        col("user_id"), col("word")),
-      label = "events LDA")
-
-  /** [[run]] with the quality gate inline: LDA has no SQL twin, so the
-    * driver's correctness check on this pipeline is rows-only — the
-    * perplexity bound turns a silent training regression into a gate
-    * failure. */
-  def runChecked(events: DataFrame, threshold: Double = 1.0, topK: Int = 100,
-                 topicCount: Int = 10, seed: Long = 42L): DataFrame = {
-    val model = train(events, topicCount = topicCount, seed = seed)
-    assertQuality(model, events)
-    Scoring.suspicious(
-      score(events, model).select("event_id", "user_id", "event_type", "word", "score"),
-      threshold, topK, tiebreak = Seq(col("event_id")))
-  }
 }

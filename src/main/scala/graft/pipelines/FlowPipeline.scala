@@ -94,9 +94,10 @@ object FlowPipeline {
     Model(cuts, topics, topicCount)
   }
 
-  /** Both endpoint scores + their min (reference: FlowPostLDA.scala:74-80
-    * keeps src/dst scores in the output row). */
-  def scoreFull(flows: DataFrame, model: Model): DataFrame = {
+  /** Score = min(P(src_word | sip doc), P(dst_word | dip doc)), with both
+    * endpoint scores kept as src_score/dst_score (reference:
+    * FlowPostLDA.scala:74-80,115-126). */
+  def score(flows: DataFrame, model: Model): DataFrame = {
     val feats = featurize(validTimes(flows), model.cuts)
     val srcScored = Scoring.score(feats, col("sip"), col("src_word"), model.topics)
       .withColumnRenamed("score", "src_score")
@@ -105,10 +106,11 @@ object FlowPipeline {
     bothScored.withColumn("score", least(col("src_score"), col("dst_score")))
   }
 
-  /** Score = min(P(src_word | sip doc), P(dst_word | dip doc))
-    * (reference: FlowPostLDA.scala:74-75,115-126). */
-  def score(flows: DataFrame, model: Model): DataFrame =
-    scoreFull(flows, model).drop("src_score", "dst_score")
+  /** The corpus a model scores (both endpoints' words under the model's
+    * cuts), the one its training-quality tripwire measures
+    * ([[TopicModel.assertQuality]]). */
+  def scoringCorpus(flows: DataFrame, model: Model): DataFrame =
+    corpus(featurize(validTimes(flows), model.cuts))
 
   /** Reference-shaped results (FlowPostLDA.scala:79-80): the ORIGINAL
     * input columns + src_score + dst_score, filtered to min-score <=
@@ -119,15 +121,9 @@ object FlowPipeline {
   def results(flows: DataFrame, model: Model,
               threshold: Double, topK: Int,
               tiebreak: Seq[Column] = Nil): DataFrame = {
-    val scored = scoreFull(flows, model)
-    val limited = Scoring.suspicious(scored, threshold, topK, tiebreak)
+    val limited = Scoring.suspicious(score(flows, model), threshold, topK, tiebreak)
     limited.select(flows.columns.map(col) :+ col("src_score") :+ col("dst_score"): _*)
   }
-
-  def run(flows: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-          topicCount: Int = 20, seed: Long = 42L): DataFrame =
-    Scoring.suspicious(score(flows, train(flows, topicCount, seed)),
-      threshold, topK)
 
   /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
     * bound): seeded healthy ratio measured 0.4158 on the sf0.01 gate
@@ -136,19 +132,4 @@ object FlowPipeline {
     * 0.95×-uniform "mild regression", which the old ≤-uniform bound
     * accepted — flips the gate err non-null. */
   val PerplexityBand: Double = 0.71
-
-  /** [[run]] with the training-quality tripwire inline
-    * ([[TopicModel.assertQuality]] on the scoring corpus): LDA has no SQL
-    * twin, so the driver's check on this pipeline is rows-only — the
-    * perplexity bound turns a silent training regression into a non-null
-    * gate err. */
-  def runChecked(flows: DataFrame, threshold: Double = 1.0, topK: Int = -1,
-                 topicCount: Int = 20, seed: Long = 42L,
-                 tiebreak: Seq[Column] = Nil): DataFrame = {
-    val model = train(flows, topicCount, seed)
-    TopicModel.assertQuality(model.topics,
-      corpus(featurize(validTimes(flows), model.cuts)),
-      PerplexityBand, label = "flow LDA")
-    Scoring.suspicious(score(flows, model), threshold, topK, tiebreak)
-  }
 }

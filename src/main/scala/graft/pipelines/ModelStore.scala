@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.ml.TopicModel
-import graft.sources.Sinks
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -25,24 +25,36 @@ private[pipelines] object ModelStore {
     def topicCount: Int = meta.getAs[Int]("topic_count")
   }
 
+  /** Writes every part into a sibling temp dir, then swaps that dir in for
+    * `path` with one rename, so `path` holds the old model or the whole
+    * new one, never a mix of the two. All parts are written before the old
+    * dir goes, so a model loaded from `path` (its frames read it lazily)
+    * can be saved back to it. A failed write removes the temp dir and
+    * leaves `path` as it was; a failed rename keeps the temp dir, the only
+    * copy of the new model left. */
   def save(path: String, topics: TopicModel.Model, topicCount: Int,
            cuts: Seq[(String, Array[Double])],
            popular: Option[DataFrame] = None): Unit = {
-    TopicModel.save(topics, s"$path/topics")
-    // popular may be the lazily-read frame loaded from this very path
-    // (load-then-save-to-same-path): swap via a temp dir, never overwrite
-    // a directory mid-read
-    popular.foreach(p => Sinks.overwriteParquetSafely(
-      p.select(col("domain").cast("string").as("domain")), s"$path/popular"))
+    val spark = topics.docTopicMix.sparkSession
+    val target = new Path(path)
+    val tmp = new Path(path + ".__tmp_swap")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tmp, true) // left by a save whose rename failed
     // the schema a Seq-of-tuples `toDF` gives these values
     val schema = StructType(
       cuts.map { case (name, _) =>
         StructField(name, ArrayType(DoubleType, containsNull = false)) } :+
         StructField("topic_count", IntegerType, nullable = false))
     val row = Row.fromSeq(cuts.map { case (_, c) => c.toSeq } :+ topicCount)
-    val spark = topics.docTopicMix.sparkSession
-    spark.createDataFrame(java.util.List.of(row), schema)
-      .write.mode("overwrite").parquet(s"$path/meta")
+    try {
+      TopicModel.save(topics, s"$tmp/topics")
+      popular.foreach(_.select(col("domain").cast("string").as("domain"))
+        .write.parquet(s"$tmp/popular"))
+      spark.createDataFrame(java.util.List.of(row), schema).write.parquet(s"$tmp/meta")
+    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    if (fs.exists(target)) fs.delete(target, true)
+    if (!fs.rename(tmp, target))
+      throw new java.io.IOException(s"rename $tmp -> $target failed")
   }
 
   /** Reads what [[save]] wrote; `popular` only when `withPopular`. */

@@ -111,18 +111,19 @@ object ProxyPipeline {
   def score(proxy: DataFrame, model: Model): DataFrame =
     Scoring.score(features(proxy, model), col("clientip"), col("word"), model.topics)
 
-  /** Reference-shaped results (ProxySuspiciousConnectsAnalysis.scala:45-52):
-    * the ORIGINAL input columns + word + score, ascending, top-K. */
-  def results(proxy: DataFrame, model: Model,
-              threshold: Double, topK: Int): DataFrame =
-    Scoring.suspicious(score(proxy, model), threshold, topK)
-      .select(proxy.columns.map(col) :+ col("word") :+ col("score"): _*)
+  /** The corpus a model scores, the one its training-quality tripwire
+    * measures ([[TopicModel.assertQuality]]). */
+  def scoringCorpus(proxy: DataFrame, model: Model): DataFrame =
+    Corpus.wordCounts(features(proxy, model), col("clientip"), col("word"))
 
-  def run(proxy: DataFrame, popular: DataFrame,
-          threshold: Double = 1.0, topK: Int = -1,
-          topicCount: Int = 20, seed: Long = 42L): DataFrame =
-    Scoring.suspicious(score(proxy, train(proxy, popular, topicCount, seed)),
-      threshold, topK)
+  /** Reference-shaped results (ProxySuspiciousConnectsAnalysis.scala:45-52):
+    * the ORIGINAL input columns + word + score, ascending, top-K;
+    * `tiebreak` columns order equal scores. */
+  def results(proxy: DataFrame, model: Model,
+              threshold: Double, topK: Int,
+              tiebreak: Seq[Column] = Nil): DataFrame =
+    Scoring.suspicious(score(proxy, model), threshold, topK, tiebreak)
+      .select(proxy.columns.map(col) :+ col("word") :+ col("score"): _*)
 
   /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
     * bound): seeded healthy ratio measured 0.8470 on the sf0.01 gate
@@ -131,20 +132,4 @@ object ProxyPipeline {
     * "mild regression" the old ≤-uniform bound accepted — flips the
     * gate err non-null. */
   val PerplexityBand: Double = 0.92
-
-  /** [[run]] with the training-quality tripwire inline
-    * ([[TopicModel.assertQuality]] on the scoring corpus): LDA has no SQL
-    * twin, so the driver's check on this pipeline is rows-only — the
-    * perplexity bound turns a silent training regression into a non-null
-    * gate err. */
-  def runChecked(proxy: DataFrame, popular: DataFrame,
-                 threshold: Double = 1.0, topK: Int = -1,
-                 topicCount: Int = 20, seed: Long = 42L,
-                 tiebreak: Seq[Column] = Nil): DataFrame = {
-    val model = train(proxy, popular, topicCount, seed)
-    TopicModel.assertQuality(model.topics,
-      Corpus.wordCounts(features(proxy, model), col("clientip"), col("word")),
-      PerplexityBand, label = "proxy LDA")
-    Scoring.suspicious(score(proxy, model), threshold, topK, tiebreak)
-  }
 }

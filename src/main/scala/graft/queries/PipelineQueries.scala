@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Binning, Entropy, FlowWords, TimeFunctions}
-import graft.operators.Corpus
-import graft.pipelines.{DnsPipeline, EventsPipeline}
+import graft.ml.TopicModel
+import graft.operators.{Corpus, Scoring}
+import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,40 +19,60 @@ object PipelineQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.loadSpread(s, dir, name) // spread under-split scans (Tables doc)
 
+  /** The events golden run and the quality ratio its tripwire measured. */
+  private def eventsRun(s: SparkSession, dir: String): (DataFrame, Double) = {
+    val ev = t(s, dir, "events")
+    val model = EventsPipeline.train(ev, topicCount = 10)
+    val ratio = TopicModel.assertQuality(model.topics,
+      EventsPipeline.scoringCorpus(ev, model), EventsPipeline.PerplexityBand,
+      "events LDA")
+    (EventsPipeline.results(ev, model, threshold = 1.0, topK = 100), ratio)
+  }
+
   /** The four golden train+score runs shared by [[graft.GoldenGen]] (which
     * writes the committed fixtures) and the `pipe_*_golden` gates (which
     * re-run fresh and compare): deterministic fabrications of the harness
     * tables, seeded training over [[graft.ml.TopicModel]]'s pinned
     * core-count-independent layout, and a unique-id tiebreak so the
     * top-100 is a TOTAL-order pure function of the corpus — the same run
-    * under local[4], local[32], or a cluster must reproduce every line. */
+    * under local[4], local[32], or a cluster must reproduce every line.
+    * Each run is train → training-quality tripwire
+    * ([[TopicModel.assertQuality]]: LDA has no SQL twin, so the perplexity
+    * band turns a silent training regression into a non-null gate err) →
+    * the pipeline's `results`. Flow's fixture holds the words, which the
+    * reference-shaped `FlowPipeline.results` drops, so it ranks
+    * `FlowPipeline.score` itself. */
   def goldenRuns: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe_events_sf001" -> ((s, dir) =>
-      EventsPipeline.runChecked(t(s, dir, "events"),
-        threshold = 1.0, topK = 100, topicCount = 10)),
+    "pipe_events_sf001" -> ((s, dir) => eventsRun(s, dir)._1),
 
-    "pipe_flow_sf001" -> ((s, dir) =>
-      graft.pipelines.FlowPipeline.runChecked(
-          Fabrications.flowInput(t(s, dir, "events")),
-          threshold = 1.0, topK = 100, topicCount = 5, seed = 42L,
+    "pipe_flow_sf001" -> ((s, dir) => {
+      val flows = Fabrications.flowInput(t(s, dir, "events"))
+      val model = FlowPipeline.train(flows, topicCount = 5)
+      TopicModel.assertQuality(model.topics, FlowPipeline.scoringCorpus(flows, model),
+        FlowPipeline.PerplexityBand, "flow LDA")
+      Scoring.suspicious(FlowPipeline.score(flows, model), threshold = 1.0,
+          topK = 100, tiebreak = Seq(col("event_id")))
+        .select("event_id", "sip", "dip", "src_word", "dst_word", "score")}),
+
+    "pipe_dns_sf001" -> ((s, dir) => {
+      val dns = Fabrications.dnsInput(t(s, dir, "documents"))
+      val model = DnsPipeline.train(dns,
+        DnsPipeline.popularFrame(s, Fabrications.DnsPopular), topicCount = 5)
+      TopicModel.assertQuality(model.topics, DnsPipeline.scoringCorpus(dns, model),
+        DnsPipeline.PerplexityBand, "dns LDA")
+      DnsPipeline.results(dns, model, threshold = 1.0, topK = 100,
+          tiebreak = Seq(col("doc_id")))
+        .select("doc_id", "ip_dst", "word", "score")}),
+
+    "pipe_proxy_sf001" -> ((s, dir) => {
+      val proxy = Fabrications.proxyInput(t(s, dir, "events"))
+      val model = ProxyPipeline.train(proxy,
+        DnsPipeline.popularFrame(s, Set.empty), topicCount = 5)
+      TopicModel.assertQuality(model.topics, ProxyPipeline.scoringCorpus(proxy, model),
+        ProxyPipeline.PerplexityBand, "proxy LDA")
+      ProxyPipeline.results(proxy, model, threshold = 1.0, topK = 100,
           tiebreak = Seq(col("event_id")))
-        .select("event_id", "sip", "dip", "src_word", "dst_word", "score")),
-
-    "pipe_dns_sf001" -> ((s, dir) =>
-      graft.pipelines.DnsPipeline.runChecked(
-          Fabrications.dnsInput(t(s, dir, "documents")),
-          graft.pipelines.DnsPipeline.popularFrame(s, Fabrications.DnsPopular),
-          threshold = 1.0, topK = 100, topicCount = 5,
-          seed = 42L, tiebreak = Seq(col("doc_id")))
-        .select("doc_id", "ip_dst", "word", "score")),
-
-    "pipe_proxy_sf001" -> ((s, dir) =>
-      graft.pipelines.ProxyPipeline.runChecked(
-          Fabrications.proxyInput(t(s, dir, "events")),
-          graft.pipelines.DnsPipeline.popularFrame(s, Set.empty),
-          threshold = 1.0, topK = 100, topicCount = 5, seed = 42L,
-          tiebreak = Seq(col("event_id")))
-        .select("event_id", "clientip", "word", "score"))
+        .select("event_id", "clientip", "word", "score")})
   )
 
   /** A golden-compare gate body: run the named [[goldenRuns]] entry fresh,
@@ -141,27 +162,15 @@ object PipelineQueries {
         col("user_id"), col("event_type"))
       graft.ml.ModelIO.exportCorpus(wc)._1}),
 
-    // Full suspicious-connects pipeline. LDA — no SQL twin, so the
-    // driver's check is rows-only; the inline perplexity bound (trained
-    // model must not be WORSE than half-way to uniform) turns a silent
-    // training regression into a non-null gate err. The gate result
-    // additionally CARRIES its quantitative evidence: the measured
-    // perplexity/uniform ratio and the pinned band ride along as
-    // constant columns, so the one no-oracle gate's dumped parquet
-    // documents how far inside the band the training landed (r11 item
-    // 7) instead of only pass/fail.
+    // Full suspicious-connects pipeline: the events golden run, whose
+    // perplexity band makes a training regression a non-null err on this
+    // rows-only gate. The result also CARRIES its evidence: the measured
+    // perplexity/uniform ratio and the pinned band ride along as constant
+    // columns, so the dumped parquet shows how far inside the band the
+    // training landed instead of only pass/fail.
     "pipe_events_suspicious" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val model = EventsPipeline.train(ev, topicCount = 10)
-      val ratio = EventsPipeline.qualityRatio(model, ev)
-      if (ratio > EventsPipeline.PerplexityBand) throw new IllegalStateException(
-        f"events LDA training-quality regression: perplexity ratio " +
-          f"$ratio%.4f exceeds the ${EventsPipeline.PerplexityBand}%.3f band")
-      graft.operators.Scoring.suspicious(
-        EventsPipeline.score(ev, model)
-          .select("event_id", "user_id", "event_type", "word", "score"),
-        threshold = 1.0, topK = 100, tiebreak = Seq(col("event_id")))
-        .withColumn("quality_ratio", lit(math.rint(ratio * 1e6) / 1e6))
+      val (out, ratio) = eventsRun(s, dir)
+      out.withColumn("quality_ratio", lit(math.rint(ratio * 1e6) / 1e6))
         .withColumn("quality_band", lit(EventsPipeline.PerplexityBand))}),
 
     // LDA-TRAINING DETERMINISM, driver-checked: the one property of the
@@ -174,9 +183,7 @@ object PipelineQueries {
     // topK=100 rows: the collect is bounded by construction.
     "pipe_events_determinism" -> ((s, dir) => {
       def once(): Array[String] =
-        EventsPipeline.runChecked(t(s, dir, "events"),
-            threshold = 1.0, topK = 100, topicCount = 10)
-          .collect().map(_.toString).sorted
+        goldenRuns("pipe_events_sf001")(s, dir).collect().map(_.toString).sorted
       val a = once()
       val b = once()
       val ca = a.groupBy(identity).view.mapValues(_.size).toMap
@@ -196,9 +203,8 @@ object PipelineQueries {
     // default drift) that lands inside the band — and the training
     // layout-invariance pin (TopicModel.TrainLayoutPartitions) is what
     // makes the same fixture valid under ANY session core count.
-    // These replaced the rows-only pipe_{flow,dns,proxy}_full gates (the
-    // r9 no_oracle set): the same runChecked pipelines execute inside —
-    // perplexity band included — but the result is now exact-compared.
+    // Each golden run checks its perplexity band before its result is
+    // exact-compared.
     "pipe_events_golden" -> goldenGate("pipe_events_sf001"),
     "pipe_flow_golden" -> goldenGate("pipe_flow_sf001"),
     "pipe_dns_golden" -> goldenGate("pipe_dns_sf001"),

@@ -62,24 +62,4 @@ object Sinks {
 
   def readOrc(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.orc(path)
-
-  /** Overwrite `path` with a frame that may itself be LAZILY READING from
-    * `path` (the load-then-save-to-same-path shape in the pipeline model
-    * stores). A direct `mode("overwrite")` there either fails with
-    * "Cannot overwrite a path that is also being read from" or corrupts
-    * the source mid-scan. Write fully to a sibling temp dir first (the
-    * read drains while the old files are intact), then swap via the
-    * filesystem: delete target, rename temp. The rename is a metadata op
-    * on HDFS/local; on object stores it's a copy, still correct. */
-  def overwriteParquetSafely(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__tmp_swap")
-    val fs = target.getFileSystem(hadoopConf)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-  }
 }

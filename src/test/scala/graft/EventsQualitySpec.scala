@@ -3,9 +3,11 @@ package graft
 import graft.pipelines.EventsPipeline
 import org.apache.spark.sql.functions._
 
-/** The quality tripwire for the driver's rows-only LDA gate
-  * (`pipe_events_suspicious` → [[EventsPipeline.runChecked]]): LDA has no
-  * SQL twin, so without this the gate passes on row count alone. */
+/** The quality tripwire for the driver's rows-only LDA gates
+  * (`pipe_events_suspicious` and the `pipe_*_golden` runs call
+  * [[graft.ml.TopicModel.assertQuality]] on the pipeline's scoring corpus
+  * under its band): LDA has no SQL twin, so without this the gate passes
+  * on row count alone. */
 class EventsQualitySpec extends SparkSpec {
 
   import spark.implicits._
@@ -13,18 +15,22 @@ class EventsQualitySpec extends SparkSpec {
   private lazy val events =
     Tables.load(spark, "/root/testdata/sf0.001", "events")
 
+  /** The events gates' tripwire: the model on its own scoring corpus,
+    * under the events band. */
+  private def assertEventsQuality(model: EventsPipeline.Model): Double =
+    graft.ml.TopicModel.assertQuality(model.topics,
+      EventsPipeline.scoringCorpus(events, model), EventsPipeline.PerplexityBand,
+      "events LDA")
+
   "EventsPipeline.assertQuality" should
     "accept the genuinely trained model (perplexity <= uniform baseline)" in {
     val model = EventsPipeline.train(events, topicCount = 10)
-    val wc = graft.operators.Corpus.wordCounts(
-      EventsPipeline.featurize(events, model.cuts),
-      col("user_id"), col("word"))
+    val wc = EventsPipeline.scoringCorpus(events, model)
     val vocab = wc.select("word").distinct().count().toDouble
     val pp = graft.ml.TopicModel.perplexity(model.topics, wc)
     info(f"trained perplexity = $pp%.4f, uniform baseline = $vocab%.0f, " +
       f"ratio = ${pp / vocab}%.4f")
-    noException should be thrownBy
-      EventsPipeline.assertQuality(model, events)
+    noException should be thrownBy assertEventsQuality(model)
   }
 
   it should "throw on an injected quality regression (the driver gate's err path)" in {
@@ -37,8 +43,7 @@ class EventsQualitySpec extends SparkSpec {
         transform(col("topic_prob"), _ =>
           when(col("word") === "purchase_0_0", lit(1.0)).otherwise(lit(1e-12))))
     val bad = model.copy(topics = model.topics.copy(wordTopicProb = badProbs))
-    val e = the[IllegalStateException] thrownBy
-      EventsPipeline.assertQuality(bad, events)
+    val e = the[IllegalStateException] thrownBy assertEventsQuality(bad)
     e.getMessage should include("LDA training-quality regression")
   }
 
@@ -49,9 +54,7 @@ class EventsQualitySpec extends SparkSpec {
     // most — not all — of its learned structure. The r6 bound (ratio <=
     // 1.0) accepts it; the pinned band must not.
     val model = EventsPipeline.train(events, topicCount = 10)
-    val wc = graft.operators.Corpus.wordCounts(
-      EventsPipeline.featurize(events, model.cuts),
-      col("user_id"), col("word"))
+    val wc = EventsPipeline.scoringCorpus(events, model)
     val vocab = wc.select("word").distinct().count().toDouble
     val blended = model.topics.wordTopicProb.withColumn("topic_prob",
       transform(col("topic_prob"), p => p * 0.05 + lit(0.95 / vocab)))
@@ -61,8 +64,7 @@ class EventsQualitySpec extends SparkSpec {
       f"(band = ${EventsPipeline.PerplexityBand})")
     (pp / vocab) should be < 1.0 // the old bound would have passed it
     (pp / vocab) should be > EventsPipeline.PerplexityBand
-    the[IllegalStateException] thrownBy
-      EventsPipeline.assertQuality(mild, events)
+    the[IllegalStateException] thrownBy assertEventsQuality(mild)
   }
 
   "the pinned per-pipeline bands" should
@@ -100,9 +102,8 @@ class EventsQualitySpec extends SparkSpec {
     SparkEntry.entry(spark).count() should be > 0L
   }
 
-  // The SHARED tripwire now wired into every full-LDA gate
-  // (pipe_flow_full / pipe_dns_full / pipe_proxy_full via each pipeline's
-  // runChecked): hand-built models make the bound's two sides exact —
+  // The SHARED tripwire every LDA gate calls (each golden run and
+  // pipe_events_suspicious): hand-built models make the bound's two sides exact —
   // uniform perplexity == |vocab| (allowed at maxRatio 1.0), degenerate
   // mass > |vocab| (throws → the driver gate's err goes non-null).
   "TopicModel.assertQuality" should

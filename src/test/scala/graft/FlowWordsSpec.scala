@@ -15,7 +15,7 @@ class FlowWordsSpec extends SparkSpec {
   private val pair = "10.0.2.115 172.16.0.107"
 
   private def run(ips: (String, String), dport: Int, sport: Int) =
-    FlowWords.adjustPort(ips._1, ips._2, dport, sport, 4.0, 7.0, 7.0)
+    FlowWordsOracle.adjustPort(ips._1, ips._2, dport, sport, 4.0, 7.0, 7.0)
 
   behavior of "adjustPort"
 
@@ -106,7 +106,7 @@ class FlowWordsSpec extends SparkSpec {
       .as[(String, String, Int, Int, String, String, String, String)]
       .collect()
     got.foreach { case (sip, dip, d, s, gpw, gip, gsw, gdw) =>
-      val w = FlowWords.adjustPort(sip, dip, d, s, 4.0, 7.0, 7.0)
+      val w = FlowWordsOracle.adjustPort(sip, dip, d, s, 4.0, 7.0, 7.0)
       withClue(s"dport=$d sport=$s: ") {
         (gpw, gip, gsw, gdw) shouldBe (w.portWord, w.ipPair, w.srcWord, w.dstWord)
       }

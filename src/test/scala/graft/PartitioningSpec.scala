@@ -288,6 +288,29 @@ class PartitioningSpec extends SparkSpec {
     writes.filterNot(_.startsWith("graft/GraftSession.scala:")) shouldBe empty
   }
 
+  it should "rank scored rows only in each pipeline's results" in {
+    // every pipeline has one composition, train then results; a second
+    // hand-written train -> score -> top-k drifts from the one that runs.
+    // Flow's golden run ranks FlowPipeline.score itself: its fixture
+    // keeps the words that the reference-shaped results drops.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    Files.isDirectory(root) shouldBe true
+    import scala.jdk.CollectionConverters._
+    val sites = Files.walk(root).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        Files.readAllLines(f).asScala.toSeq
+          .filter(_.contains("Scoring.suspicious("))
+          .map(_ => root.relativize(f).toString)
+      }
+      .filterNot(_ == "graft/operators/Scoring.scala")
+    sites.sorted shouldBe Seq(
+      "graft/pipelines/DnsPipeline.scala",
+      "graft/pipelines/EventsPipeline.scala",
+      "graft/pipelines/FlowPipeline.scala",
+      "graft/pipelines/ProxyPipeline.scala",
+      "graft/queries/PipelineQueries.scala")
+  }
+
   it should "create temp dirs only through the helper" in {
     // a gate's scratch dir outlives the builder (its frame reads it
     // lazily), so only ScratchDirs may make one: it roots them all under

