@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline}
+import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline, SuspiciousConnects}
 import graft.queries.Fabrications
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -107,34 +107,28 @@ object Bench {
     "pipeline_proxy" -> Seq("pipeline_proxy"))
 
   /** The four suspicious-connects pipelines, each its `train` then its
-    * `results` (featurize → LDA → score → top-k). All train at topicCount = 10 /
-    * maxIter = 10 so cross-pipeline numbers compare like for like; the
-    * flow/dns/proxy inputs are the fabrications the golden gates run on.
-    * Training runs when the builder is called, inside the timed body. */
-  private[graft] val pipelines: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_events" -> ((s, dir) => {
-      val events = Tables.load(s, dir, "events")
-      EventsPipeline.results(events, EventsPipeline.train(events, topicCount = 10),
-        threshold = 1.0, topK = 100)
-    }),
-    "pipeline_flow" -> ((s, dir) => {
-      val flows = Fabrications.flowInput(Tables.loadSpread(s, dir, "events"))
-      val m = FlowPipeline.train(flows, topicCount = 10, maxIter = 10)
-      FlowPipeline.results(flows, m, threshold = 1.0, topK = 100)
-    }),
-    "pipeline_dns" -> ((s, dir) => {
-      val dns = Fabrications.dnsInput(Tables.loadSpread(s, dir, "documents"))
-      val m = DnsPipeline.train(dns,
-        DnsPipeline.popularFrame(s, Fabrications.DnsPopular),
-        topicCount = 10, maxIter = 10)
-      DnsPipeline.results(dns, m, threshold = 1.0, topK = 100)
-    }),
-    "pipeline_proxy" -> ((s, dir) => {
-      val proxy = Fabrications.proxyInput(Tables.loadSpread(s, dir, "events"))
-      val m = ProxyPipeline.train(proxy, DnsPipeline.popularFrame(s, Set.empty),
-        topicCount = 10, maxIter = 10)
-      ProxyPipeline.results(proxy, m, threshold = 1.0, topK = 100)
-    }))
+    * `results` (featurize → LDA → score → top-k), keyed `pipeline_<name>`.
+    * All train at topicCount = 10 / maxIter = 10 so cross-pipeline numbers
+    * compare like for like; the flow/dns/proxy inputs are the fabrications
+    * the golden gates run on. Training runs inside the timed body. */
+  private[graft] val pipelines: Map[String, (SparkSession, String) => DataFrame] = {
+    def entry(p: SuspiciousConnects, popular: Set[String])(
+        input: (SparkSession, String) => DataFrame) =
+      s"pipeline_${p.name}" -> ((s: SparkSession, dir: String) => {
+        val in = input(s, dir)
+        val m = p.train(in, SuspiciousConnects.popularFrame(s, popular),
+          topicCount = 10, maxIter = 10)
+        p.results(in, m, threshold = 1.0, topK = 100)
+      })
+    Map(
+      entry(EventsPipeline, Set.empty)(Tables.load(_, _, "events")),
+      entry(FlowPipeline, Set.empty)((s, dir) =>
+        Fabrications.flowInput(Tables.loadSpread(s, dir, "events"))),
+      entry(DnsPipeline, Fabrications.DnsPopular)((s, dir) =>
+        Fabrications.dnsInput(Tables.loadSpread(s, dir, "documents"))),
+      entry(ProxyPipeline, Set.empty)((s, dir) =>
+        Fabrications.proxyInput(Tables.loadSpread(s, dir, "events"))))
+  }
 
   /** One discarded warm-up rep per query absorbs the fork-per-family
     * cold-JVM cost (r7's fix traded contamination for 0.1-0.3 s JIT

@@ -1,9 +1,9 @@
 package graft
 
-import graft.pipelines.{DnsPipeline, FlowPipeline, ProxyPipeline}
+import graft.pipelines.SuspiciousConnects
 import graft.sources.{Feedback, Lookups, Sinks}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** User-facing analysis CLI — the reference's `SuspiciousConnects` entry
   * point (SuspiciousConnects.scala:29-58 + SuspiciousConnectsArgumentParser
@@ -42,8 +42,12 @@ object Main {
                           delimiter: String = "\t",
                           seed: Long = 42L)
 
+  /** The pipelines the CLI runs: those that declare a feedback schema. */
+  private val analyses: Seq[String] =
+    SuspiciousConnects.all.filter(_.feedbackSchema.isDefined).map(_.name)
+
   val usage: String =
-    """Usage: graft.Main --analysis <flow|dns|proxy> --input <parquet[,parquet...]>
+    s"""Usage: graft.Main --analysis <${analyses.mkString("|")}> --input <parquet[,parquet...]>
       |                  --scored <output dir>
       |  [--feedback <tsv>]     headered TSV of analyst-scored rows (sev column)
       |  [--dupfactor <n>]      corpus weight for sev=3 feedback rows (default 1000)
@@ -76,8 +80,8 @@ object Main {
       case other :: _ => Left(s"unrecognized or valueless argument: $other")
     }
     try loop(args.toList, Config()).flatMap { c =>
-      if (!Set("flow", "dns", "proxy").contains(c.analysis))
-        Left("--analysis must be one of: flow, dns, proxy")
+      if (!analyses.contains(c.analysis))
+        Left(s"--analysis must be one of: ${analyses.mkString(", ")}")
       else if (c.input.isEmpty) Left("--input is required")
       else if (c.scored.isEmpty) Left("--scored is required")
       // MLlib's LDA requires k > 1, and a negative weight would subtract
@@ -90,35 +94,18 @@ object Main {
     }
   }
 
-  /** Feedback TSV schemas: the columns each featurizer reads + `sev`
-    * (reference: FlowPreLDA.scala:60-98, DNSPreLDA.scala:56-88,
-    * ProxyFeedback.scala:28-38 — same fields, named instead of indexed). */
-  def feedbackSchema(analysis: String): StructType = analysis match {
-    case "flow" => StructType(Seq(
-      StructField("trhour", IntegerType), StructField("trminute", IntegerType),
-      StructField("trsec", IntegerType), StructField("sip", StringType),
-      StructField("dip", StringType), StructField("sport", IntegerType),
-      StructField("dport", IntegerType), StructField("ipkt", LongType),
-      StructField("ibyt", LongType), StructField("sev", IntegerType)))
-    case "dns" => StructType(Seq(
-      StructField("frame_time", StringType), StructField("unix_tstamp", LongType),
-      StructField("frame_len", IntegerType), StructField("ip_dst", StringType),
-      StructField("dns_qry_name", StringType), StructField("dns_qry_class", StringType),
-      StructField("dns_qry_type", IntegerType), StructField("dns_qry_rcode", IntegerType),
-      StructField("sev", IntegerType)))
-    case _ => StructType(Seq(
-      StructField("p_date", StringType), StructField("p_time", StringType),
-      StructField("clientip", StringType), StructField("host", StringType),
-      StructField("reqmethod", StringType), StructField("useragent", StringType),
-      StructField("resconttype", StringType), StructField("respcode", StringType),
-      StructField("fulluri", StringType), StructField("sev", IntegerType)))
-  }
+  /** The feedback TSV schema of a CLI analysis (its pipeline's
+    * [[SuspiciousConnects.feedbackSchema]]); any other name fails. */
+  def feedbackSchema(analysis: String): StructType =
+    SuspiciousConnects(analysis).feedbackSchema.getOrElse(
+      throw new IllegalArgumentException(s"the $analysis pipeline takes no feedback"))
 
   /** Train + score + shape results for one analysis; factored out of main
     * so tests can drive the full CLI path on an existing session. */
   def runAnalysis(spark: SparkSession, c: Config): DataFrame = {
+    val p = SuspiciousConnects(c.analysis)
     val input = Tables.loadPaths(spark, c.input)
-    val fb = c.feedback.map(p => Feedback.load(spark, p,
+    val fb = c.feedback.map(path => Feedback.load(spark, path,
       feedbackSchema(c.analysis), sevCol = "sev", sev = 3,
       duplicationFactor = c.dupFactor))
     // --topdomains, else the reference's default: a top-1m.csv in the
@@ -127,44 +114,28 @@ object Main {
     // The list stays a DISTRIBUTED frame end-to-end — classing is a
     // broadcast join, never a driver collect of a million strings (the
     // reference's TopDomains.scala:9-13 Set is the shape avoided here).
-    // lazy: only the dns/proxy branches consume it — flow must not pay the
+    // Only a pipeline that takes a list reads one: flow must not pay the
     // CSV scan.
-    lazy val popular = c.topDomains
-      .orElse(Some("top-1m.csv").filter(p => new java.io.File(p).exists))
-      .map(p => Lookups.topDomainsDF(spark, p))
-      .getOrElse(DnsPipeline.popularFrame(spark, Set.empty))
+    val popular = c.topDomains
+      .orElse(Some("top-1m.csv").filter(path => new java.io.File(path).exists))
+      .filter(_ => p.takesPopular)
+      .map(path => Lookups.topDomainsDF(spark, path))
+      .getOrElse(SuspiciousConnects.popularFrame(spark, Set.empty))
     // --model: score with the model stored at the path when the path
     // exists, otherwise train and persist there (train-once-score-later).
     // A path that exists but does not load (a partial or interrupted
     // save) fails with the load's error, which names the missing part:
     // retraining over it would silently replace what is there.
-    def stored[M](load: String => M, train: () => M, save: (M, String) => Unit): M =
-      c.model match {
-        case Some(p) =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) load(p)
-          else { val m = train(); save(m, p); m }
-        case None => train()
-      }
-    c.analysis match {
-      case "flow" =>
-        val model = stored(FlowPipeline.load(spark, _),
-          () => FlowPipeline.train(input, topicCount = c.topicCount,
-            seed = c.seed, feedback = fb), FlowPipeline.save)
-        FlowPipeline.results(input, model, c.threshold, c.maxResults)
-      case "dns" =>
-        val model = stored(DnsPipeline.load(spark, _),
-          () => DnsPipeline.train(input, popular,
-            topicCount = c.topicCount, seed = c.seed, feedback = fb),
-          DnsPipeline.save)
-        DnsPipeline.results(input, model, c.threshold, c.maxResults)
-      case "proxy" =>
-        val model = stored(ProxyPipeline.load(spark, _),
-          () => ProxyPipeline.train(input, popular,
-            topicCount = c.topicCount, seed = c.seed, feedback = fb),
-          ProxyPipeline.save)
-        ProxyPipeline.results(input, model, c.threshold, c.maxResults)
+    val stored = c.model.filter { path =>
+      val hp = new org.apache.hadoop.fs.Path(path)
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
+    val model = stored.map(p.load(spark, _)).getOrElse {
+      val m = p.train(input, popular, c.topicCount, seed = c.seed, feedback = fb)
+      c.model.foreach(p.save(m, _))
+      m
+    }
+    p.results(input, model, c.threshold, c.maxResults)
   }
 
   def main(args: Array[String]): Unit = parse(args.toIndexedSeq) match {

@@ -2,10 +2,11 @@ package graft.pipelines
 
 import graft.functions.{Binning, Domains, Entropy}
 import graft.ml.TopicModel
-import graft.operators.{Corpus, Quantiles, Scoring}
-import graft.sources.Feedback
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.Quantiles
+import graft.pipelines.SuspiciousConnects.Perspective
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** DNS suspicious-connects pipeline.
   *
@@ -13,43 +14,17 @@ import org.apache.spark.sql.functions._
   * DNSPostLDA.scala. Word = topDomain_frameLenBin_timeBin_subdomainLenBin_
   * entropyBin_numPeriodsBin_qryType_rcode; document = client IP (ip_dst).
   * The subdomain struct extraction is a single struct-returning UDF pass
-  * (the reference rebuilds rows via RDD), entropy is a native codegen
-  * expression, and cuts are computed once and carried in the model.
+  * (the reference rebuilds rows via RDD) and entropy is a native codegen
+  * expression.
   */
-object DnsPipeline {
+object DnsPipeline extends SuspiciousConnects {
 
-  final case class Cuts(time: Array[Double], frameLen: Array[Double],
-                        subLen: Array[Double], entropy: Array[Double],
-                        numPeriods: Array[Double])
-
-  /** The popularity list is carried as a DISTRIBUTED (domain) frame — a
-    * top-1m list never funnels through the driver (train, score, and
-    * persistence all stay distributed; classing is a broadcast join). */
-  final case class Model(cuts: Cuts, popular: DataFrame,
-                         topics: TopicModel.Model, topicCount: Int)
-
-  /** A literal list as a popularity frame (DNS and proxy). */
-  def popularFrame(spark: SparkSession, domains: Set[String]): DataFrame = {
-    import spark.implicits._
-    domains.toSeq.sorted.toDF("domain")
-  }
-
-  /** Persist a trained model (train-once-score-later; [[ModelStore]]). */
-  def save(model: Model, path: String): Unit =
-    ModelStore.save(path, model.topics, model.topicCount, Seq(
-      "time_cuts" -> model.cuts.time, "frame_len_cuts" -> model.cuts.frameLen,
-      "sub_len_cuts" -> model.cuts.subLen, "entropy_cuts" -> model.cuts.entropy,
-      "num_periods_cuts" -> model.cuts.numPeriods), Some(model.popular))
-
-  def load(spark: SparkSession, path: String): Model = {
-    val m = ModelStore.load(spark, path, withPopular = true)
-    Model(Cuts(m.cuts("time_cuts"), m.cuts("frame_len_cuts"), m.cuts("sub_len_cuts"),
-      m.cuts("entropy_cuts"), m.cuts("num_periods_cuts")),
-      m.popular.get, m.topics, m.topicCount)
-  }
+  val name = "dns"
 
   def validRows(dns: DataFrame): DataFrame =
     dns.where(col("frame_time").isNotNull && col("unix_tstamp").isNotNull)
+
+  override def prepare(dns: DataFrame): DataFrame = withSubdomains(dns)
 
   /** Adds domain, subdomain, subdomain_length, num_periods,
     * subdomain_entropy. */
@@ -62,22 +37,18 @@ object DnsPipeline {
         when(col("subdomain") === Domains.NoDomain, lit(0.0))
           .otherwise(Entropy.string_entropy(col("subdomain"))))
 
-  /** All five cut-sets in ONE scan+shuffle (the reference ran a full
-    * distributed pass per cut-set: DNSWordCreation.scala:78-122); the
-    * positive-value predicates (P5) become per-spec filters. */
-  def computeCuts(withSub: DataFrame): Cuts = {
-    val cuts = Quantiles.computeCutSets(withSub, Seq(
-      Quantiles.CutSpec("time", col("unix_tstamp"), Quantiles.Deciles),
-      Quantiles.CutSpec("frame_len", col("frame_len"), Quantiles.Deciles),
-      Quantiles.CutSpec("sub_len", col("subdomain_length"), Quantiles.Quintiles,
-        Some(col("subdomain_length") > 0)),
-      Quantiles.CutSpec("entropy", col("subdomain_entropy"), Quantiles.Quintiles,
-        Some(col("subdomain_entropy") > 0)),
-      Quantiles.CutSpec("periods", col("num_periods"), Quantiles.Quintiles,
-        Some(col("num_periods") > 0))))
-    Cuts(time = cuts("time"), frameLen = cuts("frame_len"), subLen = cuts("sub_len"),
-      entropy = cuts("entropy"), numPeriods = cuts("periods"))
-  }
+  /** Five cut-sets (the reference ran a full distributed pass per
+    * cut-set: DNSWordCreation.scala:78-122); the positive-value predicates
+    * (P5) become per-spec filters. */
+  def cutSpecs: Seq[Quantiles.CutSpec] = Seq(
+    Quantiles.CutSpec("time", col("unix_tstamp"), Quantiles.Deciles),
+    Quantiles.CutSpec("frame_len", col("frame_len"), Quantiles.Deciles),
+    Quantiles.CutSpec("sub_len", col("subdomain_length"), Quantiles.Quintiles,
+      Some(col("subdomain_length") > 0)),
+    Quantiles.CutSpec("entropy", col("subdomain_entropy"), Quantiles.Quintiles,
+      Some(col("subdomain_entropy") > 0)),
+    Quantiles.CutSpec("periods", col("num_periods"), Quantiles.Quintiles,
+      Some(col("num_periods") > 0)))
 
   /** 8-component word (reference: DNSWordCreation.scala:215-236); the
     * top-domain class comes from a broadcast join against `popular`
@@ -87,56 +58,44 @@ object DnsPipeline {
     Domains.withTopDomainClass(withSub, col("domain"), popular)
       .withColumn("word", concat_ws("_",
         col("top_domain"),
-        Binning.binCol(col("frame_len").cast("double"), cuts.frameLen.toSeq),
-        Binning.binCol(col("unix_tstamp").cast("double"), cuts.time.toSeq),
-        Binning.binCol(col("subdomain_length"), cuts.subLen.toSeq),
-        Binning.binCol(col("subdomain_entropy"), cuts.entropy.toSeq),
-        Binning.binCol(col("num_periods"), cuts.numPeriods.toSeq),
+        Binning.binCol(col("frame_len").cast("double"), cuts("frame_len").toSeq),
+        Binning.binCol(col("unix_tstamp").cast("double"), cuts("time").toSeq),
+        Binning.binCol(col("subdomain_length"), cuts("sub_len").toSeq),
+        Binning.binCol(col("subdomain_entropy"), cuts("entropy").toSeq),
+        Binning.binCol(col("num_periods"), cuts("periods").toSeq),
         col("dns_qry_type"), col("dns_qry_rcode")))
 
-  /** Train, optionally folding in analyst feedback (DNS columns + a
-    * `weight` column from [[graft.sources.Feedback]]): weights multiply
-    * corpus counts instead of physically duplicating rows
-    * (reference: DNSPreLDA.scala:70-86 flatMap ×N). `popular` is the
-    * distributed popularity list ([[popularFrame]] for a literal one). */
-  def train(dns: DataFrame, popular: DataFrame,
-            topicCount: Int = 20, seed: Long = 42L, maxIter: Int = 20,
-            feedback: Option[DataFrame] = None): Model = {
-    val withSub = withSubdomains(Feedback.weighted(dns, feedback, validRows))
-    val cuts = computeCuts(withSub)
-    val feats = featurizeWithLookup(withSub, cuts, popular)
-    val wc = Corpus.wordCounts(feats, col("ip_dst"), col("word"), col("__w"))
-    Model(cuts, popular, TopicModel.train(wc, topicCount, seed = seed,
-      maxIter = maxIter), topicCount)
-  }
+  val perspectives: Seq[Perspective] = Seq(Perspective("ip_dst", "word", "score"))
 
-  /** The words a model scores: [[featurizeWithLookup]] of the valid rows
-    * under the model's cuts and popularity list. */
-  private def features(dns: DataFrame, model: Model): DataFrame =
-    featurizeWithLookup(withSubdomains(validRows(dns)), model.cuts, model.popular)
+  /** The worded row — input columns + derived subdomain features + word —
+    * plus `score` (reference: DNSPostLDA.scala:48-70). */
+  def resultColumns(dns: DataFrame): Seq[String] = dns.columns.toSeq ++ Seq("domain",
+    "subdomain", "subdomain_length", "num_periods", "subdomain_entropy", "top_domain",
+    "word", "score")
 
-  def score(dns: DataFrame, model: Model): DataFrame =
-    Scoring.score(features(dns, model), col("ip_dst"), col("word"), model.topics)
-
-  /** The corpus a model scores, the one its training-quality tripwire
-    * measures ([[TopicModel.assertQuality]]). */
-  def scoringCorpus(dns: DataFrame, model: Model): DataFrame =
-    Corpus.wordCounts(features(dns, model), col("ip_dst"), col("word"))
-
-  /** Reference-shaped results (DNSPostLDA.scala:48-70): the worded row —
-    * input columns + derived subdomain features + word — plus `score`,
-    * ascending, top-K; `tiebreak` columns order equal scores. */
-  def results(dns: DataFrame, model: Model,
-              threshold: Double, topK: Int,
-              tiebreak: Seq[Column] = Nil): DataFrame =
-    Scoring.suspicious(score(dns, model), threshold, topK, tiebreak)
-
-  /** Pinned training-quality band ([[TopicModel.assertQuality]] ratio
-    * bound): seeded healthy ratio measured 0.9971 on the sf0.01 gate
-    * corpus — the dns fabrication is nearly flat (the 8-component word
-    * leaves little doc structure to learn), so healthy sits a hair
-    * under uniform and the band can only pin a thin margin (0.999,
-    * ~0.2% over healthy). It still strictly tightens the old ≤-uniform
-    * bound: any model that learns NOTHING (ratio ≥ 0.999) now errs. */
+  /** Pinned training-quality band: seeded healthy ratio measured 0.9971 on
+    * the sf0.01 gate corpus — the dns fabrication is nearly flat (the
+    * 8-component word leaves little doc structure to learn), so healthy
+    * sits a hair under uniform and the band can only pin a thin margin
+    * (0.999, ~0.2% over healthy). It still strictly tightens the old
+    * ≤-uniform bound: any model that learns NOTHING (ratio ≥ 0.999) now
+    * errs. */
   val PerplexityBand: Double = 0.999
+
+  /** Reference: DNSPreLDA.scala:56-88. */
+  override def feedbackSchema: Option[StructType] = Some(StructType(Seq(
+    StructField("frame_time", StringType), StructField("unix_tstamp", LongType),
+    StructField("frame_len", IntegerType), StructField("ip_dst", StringType),
+    StructField("dns_qry_name", StringType), StructField("dns_qry_class", StringType),
+    StructField("dns_qry_type", IntegerType), StructField("dns_qry_rcode", IntegerType),
+    StructField("sev", IntegerType))))
+
+  override def takesPopular: Boolean = true
+
+  // ---- aliases perfbench/scala compiles against; they go together with
+  // perfbench/scala/Layered.scala, its hand-composed traced pass ----
+  def Model(cuts: Cuts, popular: DataFrame, topics: TopicModel.Model, topicCount: Int): Model =
+    SuspiciousConnects.Model(cuts, popular, topics, topicCount)
+  def popularFrame(spark: SparkSession, domains: Set[String]): DataFrame =
+    SuspiciousConnects.popularFrame(spark, domains)
 }

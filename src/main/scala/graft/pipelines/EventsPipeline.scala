@@ -1,62 +1,40 @@
 package graft.pipelines
 
 import graft.functions.Binning
-import graft.ml.TopicModel
-import graft.operators.{Corpus, Quantiles, Scoring}
-import org.apache.spark.sql.DataFrame
+import graft.operators.Quantiles
+import graft.pipelines.SuspiciousConnects.Perspective
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The suspicious-connects dataflow applied to the generic `events` table
   * (event_id, ts, user_id, event_type, value, props): document = user,
   * word = eventType_hourBin_valueQuintile. This is the flagship end-to-end
-  * query — the same featurize → corpus → LDA → score → top-k shape as the
-  * flow/dns/proxy pipelines, runnable on the harness testdata.
+  * query, runnable on the generated test tables.
   */
-object EventsPipeline {
+object EventsPipeline extends SuspiciousConnects {
 
-  final case class Cuts(hour: Array[Double], value: Array[Double])
-  final case class Model(cuts: Cuts, topics: TopicModel.Model, topicCount: Int)
+  val name = "events"
 
-  /** Both cut-sets in one scan+shuffle (exact ECDF semantics). */
-  def computeCuts(events: DataFrame): Cuts = {
-    val cuts = Quantiles.computeCutSets(events, Seq(
-      Quantiles.CutSpec("hour", hour(col("ts")), Quantiles.Deciles),
-      Quantiles.CutSpec("value", col("value"), Quantiles.Quintiles)))
-    Cuts(hour = cuts("hour"), value = cuts("value"))
-  }
+  def validRows(events: DataFrame): DataFrame = events
 
-  def featurize(events: DataFrame, cuts: Cuts): DataFrame =
+  def cutSpecs: Seq[Quantiles.CutSpec] = Seq(
+    Quantiles.CutSpec("hour", hour(col("ts")), Quantiles.Deciles),
+    Quantiles.CutSpec("value", col("value"), Quantiles.Quintiles))
+
+  def featurizeWithLookup(events: DataFrame, cuts: Cuts, popular: DataFrame): DataFrame =
     events
       .withColumn("ev_hour", hour(col("ts")).cast("double"))
       .withColumn("word", concat_ws("_",
         col("event_type"),
-        Binning.binCol(col("ev_hour"), cuts.hour.toSeq),
-        Binning.binCol(col("value"), cuts.value.toSeq)))
+        Binning.binCol(col("ev_hour"), cuts("hour").toSeq),
+        Binning.binCol(col("value"), cuts("value").toSeq)))
 
-  def train(events: DataFrame, topicCount: Int = 10,
-            seed: Long = 42L, maxIter: Int = 10): Model = {
-    val cuts = computeCuts(events)
-    val feats = featurize(events, cuts)
-    val wc = Corpus.wordCounts(feats, col("user_id"), col("word"))
-    Model(cuts, TopicModel.train(wc, topicCount, seed = seed, maxIter = maxIter),
-      topicCount)
-  }
+  val perspectives: Seq[Perspective] = Seq(Perspective("user_id", "word", "score"))
 
-  def score(events: DataFrame, model: Model): DataFrame =
-    Scoring.score(featurize(events, model.cuts), col("user_id"), col("word"), model.topics)
+  def resultColumns(events: DataFrame): Seq[String] =
+    Seq("event_id", "user_id", "event_type", "word", "score")
 
-  /** The corpus a model scores, the one its training-quality tripwire
-    * measures ([[TopicModel.assertQuality]]). */
-  def scoringCorpus(events: DataFrame, model: Model): DataFrame =
-    Corpus.wordCounts(featurize(events, model.cuts), col("user_id"), col("word"))
-
-  /** The scored events (event_id, user_id, event_type, word, score),
-    * ascending, top-K, with `event_id` ordering equal scores. */
-  def results(events: DataFrame, model: Model,
-              threshold: Double, topK: Int): DataFrame =
-    Scoring.suspicious(
-      score(events, model).select("event_id", "user_id", "event_type", "word", "score"),
-      threshold, topK, tiebreak = Seq(col("event_id")))
+  override def tiebreakBy: Seq[Column] = Seq(col("event_id"))
 
   /** Pinned training-quality band: trained perplexity must stay below
     * this fraction of the uniform baseline. Derivation: the seeded,
@@ -69,4 +47,6 @@ object EventsPipeline {
     * healthy sits so close to 1.0 here; pipelines with more corpus
     * structure pin far tighter (flow 0.71, proxy 0.92). */
   val PerplexityBand: Double = 0.991
+
+  override def trainIterations: Int = 10
 }

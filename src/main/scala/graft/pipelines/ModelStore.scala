@@ -4,26 +4,26 @@ import graft.ml.TopicModel
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 
-/** The stored form of a trained flow, DNS or proxy model
-  * (train-once-score-later), one directory per model:
+/** The stored form of a trained model (train-once-score-later), one
+  * directory per model:
   *   - `topics/`: [[TopicModel.save]];
-  *   - `meta/`: one parquet row, the pipeline's named cut-sets as
-  *     array<double> columns in the order given, then `topic_count`. Cuts
-  *     can hold +Infinity, which JSON cannot carry; parquet keeps the exact
-  *     doubles;
-  *   - `popular/` (DNS and proxy): the popularity list as a distributed
-  *     (domain) parquet, so a million-domain list never reaches the driver.
+  *   - `meta/`: one parquet row, the pipeline's cut-sets as array<double>
+  *     columns in its [[SuspiciousConnects.cutSpecs]] order, then
+  *     `topic_count`. Cuts can hold +Infinity, which JSON cannot carry;
+  *     parquet keeps the exact doubles;
+  *   - `popular/` (DNS and proxy, [[SuspiciousConnects.takesPopular]]): the
+  *     popularity list as a distributed (domain) parquet, so a
+  *     million-domain list never reaches the driver.
   */
 private[pipelines] object ModelStore {
 
-  /** A loaded model's parts; `cuts` reads a meta column by name. */
-  final case class Stored(meta: Row, topics: TopicModel.Model,
-                          popular: Option[DataFrame]) {
-    def cuts(name: String): Array[Double] = meta.getAs[Seq[Double]](name).toArray
-    def topicCount: Int = meta.getAs[Int]("topic_count")
-  }
+  /** The meta column of a cut-set: `<name>_cuts`, except that DNS's
+    * `periods` has been stored as `num_periods_cuts` since the first
+    * stored model. */
+  private def column(cut: String): String =
+    if (cut == "periods") "num_periods_cuts" else s"${cut}_cuts"
 
   /** Writes every part into a sibling temp dir, then swaps that dir in for
     * `path` with one rename, so `path` holds the old model or the whole
@@ -32,24 +32,22 @@ private[pipelines] object ModelStore {
     * can be saved back to it. A failed write removes the temp dir and
     * leaves `path` as it was; a failed rename keeps the temp dir, the only
     * copy of the new model left. */
-  def save(path: String, topics: TopicModel.Model, topicCount: Int,
-           cuts: Seq[(String, Array[Double])],
-           popular: Option[DataFrame] = None): Unit = {
-    val spark = topics.docTopicMix.sparkSession
+  def save(p: SuspiciousConnects, model: SuspiciousConnects.Model, path: String): Unit = {
+    val spark = model.topics.docTopicMix.sparkSession
     val target = new Path(path)
     val tmp = new Path(path + ".__tmp_swap")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(tmp, true) // left by a save whose rename failed
     // the schema a Seq-of-tuples `toDF` gives these values
+    val cuts = p.cutSpecs.map(_.name)
     val schema = StructType(
-      cuts.map { case (name, _) =>
-        StructField(name, ArrayType(DoubleType, containsNull = false)) } :+
+      cuts.map(c => StructField(column(c), ArrayType(DoubleType, containsNull = false))) :+
         StructField("topic_count", IntegerType, nullable = false))
-    val row = Row.fromSeq(cuts.map { case (_, c) => c.toSeq } :+ topicCount)
+    val row = Row.fromSeq(cuts.map(model.cuts(_).toSeq) :+ model.topicCount)
     try {
-      TopicModel.save(topics, s"$tmp/topics")
-      popular.foreach(_.select(col("domain").cast("string").as("domain"))
-        .write.parquet(s"$tmp/popular"))
+      TopicModel.save(model.topics, s"$tmp/topics")
+      if (p.takesPopular) model.popular.select(col("domain").cast("string").as("domain"))
+        .write.parquet(s"$tmp/popular")
       spark.createDataFrame(java.util.List.of(row), schema).write.parquet(s"$tmp/meta")
     } catch { case e: Throwable => fs.delete(tmp, true); throw e }
     if (fs.exists(target)) fs.delete(target, true)
@@ -57,18 +55,21 @@ private[pipelines] object ModelStore {
       throw new java.io.IOException(s"rename $tmp -> $target failed")
   }
 
-  /** Reads what [[save]] wrote; `popular` only when `withPopular`. */
-  def load(spark: SparkSession, path: String, withPopular: Boolean): Stored = {
+  /** Reads what [[save]] wrote; a pipeline that stores no popularity list
+    * gets an empty one. */
+  def load(p: SuspiciousConnects, spark: SparkSession, path: String): SuspiciousConnects.Model = {
     val meta = spark.read.parquet(s"$path/meta")
     val m = meta.head()
     // models saved before the popularity list moved to its own parquet
     // carried it as a meta column: migrate on read instead of crashing
     // the train-once-score-later path on a stored model
     val popular =
-      if (!withPopular) None
+      if (!p.takesPopular) SuspiciousConnects.popularFrame(spark, Set.empty)
       else if (meta.columns.contains("popular_domains"))
-        Some(DnsPipeline.popularFrame(spark, m.getAs[Seq[String]]("popular_domains").toSet))
-      else Some(spark.read.parquet(s"$path/popular"))
-    Stored(m, TopicModel.load(spark, s"$path/topics"), popular)
+        SuspiciousConnects.popularFrame(spark, m.getAs[Seq[String]]("popular_domains").toSet)
+      else spark.read.parquet(s"$path/popular")
+    SuspiciousConnects.Model(
+      p.cutSpecs.map(c => c.name -> m.getAs[Seq[Double]](column(c.name)).toArray).toMap,
+      popular, TopicModel.load(spark, s"$path/topics"), m.getAs[Int]("topic_count"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.pipelines.DnsPipeline
+import graft.pipelines.SuspiciousConnects
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -66,12 +66,12 @@ object Fabrications {
 
   /** Fixed DNS cuts of the fixed-cut gates (constants on both sides;
     * chosen to split sf0.01). */
-  val DnsCuts: DnsPipeline.Cuts = DnsPipeline.Cuts(
-    time = Array(100.0, 250.0, 400.0),
-    frameLen = Array(100.0, 200.0, 300.0, 400.0),
-    subLen = Array(3.0, 5.0, 8.0),
-    entropy = Array(1.5, 2.0, 2.5),
-    numPeriods = Array(2.0, 3.0, 4.0))
+  val DnsCuts: SuspiciousConnects.Cuts = Map(
+    "time" -> Array(100.0, 250.0, 400.0),
+    "frame_len" -> Array(100.0, 200.0, 300.0, 400.0),
+    "sub_len" -> Array(3.0, 5.0, 8.0),
+    "entropy" -> Array(1.5, 2.0, 2.5),
+    "periods" -> Array(2.0, 3.0, 4.0))
 
   /** The popular domains of the DNS fabrication's sources. */
   val DnsPopular: Set[String] = Set("src1", "src3", "src5")

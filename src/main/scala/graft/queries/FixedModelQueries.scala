@@ -3,7 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.Binning
 import graft.ml.{ModelIO, TopicModel}
-import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline}
+import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline, SuspiciousConnects}
+import graft.pipelines.SuspiciousConnects.popularFrame
 import graft.queries.Fabrications.DnsCuts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,11 +78,14 @@ object FixedModelQueries {
       .select("event_id", "sip", "dip", "sport", "dport",
         "trhour", "trminute", "trsec", "ipkt", "ibyt")
 
-  private def flowModel(s: SparkSession): FlowPipeline.Model =
-    FlowPipeline.Model(
-      FlowPipeline.Cuts(FlowTimeCuts.toArray, FlowIbytCuts.toArray,
-        FlowIpktCuts.toArray),
-      fixtureModel(s), topicCount)
+  /** The frozen topics under fixed `cuts`. */
+  private def model(s: SparkSession, cuts: SuspiciousConnects.Cuts,
+                    popular: Set[String]): SuspiciousConnects.Model =
+    SuspiciousConnects.Model(cuts, popularFrame(s, popular), fixtureModel(s), topicCount)
+
+  private def flowModel(s: SparkSession): SuspiciousConnects.Model = model(s,
+    Map("time" -> FlowTimeCuts.toArray, "ibyt" -> FlowIbytCuts.toArray,
+      "ipkt" -> FlowIpktCuts.toArray), Set.empty)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipe_flow_fixedmodel" -> ((s, dir) =>
@@ -108,10 +112,8 @@ object FixedModelQueries {
       val dns = Fabrications.dnsInput(t(s, dir, "documents"))
         .select("doc_id", "dns_qry_name", "frame_len", "unix_tstamp",
           "dns_qry_type", "dns_qry_rcode", "frame_time", "ip_dst")
-      val m = DnsPipeline.Model(DnsCuts,
-        DnsPipeline.popularFrame(s, Fabrications.DnsPopular), fixtureModel(s),
-        topicCount)
-      DnsPipeline.results(dns, m, threshold = 1.0, topK = -1)
+      DnsPipeline.results(dns, model(s, DnsCuts, Fabrications.DnsPopular),
+          threshold = 1.0, topK = -1)
         .select(col("doc_id"), col("ip_dst"), col("word"),
           score9(col("score")).as("score"))}),
 
@@ -119,18 +121,15 @@ object FixedModelQueries {
       val proxy = Fabrications.proxyInput(t(s, dir, "events"))
         .select("event_id", "p_date", "p_time", "clientip", "host",
           "reqmethod", "useragent", "resconttype", "fulluri", "respcode")
-      val m = ProxyPipeline.Model(
-        ProxyPipeline.Cuts(ProxyTimeCuts.toArray, ProxyEntCuts.toArray,
-          ProxyAgentCuts.toArray),
-        DnsPipeline.popularFrame(s, Set.empty), fixtureModel(s), topicCount)
+      val m = model(s, Map("time" -> ProxyTimeCuts.toArray,
+        "entropy" -> ProxyEntCuts.toArray, "agent" -> ProxyAgentCuts.toArray), Set.empty)
       ProxyPipeline.results(proxy, m, threshold = 1.0, topK = -1)
         .select(col("event_id"), col("clientip"), col("word"),
           score9(col("score")).as("score"))}),
 
     "pipe_events_fixedmodel" -> ((s, dir) => {
-      val m = EventsPipeline.Model(
-        EventsPipeline.Cuts(EvHourCuts.toArray, EvValueCuts.toArray),
-        fixtureModel(s), topicCount)
+      val m = model(s,
+        Map("hour" -> EvHourCuts.toArray, "value" -> EvValueCuts.toArray), Set.empty)
       EventsPipeline.score(t(s, dir, "events"), m)
         .select(col("event_id"), col("user_id"), col("word"),
           score9(col("score")).as("score"))})
@@ -299,11 +298,11 @@ object FixedModelQueries {
          |    (CASE WHEN domain = 'intel' THEN 2
          |          WHEN domain IN ('src1', 'src3', 'src5') THEN 1
          |          ELSE 0 END)::VARCHAR
-         |    || '_' || ${binSql("n_chars::DOUBLE", DnsCuts.frameLen.toSeq)}::VARCHAR
-         |    || '_' || ${binSql("unix_tstamp::DOUBLE", DnsCuts.time.toSeq)}::VARCHAR
-         |    || '_' || ${binSql("sublen", DnsCuts.subLen.toSeq)}::VARCHAR
-         |    || '_' || ${binSql("sent", DnsCuts.entropy.toSeq)}::VARCHAR
-         |    || '_' || ${binSql("nper", DnsCuts.numPeriods.toSeq)}::VARCHAR
+         |    || '_' || ${binSql("n_chars::DOUBLE", DnsCuts("frame_len").toSeq)}::VARCHAR
+         |    || '_' || ${binSql("unix_tstamp::DOUBLE", DnsCuts("time").toSeq)}::VARCHAR
+         |    || '_' || ${binSql("sublen", DnsCuts("sub_len").toSeq)}::VARCHAR
+         |    || '_' || ${binSql("sent", DnsCuts("entropy").toSeq)}::VARCHAR
+         |    || '_' || ${binSql("nper", DnsCuts("periods").toSeq)}::VARCHAR
          |    || '_' || qry_type::VARCHAR || '_' || rcode::VARCHAR AS word
          |  FROM sub),
          |$modelCtes

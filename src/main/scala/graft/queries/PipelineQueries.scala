@@ -3,8 +3,9 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Binning, Entropy, FlowWords, TimeFunctions}
 import graft.ml.TopicModel
-import graft.operators.{Corpus, Scoring}
-import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline}
+import graft.operators.Corpus
+import graft.pipelines.{DnsPipeline, EventsPipeline, FlowPipeline, ProxyPipeline, SuspiciousConnects}
+import graft.pipelines.SuspiciousConnects.popularFrame
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,15 +20,24 @@ object PipelineQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.loadSpread(s, dir, name) // spread under-split scans (Tables doc)
 
-  /** The events golden run and the quality ratio its tripwire measured. */
-  private def eventsRun(s: SparkSession, dir: String): (DataFrame, Double) = {
-    val ev = t(s, dir, "events")
-    val model = EventsPipeline.train(ev, topicCount = 10)
-    val ratio = TopicModel.assertQuality(model.topics,
-      EventsPipeline.scoringCorpus(ev, model), EventsPipeline.PerplexityBand,
-      "events LDA")
-    (EventsPipeline.results(ev, model, threshold = 1.0, topK = 100), ratio)
+  /** One golden run and the quality ratio its tripwire measured: train on
+    * `input` → training-quality tripwire ([[TopicModel.assertQuality]]: LDA
+    * has no SQL twin, so the perplexity band turns a silent training
+    * regression into a non-null gate err) → the fixture's `columns` of the
+    * pipeline's ranked rows, the top 100 with `tiebreak` ordering ties. */
+  private def goldenRun(p: SuspiciousConnects, input: DataFrame, popular: Set[String],
+                        topicCount: Int, tiebreak: Seq[String],
+                        columns: String*): (DataFrame, Double) = {
+    val model = p.train(input, popularFrame(input.sparkSession, popular), topicCount)
+    val ratio = TopicModel.assertQuality(model.topics, p.scoringCorpus(input, model),
+      p.PerplexityBand, s"${p.name} LDA")
+    (p.ranked(input, model, threshold = 1.0, topK = 100, tiebreak.map(col))
+      .select(columns.map(col): _*), ratio)
   }
+
+  private def eventsRun(s: SparkSession, dir: String): (DataFrame, Double) =
+    goldenRun(EventsPipeline, t(s, dir, "events"), Set.empty, 10, Nil,
+      "event_id", "user_id", "event_type", "word", "score")
 
   /** The four golden train+score runs shared by [[graft.GoldenGen]] (which
     * writes the committed fixtures) and the `pipe_*_golden` gates (which
@@ -36,44 +46,18 @@ object PipelineQueries {
     * core-count-independent layout, and a unique-id tiebreak so the
     * top-100 is a TOTAL-order pure function of the corpus — the same run
     * under local[4], local[32], or a cluster must reproduce every line.
-    * Each run is train → training-quality tripwire
-    * ([[TopicModel.assertQuality]]: LDA has no SQL twin, so the perplexity
-    * band turns a silent training regression into a non-null gate err) →
-    * the pipeline's `results`. Flow's fixture holds the words, which the
-    * reference-shaped `FlowPipeline.results` drops, so it ranks
-    * `FlowPipeline.score` itself. */
+    * Each is a [[goldenRun]] keyed `pipe_<pipeline>_sf001`. */
   def goldenRuns: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipe_events_sf001" -> ((s, dir) => eventsRun(s, dir)._1),
-
-    "pipe_flow_sf001" -> ((s, dir) => {
-      val flows = Fabrications.flowInput(t(s, dir, "events"))
-      val model = FlowPipeline.train(flows, topicCount = 5)
-      TopicModel.assertQuality(model.topics, FlowPipeline.scoringCorpus(flows, model),
-        FlowPipeline.PerplexityBand, "flow LDA")
-      Scoring.suspicious(FlowPipeline.score(flows, model), threshold = 1.0,
-          topK = 100, tiebreak = Seq(col("event_id")))
-        .select("event_id", "sip", "dip", "src_word", "dst_word", "score")}),
-
-    "pipe_dns_sf001" -> ((s, dir) => {
-      val dns = Fabrications.dnsInput(t(s, dir, "documents"))
-      val model = DnsPipeline.train(dns,
-        DnsPipeline.popularFrame(s, Fabrications.DnsPopular), topicCount = 5)
-      TopicModel.assertQuality(model.topics, DnsPipeline.scoringCorpus(dns, model),
-        DnsPipeline.PerplexityBand, "dns LDA")
-      DnsPipeline.results(dns, model, threshold = 1.0, topK = 100,
-          tiebreak = Seq(col("doc_id")))
-        .select("doc_id", "ip_dst", "word", "score")}),
-
-    "pipe_proxy_sf001" -> ((s, dir) => {
-      val proxy = Fabrications.proxyInput(t(s, dir, "events"))
-      val model = ProxyPipeline.train(proxy,
-        DnsPipeline.popularFrame(s, Set.empty), topicCount = 5)
-      TopicModel.assertQuality(model.topics, ProxyPipeline.scoringCorpus(proxy, model),
-        ProxyPipeline.PerplexityBand, "proxy LDA")
-      ProxyPipeline.results(proxy, model, threshold = 1.0, topK = 100,
-          tiebreak = Seq(col("event_id")))
-        .select("event_id", "clientip", "word", "score")})
-  )
+    "pipe_flow_sf001" -> ((s, dir) => goldenRun(FlowPipeline,
+      Fabrications.flowInput(t(s, dir, "events")), Set.empty, 5, Seq("event_id"),
+      "event_id", "sip", "dip", "src_word", "dst_word", "score")._1),
+    "pipe_dns_sf001" -> ((s, dir) => goldenRun(DnsPipeline,
+      Fabrications.dnsInput(t(s, dir, "documents")), Fabrications.DnsPopular, 5,
+      Seq("doc_id"), "doc_id", "ip_dst", "word", "score")._1),
+    "pipe_proxy_sf001" -> ((s, dir) => goldenRun(ProxyPipeline,
+      Fabrications.proxyInput(t(s, dir, "events")), Set.empty, 5, Seq("event_id"),
+      "event_id", "clientip", "word", "score")._1))
 
   /** A golden-compare gate body: run the named [[goldenRuns]] entry fresh,
     * compare its rendered rows as a multiset against the committed fixture,
@@ -106,18 +90,18 @@ object PipelineQueries {
     """SELECT 100::BIGINT AS n_fresh, 100::BIGINT AS n_golden,
       |       100::BIGINT AS n_matching, TRUE AS matches_golden""".stripMargin
 
-  private val LenCuts = Fabrications.DnsCuts.frameLen.toSeq
-  private val TimeCuts = Fabrications.DnsCuts.time.toSeq
-  private val SubLenCuts = Fabrications.DnsCuts.subLen.toSeq
-  private val EntCuts = Fabrications.DnsCuts.entropy.toSeq
-  private val PerCuts = Fabrications.DnsCuts.numPeriods.toSeq
+  private val LenCuts = Fabrications.DnsCuts("frame_len").toSeq
+  private val TimeCuts = Fabrications.DnsCuts("time").toSeq
+  private val SubLenCuts = Fabrications.DnsCuts("sub_len").toSeq
+  private val EntCuts = Fabrications.DnsCuts("entropy").toSeq
+  private val PerCuts = Fabrications.DnsCuts("periods").toSeq
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // F9: the 8-component DNS word (reference: DNSWordCreation.scala:215-236).
     "pipe_dns_words" -> ((s, dir) =>
       DnsPipeline.featurizeWithLookup(DnsPipeline.withSubdomains(
           Fabrications.dnsInput(t(s, dir, "documents"))),
-          Fabrications.DnsCuts, DnsPipeline.popularFrame(s, Fabrications.DnsPopular))
+          Fabrications.DnsCuts, popularFrame(s, Fabrications.DnsPopular))
         .select("doc_id", "word")),
 
     // F10: the 7-component proxy word (reference: ProxyWordCreation.scala:

@@ -43,8 +43,11 @@ class CliSpec extends SparkSpec {
 
   it should "reject missing/invalid arguments with a message" in {
     Main.parse(Seq("--analysis", "flow")).left.toOption.get should include("--input")
-    Main.parse(Seq("--analysis", "nope", "--input", "/x", "--scored", "/o"))
-      .left.toOption.get should include("flow, dns, proxy")
+    Seq("nope", "events").foreach { a =>
+      Main.parse(Seq("--analysis", a, "--input", "/x", "--scored", "/o"))
+        .left.toOption.get should include("flow, dns, proxy")
+      an[IllegalArgumentException] should be thrownBy Main.feedbackSchema(a)
+    }
     Main.parse(Seq("--bogus", "v")).left.toOption.get should include("bogus")
     Main.parse(Seq("--analysis", "flow", "--input", "/x", "--scored", "/o",
       "--maxresults", "ten")).left.toOption.get should include("bad numeric")
@@ -114,26 +117,44 @@ class CliSpec extends SparkSpec {
     }.toDF("treceived", "trhour", "trminute", "trsec",
       "sip", "dip", "dport", "sport", "ipkt", "ibyt")
       .write.parquet(s"$dir/flow.parquet")
-    val model = s"$dir/model"
-    def run(topics: Int) = Main.runAnalysis(spark, Main.parse(Seq(
-      "--analysis", "flow", "--input", s"$dir/flow.parquet",
-      "--scored", s"$dir/out", "--maxresults", "10", "--topiccount", topics.toString,
-      "--model", model)).toOption.get).count()
-    run(3) shouldBe 10
-    val saved = tree(new java.io.File(model))
-    saved.map(_._1).exists(_.contains("/topics/")) shouldBe true
-    // an existing model is loaded, never retrained: its topic count wins
-    run(5) shouldBe 10
-    tree(new java.io.File(model)) shouldBe saved
-    graft.pipelines.FlowPipeline.load(spark, model).topicCount shouldBe 3
-    // meta/ without topics/ (an interrupted save) fails and names the part
-    Files.walk(java.nio.file.Paths.get(s"$model/topics"))
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => Files.delete(p))
-    val partial = tree(new java.io.File(model))
-    val e = intercept[org.apache.spark.sql.AnalysisException](run(3))
-    e.getMessage should include("topics")
-    tree(new java.io.File(model)) shouldBe partial
+    // the same store serves DNS and proxy, whose models also hold popular/
+    val hosts = Seq("services.amazon.com", "a.b.evil.net", "short.com")
+    (0 until 200).map { i =>
+      (s"t$i", (1000000L + i * 37) % 86400, 40 + i % 500,
+        s"10.0.0.${i % 25}", hosts(i % hosts.length), i % 4, i % 3)
+    }.toDF("frame_time", "unix_tstamp", "frame_len", "ip_dst",
+      "dns_qry_name", "dns_qry_type", "dns_qry_rcode")
+      .write.parquet(s"$dir/dns.parquet")
+    (0 until 200).map { i =>
+      ("2016-05-05", f"${i % 24}%02d:${i % 60}%02d:00", s"10.0.0.${i % 25}",
+        hosts(i % hosts.length), if (i % 2 == 0) "GET" else "POST",
+        s"agent${i % 3}", "text/plain", s"/p/uri$i", s"${200 + (i % 3) * 100}")
+    }.toDF("p_date", "p_time", "clientip", "host", "reqmethod",
+      "useragent", "resconttype", "fulluri", "respcode")
+      .write.parquet(s"$dir/proxy.parquet")
+    Seq("flow", "dns", "proxy").foreach { analysis =>
+      val model = s"$dir/model_$analysis"
+      def run(topics: Int) = Main.runAnalysis(spark, Main.parse(Seq(
+        "--analysis", analysis, "--input", s"$dir/$analysis.parquet",
+        "--scored", s"$dir/out", "--maxresults", "10", "--topiccount", topics.toString,
+        "--model", model)).toOption.get).count()
+      run(3) shouldBe 10
+      val saved = tree(new java.io.File(model))
+      saved.map(_._1).exists(_.contains("/topics/")) shouldBe true
+      saved.map(_._1).exists(_.contains("/popular/")) shouldBe (analysis != "flow")
+      // an existing model is loaded, never retrained: its topic count wins
+      run(5) shouldBe 10
+      tree(new java.io.File(model)) shouldBe saved
+      graft.pipelines.SuspiciousConnects(analysis).load(spark, model).topicCount shouldBe 3
+      // meta/ without topics/ (an interrupted save) fails and names the part
+      Files.walk(java.nio.file.Paths.get(s"$model/topics"))
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      val partial = tree(new java.io.File(model))
+      val e = intercept[org.apache.spark.sql.AnalysisException](run(3))
+      e.getMessage should include("topics")
+      tree(new java.io.File(model)) shouldBe partial
+    }
   }
 
   "Main.runAnalysis(proxy)" should "emit original columns + word + score" in {

@@ -87,9 +87,9 @@ class FunctionsSpec extends SparkSpec {
       Seq(("10.0.0.1", Seq(0.7, 0.3))).toDF("doc", "topic_mix"),
       Seq(("80.0_1.0_2.0_3.0", Seq(0.2, 0.1))).toDF("word", "topic_prob"),
       topicCount = 2)
-    val model = FlowPipeline.Model(FlowPipeline.Cuts(
-      time = Array(6.0, 12.0, 18.0, Double.PositiveInfinity),
-      ibyt = Array(100.0, 1000.0), ipkt = Array(10.0, 50.0)), topics, 2)
+    val model = FlowPipeline.Model(Map(
+      "time" -> Array(6.0, 12.0, 18.0, Double.PositiveInfinity),
+      "ibyt" -> Array(100.0, 1000.0), "ipkt" -> Array(10.0, 50.0)), topics, 2)
     val results = FlowPipeline.results(flows, model, threshold = 1.0, topK = -1)
     results.collect().length shouldBe 200
     // the final AQE plan, query stages and subqueries included

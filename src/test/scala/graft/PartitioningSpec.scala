@@ -288,27 +288,30 @@ class PartitioningSpec extends SparkSpec {
     writes.filterNot(_.startsWith("graft/GraftSession.scala:")) shouldBe empty
   }
 
-  it should "rank scored rows only in each pipeline's results" in {
-    // every pipeline has one composition, train then results; a second
-    // hand-written train -> score -> top-k drifts from the one that runs.
-    // Flow's golden run ranks FlowPipeline.score itself: its fixture
-    // keeps the words that the reference-shaped results drops.
+  /** The src/main file of every line that contains `call`, one entry per
+    * line. */
+  private def mainSites(call: String): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     Files.isDirectory(root) shouldBe true
     import scala.jdk.CollectionConverters._
-    val sites = Files.walk(root).iterator.asScala.toSeq
+    Files.walk(root).iterator.asScala.toSeq
       .filter(_.toString.endsWith(".scala")).flatMap { f =>
         Files.readAllLines(f).asScala.toSeq
-          .filter(_.contains("Scoring.suspicious("))
+          .filter(_.contains(call))
           .map(_ => root.relativize(f).toString)
       }
-      .filterNot(_ == "graft/operators/Scoring.scala")
-    sites.sorted shouldBe Seq(
-      "graft/pipelines/DnsPipeline.scala",
-      "graft/pipelines/EventsPipeline.scala",
-      "graft/pipelines/FlowPipeline.scala",
-      "graft/pipelines/ProxyPipeline.scala",
-      "graft/queries/PipelineQueries.scala")
+  }
+
+  it should "rank scored rows only in each pipeline's results" in {
+    // the pipelines share one composition, train then ranked/results; a
+    // second hand-written train -> score -> top-k drifts from the one that
+    // runs. The golden runs select their fixture columns from `ranked`.
+    mainSites("Scoring.suspicious(").filterNot(_ == "graft/operators/Scoring.scala") shouldBe
+      Seq("graft/pipelines/SuspiciousConnects.scala")
+  }
+
+  it should "fit topic models only in the pipelines' composition" in {
+    mainSites("TopicModel.train(") shouldBe Seq("graft/pipelines/SuspiciousConnects.scala")
   }
 
   it should "create temp dirs only through the helper" in {

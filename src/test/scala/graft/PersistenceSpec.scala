@@ -44,21 +44,21 @@ class PersistenceSpec extends SparkSpec {
     val m = FlowPipeline.train(flows, topicCount = 3, maxIter = 5)
     FlowPipeline.save(m, s"$dir/m")
     val loaded = FlowPipeline.load(spark, s"$dir/m")
-    loaded.cuts.time.toSeq shouldBe m.cuts.time.toSeq
-    loaded.cuts.ibyt.toSeq shouldBe m.cuts.ibyt.toSeq
-    loaded.cuts.ipkt.toSeq shouldBe m.cuts.ipkt.toSeq
+    loaded.cuts("time").toSeq shouldBe m.cuts("time").toSeq
+    loaded.cuts("ibyt").toSeq shouldBe m.cuts("ibyt").toSeq
+    loaded.cuts("ipkt").toSeq shouldBe m.cuts("ipkt").toSeq
     val a = FlowPipeline.score(flows, m).select("score").as[Double].collect().sorted.toSeq
     val b = FlowPipeline.score(flows, loaded).select("score").as[Double].collect().sorted.toSeq
     b shouldBe a
     // +Infinity cuts survive parquet (JSON would mangle them)
     import graft.pipelines.DnsPipeline
     val infModel = DnsPipeline.Model(
-      DnsPipeline.Cuts(Array(1.0), Array.fill(3)(Double.PositiveInfinity),
-        Array(0.5), Array(2.0), Array(3.0)),
+      Map("time" -> Array(1.0), "frame_len" -> Array.fill(3)(Double.PositiveInfinity),
+        "sub_len" -> Array(0.5), "entropy" -> Array(2.0), "periods" -> Array(3.0)),
       DnsPipeline.popularFrame(spark, Set("amazon")), m.topics, 3)
     DnsPipeline.save(infModel, s"$dir/dns")
     val dnsLoaded = DnsPipeline.load(spark, s"$dir/dns")
-    dnsLoaded.cuts.frameLen.toSeq shouldBe Seq.fill(3)(Double.PositiveInfinity)
+    dnsLoaded.cuts("frame_len").toSeq shouldBe Seq.fill(3)(Double.PositiveInfinity)
     dnsLoaded.popular.collect().map(_.getString(0)).toSeq shouldBe Seq("amazon")
   }
 
@@ -158,7 +158,7 @@ class PersistenceSpec extends SparkSpec {
       .write.parquet(s"$dir/dns_legacy/meta")
     val dnsLegacy = DnsPipeline.load(spark, s"$dir/dns_legacy")
     dnsLegacy.popular.collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("amazon", "evil")
-    dnsLegacy.cuts.numPeriods.toSeq shouldBe cut
+    dnsLegacy.cuts("periods").toSeq shouldBe cut
     dnsLegacy.topicCount shouldBe 3
     TopicModel.save(pm.topics, s"$dir/proxy_legacy/topics")
     Seq((cut, cut, cut, Seq("intel"), 3))
@@ -166,7 +166,7 @@ class PersistenceSpec extends SparkSpec {
       .write.parquet(s"$dir/proxy_legacy/meta")
     val proxyLegacy = ProxyPipeline.load(spark, s"$dir/proxy_legacy")
     proxyLegacy.popular.collect().map(_.getString(0)).toSeq shouldBe Seq("intel")
-    proxyLegacy.cuts.agent.toSeq shouldBe cut
+    proxyLegacy.cuts("agent").toSeq shouldBe cut
     // a legacy store re-saves in today's layout
     ProxyPipeline.save(proxyLegacy, s"$dir/proxy_resaved")
     entries(s"$dir/proxy_resaved") shouldBe Set("topics", "meta", "popular")
@@ -204,7 +204,7 @@ class PersistenceSpec extends SparkSpec {
     DnsPipeline.save(DnsPipeline.load(spark, path), path)
     val reloaded = DnsPipeline.load(spark, path)
     reloaded.popular.collect().map(_.getString(0)).toSeq shouldBe Seq("amazon")
-    reloaded.cuts.time.toSeq shouldBe m.cuts.time.toSeq
+    reloaded.cuts("time").toSeq shouldBe m.cuts("time").toSeq
     dnsScores(reloaded) shouldBe dnsScores(m)
   }
 
