@@ -1,8 +1,8 @@
 package graft.ml
 
-import org.apache.spark.ml.clustering.LDA
+import org.apache.spark.ml.clustering.{DriverLDA, LDA, LDAModel}
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -31,6 +31,13 @@ object TopicModel {
     * driver mid-train. */
   val MaxDriverVocab: Int = 1 << 20
 
+  /** Largest corpus, in (doc, word) pairs, that [[train]] fits on the
+    * driver. The collected corpus costs about 12 bytes a pair (2^22 pairs
+    * ≈ 50 MB), and each iteration's serial E-step works through the
+    * mini-batch's share of it (5%, about 210,000 pairs at the cap) on one
+    * thread, where the scheduler would spread it over the cluster. */
+  val MaxDriverPairs: Long = 1L << 22
+
   /** Partition count of the corpus handed to the LDA optimizer.
     * The online optimizer's minibatch sampling (and the doc-id assignment
     * MLlib derives via zipWithIndex) depend on the RDD's partition layout,
@@ -45,6 +52,9 @@ object TopicModel {
     * FIXTURE CONTRACT: the committed pipeline goldens
     * (src/test/resources/golden/pipe_*) were trained at this width; any
     * other width trains a numerically different (equally valid) model.
+    * The driver fit of [[train]] replays the sampling, per-partition seeds
+    * and tree-aggregate order MLlib derives from this layout, so it trains
+    * the same bits and the contract holds on either path.
     * 64 was also the fastest fit width measured on 32 cores
     * (BENCH_SCALING.md, r11). */
   val TrainLayoutPartitions: Int = 64
@@ -80,6 +90,16 @@ object TopicModel {
     * than `maxDriverVocab` distinct words fails with an
     * IllegalArgumentException before any of them reach the driver.
     *
+    * Where the fit runs: a corpus of at most [[MaxDriverPairs]] pairs is
+    * collected once and fitted on the calling thread by
+    * `org.apache.spark.ml.clustering.DriverLDA`, which drives MLlib's own
+    * optimizer and reproduces `ml.LDA.fit` on the pinned layout bit for
+    * bit. A mini-batch is about 5% of the docs, a few kilobytes for a
+    * discretized-feature corpus, so on the scheduler each iteration is a
+    * sample job plus a 64-task E-step with two shuffles: per-task
+    * overhead around very little arithmetic. A larger corpus is fitted by
+    * `ml.LDA.fit` on the cluster.
+    *
     * The optimizer's input (one sparse count vector per doc) is a
     * RELIABLE checkpoint, not a cached frame. `ml.LDA.fit` persists its
     * own deserialized `RDD[(Long, Vector)]` only when its dataset's
@@ -105,6 +125,19 @@ object TopicModel {
   def train(wordCounts: DataFrame, topicCount: Int = 20,
             seed: Long = 42L, maxIter: Int = 20,
             maxDriverVocab: Int = MaxDriverVocab): Model = {
+    val (vocab, docVectors) = corpusVectors(wordCounts, maxDriverVocab)
+    val lda = estimator(topicCount, seed, maxIter)
+    val pairs = docVectors.rdd.map(_.getAs[Vector](1).numActives.toLong).fold(0L)(_ + _)
+    val ldaModel =
+      if (pairs <= MaxDriverPairs) DriverLDA.fit(lda, docVectors)
+      else lda.fit(docVectors)
+    modelFrames(ldaModel, docVectors, vocab)
+  }
+
+  /** The dictionary of `wordCounts` and its (doc, features) count vectors
+    * on the pinned layout, checkpointed (see [[train]]). */
+  private[graft] def corpusVectors(wordCounts: DataFrame,
+                                   maxDriverVocab: Int = MaxDriverVocab): (Array[String], DataFrame) = {
     val spark = wordCounts.sparkSession
     import spark.implicits._
 
@@ -114,42 +147,55 @@ object TopicModel {
       col("count").cast("double").as("cnt"))
       .cache()
 
-    // the vocabulary × k topicsMatrix below is materialized on the driver
-    // anyway, so a vocabulary within that cap costs the driver less than
-    // the matrix
-    val vocab = vocabulary(corpus, maxDriverVocab)
-    val vocabSize = vocab.length
-    val dict = vocab.toSeq.zipWithIndex.toDF("word", "word_id")
+    // the checkpoint files hold everything the fit and docMix read; a
+    // vocabulary over the cap releases the cache too
+    try {
+      // the vocabulary × k topicsMatrix is materialized on the driver
+      // anyway, so a vocabulary within that cap costs the driver less than
+      // the matrix
+      val vocab = vocabulary(corpus, maxDriverVocab)
+      val vocabSize = vocab.length
+      val dict = vocab.toSeq.zipWithIndex.toDF("word", "word_id")
 
-    val docVectors = corpus.join(dict, "word")
-      .groupBy("doc")
-      .agg(collect_list(struct(col("word_id"), col("cnt"))).as("pairs"))
-      .map { row =>
-        val doc = row.getString(0)
-        val pairs = row.getSeq[Row](1)
-          .map(r => (r.getInt(0), r.getDouble(1)))
-          .sortBy(_._1)
-        (doc, Vectors.sparse(vocabSize, pairs.map(_._1).toArray, pairs.map(_._2).toArray))
-      }.toDF("doc", "features")
-      // Pin the optimizer's input to a layout that is a pure function of
-      // the data (see [[TrainLayoutPartitions]]): hash-partition on doc,
-      // totally ordered within each partition (docs are unique after the
-      // groupBy). Explicit numPartitions also keeps AQE from re-coalescing
-      // the layout at runtime.
-      .repartition(TrainLayoutPartitions, col("doc"))
-      .sortWithinPartitions("doc")
-      .checkpoint(eager = true)
-    // the checkpoint files hold everything the fit and docMix read
-    corpus.unpersist()
+      val docVectors = corpus.join(dict, "word")
+        .groupBy("doc")
+        .agg(collect_list(struct(col("word_id"), col("cnt"))).as("pairs"))
+        .map { row =>
+          val doc = row.getString(0)
+          val pairs = row.getSeq[Row](1)
+            .map(r => (r.getInt(0), r.getDouble(1)))
+            .sortBy(_._1)
+          (doc, Vectors.sparse(vocabSize, pairs.map(_._1).toArray, pairs.map(_._2).toArray))
+        }.toDF("doc", "features")
+        // Pin the optimizer's input to a layout that is a pure function of
+        // the data (see [[TrainLayoutPartitions]]): hash-partition on doc,
+        // totally ordered within each partition (docs are unique after the
+        // groupBy). Explicit numPartitions also keeps AQE from re-coalescing
+        // the layout at runtime.
+        .repartition(TrainLayoutPartitions, col("doc"))
+        .sortWithinPartitions("doc")
+        .checkpoint(eager = true)
+      (vocab, docVectors)
+    } finally corpus.unpersist()
+  }
 
-    val lda = new LDA()
+  /** The online LDA estimator at the reference's operating point. */
+  private[graft] def estimator(topicCount: Int, seed: Long, maxIter: Int): LDA =
+    new LDA()
       .setK(topicCount)
       .setDocConcentration(Alpha)
       .setSeed(seed)
       .setMaxIter(maxIter)
       .setOptimizer("online")
       .setFeaturesCol("features")
-    val ldaModel = lda.fit(docVectors)
+
+  /** The model frames of a fitted `ldaModel` over [[corpusVectors]]. */
+  private[graft] def modelFrames(ldaModel: LDAModel, docVectors: DataFrame,
+                                 vocab: Array[String]): Model = {
+    val spark = docVectors.sparkSession
+    import spark.implicits._
+    val topicCount = ldaModel.getK
+    val vocabSize = vocab.length
 
     // Materialize the (bounded) model frames: scoring only ever touches
     // docMix/wordProb.

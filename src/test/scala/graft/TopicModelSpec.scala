@@ -2,7 +2,13 @@ package graft
 
 import graft.ml.TopicModel
 import graft.pipelines.EventsPipeline
+import org.apache.spark.ml.clustering.DriverLDA
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Topic model invariants (replaces the reference's golden LDA-file
   * numerics, which tested its text-file exchange format — here the model
@@ -21,11 +27,137 @@ class TopicModelSpec extends SparkSpec {
     rows.toDF("doc", "word", "count")
   }
 
+  /** A corpus SAMPLED (deterministically) from the legacy fixture model:
+    * count(doc, word) = round(1000 · P(word|doc)). The cross join is a
+    * bounded fixture shape (95 docs × 26 words), test-only. */
+  private lazy val legacy = graft.queries.FixedModelQueries.fixtureModel(spark)
+  private lazy val legacyCorpus = {
+    val p = graft.functions.VectorOps.dot_product(col("topic_mix"), col("topic_prob"))
+    legacy.docTopicMix.crossJoin(legacy.wordTopicProb)
+      .select(col("doc"), col("word"), round(p * 1000).cast("long").as("count"))
+      .where(col("count") > 0)
+      .cache()
+  }
+
+  /** 1,200 docs of 8 to 31 distinct words over a 500-word vocabulary: a
+    * 5% mini-batch of it (about 60 docs) reaches every group of the
+    * optimizer's tree aggregate over the 64 layout partitions. */
+  private lazy val syntheticCorpus = {
+    val rows = for {
+      d <- 0 until 1200
+      j <- 0 until 8 + d % 24
+    } yield (s"doc$d", s"w${(d * 31 + j * j * 7 + j * 13) % 500}", (1 + (d + j) % 5).toLong)
+    rows.distinctBy(r => (r._1, r._2)).toDF("doc", "word", "count")
+  }
+
+  private def frames(m: TopicModel.Model) =
+    (m.docTopicMix.orderBy("doc").as[(String, Seq[Double])].collect().toSeq,
+      m.wordTopicProb.orderBy("word").as[(String, Seq[Double])].collect().toSeq)
+
+  private def release(m: TopicModel.Model): Unit = {
+    m.docTopicMix.unpersist(blocking = true)
+    m.wordTopicProb.unpersist(blocking = true)
+  }
+
+  /** `body`'s result, the Spark jobs it submitted (counted by a listener on
+    * the test context) and the broadcasts it created. */
+  private def counted[T](body: => T): (T, Int, Long) = {
+    val sc = spark.sparkContext
+    val group = "topicmodel-spec-counted"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some("drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    def nextBroadcastId = { val b = sc.broadcast(0); b.destroy(); b.id }
+    sc.addSparkListener(listener)
+    try {
+      val before = nextBroadcastId
+      sc.setJobGroup(group, group)
+      val result = try body finally sc.clearJobGroup()
+      val broadcasts = nextBroadcastId - before - 1
+      // the bus delivers events in order: once the marker job's start has
+      // arrived, so has every job start of `body`
+      sc.setJobGroup("drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      drained.await(60, TimeUnit.SECONDS) shouldBe true
+      (result, jobs.get, broadcasts)
+    } finally sc.removeSparkListener(listener)
+  }
+
   "TopicModel.train" should "fail loudly when the vocabulary exceeds the driver cap" in {
+    // before any fit: no corpus vector is built or checkpointed, and the
+    // call releases what it cached
+    val sc = spark.sparkContext
+    val dir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+    def checkpoints = dir.getFileSystem(sc.hadoopConfiguration).listStatus(dir)
+      .map(_.getPath.getName).toSet
+    val (checkpointsBefore, persistedBefore) = (checkpoints, sc.getPersistentRDDs.keySet.toSet)
     val e = intercept[IllegalArgumentException] {
       TopicModel.train(corpus, topicCount = 3, maxIter = 5, maxDriverVocab = 4)
     }
     e.getMessage should include("distinct words")
+    checkpoints -- checkpointsBefore shouldBe empty
+    sc.getPersistentRDDs.keySet.toSet -- persistedBefore shouldBe empty
+  }
+
+  it should "fail an all-null-word (empty) corpus as MLlib's initialize does" in {
+    val nulls = Seq(("doc1", null: String, 3L), ("doc2", null: String, 1L))
+      .toDF("doc", "word", "count")
+    val e = intercept[UnsupportedOperationException] {
+      TopicModel.train(nulls, topicCount = 3, maxIter = 5, seed = 7L)
+    }
+    e.getClass.getName shouldBe "org.apache.spark.SparkUnsupportedOperationException"
+    e.getMessage should include("empty collection")
+  }
+
+  it should "submit the same Spark jobs and broadcasts for 20 iterations as for 5" in {
+    // under the driver budget no iteration goes through the scheduler; a
+    // change that routes them back (a sample job, an E-step stage, a
+    // broadcast of the topic matrix per iteration) trips this
+    def cost(maxIter: Int) = {
+      val (m, jobs, broadcasts) = counted(
+        TopicModel.train(corpus, topicCount = 3, maxIter = maxIter, seed = 7L))
+      release(m)
+      (jobs, broadcasts)
+    }
+    val (jobs5, broadcasts5) = cost(5)
+    val (jobs20, broadcasts20) = cost(20)
+    info(s"jobs: $jobs5 at maxIter 5, $jobs20 at maxIter 20; broadcasts: $broadcasts5, $broadcasts20")
+    jobs5 should be > 0
+    jobs20 shouldBe jobs5
+    broadcasts20 shouldBe broadcasts5
+  }
+
+  "DriverLDA.fit" should "reproduce ml.LDA.fit bit for bit on the pinned layout" in {
+    // the local fit replays the optimizer's sampling, per-doc seeds and
+    // tree-aggregate order; exact ==, since a replay that drifts by one
+    // ulp anywhere shows up in every later iteration. The 12-doc fixture
+    // leaves most of the 64 partitions and most 5% mini-batches empty
+    // (MLlib's isEmpty return); the synthetic corpus fills every group.
+    val corpora = Seq("fixture" -> corpus, "legacy 95x26" -> legacyCorpus,
+      "synthetic 1200 docs" -> syntheticCorpus)
+    for ((name, wc) <- corpora) {
+      val (vocab, docVectors) = TopicModel.corpusVectors(wc)
+      for ((k, seed, maxIter) <- Seq((3, 7L, 20), (20, 42L, 20), (20, 5L, 8), (3, 11L, 12))) {
+        withClue(s"$name, k=$k, seed=$seed, maxIter=$maxIter: ") {
+          val lda = TopicModel.estimator(k, seed, maxIter)
+          val onDriver = DriverLDA.fit(lda, docVectors)
+          val onCluster = lda.fit(docVectors)
+          onDriver.topicsMatrix.toArray shouldBe onCluster.topicsMatrix.toArray
+          val a = TopicModel.modelFrames(onDriver, docVectors, vocab)
+          val b = TopicModel.modelFrames(onCluster, docVectors, vocab)
+          frames(a) shouldBe frames(b)
+          release(a)
+          release(b)
+        }
+      }
+    }
   }
 
   it should "produce normalized doc mixes for every doc" in {
@@ -172,18 +304,9 @@ class TopicModelSpec extends SparkSpec {
   }
 
   "TopicModel.train" should "recover the legacy fixture model's distribution on its own corpus" in {
-    import graft.queries.FixedModelQueries
-    val legacy = FixedModelQueries.fixtureModel(spark)
-    // a corpus SAMPLED (deterministically) from the legacy model:
-    // count(doc, word) = round(1000 · P(word|doc)) — the legacy model is
-    // ground truth for this corpus, so its perplexity is near-optimal and
-    // a healthy trainer must land close to it. The cross join is a
-    // bounded fixture shape (95 docs × 26 words), test-only.
-    val p = graft.functions.VectorOps.dot_product(col("topic_mix"), col("topic_prob"))
-    val generated = legacy.docTopicMix.crossJoin(legacy.wordTopicProb)
-      .select(col("doc"), col("word"), round(p * 1000).cast("long").as("count"))
-      .where(col("count") > 0)
-      .cache()
+    // the legacy model is ground truth for its sampled corpus, so its
+    // perplexity is near-optimal and a healthy trainer must land close
+    val generated = legacyCorpus
     val ppLegacy = TopicModel.perplexity(legacy, generated)
     val trained = TopicModel.train(generated, topicCount = legacy.topicCount,
       maxIter = 30, seed = 5L)
