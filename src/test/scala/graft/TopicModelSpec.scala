@@ -160,7 +160,7 @@ class TopicModelSpec extends SparkSpec {
     }
   }
 
-  it should "produce normalized doc mixes for every doc" in {
+  "TopicModel.train" should "produce normalized doc mixes for every doc" in {
     val m = TopicModel.train(corpus, topicCount = 3, maxIter = 5)
     val mixes = m.docTopicMix.as[(String, Seq[Double])].collect()
     mixes.length shouldBe 12
