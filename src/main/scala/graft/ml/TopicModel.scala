@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.clustering.{DriverLDA, LDA, LDAModel}
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -32,11 +32,20 @@ object TopicModel {
   val MaxDriverVocab: Int = 1 << 20
 
   /** Largest corpus, in (doc, word) pairs, that [[train]] fits on the
-    * driver. The collected corpus costs about 12 bytes a pair (2^22 pairs
-    * ≈ 50 MB), and each iteration's serial E-step works through the
-    * mini-batch's share of it (5%, about 210,000 pairs at the cap) on one
-    * thread, where the scheduler would spread it over the cluster. */
-  val MaxDriverPairs: Long = 1L << 22
+    * driver, set from a measurement. On 4 cores (k = 20, 20 iterations,
+    * 32 pairs a doc over 6,000 words, CHANGES.md) the driver fit took
+    * 0.5-0.8× the time of `ml.LDA.fit` at 0.5M and 1M pairs, about 1× at
+    * 1.5M and 1.2-1.8× at 2M and 4M, where each iteration's serial
+    * E-step over its 5% mini-batch outweighs the scheduler's per-task
+    * overhead; at 1M pairs of 16 a doc over 30,000 words it took
+    * 0.8-0.9×. The driver fit is not known to win above 2^20 pairs, and
+    * more cores would move the crossover lower (not measured).
+    *
+    * Driver memory: the collected corpus, about 12 bytes a pair plus one
+    * vector per doc, and in each E-step at most three k × vocab sums
+    * beside the optimizer's lambda and expElogbeta, which `ml.LDA.fit`
+    * holds on the driver as well. */
+  val MaxDriverPairs: Long = 1L << 20
 
   /** Partition count of the corpus handed to the LDA optimizer.
     * The online optimizer's minibatch sampling (and the doc-id assignment
@@ -97,8 +106,9 @@ object TopicModel {
     * bit. A mini-batch is about 5% of the docs, a few kilobytes for a
     * discretized-feature corpus, so on the scheduler each iteration is a
     * sample job plus a 64-task E-step with two shuffles: per-task
-    * overhead around very little arithmetic. A larger corpus is fitted by
-    * `ml.LDA.fit` on the cluster.
+    * overhead around very little arithmetic. One Spark job collects the
+    * vectors and counts their pairs as it goes; past the budget it drops
+    * them, and `ml.LDA.fit` fits the corpus on the cluster.
     *
     * The optimizer's input (one sparse count vector per doc) is a
     * RELIABLE checkpoint, not a cached frame. `ml.LDA.fit` persists its
@@ -124,13 +134,16 @@ object TopicModel {
     * this call persists stays persisted. */
   def train(wordCounts: DataFrame, topicCount: Int = 20,
             seed: Long = 42L, maxIter: Int = 20,
-            maxDriverVocab: Int = MaxDriverVocab): Model = {
+            maxDriverVocab: Int = MaxDriverVocab): Model =
+    trainWithin(MaxDriverPairs, wordCounts, topicCount, seed, maxIter, maxDriverVocab)
+
+  /** [[train]] under a driver-fit budget of `maxDriverPairs`, which a spec
+    * sets to 0 to send a small corpus through `ml.LDA.fit`. */
+  private[graft] def trainWithin(maxDriverPairs: Long, wordCounts: DataFrame, topicCount: Int,
+                                 seed: Long, maxIter: Int, maxDriverVocab: Int): Model = {
     val (vocab, docVectors) = corpusVectors(wordCounts, maxDriverVocab)
     val lda = estimator(topicCount, seed, maxIter)
-    val pairs = docVectors.rdd.map(_.getAs[Vector](1).numActives.toLong).fold(0L)(_ + _)
-    val ldaModel =
-      if (pairs <= MaxDriverPairs) DriverLDA.fit(lda, docVectors)
-      else lda.fit(docVectors)
+    val ldaModel = DriverLDA.fit(lda, docVectors, maxDriverPairs).getOrElse(lda.fit(docVectors))
     modelFrames(ldaModel, docVectors, vocab)
   }
 

@@ -12,7 +12,7 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
 import breeze.numerics.exp
 import org.apache.spark.SparkContext
 import org.apache.spark.mllib.linalg.Vector
-import org.apache.spark.util.random.{BernoulliSampler, PoissonSampler, RandomSampler}
+import org.apache.spark.util.random.PoissonSampler
 
 object DriverOnlineLDA {
 
@@ -31,13 +31,15 @@ object DriverOnlineLDA {
       case o => throw new IllegalArgumentException(s"not an online optimizer: $o")
     }
     val internals = new Internals(opt)
+    // next() samples with replacement, as every optimizer ml.LDA builds
+    // does; the Bernoulli sampler of the other setting is not replayed
+    require(internals.sampleWithReplacement, "the online optimizer samples without replacement")
     // initialize reads only the doc count and the first doc's size (its
-    // `first()` throws on an empty corpus, as on the RDD path), and warns
-    // of an input that is not persisted
+    // `first()` throws on an empty corpus, as on the RDD path); it warns
+    // that this stand-in input is not persisted, and nothing reads it again
     val docCount = partitions.map(_.length.toLong).sum
     val head = partitions.iterator.flatten.take(1).toArray
-    val sizes = sc.parallelize(0L until docCount, 1).map(id => (id, head(0))).persist()
-    try opt.initialize(sizes, lda) finally sizes.unpersist()
+    opt.initialize(sc.parallelize(0L until docCount, 1).map(id => (id, head(0))), lda)
 
     val iterationTimes = Array.ofDim[Double](lda.getMaxIterations)
     for (iter <- iterationTimes.indices) {
@@ -55,13 +57,11 @@ object DriverOnlineLDA {
                    partitions: Array[Array[Vector]]): Unit = {
     val rng = internals.randomGenerator
     // RDD.sample's PartitionwiseSampledRDD: one seed per parent partition,
-    // in order, for a Poisson (the optimizer's default) or Bernoulli sampler
+    // in order
     val partitionSeeds = new java.util.Random(rng.nextLong())
     val fraction = opt.getMiniBatchFraction
     val batch = partitions.map { docs =>
-      val sampler: RandomSampler[Vector, Vector] =
-        if (internals.sampleWithReplacement) new PoissonSampler[Vector](fraction)
-        else new BernoulliSampler[Vector](fraction)
+      val sampler = new PoissonSampler[Vector](fraction)
       sampler.setSeed(partitionSeeds.nextLong())
       sampler.sample(docs.iterator).toArray
     }
@@ -95,12 +95,14 @@ object DriverOnlineLDA {
     // treeAggregate(depth = 2, finalAggregateOnExecutor = true) over the
     // partitions: partition i folds into group i % groups in index order,
     // then the groups fold in index order. A partition with no sampled doc
-    // adds only zeros to these non-negative sums, so it is skipped.
+    // adds only zeros to these non-negative sums, so it is skipped. Both
+    // folds are lazy: at most three k × vocab sums are live at once (the
+    // running total, the group's and the partition's).
     val n = batch.length
     val scale = math.max(math.ceil(math.pow(n, 1.0 / 2)).toInt, 2)
     val groups = if (n > scale + math.ceil(n.toDouble / scale)) n / scale else n
-    val (statsSum, logphat, nonEmptyDocsN) = (0 until groups).map { g =>
-      (g until n by groups).filter(batch(_).nonEmpty).map(partitionStats)
+    val (statsSum, logphat, nonEmptyDocsN) = (0 until groups).iterator.map { g =>
+      (g until n by groups).iterator.filter(batch(_).nonEmpty).map(partitionStats)
         .foldLeft(zero())(elementWiseSum)
     }.foldLeft(zero())(elementWiseSum)
     if (nonEmptyDocsN == 0) return

@@ -147,7 +147,7 @@ class TopicModelSpec extends SparkSpec {
       for ((k, seed, maxIter) <- Seq((3, 7L, 20), (20, 42L, 20), (20, 5L, 8), (3, 11L, 12))) {
         withClue(s"$name, k=$k, seed=$seed, maxIter=$maxIter: ") {
           val lda = TopicModel.estimator(k, seed, maxIter)
-          val onDriver = DriverLDA.fit(lda, docVectors)
+          val onDriver = DriverLDA.fit(lda, docVectors, Long.MaxValue).get
           val onCluster = lda.fit(docVectors)
           onDriver.topicsMatrix.toArray shouldBe onCluster.topicsMatrix.toArray
           val a = TopicModel.modelFrames(onDriver, docVectors, vocab)
@@ -158,6 +158,17 @@ class TopicModelSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  it should "fit a corpus of exactly its pair budget and decline one pair more" in {
+    // the budget counts the vectors' stored entries: the fixture's rows,
+    // one per (doc, word) pair
+    val (_, docVectors) = TopicModel.corpusVectors(corpus)
+    val pairs = corpus.count()
+    val lda = TopicModel.estimator(3, 7L, 5)
+    DriverLDA.fit(lda, docVectors, pairs) shouldBe defined
+    DriverLDA.fit(lda, docVectors, pairs - 1) shouldBe empty
+    DriverLDA.fit(lda, docVectors, 0L) shouldBe empty
   }
 
   "TopicModel.train" should "produce normalized doc mixes for every doc" in {
@@ -244,16 +255,20 @@ class TopicModelSpec extends SparkSpec {
     // the corpus cache, MLlib's own persisted vectors and any other
     // training intermediate are released; only docMix and wordProb stay
     // (a frame whose plan an earlier cache already holds reuses it, so
-    // the call may add fewer than two)
+    // the call may add fewer than two), on the driver fit and on
+    // ml.LDA.fit (a budget of 0 pairs)
     val sc = spark.sparkContext
     def added(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val m = TopicModel.train(corpus, topicCount = 3, maxIter = 5, seed = 7L)
-    added(before) should not be empty
-    added(before).size should be <= 2
-    m.docTopicMix.unpersist(blocking = true)
-    m.wordTopicProb.unpersist(blocking = true)
-    added(before) shouldBe empty
+    for (budget <- Seq(TopicModel.MaxDriverPairs, 0L)) withClue(s"budget $budget: ") {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val m = TopicModel.trainWithin(budget, corpus, topicCount = 3, seed = 7L, maxIter = 5,
+        maxDriverVocab = TopicModel.MaxDriverVocab)
+      added(before) should not be empty
+      added(before).size should be <= 2
+      m.docTopicMix.unpersist(blocking = true)
+      m.wordTopicProb.unpersist(blocking = true)
+      added(before) shouldBe empty
+    }
   }
 
   it should "train on null-word rows as if they were filtered out" in {
