@@ -26,7 +26,7 @@ object Lineage {
     * frames already are, every iteration) is by definition small enough
     * to collect — same object, same place. The row cap is a LOUD guard,
     * not a truncation: exceeding it is a sizing bug upstream (the
-    * [[graft.ml.TopicModel]] maxDriverVocab convention). The guard
+    * [[graft.ml.TopicModel.MaxDriverVocab]] convention). The guard
     * bounds the collect ITSELF (`limit(maxRows + 1)`), so a mis-sized
     * frame throws before the driver materializes it, not after an OOM;
     * the default cap is 2^20 — comfortably above every model frame in

@@ -1,10 +1,11 @@
 package graft.ml
 
+import graft.operators.Scoring
 import org.apache.spark.ml.clustering.{DriverLDA, LDA, LDAModel}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** In-JVM topic model replacing the reference's external MPI LDA process
   * (reference: OniLDACWrapper.scala:25-113 — driver dictionaries, model.dat
@@ -88,7 +89,7 @@ object TopicModel {
         "driver cap for a word dictionary (and the topicsMatrix training " +
         "materializes). This model is designed for DISCRETIZED feature " +
         "vocabularies (bounded by the product of bin counts); cap an open " +
-        "text vocabulary first, or raise maxDriverVocab knowingly.")
+        "text vocabulary first, or raise MaxDriverVocab knowingly.")
     vocab
   }
 
@@ -96,7 +97,7 @@ object TopicModel {
     * (variational minibatch) optimizer on the pinned
     * [[TrainLayoutPartitions]] layout. Rows with a null word are dropped.
     * The vocabulary must be bounded (discretized feature words): more
-    * than `maxDriverVocab` distinct words fails with an
+    * than [[MaxDriverVocab]] distinct words fails with an
     * IllegalArgumentException before any of them reach the driver.
     *
     * Where the fit runs: a corpus of at most [[MaxDriverPairs]] pairs is
@@ -133,12 +134,12 @@ object TopicModel {
     * (`spark.cleaner.referenceTracking.cleanCheckpoints`). Nothing else
     * this call persists stays persisted. */
   def train(wordCounts: DataFrame, topicCount: Int = 20,
-            seed: Long = 42L, maxIter: Int = 20,
-            maxDriverVocab: Int = MaxDriverVocab): Model =
-    trainWithin(MaxDriverPairs, wordCounts, topicCount, seed, maxIter, maxDriverVocab)
+            seed: Long = 42L, maxIter: Int = 20): Model =
+    trainWithin(MaxDriverPairs, wordCounts, topicCount, seed, maxIter, MaxDriverVocab)
 
-  /** [[train]] under a driver-fit budget of `maxDriverPairs`, which a spec
-    * sets to 0 to send a small corpus through `ml.LDA.fit`. */
+  /** [[train]] under a driver-fit budget of `maxDriverPairs` and a
+    * vocabulary cap of `maxDriverVocab`, which a spec sets low to send a
+    * small corpus through `ml.LDA.fit` or past the cap. */
   private[graft] def trainWithin(maxDriverPairs: Long, wordCounts: DataFrame, topicCount: Int,
                                  seed: Long, maxIter: Int, maxDriverVocab: Int): Model = {
     val (vocab, docVectors) = corpusVectors(wordCounts, maxDriverVocab)
@@ -235,34 +236,20 @@ object TopicModel {
   }
 
   /** Corpus perplexity under the model's scoring distribution
-    * P(word|doc) = Σ_t P(t|doc)·P(word|t):
-    * exp( -Σ cnt·ln P / Σ cnt ), lower is better; a uniform model scores
-    * exactly the vocabulary size. Unseen docs/words take the same uniform
-    * 1/k default the scoring path uses ([[graft.operators.Scoring]]), and
-    * probabilities are floored at 1e-300 so a zero-gamma doc (the
+    * P(word|doc) = Σ_t P(t|doc)·P(word|t), which is
+    * [[graft.operators.Scoring.score]] itself (unseen docs and words take
+    * its uniform 1/k default): exp( -Σ cnt·ln P / Σ cnt ), lower is
+    * better; a uniform model scores exactly the vocabulary size.
+    * Probabilities are floored at 1e-300 so a zero-gamma doc (the
     * reference's empty-doc case) degrades to a huge-but-finite penalty
-    * instead of -Inf. Fully relational — two joins and one aggregate — so
-    * it runs at corpus scale; this is the regression metric TopicModelSpec
-    * pins (LDA training has no exact oracle, but its QUALITY is
-    * measurable). */
+    * instead of -Inf. Fully relational — the scoring joins and one
+    * aggregate — so it runs at corpus scale; this is the regression
+    * metric TopicModelSpec pins (LDA training has no exact oracle, but
+    * its QUALITY is measurable). */
   def perplexity(model: Model, wordCounts: DataFrame): Double = {
-    val k = model.topicCount
-    val uniform = array((0 until k).map(_ => lit(1.0 / k)): _*)
-    val corpus = wordCounts.select(
-      col("doc").cast("string").as("__d"),
-      col("word").cast("string").as("__w"),
-      col("count").cast("double").as("__cnt"))
-    val mixes = model.docTopicMix.withColumnRenamed("doc", "__doc")
-    val probs = model.wordTopicProb.withColumnRenamed("word", "__word")
-    val p = graft.functions.VectorOps.dot_product(
-      coalesce(col("topic_mix"), uniform),
-      coalesce(col("topic_prob"), uniform))
-    val r = corpus
-      .join(mixes, col("__d") === col("__doc"), "left")
-      .join(probs, col("__w") === col("__word"), "left")
-      .agg(
-        sum(col("__cnt") * log(greatest(p, lit(1e-300)))).as("ll"),
-        sum(col("__cnt")).as("n"))
+    val cnt = col("count").cast("double")
+    val r = Scoring.score(wordCounts, col("doc"), col("word"), model)
+      .agg(sum(cnt * log(greatest(col("score"), lit(1e-300)))).as("ll"), sum(cnt).as("n"))
       .head()
     math.exp(-r.getDouble(0) / r.getDouble(1))
   }
@@ -296,30 +283,5 @@ object TopicModel {
     System.err.println(f"[lda] $label perplexity=$pp%.4f uniform=$vocab%.0f " +
       f"ratio=${pp / vocab}%.4f")
     pp / vocab
-  }
-
-  /** Persist a trained model: both frames as parquet + a tiny JSON meta.
-    * The reference persisted implicitly via final.beta/final.gamma text
-    * files (OniLDACWrapper.scala:88-104); parquet keeps the exact doubles
-    * (no decimal text round-trip) and scales with the doc count. A model
-    * loaded from `path` reads it lazily, so it cannot be saved back there
-    * directly; [[graft.pipelines.ModelStore.save]] writes into a fresh dir
-    * and swaps it in. */
-  def save(model: Model, path: String): Unit = {
-    val spark = model.docTopicMix.sparkSession
-    import spark.implicits._
-    model.docTopicMix.write.mode("overwrite").parquet(s"$path/doc_topic_mix")
-    model.wordTopicProb.write.mode("overwrite").parquet(s"$path/word_topic_prob")
-    Seq(model.topicCount).toDF("topic_count")
-      .write.mode("overwrite").json(s"$path/meta")
-  }
-
-  /** Load a model persisted by [[save]]; scores are bit-identical to the
-    * pre-save model (parquet preserves doubles exactly). */
-  def load(spark: SparkSession, path: String): Model = {
-    val k = spark.read.json(s"$path/meta")
-      .select("topic_count").head().getLong(0).toInt
-    Model(spark.read.parquet(s"$path/doc_topic_mix"),
-      spark.read.parquet(s"$path/word_topic_prob"), k)
   }
 }

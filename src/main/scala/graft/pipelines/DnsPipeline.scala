@@ -94,8 +94,9 @@ object DnsPipeline extends SuspiciousConnects {
 
   // ---- aliases perfbench/scala compiles against; they go together with
   // perfbench/scala/Layered.scala, its hand-composed traced pass ----
+  // `topicCount` is `topics.topicCount`; the parameter stays for perfbench
   def Model(cuts: Cuts, popular: DataFrame, topics: TopicModel.Model, topicCount: Int): Model =
-    SuspiciousConnects.Model(cuts, popular, topics, topicCount)
+    SuspiciousConnects.Model(cuts, popular, topics)
   def popularFrame(spark: SparkSession, domains: Set[String]): DataFrame =
     SuspiciousConnects.popularFrame(spark, domains)
 }

@@ -84,9 +84,9 @@ object FlowPipeline extends SuspiciousConnects {
 
   // ---- aliases perfbench/scala compiles against; they go together with
   // perfbench/scala/Layered.scala, its hand-composed traced pass ----
+  // `topicCount` is `topics.topicCount`; the parameter stays for perfbench
   def Model(cuts: Cuts, topics: TopicModel.Model, topicCount: Int): Model =
-    SuspiciousConnects.Model(cuts, popularFrame(topics.docTopicMix.sparkSession, Set.empty),
-      topics, topicCount)
+    SuspiciousConnects.Model(cuts, popularFrame(topics.docTopicMix.sparkSession, Set.empty), topics)
   def validTimes(flows: DataFrame): DataFrame = validRows(flows)
   def featurize(flows: DataFrame, cuts: Cuts): DataFrame =
     featurizeWithLookup(flows, cuts, popularFrame(flows.sparkSession, Set.empty))

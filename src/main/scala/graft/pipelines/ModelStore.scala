@@ -8,14 +8,21 @@ import org.apache.spark.sql.{Row, SparkSession}
 
 /** The stored form of a trained model (train-once-score-later), one
   * directory per model:
-  *   - `topics/`: [[TopicModel.save]];
+  *   - `topics/doc_topic_mix`, `topics/word_topic_prob`: the two
+  *     [[TopicModel.Model]] frames as parquet, which keeps the exact
+  *     doubles, so a reloaded model scores bit-identically (the reference
+  *     shipped them as `final.gamma`/`final.beta` text,
+  *     OniLDACWrapper.scala:88-104);
   *   - `meta/`: one parquet row, the pipeline's cut-sets as array<double>
   *     columns in its [[SuspiciousConnects.cutSpecs]] order, then
-  *     `topic_count`. Cuts can hold +Infinity, which JSON cannot carry;
-  *     parquet keeps the exact doubles;
+  *     `topic_count`, the model's one stored topic count. Cuts can hold
+  *     +Infinity, which JSON cannot carry; parquet keeps the exact doubles;
   *   - `popular/` (DNS and proxy, [[SuspiciousConnects.takesPopular]]): the
   *     popularity list as a distributed (domain) parquet, so a
   *     million-domain list never reaches the driver.
+  *
+  * Models stored by earlier versions also hold a JSON `topics/meta` with
+  * the same topic count; it is not read.
   */
 private[pipelines] object ModelStore {
 
@@ -34,8 +41,9 @@ private[pipelines] object ModelStore {
     * copy of the new model left. */
   def save(p: SuspiciousConnects, model: SuspiciousConnects.Model, path: String): Unit = {
     val spark = model.topics.docTopicMix.sparkSession
+    // the normalized path: `m/` names `m`, and its sibling is `m.__tmp_swap`
     val target = new Path(path)
-    val tmp = new Path(path + ".__tmp_swap")
+    val tmp = target.suffix(".__tmp_swap")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(tmp, true) // left by a save whose rename failed
     // the schema a Seq-of-tuples `toDF` gives these values
@@ -43,9 +51,10 @@ private[pipelines] object ModelStore {
     val schema = StructType(
       cuts.map(c => StructField(column(c), ArrayType(DoubleType, containsNull = false))) :+
         StructField("topic_count", IntegerType, nullable = false))
-    val row = Row.fromSeq(cuts.map(model.cuts(_).toSeq) :+ model.topicCount)
+    val row = Row.fromSeq(cuts.map(model.cuts(_).toSeq) :+ model.topics.topicCount)
     try {
-      TopicModel.save(model.topics, s"$tmp/topics")
+      model.topics.docTopicMix.write.parquet(s"$tmp/topics/doc_topic_mix")
+      model.topics.wordTopicProb.write.parquet(s"$tmp/topics/word_topic_prob")
       if (p.takesPopular) model.popular.select(col("domain").cast("string").as("domain"))
         .write.parquet(s"$tmp/popular")
       spark.createDataFrame(java.util.List.of(row), schema).write.parquet(s"$tmp/meta")
@@ -60,6 +69,8 @@ private[pipelines] object ModelStore {
   def load(p: SuspiciousConnects, spark: SparkSession, path: String): SuspiciousConnects.Model = {
     val meta = spark.read.parquet(s"$path/meta")
     val m = meta.head()
+    val topics = TopicModel.Model(spark.read.parquet(s"$path/topics/doc_topic_mix"),
+      spark.read.parquet(s"$path/topics/word_topic_prob"), m.getAs[Int]("topic_count"))
     // models saved before the popularity list moved to its own parquet
     // carried it as a meta column: migrate on read instead of crashing
     // the train-once-score-later path on a stored model
@@ -70,6 +81,6 @@ private[pipelines] object ModelStore {
       else spark.read.parquet(s"$path/popular")
     SuspiciousConnects.Model(
       p.cutSpecs.map(c => c.name -> m.getAs[Seq[Double]](column(c.name)).toArray).toMap,
-      popular, TopicModel.load(spark, s"$path/topics"), m.getAs[Int]("topic_count"))
+      popular, topics)
   }
 }

@@ -95,7 +95,7 @@ abstract class SuspiciousConnects {
     val cuts = computeCuts(rows)
     val topics = TopicModel.train(corpus(featurizeWithLookup(rows, cuts, popular), col("__w")),
       topicCount, seed = seed, maxIter = maxIter)
-    SuspiciousConnects.Model(cuts, popular, topics, topicCount)
+    SuspiciousConnects.Model(cuts, popular, topics)
   }
 
   /** The worded rows a model scores. */
@@ -148,8 +148,7 @@ object SuspiciousConnects {
   /** The popularity list is carried as a DISTRIBUTED (domain) frame — a
     * top-1m list never funnels through the driver (train, score and
     * persistence all stay distributed; classing is a broadcast join). */
-  final case class Model(cuts: Cuts, popular: DataFrame,
-                         topics: TopicModel.Model, topicCount: Int)
+  final case class Model(cuts: Cuts, popular: DataFrame, topics: TopicModel.Model)
 
   /** One (doc, word) view of a row, scored into the `score` column. */
   final case class Perspective(doc: String, word: String, score: String)

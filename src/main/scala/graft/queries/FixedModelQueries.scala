@@ -81,7 +81,7 @@ object FixedModelQueries {
   /** The frozen topics under fixed `cuts`. */
   private def model(s: SparkSession, cuts: SuspiciousConnects.Cuts,
                     popular: Set[String]): SuspiciousConnects.Model =
-    SuspiciousConnects.Model(cuts, popularFrame(s, popular), fixtureModel(s), topicCount)
+    SuspiciousConnects.Model(cuts, popularFrame(s, popular), fixtureModel(s))
 
   private def flowModel(s: SparkSession): SuspiciousConnects.Model = model(s,
     Map("time" -> FlowTimeCuts.toArray, "ibyt" -> FlowIbytCuts.toArray,

@@ -145,7 +145,7 @@ class CliSpec extends SparkSpec {
       // an existing model is loaded, never retrained: its topic count wins
       run(5) shouldBe 10
       tree(new java.io.File(model)) shouldBe saved
-      graft.pipelines.SuspiciousConnects(analysis).load(spark, model).topicCount shouldBe 3
+      graft.pipelines.SuspiciousConnects(analysis).load(spark, model).topics.topicCount shouldBe 3
       // meta/ without topics/ (an interrupted save) fails and names the part
       Files.walk(java.nio.file.Paths.get(s"$model/topics"))
         .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

@@ -22,12 +22,25 @@ class PersistenceSpec extends SparkSpec {
       .select("d", "w", "score").as[(String, String, Double)].collect().sorted.toSeq
   }
 
-  "TopicModel.save/load" should "round-trip to bit-identical scores" in {
+  /** `topics/` as stores written before `ModelStore` owned it: both
+    * frames plus a JSON `meta` with the topic count. */
+  private def writeLegacyTopics(m: TopicModel.Model, dir: String): Unit = {
+    m.docTopicMix.write.parquet(s"$dir/doc_topic_mix")
+    m.wordTopicProb.write.parquet(s"$dir/word_topic_prob")
+    Seq(m.topicCount).toDF("topic_count").write.json(s"$dir/meta")
+  }
+
+  "A model store" should "reload topics to identical scores" in {
+    import graft.pipelines.{FlowPipeline, SuspiciousConnects}
     val dir = ScratchDirs.create("tm").toFile.getAbsolutePath
     val m = TopicModel.train(corpus(), topicCount = 4, maxIter = 5)
-    TopicModel.save(m, s"$dir/model")
-    val loaded = TopicModel.load(spark, s"$dir/model")
+    val cuts = Map("time" -> Array(12.0), "ibyt" -> Array(100.0), "ipkt" -> Array(10.0))
+    FlowPipeline.save(SuspiciousConnects.Model(cuts,
+      SuspiciousConnects.popularFrame(spark, Set.empty), m), s"$dir/model")
+    entries(s"$dir/model/topics") shouldBe Set("doc_topic_mix", "word_topic_prob")
+    val loaded = FlowPipeline.load(spark, s"$dir/model").topics
     loaded.topicCount shouldBe 4
+    // `scores` also reads unseen docs and words, which take 1/k
     scores(loaded) shouldBe scores(m) // exact equality, not approximate
   }
 
@@ -117,15 +130,26 @@ class PersistenceSpec extends SparkSpec {
     val fm = FlowPipeline.train(flows, topicCount = 3, maxIter = 5)
     FlowPipeline.save(fm, s"$dir/flow")
     entries(s"$dir/flow") shouldBe Set("topics", "meta")
+    entries(s"$dir/flow/topics") shouldBe Set("doc_topic_mix", "word_topic_prob")
     writtenSchema(s"$dir/flow/meta") shouldBe
       metaOf("time_cuts", "ibyt_cuts", "ipkt_cuts", "topic_count")
     def flowScores(m: FlowPipeline.Model) =
       FlowPipeline.score(flows, m).select("score").as[Double].collect().sorted.toSeq
     flowScores(FlowPipeline.load(spark, s"$dir/flow")) shouldBe flowScores(fm)
+    // a store written before `ModelStore` owned `topics/`, which also
+    // holds a JSON topic count, loads and scores the same
+    writeLegacyTopics(fm.topics, s"$dir/flow_parent/topics")
+    Seq((fm.cuts("time").toSeq, fm.cuts("ibyt").toSeq, fm.cuts("ipkt").toSeq, 3))
+      .toDF("time_cuts", "ibyt_cuts", "ipkt_cuts", "topic_count")
+      .write.parquet(s"$dir/flow_parent/meta")
+    val flowParent = FlowPipeline.load(spark, s"$dir/flow_parent")
+    flowParent.topics.topicCount shouldBe 3
+    flowScores(flowParent) shouldBe flowScores(fm)
 
     val dm = DnsPipeline.train(dns, popular, topicCount = 3, maxIter = 5)
     DnsPipeline.save(dm, s"$dir/dns")
     entries(s"$dir/dns") shouldBe Set("topics", "meta", "popular")
+    entries(s"$dir/dns/topics") shouldBe Set("doc_topic_mix", "word_topic_prob")
     writtenSchema(s"$dir/dns/meta") shouldBe metaOf("time_cuts", "frame_len_cuts",
       "sub_len_cuts", "entropy_cuts", "num_periods_cuts", "topic_count")
     val dnsLoaded = DnsPipeline.load(spark, s"$dir/dns")
@@ -141,6 +165,7 @@ class PersistenceSpec extends SparkSpec {
     val pm = ProxyPipeline.train(proxy, popular, topicCount = 3, maxIter = 5)
     ProxyPipeline.save(pm, s"$dir/proxy")
     entries(s"$dir/proxy") shouldBe Set("topics", "meta", "popular")
+    entries(s"$dir/proxy/topics") shouldBe Set("doc_topic_mix", "word_topic_prob")
     writtenSchema(s"$dir/proxy/meta") shouldBe
       metaOf("time_cuts", "entropy_cuts", "agent_cuts", "topic_count")
     def proxyScores(m: ProxyPipeline.Model) = ProxyPipeline.score(proxy, m)
@@ -151,7 +176,7 @@ class PersistenceSpec extends SparkSpec {
 
     // legacy stores: the popularity list as a meta column, no popular/ dir
     val cut = Seq(1.0, Double.PositiveInfinity)
-    TopicModel.save(dm.topics, s"$dir/dns_legacy/topics")
+    writeLegacyTopics(dm.topics, s"$dir/dns_legacy/topics")
     Seq((cut, cut, cut, cut, cut, Seq("amazon", "evil"), 3))
       .toDF("time_cuts", "frame_len_cuts", "sub_len_cuts", "entropy_cuts",
         "num_periods_cuts", "popular_domains", "topic_count")
@@ -159,8 +184,8 @@ class PersistenceSpec extends SparkSpec {
     val dnsLegacy = DnsPipeline.load(spark, s"$dir/dns_legacy")
     dnsLegacy.popular.collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("amazon", "evil")
     dnsLegacy.cuts("periods").toSeq shouldBe cut
-    dnsLegacy.topicCount shouldBe 3
-    TopicModel.save(pm.topics, s"$dir/proxy_legacy/topics")
+    dnsLegacy.topics.topicCount shouldBe 3
+    writeLegacyTopics(pm.topics, s"$dir/proxy_legacy/topics")
     Seq((cut, cut, cut, Seq("intel"), 3))
       .toDF("time_cuts", "entropy_cuts", "agent_cuts", "popular_domains", "topic_count")
       .write.parquet(s"$dir/proxy_legacy/meta")
@@ -170,6 +195,7 @@ class PersistenceSpec extends SparkSpec {
     // a legacy store re-saves in today's layout
     ProxyPipeline.save(proxyLegacy, s"$dir/proxy_resaved")
     entries(s"$dir/proxy_resaved") shouldBe Set("topics", "meta", "popular")
+    entries(s"$dir/proxy_resaved/topics") shouldBe Set("doc_topic_mix", "word_topic_prob")
     proxyScores(ProxyPipeline.load(spark, s"$dir/proxy_resaved")) shouldBe
       proxyScores(proxyLegacy)
   }
@@ -188,7 +214,7 @@ class PersistenceSpec extends SparkSpec {
       popular.withColumn("domain", raise_error(lit("popular list unreadable")).cast("string")))
     an[Exception] should be thrownBy DnsPipeline.save(broken, path)
     val stored = DnsPipeline.load(spark, path)
-    stored.topicCount shouldBe 3
+    stored.topics.topicCount shouldBe 3
     stored.popular.collect().map(_.getString(0)).sorted.toSeq shouldBe Seq("amazon", "evil")
     dnsScores(stored) shouldBe dnsScores(a)
     new java.io.File(path).getParentFile.list().toSeq shouldBe Seq("m")
@@ -206,6 +232,24 @@ class PersistenceSpec extends SparkSpec {
     reloaded.popular.collect().map(_.getString(0)).toSeq shouldBe Seq("amazon")
     reloaded.cuts("time").toSeq shouldBe m.cuts("time").toSeq
     dnsScores(reloaded) shouldBe dnsScores(m)
+  }
+
+  it should "work on a path with a trailing slash, fresh and over a stored model" in {
+    import graft.pipelines.DnsPipeline
+    val root = ScratchDirs.create("store-slash").toFile.getAbsolutePath
+    val a = DnsPipeline.train(dns, DnsPipeline.popularFrame(spark, Set("amazon")),
+      topicCount = 3, maxIter = 5)
+    DnsPipeline.save(a, s"$root/m/")
+    entries(s"$root/m") shouldBe Set("topics", "meta", "popular")
+    dnsScores(DnsPipeline.load(spark, s"$root/m/")) shouldBe dnsScores(a)
+    val b = DnsPipeline.train(dns, DnsPipeline.popularFrame(spark, Set("evil")),
+      topicCount = 4, maxIter = 5, seed = 7L)
+    DnsPipeline.save(b, s"$root/m/")
+    val stored = DnsPipeline.load(spark, s"$root/m")
+    stored.topics.topicCount shouldBe 4
+    stored.popular.collect().map(_.getString(0)).toSeq shouldBe Seq("evil")
+    dnsScores(stored) shouldBe dnsScores(b)
+    new java.io.File(root).list().toSeq shouldBe Seq("m")
   }
 
   "ModelIO beta/gamma writers" should "round-trip through the reference parsers" in {

@@ -99,7 +99,8 @@ class TopicModelSpec extends SparkSpec {
       .map(_.getPath.getName).toSet
     val (checkpointsBefore, persistedBefore) = (checkpoints, sc.getPersistentRDDs.keySet.toSet)
     val e = intercept[IllegalArgumentException] {
-      TopicModel.train(corpus, topicCount = 3, maxIter = 5, maxDriverVocab = 4)
+      TopicModel.trainWithin(TopicModel.MaxDriverPairs, corpus, topicCount = 3, seed = 42L,
+        maxIter = 5, maxDriverVocab = 4)
     }
     e.getMessage should include("distinct words")
     checkpoints -- checkpointsBefore shouldBe empty

@@ -16,6 +16,11 @@
 # the change won, and the verdict against the metric's bound; then, per
 # seed, whether the output hashes and the perplexity ratios are equal.
 # Nothing under perfbench/ is changed.
+#
+# Exit status: 0 when the change passes; 1 when any run failed, an
+# end-to-end metric is worse than its bound or has no data, or a seed's
+# output hash or perplexity ratio differs between the two sides (the
+# report's last line names which).
 set -euo pipefail
 if [[ $# -lt 4 ]]; then
   sed -n '2,9p' "$0" >&2
@@ -99,6 +104,7 @@ def quart(xs):
 
 cores = {r["cores"] for r in runs.values() if r["cores"]}
 bad = sum(1 for r in runs.values() if not r["correct"])
+fails = [f"{bad} failed runs"] if bad else []
 print(f"{workload}: parent {parent} vs change {change}, {len(pairs)} pairs, "
       f"cores {','.join(sorted(cores)) or '?'}, failed runs {bad}/{len(runs)}")
 print("| metric | parent median (q1-q3) | change median (q1-q3) | change/parent "
@@ -111,6 +117,7 @@ for m in e2e:
     both = [(a, b) for a, b in both if a is not None and b is not None]
     if not both:
         print(f"| `{name}` | - | - | - | - | no data |")
+        fails.append(f"{name} has no data")
         continue
     a = [x for x, _ in both]
     b = [y for _, y in both]
@@ -121,6 +128,7 @@ for m in e2e:
     worse = ratio - 1 if lower else 1 - ratio
     if worse > m["bound"]:
         verdict = f"WORSE beyond the {m['bound']} bound"
+        fails.append(f"{name} worse than its bound")
     elif won * 10 >= 9 * len(both) and (ma - mb if lower else mb - ma) > qa[1] - qa[0]:
         verdict = "better (>=9/10 pairs, median gap > parent IQR)"
     else:
@@ -136,4 +144,8 @@ for seed in sorted({r["seed"] for r in runs.values()}, key=int):
     pp, pc = (side(v, lambda r: r["metrics"].get("perplexity_ratio", "-")) for v in (parent, change))
     eq = lambda a, b: "yes" if a == b and "-" not in a else "NO"
     print(f"| {seed} | {','.join(hp)} | {','.join(hc)} | {eq(hp, hc)} | {eq(pp, pc)} |")
+    if eq(hp, hc) != "yes" or eq(pp, pc) != "yes":
+        fails.append(f"seed {seed} output differs")
+print("result: " + ("FAIL: " + "; ".join(fails) if fails else "PASS"))
+sys.exit(1 if fails else 0)
 EOF
